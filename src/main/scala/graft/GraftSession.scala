@@ -3,8 +3,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** User entry point: a SparkSession wired for this engine — the graft
-  * SQL extensions (native `vector_dot` / `minhash_sig` / `simhash32`
-  * expressions and the TopKPerKey planner strategy) plus the
+  * SQL extensions ([[graft.functions.GraftExtensions]]: the native
+  * `vector_dot` / `minhash_sig` / `simhash32` / `phash_bands` /
+  * `zorder_key` / `hashed_linear_score` functions, the TopKPerKey
+  * planner strategy, and the `ParamLiterals` physical rule, which keeps
+  * numeric constants out of generated Java source so a stream of
+  * same-shaped jobs reuses Spark's compiled classes instead of
+  * compiling new ones per job) plus the
   * configuration the operators assume (UTC session time,
   * nanosecond-parquet handling for `events`-style tables, shuffle
   * parallelism sized to cores rather than the 200 default, and the

@@ -1,14 +1,16 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Measurement harness (optimization guide §1): run ONE registry query
-  * repeatedly under the bench's exact session configuration and print a
-  * per-Spark-job breakdown — submission gap, duration, and the call
-  * site of the job's result stage — so a slot's seconds can be
-  * attributed to specific operator phases (restore copy vs. replay
-  * cycles vs. probe vs. commit) instead of guessed at.
+  * repeatedly on a [[GraftSession]] (so the extension's planner rules
+  * are in the plans) and print a per-Spark-job breakdown — submission
+  * gap, duration, and the call site of the job's result stage — plus
+  * each run's codegen compile count and compile time, so a slot's
+  * seconds can be attributed to specific operator phases (restore copy
+  * vs. replay cycles vs. probe vs. commit) instead of guessed at.
   *
   * Usage: runMain graft.ProfileQuery <sfDir> <query> [nRuns]
   * Never part of the driver contract; diagnostics only.
@@ -23,11 +25,7 @@ object ProfileQuery {
     val name = args(1)
     val nRuns = if (args.length > 2) args(2).toInt else 2
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "false")
+    val spark = GraftSession.builder(s"local[$cpus]", Some(cpus.toInt))
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
@@ -51,9 +49,13 @@ object ProfileQuery {
     val q = SparkEntry.queries(name)
     (0 until nRuns).foreach { r =>
       jobs.clear(); byId.clear()
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val compileNs0 = CodeGenerator.compileTime
       val t0 = System.nanoTime()
       q(spark, sfDir).count()
       val wall = (System.nanoTime() - t0) / 1e9
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+      val compileMs = (CodeGenerator.compileTime - compileNs0) / 1e6
       import scala.jdk.CollectionConverters._
       // drain the listener bus so every end event lands
       val deadline = System.currentTimeMillis() + 3000
@@ -66,6 +68,7 @@ object ProfileQuery {
       System.err.println(
         f"%n=== run $r: $name wall=$wall%.2f s, ${recs.size} jobs, " +
           f"sum(job)=$sumJob%.2f s (gaps=${wall - sumJob}%.2f s driver/FS) ===")
+      System.err.println(f"    codegen: $compiles compiles, $compileMs%.0f ms compiling")
       if (r == nRuns - 1 || sys.env.contains("GRAFT_PROFILE_ALL")) {
         var prevEnd = recs.headOption.map(_.start).getOrElse(0L)
         recs.foreach { j =>

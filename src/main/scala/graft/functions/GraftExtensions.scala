@@ -5,14 +5,26 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.expressions.Aggregator
 
-/** Session extension registering the engine's native expressions for the
-  * SQL surface: `SELECT vector_dot(a, b) FROM ...` — the same codegen'd
-  * Catalyst expression the Column API uses, resolved at analysis time.
+/** Session extension for the engine. It injects:
+  *  - the native expressions for the SQL surface (`vector_dot`,
+  *    `minhash_sig`, `simhash32`, `phash_bands`, `zorder_key`,
+  *    `hashed_linear_score`): `SELECT vector_dot(a, b) FROM ...` resolves
+  *    to the same codegen'd Catalyst expression the Column API uses;
+  *  - the [[graft.plans.TopKPerKeyStrategy]] planner strategy;
+  *  - the [[graft.plans.ParamLiterals]] physical rule, as a columnar rule
+  *    (Spark runs those right before whole-stage codegen collapses the
+  *    plan). Spark inlines numeric constants into generated Java source
+  *    and caches compiled classes by that source, so jobs of one shape
+  *    with different constants — the bulk-update loop's visibility
+  *    window, read-only mask and value — each compiled fresh classes and
+  *    ran them cold through the JIT. The rule moves those constants into
+  *    the class's `references` array, so such jobs reuse one class.
   *
   * Register via
   * `SparkSession.builder().withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.functions.GraftExtensions`, or
-  * at runtime with `GraftExtensions.register(spark)`.
+  * `spark.sql.extensions=graft.functions.GraftExtensions` (what
+  * [[graft.GraftSession.builder]] sets). `GraftExtensions.register(spark)`
+  * adds only the SQL functions to an already-built session.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
@@ -23,6 +35,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectFunction(GraftExtensions.zorderKeyDescriptor)
     e.injectFunction(GraftExtensions.hashedLinearScoreDescriptor)
     e.injectPlannerStrategy(_ => graft.plans.TopKPerKeyStrategy)
+    e.injectColumnar(_ => graft.plans.ParamLiterals.Hook)
   }
 }
 

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Sources & sinks beyond the fixture parquet (SURVEY.md §2.2
@@ -145,29 +145,6 @@ object Sources {
     */
   def writePartitioned(df: DataFrame, path: String, partitionCol: String): Unit =
     df.write.mode(SaveMode.Overwrite).partitionBy(partitionCol).parquet(path)
-
-  /** Incremental-maintenance write: DYNAMIC partition overwrite —
-    * only the partition directories present in `df` are replaced, all
-    * others are left byte-untouched. This is the append/merge
-    * primitive for the stored index layouts: at 100 TB an index
-    * update rewrites the handful of affected cell/bucket directories,
-    * never the whole layout. Callers that derived `df` by READING the
-    * same path must materialize it first (localCheckpoint) — Spark
-    * refuses to overwrite a path that is still being read lazily.
-    */
-  def mergePartitioned(df: DataFrame, path: String,
-                       partitionCols: String*): Unit = {
-    val spark = df.sparkSession
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "dynamic")
-    try df.write.mode(SaveMode.Overwrite)
-      .partitionBy(partitionCols: _*).parquet(path)
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
 
   /** ANN index storage layout: the corpus written partitioned by its
     * TRAINED IVF cell, so a probe reads only its nprobe cell
@@ -340,6 +317,18 @@ object Sources {
       }
     }
 
+  /** Stage `df` as the table's next generation and publish it,
+    * returning the rows written. The count is observed on the staged
+    * write itself, so no job re-reads the committed table.
+    */
+  private def commitCounted(base: String, df: DataFrame): Long = {
+    val written = Observation()
+    val txn = Snapshot.begin(base)
+    txn.writeFull(df.observe(written, count(lit(1)).as("rows")), tableComp)
+    txn.commit()
+    written.get("rows").asInstanceOf[Long]
+  }
+
   /** O18 — bulk writeback: apply a keyed update set to a stored table
     * (the reference's per-row commit protocol, OBP.js:554-621, as a
     * batch MERGE). Reads the target, left-joins the updates on the key,
@@ -359,10 +348,7 @@ object Sources {
       val merged = target.join(broadcast(upd), Seq(key), "left")
         .withColumn(column, coalesce(col("__newval"), col(column)))
         .drop("__newval")
-      val txn = Snapshot.begin(targetPath)
-      txn.writeFull(merged, tableComp)
-      txn.commit()
-      readVersioned(spark, targetPath).count()
+      commitCounted(targetPath, merged)
     }
 
   /** O18 registry probe — the MERGE sink end to end, replayable: stage
@@ -413,10 +399,7 @@ object Sources {
       val merged = target
         .join(broadcast(updates.select(col(key))), Seq(key), "left_anti")
         .unionByName(updates.select(target.columns.map(col): _*))
-      val txn = Snapshot.begin(targetPath)
-      txn.writeFull(merged, tableComp)
-      txn.commit()
-      readVersioned(spark, targetPath).count()
+      commitCounted(targetPath, merged)
     }
 
   /** Small-file compaction: rewrite a directory into ⌈rows/target⌉

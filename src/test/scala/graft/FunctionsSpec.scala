@@ -216,34 +216,23 @@ class FunctionsSpec extends SparkTestBase {
   }
 
   test("GraftExtensions wires a fresh session: SQL function + planner strategy") {
-    val prev = spark // keep the shared suite session to restore
-    org.apache.spark.sql.SparkSession.clearActiveSession()
-    org.apache.spark.sql.SparkSession.clearDefaultSession()
-    try {
-      val s2 = org.apache.spark.sql.SparkSession.builder()
-        .master("local[2]")
-        .withExtensions(new graft.functions.GraftExtensions)
-        .getOrCreate()
-      assert(s2 ne prev, "expected a brand-new session")
-      // injected SQL function resolves
-      val d = s2.sql("SELECT vector_dot(array(1.0F,2.0F), array(3.0F,4.0F)) AS d")
-        .head().getDouble(0)
-      assert(d === 11.0)
-      // injected planner strategy plans the custom node WITHOUT the
-      // PlanBridge fallback registration
-      assert(!s2.experimental.extraStrategies.contains(
-        graft.plans.TopKPerKeyStrategy))
-      import s2.implicits._
-      val df = Seq((1L, 5L), (1L, 9L), (1L, 7L), (2L, 3L))
-        .toDF("key", "ord")
-      val got = org.apache.spark.sql.graftbridge.PlanBridge
-        .topKPerKey(df, Seq("key"), Seq("ord"), 2, registerStrategy = false)
-        .as[(Long, Long)].collect().toSet
-      assert(got === Set((1L, 9L), (1L, 7L), (2L, 3L)))
-    } finally {
-      org.apache.spark.sql.SparkSession.setDefaultSession(prev)
-      org.apache.spark.sql.SparkSession.setActiveSession(prev)
-    }
+    val s2 = extensionSession()
+    assert(s2 ne spark, "expected a brand-new session")
+    // injected SQL function resolves
+    val d = s2.sql("SELECT vector_dot(array(1.0F,2.0F), array(3.0F,4.0F)) AS d")
+      .head().getDouble(0)
+    assert(d === 11.0)
+    // injected planner strategy plans the custom node WITHOUT the
+    // PlanBridge fallback registration
+    assert(!s2.experimental.extraStrategies.contains(
+      graft.plans.TopKPerKeyStrategy))
+    import s2.implicits._
+    val df = Seq((1L, 5L), (1L, 9L), (1L, 7L), (2L, 3L))
+      .toDF("key", "ord")
+    val got = org.apache.spark.sql.graftbridge.PlanBridge
+      .topKPerKey(df, Seq("key"), Seq("ord"), 2, registerStrategy = false)
+      .as[(Long, Long)].collect().toSet
+    assert(got === Set((1L, 9L), (1L, 7L), (2L, 3L)))
   }
 
   test("bench JSON line stays inside the driver's output-tail capture") {

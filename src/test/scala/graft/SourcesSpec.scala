@@ -567,6 +567,24 @@ class SourcesSpec extends SparkTestBase {
     assert(!names.exists { case (k, v) => k != 1L && k != 3L && v.startsWith("UPDATED") })
   }
 
+  test("merge and upsert return the committed row count: adoption, " +
+      "versioned target, empty update set") {
+    val plain = tmp("mergecount")
+    (1L to 25L).map(k => (k, s"v$k")).toDF("key", "value").coalesce(2)
+      .write.parquet(plain)
+    // plain directory: the first merge adopts it, then rewrites it
+    assert(!graft.sources.Snapshot.enabled(plain))
+    assert(Sources.mergeColumnUpdate(spark, plain,
+      Seq((2L, "x"), (99L, "y")).toDF("key", "value"), "key", "value") === 25L)
+    assert(graft.sources.Snapshot.enabled(plain))
+    val none = Seq.empty[(Long, String)].toDF("key", "value")
+    assert(Sources.mergeColumnUpdate(spark, plain, none, "key", "value") === 25L)
+    assert(Sources.upsert(spark, plain, none, "key") === 25L)
+    assert(Sources.upsert(spark, plain,
+      Seq((3L, "u"), (30L, "i"), (31L, "i")).toDF("key", "value"), "key") === 27L)
+    assert(Sources.readVersioned(spark, plain).count() === 27L)
+  }
+
   test("maxPartitionBytes controls scan parallelism (split sizing)") {
     // the knob that sizes scan partitions at 100 TB: smaller split
     // targets mean more, smaller input partitions for the same file

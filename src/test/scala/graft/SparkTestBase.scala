@@ -19,4 +19,21 @@ trait SparkTestBase extends AnyFunSuite {
     .getOrCreate()
 
   val sf: String = "/root/testdata/sf0.001"
+
+  /** A second session on the shared context, built with
+    * `GraftExtensions` (the shared session does not install them). The
+    * shared session stays the default and active one.
+    */
+  def extensionSession(): SparkSession = {
+    val prev = spark
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try SparkSession.builder()
+      .withExtensions(new graft.functions.GraftExtensions)
+      .getOrCreate()
+    finally {
+      SparkSession.setDefaultSession(prev)
+      SparkSession.setActiveSession(prev)
+    }
+  }
 }
