@@ -79,19 +79,6 @@ object IndexFS {
   def hasParquet(dir: String): Boolean =
     listNames(dir).exists(_.endsWith(".parquet"))
 
-  /** True iff any parquet part file exists anywhere under `dir`. */
-  def hasParquetRecursive(dir: String): Boolean = {
-    val (fs, p) = resolve(dir)
-    if (!fs.exists(p)) false
-    else {
-      val it = fs.listFiles(p, true)
-      var found = false
-      while (!found && it.hasNext)
-        found = it.next().getPath.getName.endsWith(".parquet")
-      found
-    }
-  }
-
   /** The java.nio path of `path` when it lives on the LOCAL filesystem
     * (no scheme or `file:`), None otherwise — the fast-path guard for
     * bulk small-file operations: Hadoop's ChecksumFileSystem costs

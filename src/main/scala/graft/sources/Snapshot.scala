@@ -5,6 +5,7 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Snapshot manifests for stored layouts — READER ISOLATION for the
   * stored-index data plane (the control-plane twin of
@@ -62,6 +63,15 @@ import org.apache.spark.sql.functions._
   * inert garbage rather than corruption. Manifest FILES are numbered
   * monotonically (readers take the max); numbering is race-free
   * because every publisher holds the layout's writer lease.
+  *
+  * The same immutability makes everything derived from a leaf's
+  * contents cacheable for the life of the JVM: a `comp/gsn=<stamp>`
+  * leaf appears complete (one rename), is never modified, is removed
+  * only by GC once no kept manifest references it, and its stamp is
+  * never reused. So a leaf's file LISTING and the read SCHEMA of a
+  * leaf set are computed once and served from caches on every later
+  * read ([[Manifest.read]]); a repeated probe of an unchanged layout
+  * plans without touching the filesystem.
   */
 object Snapshot {
 
@@ -69,14 +79,31 @@ object Snapshot {
   private val warnedNonAtomic =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  /** Inferred read schemas keyed by a component's exact sorted live-
-    * leaf list (see [[Manifest.read]] for the correctness argument:
-    * manifest-referenced leaves are immutable, so same leaves ⇒ same
-    * bytes ⇒ same schema, forever). Bounded in practice by the number
-    * of distinct (layout, manifest) states a session ever resolves.
+  /** Most inferred read schemas [[schemaCache]] keeps. A schema is a
+    * few KB; every commit that touches a component makes a new leaf
+    * set, so a long-lived session that keeps maintaining its layouts
+    * would otherwise grow the cache forever.
     */
-  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]()
+  private[graft] val SchemaCacheEntries = 1024
+
+  /** Inferred read schemas keyed by a component's exact sorted live-
+    * leaf list, least recently used evicted past [[SchemaCacheEntries]]
+    * (see [[Manifest.read]] for the correctness argument: manifest-
+    * referenced leaves are immutable, so same leaves ⇒ same bytes ⇒
+    * same schema, forever — an evicted entry re-infers to the same
+    * schema).
+    */
+  private[graft] object schemaCache {
+    private val m = new java.util.LinkedHashMap[String, StructType](64, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[String, StructType]): Boolean =
+        this.size > SchemaCacheEntries
+    }
+    def get(key: String): Option[StructType] = m.synchronized(Option(m.get(key)))
+    def put(key: String, schema: StructType): Unit =
+      m.synchronized { m.put(key, schema); () }
+    def size: Int = m.synchronized(m.size)
+  }
 
   /** The trailing generation-stamp partition column added to every
     * snapshot-managed component. Not a data column: readers drop it.
@@ -124,55 +151,67 @@ object Snapshot {
       comps.get(comp).toSeq.flatMap(_.owners.map(_.gsn)).distinct
         .map(g => s"$base/$comp/$GSN=$g")
 
-    /** Read a live component as of this snapshot: one scan listing
-      * ONLY the owned generation leaves (`basePath` keeps partition
-      * discovery rooted at the component, so [[GSN]] and the real
-      * partition columns still materialize), with the ownership
-      * predicate as a static partition filter. Dead generations
-      * awaiting GC are never even LISTED — file-listing cost is
-      * bounded by live data, not by maintenance history. Row-group
-      * pushdown and DPP on the real partition columns are untouched.
-      * Fails loudly on a component this snapshot does not carry.
-      *
-      * The read schema comes from [[schemaCache]] when this exact leaf
-      * set was inferred before: every `spark.read.parquet` without an
-      * explicit schema runs parquet footer inference as its own Spark
-      * job, and the maintenance slots issue dozens of component reads
-      * per run over history components whose leaf set did not change
-      * between replay cycles (optimization guide §1/§5 — repeated
-      * driver-side planning work in the hot path). Keying the cache on
-      * the EXACT sorted leaf list makes it correct unconditionally:
-      * manifest-referenced leaves are immutable (staged in by rename,
-      * only ever deleted by GC, stamps never reused), so the same leaf
-      * set can never carry different bytes — and any append, compact,
-      * fold, or rebuild changes the set and re-infers.
+    /** The key [[schemaCache]] files `comp`'s read schema under: the
+      * exact sorted live-leaf list.
       */
-    def read(spark: SparkSession, comp: String): DataFrame = {
-      val c = comps.getOrElse(comp, throw new IllegalStateException(
-        s"snapshot $id of $base has no component '$comp'"))
-      val leaves = liveLeaves(comp)
-      val key = leaves.sorted.mkString("\n")
-      val reader = spark.read.option("basePath", s"$base/$comp")
-      val df = Option(schemaCache.get(key)) match {
-        case Some(schema) => reader.schema(schema).parquet(leaves: _*)
-        case None =>
-          val inferred = reader.parquet(leaves: _*)
-          schemaCache.put(key, inferred.schema)
-          inferred
-      }
-      df.filter(ownershipPred(c)).drop(GSN)
-    }
+    private[graft] def schemaKey(comp: String): String =
+      liveLeaves(comp).sorted.mkString("\n")
+
+    /** Read a live component as of this snapshot: one scan listing
+      * ONLY the owned generation leaves (partition discovery rooted at
+      * the component, so [[GSN]] and the real partition columns still
+      * materialize), with the ownership predicate as a static
+      * partition filter. Dead generations awaiting GC are never even
+      * LISTED — file-listing cost is bounded by live data, not by
+      * maintenance history. Row-group pushdown and DPP on the real
+      * partition columns are untouched. Fails loudly on a component
+      * this snapshot does not carry, or one with no parquet file.
+      *
+      * Both halves of the scan's driver-side planning are served from
+      * caches after the first read of a leaf set, because a leaf's
+      * contents never change (staged in by rename, only ever deleted
+      * by GC, stamps never reused):
+      *  - the LISTING comes from one long-lived client of Spark's
+      *    `FileStatusCache` ([[org.apache.spark.sql.graftbridge.CachedListing]]),
+      *    so each leaf is listed at most once per JVM. A plain
+      *    `spark.read` re-lists on every call, and a leaf with more than
+      *    32 partition directories (BM25's 64 buckets, the dedup bands)
+      *    is listed by a Spark job of its own, about 0.3 s per leaf per
+      *    probe;
+      *  - the read SCHEMA comes from [[schemaCache]] when this exact
+      *    leaf set was inferred before: inference reads parquet footers
+      *    in a Spark job of its own, and the maintenance slots issue
+      *    dozens of component reads per run over history components
+      *    whose leaf set did not change between replay cycles. Keying
+      *    on the EXACT sorted leaf list makes it correct
+      *    unconditionally: the same leaf set can never carry different
+      *    bytes, and any append, compact, fold or rebuild changes the
+      *    set and re-infers.
+      */
+    def read(spark: SparkSession, comp: String): DataFrame =
+      scan(spark, comp).getOrElse(throw new IllegalStateException(
+        s"snapshot $id of $base: component '$comp' has no parquet files"))
 
     /** [[read]], or None when the component is absent from this
       * snapshot or physically empty (a component whose every owned
       * partition was written from an empty frame has directories but
       * no parquet files — unreadable, and semantically "no data").
-      * The emptiness walk covers only the LIVE leaves.
+      * Emptiness is read off the same cached listing of the LIVE
+      * leaves the scan uses; no extra filesystem walk.
       */
     def readOpt(spark: SparkSession, comp: String): Option[DataFrame] =
-      if (!has(comp) ||
-          !liveLeaves(comp).exists(IndexFS.hasParquetRecursive)) None
-      else Some(read(spark, comp))
+      if (!has(comp)) None else scan(spark, comp)
+
+    private def scan(spark: SparkSession, comp: String): Option[DataFrame] = {
+      val c = comps.getOrElse(comp, throw new IllegalStateException(
+        s"snapshot $id of $base has no component '$comp'"))
+      val key = schemaKey(comp)
+      org.apache.spark.sql.graftbridge.CachedListing.parquet(spark,
+        s"$base/$comp", liveLeaves(comp), schemaCache.get(key)).map { df =>
+        schemaCache.put(key, df.schema)
+        df.filter(ownershipPred(c)).drop(GSN)
+      }
+    }
   }
 
   private def ownershipPred(c: Comp): Column = {
@@ -528,22 +567,19 @@ object Snapshot {
         .getOrElse(throw new IllegalStateException(
           s"snapshot owner-fold on $base: no SparkSession"))
       heavy.foreach { case (name, c) =>
-        val fresh = randomStamp()
-        // list only the owned leaves (same as Manifest.read): dead
-        // generations awaiting GC are never touched by the fold scan
-        val leaves = c.owners.map(o => s"$base/$name/$GSN=${o.gsn}").distinct
-        // a component whose live leaves hold no parquet (every owned
-        // partition was written from an empty frame — readOpt's
-        // "physically empty" case) cannot be re-read for folding:
-        // schema inference would fail an unrelated transaction's
-        // commit. Its manifest cost is all dead claims; drop them.
-        if (!leaves.exists(IndexFS.hasParquetRecursive)) comps -= name
-        else {
-          val live = spark.read.option("basePath", s"$base/$name")
-            .parquet(leaves: _*)
-            .filter(ownershipPred(c)).drop(GSN)
-          stageIn(live, name, c.partCols, fresh)
-          comps += name -> c.copy(owners = Seq(Owner(fresh, None, Nil)))
+        // read only the owned leaves (Manifest.read): dead generations
+        // awaiting GC are never touched by the fold scan. A component
+        // whose live leaves hold no parquet (every owned partition was
+        // written from an empty frame — readOpt's "physically empty"
+        // case) cannot be re-read for folding: schema inference would
+        // fail an unrelated transaction's commit. Its manifest cost is
+        // all dead claims; drop them.
+        Manifest(base, nextId, Map(name -> c)).readOpt(spark, name) match {
+          case None => comps -= name
+          case Some(live) =>
+            val fresh = randomStamp()
+            stageIn(live, name, c.partCols, fresh)
+            comps += name -> c.copy(owners = Seq(Owner(fresh, None, Nil)))
         }
       }
     }

@@ -26,6 +26,19 @@ class GraftSessionSpec extends SparkTestBase {
     // same settings) serves below with bounded bytes
   }
 
+  test("GraftSession.configs caps the codegen cache at 256 classes and " +
+      "leaves every other setting as it was") {
+    assert(GraftSession.configs(8) === Map(
+      "spark.sql.extensions" -> "graft.functions.GraftExtensions",
+      "spark.sql.shuffle.partitions" -> "8",
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "false",
+      // one index_serve probe cycle needs ~170-200 generated classes;
+      // Spark's default of 100 recompiles every probe
+      "spark.sql.codegen.cache.maxEntries" -> "256"))
+  }
+
   test("a session configured per GraftSession serves the stored ANN " +
       "probe within the WeakScale task-bytes bound") {
     import graft.ops.Similarity
