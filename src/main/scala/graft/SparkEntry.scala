@@ -638,19 +638,19 @@ object SparkEntry {
     // append into the cell partitions (dynamic partition overwrite),
     // then probes the merged layout over the full corpus
     "sim_ivfpq_append" -> ((s, d) =>
-      Similarity.ivfpqAppendProbe(embeddings(s, d), ivfpqMod5IndexBase(d), 8, 5)),
+      Scenarios.ivfpqAppendProbe(embeddings(s, d), ivfpqMod5IndexBase(d), 8, 5)),
     // index deletion: every seventh vector tombstones out of the
     // standing index; the probe serves around the sidecar with NO
     // layout rewrite and is already exact (quantizers keep their
     // full-corpus training). Compaction equivalence is spec-proven.
     "sim_ivfpq_delete" -> ((s, d) =>
-      Similarity.ivfpqDeleteProbe(embeddings(s, d), ivfpqDeleteIndexBase(d), 8, 5)),
+      Scenarios.ivfpqDeleteProbe(embeddings(s, d), ivfpqDeleteIndexBase(d), 8, 5)),
     // streaming-ingestion analog: three fixed vector batches replay
     // through the production append (pristine base restored per run),
     // the production probe serves after each — one tagged result block
     // per ingest step, the ANN twin of dedup_admit
     "sim_ivfpq_admit" -> ((s, d) =>
-      Similarity.ivfpqAdmitProbe(embeddings(s, d), ivfpqMod5IndexBase(d),
+      Scenarios.ivfpqAdmitProbe(embeddings(s, d), ivfpqMod5IndexBase(d),
         3, 8, 5)),
     "txt_span_cut" -> ((s, d) => Text.spanCut(documents(s, d))),
     "txt_hybrid_rrf" -> ((s, d) => Text.hybridRrf(documents(s, d))),
@@ -674,17 +674,17 @@ object SparkEntry {
     // merge in as an additive delta segment (never a model rebuild),
     // and scoring serves the per-key SUM across generations
     "txt_lm_append" -> ((s, d) =>
-      Text.lmAppendProbe(documents(s, d), lmAppendIndexBase(d))),
+      Scenarios.lmAppendProbe(documents(s, d), lmAppendIndexBase(d))),
     // LM deletion by SUBTRACTION: the count tables are additive, so a
     // delta segment carrying the victims' counts negated serves exact
     // removal with no rebuild (net-zero keys drop at serve time)
     "txt_lm_delete" -> ((s, d) =>
-      Text.lmDeleteProbe(documents(s, d), lmDeleteIndexBase(d))),
+      Scenarios.lmDeleteProbe(documents(s, d), lmDeleteIndexBase(d))),
     // the full maintenance cycle: append + delete + COMPACT (fold the
     // generations into the base; the served model is unchanged, the
     // serve-time aggregation disappears from the probe plan)
     "txt_lm_compact" -> ((s, d) =>
-      Text.lmCompactProbe(documents(s, d), lmCompactIndexBase(d))),
+      Scenarios.lmCompactProbe(documents(s, d), lmCompactIndexBase(d))),
     // the lexical build-once/probe-many pair: _build persists the
     // bucket-partitioned inverted index, _stored scores the fixed
     // query set from the persisted artifacts only (static bucket
@@ -715,14 +715,14 @@ object SparkEntry {
     // append), probe the merged layout; result-identical to the
     // inline index over the full corpus, so the oracle is bm25Oracle
     "txt_bm25_append" -> ((s, d) =>
-      Text.bm25AppendProbe(documents(s, d), bm25AppendIndexBase(d))),
+      Scenarios.bm25AppendProbe(documents(s, d), bm25AppendIndexBase(d))),
     // index deletion: every seventh document tombstones out, then
     // COMPACTION rewrites only the affected buckets and re-derives
     // their df — after which the probe is exactly the inline index
     // over the surviving corpus (the tombstone-serving half, with its
     // documented stale df, is spec-proven)
     "txt_bm25_delete" -> ((s, d) =>
-      Text.bm25DeleteProbe(documents(s, d), bm25DeleteIndexBase(d))),
+      Scenarios.bm25DeleteProbe(documents(s, d), bm25DeleteIndexBase(d))),
     "txt_gopher_gate" -> ((s, d) => Text.gopherGate(documents(s, d))),
     // PII scan + redaction over a deterministically PII-planted twin
     // of the corpus (the fixtures carry no natural PII, so both
@@ -762,7 +762,7 @@ object SparkEntry {
     // and the stored probe restores before serving iff deltas are
     // present ([[graft.ops.Dedup.incrementalNearDupStored]]).
     "dedup_admit" -> ((s, d) =>
-      Dedup.dedupAdmitProbe(documents(s, d), dedupIndexBase(d))),
+      Scenarios.dedupAdmitProbe(documents(s, d), dedupIndexBase(d))),
   )
 
   /** Per-SF stored-index location for the build-once/probe-many pair
@@ -777,7 +777,7 @@ object SparkEntry {
     * (`sim_ivfpq_append`, `sim_ivfpq_admit`): same base split, same
     * base-trained quantizers, same marker contract — one base build
     * and one pristine cache instead of two
-    * ([[graft.ops.Similarity.ensureMod5Base]]).
+    * ([[Scenarios.ensureMod5Base]]).
     */
   private def ivfpqMod5IndexBase(sfDir: String): String =
     s"${System.getProperty("java.io.tmpdir")}/graft_ivfpq_mod5/" +

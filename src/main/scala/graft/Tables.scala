@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Loaders for the driver-generated fixture tables (TESTDATA.md /
@@ -23,15 +25,28 @@ object Tables {
     * makes applies: a fixture path is immutable within a session (the
     * fixtures are generated once per scale factor and never rewritten;
     * mutable layouts — stored indexes, sinks — do NOT go through
-    * [[table]]).
+    * [[table]]). A session's entries are dropped when its context
+    * stops, so a stopped session and its resolved plans do not stay
+    * reachable for the life of the JVM.
     */
-  private val relationCache =
+  private[graft] val relationCache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
 
+  /** Contexts whose stop already evicts their sessions' entries. */
+  private val evicting =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[SparkContext]()
+
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val sc = spark.sparkContext
+    if (!sc.isStopped && evicting.add(sc))
+      sc.addSparkListener(new SparkListener {
+        override def onApplicationEnd(end: SparkListenerApplicationEnd): Unit = {
+          relationCache.keySet.removeIf(_._1.sparkContext eq sc)
+          evicting.remove(sc)
+        }
+      })
     val path = s"$sfDir/$name.parquet"
-    relationCache.computeIfAbsent((spark, path),
-      _ => spark.read.parquet(path))
+    relationCache.computeIfAbsent((spark, path), _ => spark.read.parquet(path))
   }
 
   def region(s: SparkSession, d: String): DataFrame   = table(s, d, "region")

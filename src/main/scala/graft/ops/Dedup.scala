@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.sources.{IndexFS, Snapshot}
+import graft.sources.{IndexFS, Snapshot, StoredLayout}
 import graft.sources.Sources.MaintCheckpointSyntax
 
 /** Deduplication operators over `documents` — the LLM-pipeline dedup
@@ -322,17 +322,18 @@ object Dedup {
   // ---- Build-once / probe-many: the stored near-dup band index ----
 
   /** Freshness = geometry + metadata-only corpus identity, the same
-    * contract as the IVFADC and BM25 markers ([[graft.ops.Similarity
-    * .inputListingFp]]); the build-time row count is a record, never
-    * recomputed at probe time. The v2 marker additionally records the
-    * layout's BUCKET GEOMETRY (`kb=`/`db=`) after the prefix — probes
-    * parse it from marker content instead of recomputing it (the
-    * bucket counts derive from the build-time corpus size, which the
-    * serving path must never re-aggregate).
+    * contract as the IVFADC and BM25 markers
+    * ([[graft.sources.StoredLayout.inputListingFp]]); the build-time
+    * row count is a record, never recomputed at probe time. The v2
+    * marker additionally records the layout's BUCKET GEOMETRY
+    * (`kb=`/`db=`) after the prefix — probes parse it from marker
+    * content instead of recomputing it (the bucket counts derive from
+    * the build-time corpus size, which the serving path must never
+    * re-aggregate).
     */
-  private def dedupIndexMarkerPrefix(history: DataFrame, w: Int): String =
+  private[graft] def dedupIndexMarkerPrefix(history: DataFrame, w: Int): String =
     s"graft-neardup v2 bands=$numBands rpb=$rowsPerBand w=$w " +
-      s"src=${graft.ops.Similarity.inputListingFp(history)} split=trainval"
+      s"src=${StoredLayout.inputListingFp(history)} split=trainval"
 
   /** Bucket count for the v3 layout's prunable partitions: ~128 docs
     * per bucket, rounded up to a power of two, floored at 16 and
@@ -362,7 +363,7 @@ object Dedup {
 
   /** (kb, db) bucket geometry recorded in the layout's marker. */
   private def bucketGeometry(base: String): (Int, Int) = {
-    val txt = IndexFS.readStringOpt(s"$base/MARKER").getOrElse(
+    val txt = StoredLayout.marker(base).getOrElse(
       throw new IllegalStateException(s"no marker at $base"))
     def field(k: String): Int =
       s"$k=(\\d+)".r.findFirstMatchIn(txt).map(_.group(1).toInt)
@@ -398,14 +399,17 @@ object Dedup {
     * once when a document enters the history, which is exactly what
     * this layout captures (the dedup twin of the stored IVFADC/BM25
     * pairs). Returns the per-band census as re-read from storage.
+    *
+    * Every build also primes the pristine-replay cache: the admission
+    * replay ([[graft.Scenarios.dedupAdmitProbe]]) shares this layout
+    * and starts each run from the untouched standing index, so a plain
+    * rebuild doubles as the cache build and the replay never pays a
+    * second cold build of the same train index.
     */
   def dedupBuildIndex(history: DataFrame, base: String,
                       w: Int = 3): DataFrame =
-      IndexFS.withWriterLease(base) {
+      StoredLayout.build(base, "dedup", primePristine = true) { b =>
     val spark = history.sparkSession
-    // an older same-kind layout cannot be served or extended — wipe it
-    // and rebuild under the current shape (self-upgrade)
-    if (Snapshot.layoutStale(base, "dedup")) IndexFS.wipeLayout(base)
     // bucket geometry scales with the corpus so bucket SIZE stays
     // constant: the count is fixed at build time and recorded in the
     // marker (probes parse it, never re-derive it from the corpus)
@@ -415,35 +419,25 @@ object Dedup {
     // one shingle explosion feeds the set sidecar AND the sizes
     val sh = explodedShingleHashes(history, w)
       .withColumn("db", dbCol(col("doc_id"), dB)).maintCheckpoint()
-    // one snapshot transaction: the three artifacts AND the clearing
-    // of delta segments left by appends against a previous corpus
-    // (served alongside a fresh base they would resurrect stale
-    // documents) flip atomically
-    IndexFS.mkdirs(base)
-    val txn = Snapshot.begin(base)
-    // repartition on the partition columns before the bucketed writes:
-    // otherwise every write task emits a file into every directory
-    // (tasks × buckets tiny files — measured 3-10x build-time blowup);
-    // clustered, each directory gets O(1) files
-    txn.writeFull(
-      minhashBands(history, "hist_id", w).withColumn("kb", kbCol(kB))
-        .repartition(col("band_idx"), col("kb")),
-      "bands", "band_idx", "kb")
-    txn.writeFull(sh.repartition(col("db")), "shingles", "db")
-    txn.writeFull(sh.groupBy(col("doc_id")).agg(count(lit(1)).as("szh")),
-      "sizes")
-    Seq("bands_delta", "shingles_delta", "sizes_delta")
-      .foreach(txn.dropComp)
-    val snap = txn.commit()
-    IndexFS.stampVersion(base, "dedup")
-    IndexFS.writeString(s"$base/MARKER",
-      s"${dedupIndexMarkerPrefix(history, w)} kb=$kB db=$dB n=$histCount")
-    // prime the pristine-replay cache: the admission gate's replay
-    // ([[dedupAdmitProbe]]) shares this layout and must start each run
-    // from the untouched standing index — snapshotting here means a
-    // plain rebuild doubles as the cache build, so the replay never
-    // pays a second cold build of the same train index
-    IndexFS.snapshotPristine(base)
+    // the three artifacts AND the clearing of delta segments left by
+    // appends against a previous corpus (served alongside a fresh base
+    // they would resurrect stale documents) flip in one transaction
+    val snap = b.commit(
+        s"${dedupIndexMarkerPrefix(history, w)} kb=$kB db=$dB n=$histCount") { txn =>
+      // repartition on the partition columns before the bucketed
+      // writes: otherwise every write task emits a file into every
+      // directory (tasks × buckets tiny files — measured 3-10x
+      // build-time blowup); clustered, each directory gets O(1) files
+      txn.writeFull(
+        minhashBands(history, "hist_id", w).withColumn("kb", kbCol(kB))
+          .repartition(col("band_idx"), col("kb")),
+        "bands", "band_idx", "kb")
+      txn.writeFull(sh.repartition(col("db")), "shingles", "db")
+      txn.writeFull(sh.groupBy(col("doc_id")).agg(count(lit(1)).as("szh")),
+        "sizes")
+      Seq("bands_delta", "shingles_delta", "sizes_delta")
+        .foreach(txn.dropComp)
+    }
     snap.read(spark, "bands")
       .groupBy(col("band_idx").cast("long").as("band_idx"))
       .agg(count(lit(1)).as("n_postings"),
@@ -460,8 +454,8 @@ object Dedup {
     * exactly, so the registry oracle IS the inline one). Rebuilds
     * lazily iff the marker is stale.
     *
-    * SHARED-LAYOUT CONTRACT with [[dedupAdmitProbe]] (the dedup twin
-    * of the IVFADC pair's `ensureMod5Base`): both slots serve the same
+    * SHARED-LAYOUT CONTRACT with [[graft.Scenarios.dedupAdmitProbe]]
+    * (the dedup twin of the IVFADC pair's mod-5 base): both slots serve the same
     * standing train-split index at one base — one build, one pristine
     * cache, half the standing disk. The admission replay MUTATES the
     * layout (delta segments of admitted non-history docs, which this
@@ -475,15 +469,10 @@ object Dedup {
                                base: String, w: Int = 3,
                                threshold: Double = 0.3): DataFrame = {
     val spark = batch.sparkSession
-    if (Snapshot.layoutStale(base, "dedup") ||
-        !IndexFS.markerFresh(s"$base/MARKER",
-          dedupIndexMarkerPrefix(history, w)))
+    StoredLayout.ensureFresh(base, "dedup", dedupIndexMarkerPrefix(history, w),
+        restoreIfAny = Seq("bands_delta", "shingles_delta", "sizes_delta")) {
       dedupBuildIndex(history, base, w).count()
-    else if (Seq("bands_delta", "shingles_delta", "sizes_delta")
-        .exists(Snapshot.require(base).has))
-      IndexFS.restorePristine(base, dedupIndexMarkerPrefix(history, w)) {
-        dedupBuildIndex(history, base, w).count(); ()
-      }
+    }
     val snap = Snapshot.require(base)
     val (kB, dB) = bucketGeometry(base)
     // the batch's band keys live in a bounded set of key buckets
@@ -589,21 +578,18 @@ object Dedup {
     * [[dedupProbe]]/[[dedupBuildIndex]] (which self-upgrade a stale
     * layout, because they hold the full history corpus), the
     * admission gate sees only the BATCH — it could not rebuild the
-    * standing index even if it wanted to. A pre-v3 layout fails
-    * loudly up front ([[graft.sources.IndexFS.requireVersion]]:
-    * "rebuild it before probing"), and a missing/geometry-less
-    * marker fails the same way below; the operator that owns the
-    * history runs `dedupBuildIndex` to upgrade, then admission
-    * resumes.
+    * standing index even if it wanted to. A pre-v3 or unbuilt layout
+    * fails loudly up front ([[graft.sources.StoredLayout.requireBuilt]]),
+    * and a geometry-less marker fails the same way below; the
+    * operator that owns the history runs `dedupBuildIndex` to
+    * upgrade, then admission resumes.
     */
   def dedupAdmit(batch: DataFrame, base: String, w: Int = 3,
                  threshold: Double = 0.3,
                  docsPerSegFile: Long = defaultDocsPerSegFile): DataFrame =
       IndexFS.withWriterLease(base) {
     val spark = batch.sparkSession
-    IndexFS.requireVersion(base, "dedup")
-    require(IndexFS.exists(s"$base/MARKER"),
-      s"no stored near-dup index at $base — run dedupBuildIndex first")
+    StoredLayout.requireBuilt(base, "dedup")
     // ONE manifest resolution pins the whole admission pass; serve
     // base ∪ delta segments for every artifact
     val snap = Snapshot.require(base)
@@ -708,71 +694,6 @@ object Dedup {
         coalesce(col("n_dups"), lit(0L)).as("n_dups"),
         coalesce(col("dup_of"), lit(-1L)).as("dup_of"),
         coalesce(!col("is_dup"), lit(true)).as("admitted"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** Deterministic BATCH-ANALOG of the streaming admission gate
-    * ([[dedupAdmit]]) — the oracle-checkable registry formulation:
-    * rebuild the standing index from the train split (a FULL rebuild,
-    * not the marker-guarded lazy one: the gate mutates the layout, so
-    * a deterministic replay must start from the clean standing index
-    * every run), replay `nBatches` fixed micro-batches of the
-    * remaining documents through the gate IN ORDER (batch k is checked
-    * against train + everything admitted before it), and emit one row
-    * per replayed document: the gate's verdict columns plus the
-    * delta-layout census — the band postings and shingle rows that
-    * document's admission appended, read back from the published
-    * snapshot (a lost segment, a phantom band row, or a missed
-    * admission all hash-mismatch). Batch assignment uses the same md5
-    * bucket device as [[graft.ops.Text.trainValSplit]] so an external
-    * engine reproduces the batches exactly.
-    *
-    * The clean-start rebuild is served from a PRISTINE-LAYOUT CACHE:
-    * the gate mutates the layout, so every replay must begin from the
-    * untouched train-split index — but re-RUNNING `dedupBuildIndex`
-    * per replay re-pays the full build (~1/3 of the bench slot). The
-    * first run per (corpus, geometry) builds and snapshots the layout
-    * to `<base>_pristine`; later runs restore it by filesystem copy —
-    * byte-identical, so verdicts, segment ids, and the census hash
-    * exactly as a fresh build would. Cache freshness uses the same
-    * marker-prefix contract as the lazy-probe paths.
-    */
-  def dedupAdmitProbe(documents: DataFrame, base: String, nBatches: Int = 3,
-                      w: Int = 3, threshold: Double = 0.3): DataFrame = {
-    val spark = documents.sparkSession
-    val split = Text.trainValSplit(documents)
-      .select(col("doc_id"), col("split"))
-    val withSplit = documents.join(split, Seq("doc_id"))
-    val train = withSplit.filter(col("split") === "train")
-    // the batch slices share one materialization of the split join —
-    // each admission's own checkpoint then reads blocks instead of
-    // re-running the md5-bucket join per batch
-    val rest = withSplit.filter(col("split") =!= "train")
-      .withColumn("batch",
-        Text.tokenHash(col("doc_id").cast("string")) % nBatches)
-      .maintCheckpoint()
-    IndexFS.restorePristine(base, dedupIndexMarkerPrefix(train, w)) {
-      dedupBuildIndex(train, base, w).count(); ()
-    }
-    val verdicts = (0 until nBatches).map { b =>
-      dedupAdmit(rest.filter(col("batch") === b), base, w, threshold)
-        .withColumn("batch", lit(b.toLong))
-    }.reduce(_.unionByName(_))
-    val snap = Snapshot.require(base)
-    def censusOf(comp: String, idCol: String, as: String): DataFrame =
-      snap.readOpt(spark, comp)
-        .map(_.groupBy(col(idCol).as("doc_id")).agg(count(lit(1)).as(as)))
-        .getOrElse(spark.range(0)
-          .select(col("id").as("doc_id"), lit(0L).as(as)))
-    verdicts
-      .join(censusOf("bands_delta", "hist_id", "idx_bands"),
-        Seq("doc_id"), "left")
-      .join(censusOf("shingles_delta", "doc_id", "idx_shingles"),
-        Seq("doc_id"), "left")
-      .select(col("doc_id"), col("batch"), col("admitted"),
-        col("n_cands"), col("n_dups"), col("dup_of"),
-        coalesce(col("idx_bands"), lit(0L)).as("idx_bands"),
-        coalesce(col("idx_shingles"), lit(0L)).as("idx_shingles"))
       .orderBy(col("doc_id"))
   }
 

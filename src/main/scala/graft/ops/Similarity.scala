@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.sources.{IndexFS, Snapshot}
+import graft.sources.{IndexFS, Snapshot, StoredLayout}
 import graft.sources.Sources.MaintCheckpointSyntax
 
 /** Similarity search over the `embeddings` table (`Array[Float]`
@@ -1124,24 +1124,6 @@ object Similarity {
     * its nprobe cell directories — metadata-only pruning, proven in
     * SourcesSpec), plus the two broadcast-sized trained artifacts.
     */
-  /** Geometry prefix + corpus identity for the stored index. The probe
-    * compares only [[indexMarkerPrefix]] — geometry plus a METADATA-ONLY
-    * fingerprint of the corpus (md5 of the sorted input-file listing; a
-    * file-index lookup, not a data scan). The row count is stamped at
-    * BUILD time purely as a build-side record: round 5 computed
-    * `embeddings.count()` on every probe to validate freshness, which
-    * at 100 TB is an every-query enumeration of the corpus on the
-    * serving path the index exists to keep cheap. A content rewrite
-    * that keeps every file path byte-identical is invisible to the
-    * listing fingerprint — the documented residual trust boundary of
-    * build-once/probe-many (same as any standing index).
-    */
-  private[ops] def inputListingFp(df: DataFrame): String = {
-    val listing = df.inputFiles.sorted.mkString("\n")
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(listing.getBytes("UTF-8")).map("%02x".format(_)).mkString
-  }
-
   /** The `label` metadata column is OPTIONAL on the write path: a
     * source without it (e.g. a raw vector stream) stores null, and
     * null never satisfies a filtered-search predicate — the safe
@@ -1152,21 +1134,23 @@ object Similarity {
     else df.withColumn("label", lit(null).cast("int"))
 
   /** Lazy-rebuild gate shared by every stored-IVFADC probe: freshness
-    * = geometry + input-listing fingerprint ONLY (both metadata-cheap;
-    * the build-time n= suffix is trusted, never recomputed — no
-    * corpus-wide aggregate on the probe path). Marker I/O goes through
-    * [[IndexFS]], so the layout may live on any Hadoop-compatible FS.
+    * = geometry + input-listing fingerprint ONLY (the build-time n=
+    * suffix is trusted, never recomputed — no corpus-wide aggregate on
+    * the probe path; [[StoredLayout.ensureFresh]]).
     */
   private def ensureIvfpqFresh(embeddings: DataFrame, base: String,
                                nlist: Int): Unit =
-    if (Snapshot.layoutStale(base, "ivfpq") ||
-        !IndexFS.markerFresh(s"$base/MARKER",
-          indexMarkerPrefix(embeddings, nlist)))
+    StoredLayout.ensureFresh(base, "ivfpq", indexMarkerPrefix(embeddings, nlist)) {
       ivfpqBuildIndex(embeddings, base, nlist).count()
+    }
 
-  private def indexMarkerPrefix(embeddings: DataFrame, nlist: Int): String =
+  /** Geometry prefix + corpus identity for the stored index
+    * ([[StoredLayout.inputListingFp]]); the row count is stamped at
+    * BUILD time purely as a build-side record.
+    */
+  private[graft] def indexMarkerPrefix(embeddings: DataFrame, nlist: Int): String =
     s"graft-ivfpq v3 nlist=$nlist m=$pqM ksub=$pqKsub " +
-      s"src=${inputListingFp(embeddings)}"
+      s"src=${StoredLayout.inputListingFp(embeddings)}"
 
   private def indexMarker(embeddings: DataFrame, nlist: Int): String =
     s"${indexMarkerPrefix(embeddings, nlist)} n=${embeddings.count()}"
@@ -1198,11 +1182,8 @@ object Similarity {
     */
   def ivfpqBuildIndex(embeddings: DataFrame, base: String,
                       nlist: Int = 16): DataFrame =
-      IndexFS.withWriterLease(base) {
+      StoredLayout.build(base, "ivfpq") { b =>
     val spark = embeddings.sparkSession
-    // an older same-kind layout cannot be served or extended — wipe it
-    // and rebuild under the current shape (self-upgrade)
-    if (Snapshot.layoutStale(base, "ivfpq")) IndexFS.wipeLayout(base)
     // coarse-quantizer training is independent of the unit→codebook
     // chain — overlap the two loops (guide §2.6, deterministic both)
     val centF = graft.sources.Par.submit(spark)(() =>
@@ -1217,21 +1198,17 @@ object Similarity {
         .maintCheckpoint()
     val codesCells = pqEncode(unit, codebooks)
       .join(assigned.select(col("vec_id"), col("cell")), Seq("vec_id"))
-    // one snapshot transaction: the four artifacts AND the clearing of
-    // any maintenance residue (tombstones, resplit staging) from a
-    // previous corpus flip atomically — a probe racing the rebuild
-    // serves either the old index or the new one, never a mixture
-    IndexFS.mkdirs(base)
-    val txn = Snapshot.begin(base)
-    txn.writeFull(assigned, "cells", "cell")
-    txn.writeFull(codesCells, "codes", "cell")
-    txn.writeFull(centroids, "centroids")
-    txn.writeFull(codebooks, "codebooks")
-    txn.dropComp("tombstones")
-    txn.dropComp("cells_resplit")
-    val snap = txn.commit()
-    IndexFS.stampVersion(base, "ivfpq")
-    IndexFS.writeString(s"$base/MARKER", indexMarker(embeddings, nlist))
+    // the four artifacts AND the clearing of any maintenance residue
+    // (tombstones, resplit staging) flip in one transaction — a probe
+    // racing the rebuild serves either the old index or the new one
+    val snap = b.commit(indexMarker(embeddings, nlist)) { txn =>
+      txn.writeFull(assigned, "cells", "cell")
+      txn.writeFull(codesCells, "codes", "cell")
+      txn.writeFull(centroids, "centroids")
+      txn.writeFull(codebooks, "codebooks")
+      txn.dropComp("tombstones")
+      txn.dropComp("cells_resplit")
+    }
     snap.read(spark, "cells")
       .groupBy(col("cell").cast("long").as("cell"))
       .agg(count(lit(1)).as("n_members"), min(col("vec_id")).as("first_vec"))
@@ -1502,8 +1479,8 @@ object Similarity {
 
   /** Serve top-k for a (vec_id, embedding) query frame from a stored
     * IVFADC layout under `base` — the shared serving core of
-    * [[ivfpqProbeStored]] and [[ivfpqAppendProbe]]; reads ONLY the
-    * persisted artifacts.
+    * [[ivfpqProbeStored]] and the maintenance scenarios
+    * ([[graft.Scenarios]]); reads ONLY the persisted artifacts.
     */
   private[graft] def ivfpqScoreStored(spark: org.apache.spark.sql.SparkSession,
                                base: String, queries: DataFrame, k: Int,
@@ -1514,17 +1491,6 @@ object Similarity {
     val snap = Snapshot.require(base)
     val centroids = snap.read(spark, "centroids")
     val codebooks = snap.read(spark, "codebooks")
-    // tombstone serving: deleted vectors drop out of the candidate set
-    // via anti-join (no stats to go stale here, unlike BM25 — the
-    // tombstoned probe is already EXACTLY the index minus the deletes;
-    // compaction only reclaims the bytes)
-    def minusTombstones(df: DataFrame): DataFrame =
-      snap.readOpt(spark, "tombstones") match {
-        case Some(t) => df.join(
-          broadcast(t.withColumnRenamed("doc_id", "vec_id")),
-          Seq("vec_id"), "left_anti")
-        case None => df
-      }
     // probe ranking: the query's nprobe best stored centroids
     val probes = queries
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
@@ -1551,9 +1517,14 @@ object Similarity {
     // affected-cell lists.
     val probedCellVals = probeCells.select(col("cell")).distinct()
       .collect().map(_.getLong(0)).toSeq.sorted
-    val codesCells = minusTombstones(snap.read(spark, "codes")
+    // tombstone serving: deleted vectors drop out of the candidate set
+    // via anti-join (no stats to go stale here, unlike BM25 — the
+    // tombstoned probe is already EXACTLY the index minus the deletes;
+    // compaction only reclaims the bytes)
+    val codesCells = StoredLayout.minusTombstones(snap, snap.read(spark, "codes")
       .filter(col("cell").isin(probedCellVals: _*))
-      .select(col("vec_id"), col("codes"), col("cell").cast("long").as("cell")))
+      .select(col("vec_id"), col("codes"), col("cell").cast("long").as("cell")),
+      "vec_id")
     // per-query ADC LUT from the stored codebooks (unit-normalized
     // queries: per-row normalization, identical to normalizing the
     // corpus then filtering)
@@ -1658,111 +1629,6 @@ object Similarity {
     ()
   }
 
-  /** Ensure `base` holds the SHARED mod-5 standing IVFADC layout both
-    * maintenance slots ([[ivfpqAppendProbe]], [[ivfpqAdmitProbe]])
-    * build on: quantizers trained on the base four-fifths
-    * (`vec_id % 5 ≠ 4`) — the realistic maintenance contract
-    * (quantizers age; appends reuse them). Cold: build + snapshot to
-    * the pristine cache. Warm with `forceRestore`: byte-identical
-    * restore from the cache (the admit replay mutates the layout and
-    * probes after each batch, so it must start clean); warm without:
-    * leave the standing layout as-is — the caller's mutation must be
-    * idempotent against any prior mutated state of it.
-    */
-  private def ensureMod5Base(embeddings: DataFrame, base: String,
-                             nlist: Int,
-                             forceRestore: Boolean = false): Unit = {
-    val expected = indexMarkerPrefix(embeddings, nlist) + " split=mod5"
-    if (forceRestore || Snapshot.layoutStale(base, "ivfpq") ||
-        !IndexFS.markerEquals(s"$base/MARKER", expected))
-      IndexFS.restorePristine(base, expected) {
-        ivfpqBuildIndex(embeddings.filter(col("vec_id") % 5 =!= 4),
-          base, nlist).count()
-        // the marker must reflect the SPLIT build keyed by the FULL
-        // corpus fingerprint (ivfpqBuildIndex stamps its own marker
-        // over the base slice only)
-        IndexFS.writeString(s"$base/MARKER", expected)
-      }
-  }
-
-  /** Build-on-base → append-batch → probe, end to end: the corpus
-    * splits deterministically (vec_id mod 5: four fifths are the
-    * standing corpus, one fifth the incoming batch), the base index
-    * builds lazily once (training sees ONLY the base — the realistic
-    * maintenance contract: quantizers age, appends reuse them), every
-    * run replays the idempotent APPEND (the measured cost of this
-    * registry query IS the maintenance cost), and the probe serves
-    * from the merged layout over the full corpus.
-    */
-  def ivfpqAppendProbe(embeddings: DataFrame, base: String, nQueries: Int,
-                       k: Int, nlist: Int = 16, nprobe: Int = 4,
-                       shortlist: Int = 20): DataFrame = {
-    val spark = embeddings.sparkSession
-    val batch = embeddings.filter(col("vec_id") % 5 === 4)
-    // SHARED base-layout contract with [[ivfpqAdmitProbe]] (same mod-5
-    // split, same base-trained quantizers, same marker string), so one
-    // standing layout serves BOTH maintenance slots — one base build
-    // instead of two. No pristine restore needed here: the append is
-    // idempotent against ANY admitted subset of the fifth (re-appended
-    // vec_ids anti-join away), so whatever state the admit replay left
-    // the shared layout in, appending the full fifth lands the exact
-    // one-shot-encode state this probe's oracle re-derives.
-    ensureMod5Base(embeddings, base, nlist)
-    ivfpqAppend(batch, base)
-    val queries = embeddings.filter(col("vec_id") < nQueries)
-      .select(col("vec_id"), col("embedding")).localCheckpoint()
-    ivfpqScoreStored(spark, base, queries, k, nprobe, shortlist)
-  }
-
-  /** Streaming-ingestion ADMISSION analog for the stored IVFADC layout
-    * — the deterministic batch replay of "vectors stream through
-    * [[ivfpqAppend]], probes serve between batches" (the vector twin
-    * of [[graft.ops.Dedup.dedupAdmitProbe]], closing the last
-    * spec-only streaming-ingestion path): the corpus splits into the
-    * standing base (four fifths, `vec_id % 5 ≠ 4`) and `nBatches`
-    * fixed ingest batches of the remaining fifth
-    * (`(vec_id div 5) % nBatches` — both engines reproduce the batches
-    * by arithmetic), the PRISTINE base index restores per run (the
-    * appends mutate the layout, so a deterministic replay starts
-    * clean — [[graft.sources.IndexFS.restorePristine]], byte-identical
-    * restore), then each batch replays through the PRODUCTION append
-    * (idempotent cell-partition merge under the stored quantizers) and
-    * the production probe serves from the layout AS OF that batch —
-    * one result block per ingest step, tagged `batch`.
-    *
-    * Because appends never retrain quantizers, the layout after batch
-    * k is exactly a one-shot encode of base ∪ batches ≤ k under the
-    * base-trained quantizers — which is what the sequential oracle
-    * re-derives per step (train-on-base CTEs shared, per-step
-    * candidate corpus widened). A lost append, a stale manifest
-    * served after an append, or a probe reading a half-merged cell
-    * all hash-mismatch some step's block.
-    */
-  def ivfpqAdmitProbe(embeddings: DataFrame, base: String,
-                      nBatches: Int, nQueries: Int, k: Int,
-                      nlist: Int = 16, nprobe: Int = 4,
-                      shortlist: Int = 20): DataFrame = {
-    val spark = embeddings.sparkSession
-    // the replay probes after EACH batch, so unlike the append slot it
-    // must start from the untouched base layout every run — force the
-    // pristine restore on the shared base
-    ensureMod5Base(embeddings, base, nlist, forceRestore = true)
-    val queries = embeddings.filter(col("vec_id") < nQueries)
-      .select(col("vec_id"), col("embedding")).localCheckpoint()
-    (0 until nBatches).map { b =>
-      ivfpqAppend(embeddings.filter(col("vec_id") % 5 === 4 &&
-        pmod(expr("vec_id div 5"), lit(nBatches)) === b), base)
-      // the probe pins THIS step's manifest at construction; earlier
-      // steps' files stay live through the GC grace window, so the
-      // final union executes every step against its own snapshot
-      ivfpqScoreStored(spark, base, queries, k, nprobe, shortlist)
-        .withColumn("batch", lit(b.toLong))
-    }.reduce(_.unionByName(_))
-      .select(col("batch"), col("query_id"), col("neighbor_id"),
-        col("sim"), col("rank"))
-      .orderBy(col("batch"), col("query_id"), col("rank"))
-  }
-
   /** DELETE vectors from the stored IVFADC layout — tombstoned, same
     * sidecar as [[graft.ops.Text.bm25Delete]]: serving excludes them
     * immediately ([[ivfpqScoreStored]] anti-joins the sidecar) and the
@@ -1770,18 +1636,7 @@ object Similarity {
     * [[ivfpqCompact]] later reclaims the bytes.
     */
   def ivfpqDelete(deletedIds: DataFrame, base: String): Unit =
-      IndexFS.withWriterLease(base) {
-    val spark = deletedIds.sparkSession
-    val snap = Snapshot.require(base)
-    val merged = (snap.readOpt(spark, "tombstones") match {
-        case Some(t) => t.unionByName(deletedIds.select(col("vec_id")))
-        case None    => deletedIds.select(col("vec_id"))
-      }).distinct()
-    val txn = Snapshot.begin(base)
-    txn.writeFull(merged, "tombstones")
-    txn.commit()
-    ()
-  }
+    StoredLayout.tombstone(deletedIds.select(col("vec_id")), base)
 
   /** COMPACT tombstones into the stored IVFADC layout: one
     * column-pruned id scan locates the tombstoned vectors' cells,
@@ -1797,56 +1652,21 @@ object Similarity {
       case Some(t) => t
       case None    => return
     }
-    val cellsAll = snap.read(spark, "cells")
-    val affected = cellsAll.join(broadcast(tomb), Seq("vec_id"))
-      .select(col("cell").cast("int")).distinct()
-      .collect().map(_.getInt(0)).toSeq.sorted
     // the affected-cell rewrites AND the tombstone clear are one
     // atomic manifest flip — no window where a probe could see the
     // compacted layout with the tombstones still applied (or vice
     // versa), which the old rewrite-then-clear ordering had
     val txn = Snapshot.begin(base)
-    if (affected.nonEmpty) {
-      val parts = affected.map(c => Seq(c.toString))
-      val keepCells = cellsAll.filter(col("cell").isin(affected: _*))
-        .join(broadcast(tomb), Seq("vec_id"), "left_anti")
-        .select(col("vec_id"), col("embedding"), col("label"),
-          col("cell").cast("long").as("cell"))
-      txn.writeParts(keepCells, "cells", Seq("cell"), parts)
-      val keepCodes = snap.read(spark, "codes")
-        .filter(col("cell").isin(affected: _*))
-        .join(broadcast(tomb), Seq("vec_id"), "left_anti")
-        .select(col("vec_id"), col("codes"), col("cell").cast("long").as("cell"))
-      txn.writeParts(keepCodes, "codes", Seq("cell"), parts)
-    }
+    StoredLayout.rewriteMinusTombstones(snap, txn, "cells", "cell", "vec_id",
+        Seq("vec_id", "embedding", "label"), tomb)
+      .foreach { case (_, affected) =>
+        // codes share the cells' partitioning: rewrite the same cells
+        StoredLayout.rewriteMinusTombstones(snap, txn, "codes", "cell",
+          "vec_id", Seq("vec_id", "codes"), tomb, parts = Some(affected))
+      }
     txn.dropComp("tombstones")
     txn.commit()
     ()
-  }
-
-  /** Build-on-full → tombstone-delete → probe, end to end: every
-    * seventh vector (vec_id mod 7 = 3) is deleted from the standing
-    * index and the probe serves around the tombstones WITHOUT any
-    * layout rewrite — already exactly the index minus the deletes
-    * (quantizers keep their full-corpus training: the maintenance
-    * contract). Compaction equivalence is spec-proven.
-    */
-  def ivfpqDeleteProbe(embeddings: DataFrame, base: String, nQueries: Int,
-                       k: Int, nlist: Int = 16, nprobe: Int = 4,
-                       shortlist: Int = 20): DataFrame = {
-    val spark = embeddings.sparkSession
-    val marker = s"$base/MARKER_BASE"
-    val expected = indexMarkerPrefix(embeddings, nlist) + " delete=mod7"
-    if (Snapshot.layoutStale(base, "ivfpq") ||
-        !IndexFS.markerEquals(marker, expected)) {
-      ivfpqBuildIndex(embeddings, base, nlist).count()
-      IndexFS.writeString(marker, expected)
-    }
-    ivfpqDelete(embeddings.filter(col("vec_id") % 7 === 3)
-      .select(col("vec_id")), base)
-    val queries = embeddings.filter(col("vec_id") < nQueries)
-      .select(col("vec_id"), col("embedding")).localCheckpoint()
-    ivfpqScoreStored(spark, base, queries, k, nprobe, shortlist)
   }
 
   /** recall@k of residual IVFADC against brute-force cosine. */

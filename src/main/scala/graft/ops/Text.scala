@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.sources.{IndexFS, Snapshot}
+import graft.sources.{IndexFS, Snapshot, StoredLayout}
 import graft.sources.Sources.MaintCheckpointSyntax
 
 /** Text-analysis operators over the `documents` table — the
@@ -579,13 +579,13 @@ object Text {
   /** Probe-side freshness = geometry + METADATA-ONLY corpus identity
     * (md5 of the sorted input-file listing — a file-index lookup, not
     * a data scan); the row count is stamped at BUILD time only. See
-    * [[graft.ops.Similarity.inputListingFp]] for the rationale: the
-    * round-5 marker ran `documents.count()` on every probe, a
+    * [[graft.sources.StoredLayout.inputListingFp]] for the rationale:
+    * the round-5 marker ran `documents.count()` on every probe, a
     * corpus-wide aggregate on the serving path.
     */
-  private def bm25IndexMarkerPrefix(documents: DataFrame): String =
+  private[graft] def bm25IndexMarkerPrefix(documents: DataFrame): String =
     s"graft-bm25 v5 buckets=$bm25Buckets " +
-      s"src=${Similarity.inputListingFp(documents)}"
+      s"src=${StoredLayout.inputListingFp(documents)}"
 
   /** Driver-side twin of [[termBucket]] for plan-time literal terms
     * (same md5-prefix hash: first 4 digest bytes, big-endian unsigned
@@ -622,11 +622,8 @@ object Text {
     * so the build tokenizes the corpus exactly once.
     */
   def bm25BuildIndex(documents: DataFrame, base: String): DataFrame =
-      IndexFS.withWriterLease(base) {
+      StoredLayout.build(base, "bm25") { b =>
     val spark = documents.sparkSession
-    // an older same-kind layout cannot be served or extended — wipe it
-    // and rebuild under the current shape (self-upgrade)
-    if (Snapshot.layoutStale(base, "bm25")) IndexFS.wipeLayout(base)
     // ONE corpus tokenize: the positional frame is the superset every
     // other artifact folds from (tf = its per-(doc, term) count)
     val toks = positionalPostings(documents).maintCheckpoint()
@@ -636,26 +633,21 @@ object Text {
       .maintCheckpoint()
     val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
       .maintCheckpoint()
-    // one snapshot transaction: the five artifacts AND the clearing of
-    // maintenance residue from a previous corpus (delta segments,
-    // tombstones, resplit staging — served alongside a fresh base they
-    // would resurrect stale postings) flip atomically
-    IndexFS.mkdirs(base)
-    val txn = Snapshot.begin(base)
-    txn.writeFull(tf.withColumn("bucket", termBucket(col("term"))),
-      "tf", "bucket")
-    txn.writeFull(tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-      .withColumn("bucket", termBucket(col("term"))), "df", "bucket")
-    txn.writeFull(toks.withColumn("bucket", termBucket(col("term"))),
-      "pos", "bucket")
-    txn.writeFull(dl, "dl")
-    txn.writeFull(dl.agg(count(lit(1)).as("n_docs"),
-      sum(col("dl")).as("tot_dl")), "stats")
-    Seq("tf_delta", "pos_delta", "tombstones", "tf_resplit")
-      .foreach(txn.dropComp)
-    val snap = txn.commit()
-    IndexFS.stampVersion(base, "bm25")
-    IndexFS.writeString(s"$base/MARKER", bm25IndexMarker(documents))
+    // the five artifacts AND the clearing of maintenance residue (delta
+    // segments, tombstones, resplit staging) flip in one transaction
+    val snap = b.commit(bm25IndexMarker(documents)) { txn =>
+      txn.writeFull(tf.withColumn("bucket", termBucket(col("term"))),
+        "tf", "bucket")
+      txn.writeFull(tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
+        .withColumn("bucket", termBucket(col("term"))), "df", "bucket")
+      txn.writeFull(toks.withColumn("bucket", termBucket(col("term"))),
+        "pos", "bucket")
+      txn.writeFull(dl, "dl")
+      txn.writeFull(dl.agg(count(lit(1)).as("n_docs"),
+        sum(col("dl")).as("tot_dl")), "stats")
+      Seq("tf_delta", "pos_delta", "tombstones", "tf_resplit")
+        .foreach(txn.dropComp)
+    }
     snap.read(spark, "tf")
       .groupBy(col("bucket").cast("long").as("bucket"))
       .agg(count(lit(1)).as("n_postings"),
@@ -682,6 +674,14 @@ object Text {
     ensureBm25Fresh(documents, base)
     bm25ScoreStored(spark, base, k)
   }
+
+  /** LSM delta-segment id of a batch: an order-insensitive hash of its
+    * doc-id set, so a replayed batch supersedes its own segment.
+    */
+  private def segmentId(batch: DataFrame): String =
+    java.lang.Long.toHexString(Option(batch.select(col("doc_id")).distinct()
+      .agg(sum(tokenHash(col("doc_id").cast("string")))).head.get(0))
+      .map(_.asInstanceOf[Long]).getOrElse(0L))
 
   /** Remove `dropIds`' rows from a segmented delta component (LSM
     * segments under `comp/seg=<id>/bucket=<b>/`) in ONE grouped
@@ -735,18 +735,37 @@ object Text {
 
   /** Lazy-rebuild gate shared by every stored-BM25 probe: freshness =
     * geometry + input-listing fingerprint only — no corpus aggregate
-    * on the probe path. Marker I/O goes through [[IndexFS]], so the
-    * layout may live on any Hadoop-compatible FS.
+    * on the probe path ([[StoredLayout.ensureFresh]]).
     */
   private def ensureBm25Fresh(documents: DataFrame, base: String): Unit =
-    if (Snapshot.layoutStale(base, "bm25") ||
-        !IndexFS.markerFresh(s"$base/MARKER",
-          bm25IndexMarkerPrefix(documents)))
+    StoredLayout.ensureFresh(base, "bm25", bm25IndexMarkerPrefix(documents)) {
       bm25BuildIndex(documents, base).count()
+    }
+
+  /** The probed `buckets` of postings component `comp` as `cols`,
+    * served base ∪ its delta segments ([[bm25Append]]'s LSM write): a
+    * doc in any delta shadows ALL its base postings (the doc-set
+    * anti-join is unfiltered by bucket — a re-appended doc whose new
+    * text dropped a term must not keep matching via stale postings).
+    */
+  private def servedPostings(spark: org.apache.spark.sql.SparkSession,
+                             snap: Snapshot.Manifest, comp: String,
+                             buckets: Seq[Long], cols: Seq[String]): DataFrame = {
+    def probed(df: DataFrame) =
+      df.filter(col("bucket").isin(buckets: _*)).select(cols.map(col): _*)
+    val base0 = probed(snap.read(spark, comp))
+    snap.readOpt(spark, s"${comp}_delta") match {
+      case Some(delta) =>
+        base0.join(delta.select(col("doc_id")).distinct(), Seq("doc_id"),
+          "left_anti").unionByName(probed(delta))
+      case None => base0
+    }
+  }
 
   /** Score [[bm25Queries]] from a stored layout under `base` — the
     * shared serving core of [[bm25ProbeStored]] and
-    * [[bm25AppendProbe]]; touches ONLY the persisted artifacts.
+    * [[graft.Scenarios.bm25AppendProbe]]; touches ONLY the persisted
+    * artifacts.
     * (Tombstones are the snapshot component `tombstones`, shared by
     * the BM25 and IVFADC families: live iff at least one delete has
     * not yet been compacted away, read via `readOpt`, cleared by
@@ -768,21 +787,8 @@ object Text {
     val buckets = bm25Queries
       .flatMap(_._2.split(" ")).distinct
       .map(termBucketDriver).distinct.sorted
-    val tfBase = snap.read(spark, "tf")
-      .filter(col("bucket").isin(buckets: _*))
-      .select(col("doc_id"), col("term"), col("tf"))
-    // serve base ∪ tf delta segments ([[bm25Append]]'s LSM write): a
-    // doc in any delta shadows ALL its base postings (the doc-set
-    // anti-join is unfiltered by bucket)
-    val tfGen = snap.readOpt(spark, "tf_delta") match {
-      case Some(delta) =>
-        tfBase.join(delta.select(col("doc_id")).distinct(),
-            Seq("doc_id"), "left_anti")
-          .unionByName(delta
-            .filter(col("bucket").isin(buckets: _*))
-            .select(col("doc_id"), col("term"), col("tf")))
-      case None => tfBase
-    }
+    val tfGen = servedPostings(spark, snap, "tf", buckets,
+      Seq("doc_id", "term", "tf"))
     val dl0 = snap.read(spark, "dl")
     val stats0 = snap.read(spark, "stats")
     // tombstone serving: deleted docs are excluded from MATCHING
@@ -888,10 +894,7 @@ object Text {
     // union of the delta doc sets; per-term df derives at probe time
     // from the served postings (bucket-complete across generations),
     // so no df merge is needed at all.
-    val segId = java.lang.Long.toHexString(
-      Option(posB.select(col("doc_id")).distinct()
-        .agg(sum(tokenHash(col("doc_id").cast("string"))))
-        .head.get(0)).map(_.asInstanceOf[Long]).getOrElse(0L))
+    val segId = segmentId(posB)
     val txn = Snapshot.begin(base)
     txn.writeFull(mergedDl, "dl")
     txn.writeFull(mergedDl.agg(count(lit(1)).as("n_docs"),
@@ -928,30 +931,6 @@ object Text {
       "pos_delta", Seq("seg", "bucket"), parts)
     txn.commit()
     ()
-  }
-
-  /** Build-on-base → append-batch → probe, end to end: the corpus
-    * splits deterministically (doc_id mod 5: four fifths are the
-    * standing corpus, one fifth the incoming batch), the base index
-    * builds lazily once (its own marker), every run replays the
-    * APPEND (idempotent — the measured cost of this registry query IS
-    * the maintenance cost), and the probe serves from the merged
-    * layout. Result: identical to [[bm25TopK]] over the full corpus.
-    */
-  def bm25AppendProbe(documents: DataFrame, base: String,
-                      k: Int = 10): DataFrame = {
-    val spark = documents.sparkSession
-    val baseDocs = documents.filter(col("doc_id") % 5 =!= 4)
-    val batch = documents.filter(col("doc_id") % 5 === 4)
-    val marker = s"$base/MARKER_BASE"
-    val expected = bm25IndexMarkerPrefix(documents) + " split=mod5"
-    if (Snapshot.layoutStale(base, "bm25") ||
-        !IndexFS.markerEquals(marker, expected)) {
-      bm25BuildIndex(baseDocs, base).count()
-      IndexFS.writeString(marker, expected)
-    }
-    bm25Append(batch, base)
-    bm25ScoreStored(spark, base, k)
   }
 
   /** Hybrid retrieval: reciprocal-rank fusion (Cormack et al. 2009 —
@@ -1064,18 +1043,7 @@ object Text {
     * exactness of df is restored by the next compaction.
     */
   def bm25Delete(deletedIds: DataFrame, base: String): Unit =
-      IndexFS.withWriterLease(base) {
-    val spark = deletedIds.sparkSession
-    val snap = Snapshot.require(base)
-    val merged = (snap.readOpt(spark, "tombstones") match {
-        case Some(t) => t.unionByName(deletedIds.select(col("doc_id")))
-        case None    => deletedIds.select(col("doc_id"))
-      }).distinct()
-    val txn = Snapshot.begin(base)
-    txn.writeFull(merged, "tombstones")
-    txn.commit()
-    ()
-  }
+    StoredLayout.tombstone(deletedIds.select(col("doc_id")), base)
 
   /** COMPACT the tombstones into the stored BM25 layout: one
     * column-pruned pass over the postings finds the AFFECTED buckets
@@ -1100,35 +1068,17 @@ object Text {
     // fully compacted one — no window where the sidecar is gone while
     // stale postings still serve
     val txn = Snapshot.begin(base)
-    val tfAll = snap.read(spark, "tf")
-    val affected = tfAll.join(broadcast(tomb), Seq("doc_id"))
-      .select(col("bucket").cast("long")).distinct()
-      .collect().map(_.getLong(0)).toSeq.sorted
-    if (affected.nonEmpty) {
-      val tfAff = tfAll.filter(col("bucket").isin(affected: _*))
-        .join(broadcast(tomb), Seq("doc_id"), "left_anti")
-        .select(col("doc_id"), col("term"), col("tf"),
-          col("bucket").cast("long").as("bucket"))
-        .maintCheckpoint() // feeds the tf stage AND the df re-derive
-      val parts = affected.map(b => Seq(b.toString))
-      txn.writeParts(tfAff, "tf", Seq("bucket"), parts)
-      txn.writeParts(
-        tfAff.groupBy(col("term")).agg(count(lit(1)).as("df"))
-          .withColumn("bucket", termBucket(col("term"))),
-        "df", Seq("bucket"), parts)
-      val posAll = snap.read(spark, "pos")
-      val posAffected = posAll.join(broadcast(tomb), Seq("doc_id"))
-        .select(col("bucket").cast("long")).distinct()
-        .collect().map(_.getLong(0)).toSeq.sorted
-      if (posAffected.nonEmpty) {
-        val posAff = posAll.filter(col("bucket").isin(posAffected: _*))
-          .join(broadcast(tomb), Seq("doc_id"), "left_anti")
-          .select(col("doc_id"), col("pos"), col("term"),
-            col("bucket").cast("long").as("bucket"))
-        txn.writeParts(posAff, "pos", Seq("bucket"),
-          posAffected.map(b => Seq(b.toString)))
+    // the kept postings feed the tf stage AND the df re-derive
+    StoredLayout.rewriteMinusTombstones(snap, txn, "tf", "bucket", "doc_id",
+        Seq("doc_id", "term", "tf"), tomb, checkpoint = true)
+      .foreach { case (tfAff, affected) =>
+        txn.writeParts(
+          tfAff.groupBy(col("term")).agg(count(lit(1)).as("df"))
+            .withColumn("bucket", termBucket(col("term"))),
+          "df", Seq("bucket"), affected.map(b => Seq(b.toString)))
+        StoredLayout.rewriteMinusTombstones(snap, txn, "pos", "bucket",
+          "doc_id", Seq("doc_id", "pos", "term"), tomb)
       }
-    }
     // Everything below runs whether or not any BASE bucket was hit: a
     // doc appended after the build lives ONLY in delta segments and dl,
     // so gating it on base-postings membership would resurrect the doc
@@ -1150,29 +1100,6 @@ object Text {
     txn.dropComp("tombstones")
     txn.commit()
     ()
-  }
-
-  /** Build-on-full → tombstone-delete → compact → probe, end to end:
-    * every seventh document (doc_id mod 7 = 3) is deleted from the
-    * standing index; after compaction the probe is exactly the inline
-    * BM25 ranking over the surviving corpus (the oracle computes that
-    * directly). The tombstone-serving half (correct matching, stale
-    * df, no rewrite) is spec-proven.
-    */
-  def bm25DeleteProbe(documents: DataFrame, base: String,
-                      k: Int = 10): DataFrame = {
-    val spark = documents.sparkSession
-    val marker = s"$base/MARKER_BASE"
-    val expected = bm25IndexMarkerPrefix(documents) + " delete=mod7"
-    if (Snapshot.layoutStale(base, "bm25") ||
-        !IndexFS.markerEquals(marker, expected)) {
-      bm25BuildIndex(documents, base).count()
-      IndexFS.writeString(marker, expected)
-    }
-    bm25Delete(documents.filter(col("doc_id") % 7 === 3)
-      .select(col("doc_id")), base)
-    bm25Compact(spark, base)
-    bm25ScoreStored(spark, base, k)
   }
 
   /** md5-stub embedding: one hex pair per dimension, exact /255 — the
@@ -1247,26 +1174,21 @@ object Text {
     val lex = bm25ProbeStored(documents, bm25Base, nCand)
       .select(col("query_id"), col("doc_id"), col("rank").as("r_lex"))
     // semantic arm: lazy-build the IVF-flat stub-embedding index
-    val marker = s"$annBase/MARKER"
     val expected = s"graft-hybrid-ann v2 nlist=$nlist " +
-      s"src=${graft.ops.Similarity.inputListingFp(documents)}"
-    if (!IndexFS.markerEquals(marker, expected))
-      IndexFS.withWriterLease(annBase) {
-        if (Snapshot.layoutStale(annBase, "ann"))
-          IndexFS.wipeLayout(annBase)
+      s"src=${StoredLayout.inputListingFp(documents)}"
+    StoredLayout.ensureFresh(annBase, "ann", expected, exact = true) {
+      StoredLayout.build(annBase, "ann") { b =>
         val dv = documents
           .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
           .select(col("doc_id").as("vec_id"), stubVec(col("text")).as("embedding"))
         val centroids = Similarity.kmeansCentroids(dv, nlist).localCheckpoint()
-        IndexFS.mkdirs(annBase)
-        val txn = Snapshot.begin(annBase)
-        txn.writeFull(Similarity.assignCells(dv, centroids),
-          "cells", "cell")
-        txn.writeFull(centroids, "centroids")
-        txn.commit()
-        IndexFS.stampVersion(annBase, "ann")
-        IndexFS.writeString(marker, expected)
+        b.commit(expected) { txn =>
+          txn.writeFull(Similarity.assignCells(dv, centroids),
+            "cells", "cell")
+          txn.writeFull(centroids, "centroids")
+        }
       }
+    }
     val annSnap = Snapshot.require(annBase)
     // probe: queries are literal strings — zero corpus reads
     val qv = bm25Queries.toDF("query_id", "qtext")
@@ -1424,9 +1346,9 @@ object Text {
     * listing); the row count is stamped at BUILD time only — same
     * contract as [[bm25IndexMarkerPrefix]].
     */
-  private def lmIndexMarkerPrefix(documents: DataFrame): String =
+  private[graft] def lmIndexMarkerPrefix(documents: DataFrame): String =
     s"graft-lm v2 buckets=$bm25Buckets " +
-      s"src=${Similarity.inputListingFp(documents)}"
+      s"src=${StoredLayout.inputListingFp(documents)}"
 
   private def lmIndexMarker(documents: DataFrame): String =
     s"${lmIndexMarkerPrefix(documents)} n=${documents.count()}"
@@ -1442,34 +1364,28 @@ object Text {
     * census of the written layout as re-read from storage.
     */
   def lmBuildIndex(documents: DataFrame, base: String): DataFrame =
-      IndexFS.withWriterLease(base) {
+      StoredLayout.build(base, "lm") { b =>
     val spark = documents.sparkSession
-    // an older same-kind layout cannot be served or extended — wipe it
-    // and rebuild under the current shape (self-upgrade)
-    if (Snapshot.layoutStale(base, "lm")) IndexFS.wipeLayout(base)
     // one reference tokenize: both count tables fold from this frame
     val pr = bigramPairs(lmReference(documents)).maintCheckpoint()
-    // one snapshot transaction: the count tables, the reference doc
-    // set, AND the clearing of maintenance residue from a previous
-    // reference (count deltas and removal records — summed into a new
-    // base they would skew every probability, and a stale docs_delta
-    // would silently block valid appends) flip atomically
-    IndexFS.mkdirs(base)
-    val txn = Snapshot.begin(base)
-    txn.writeFull(
-      pr.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("n_pair"))
-        .withColumn("bucket", termBucket(col("w1"))), "bi", "bucket")
-    txn.writeFull(
-      pr.groupBy(col("w1")).agg(count(lit(1)).as("n_w1"))
-        .withColumn("bucket", termBucket(col("w1"))), "uni", "bucket")
-    // the reference doc set, recorded so [[lmAppend]] can keep its
-    // generations disjoint (a re-appended doc must not double-count)
-    txn.writeFull(lmReference(documents).select(col("doc_id")), "docs")
-    Seq("bi_delta", "uni_delta", "docs_delta", "docs_removed")
-      .foreach(txn.dropComp)
-    val snap = txn.commit()
-    IndexFS.stampVersion(base, "lm")
-    IndexFS.writeString(s"$base/MARKER", lmIndexMarker(documents))
+    // the count tables, the reference doc set, AND the clearing of
+    // maintenance residue from a previous reference (count deltas and
+    // removal records — summed into a new base they would skew every
+    // probability, and a stale docs_delta would silently block valid
+    // appends) flip in one transaction
+    val snap = b.commit(lmIndexMarker(documents)) { txn =>
+      txn.writeFull(
+        pr.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("n_pair"))
+          .withColumn("bucket", termBucket(col("w1"))), "bi", "bucket")
+      txn.writeFull(
+        pr.groupBy(col("w1")).agg(count(lit(1)).as("n_w1"))
+          .withColumn("bucket", termBucket(col("w1"))), "uni", "bucket")
+      // the reference doc set, recorded so [[lmAppend]] can keep its
+      // generations disjoint (a re-appended doc must not double-count)
+      txn.writeFull(lmReference(documents).select(col("doc_id")), "docs")
+      Seq("bi_delta", "uni_delta", "docs_delta", "docs_removed")
+        .foreach(txn.dropComp)
+    }
     val bi = snap.read(spark, "bi")
     val uni = snap.read(spark, "uni")
     bi.groupBy(col("bucket").cast("long").as("bucket"))
@@ -1495,10 +1411,9 @@ object Text {
     */
   def lmScoreStored(documents: DataFrame, base: String): DataFrame = {
     val spark = documents.sparkSession
-    if (Snapshot.layoutStale(base, "lm") ||
-        !IndexFS.markerFresh(s"$base/MARKER",
-          lmIndexMarkerPrefix(documents)))
+    StoredLayout.ensureFresh(base, "lm", lmIndexMarkerPrefix(documents)) {
       lmBuildIndex(documents, base).count()
+    }
     val pr = bigramPairs(documents)
     val (bi, uni) = lmModel(spark, Snapshot.require(base))
     val scored = pr.join(bi, Seq("w1", "w2"), "left")
@@ -1591,10 +1506,7 @@ object Text {
         "left_anti")
       .maintCheckpoint()
     if (!fresh.isEmpty) {
-      val segId = java.lang.Long.toHexString(
-        Option(fresh.select(col("doc_id")).distinct()
-          .agg(sum(tokenHash(col("doc_id").cast("string"))))
-          .head.get(0)).map(_.asInstanceOf[Long]).getOrElse(0L))
+      val segId = segmentId(fresh)
       val pr = bigramPairs(fresh).maintCheckpoint()
       // the three delta segments flip in ONE manifest publish — no
       // window where the counts serve without the doc-set record (the
@@ -1641,25 +1553,6 @@ object Text {
     ()
   }
 
-  /** Registry probe for the LM append pair: base model trained on the
-    * even-doc_id reference (once, lazily), a doc_id % 4 == 1 batch
-    * appended (idempotent re-merge each run — the nightly
-    * reference-refresh shape), the whole corpus scored from the
-    * MERGED model. Oracle-equal to a from-scratch model over the
-    * unioned reference.
-    */
-  def lmAppendProbe(documents: DataFrame, base: String): DataFrame = {
-    val marker = s"$base/MARKER_BASE"
-    val expected = lmIndexMarkerPrefix(documents) + " split=even"
-    if (Snapshot.layoutStale(base, "lm") ||
-        !IndexFS.markerEquals(marker, expected)) {
-      lmBuildIndex(documents, base).count()
-      IndexFS.writeString(marker, expected)
-    }
-    lmAppend(documents.filter(col("doc_id") % 4 === 1), base)
-    lmScoreStored(documents, base)
-  }
-
   /** DELETE from the stored LM: remove reference documents by
     * SUBTRACTION — the model's count tables are additive, so a delta
     * segment carrying the victims' pair/unigram counts NEGATED serves
@@ -1680,32 +1573,11 @@ object Text {
       .join(lmServedDocs(spark, snap), Seq("doc_id"), "left_semi")
       .maintCheckpoint()
     if (!targets.isEmpty) {
-      val segId = "del" + java.lang.Long.toHexString(
-        Option(targets.select(col("doc_id")).distinct()
-          .agg(sum(tokenHash(col("doc_id").cast("string"))))
-          .head.get(0)).map(_.asInstanceOf[Long]).getOrElse(0L))
+      val segId = "del" + segmentId(targets)
       val pr = bigramPairs(targets).maintCheckpoint()
       lmWriteSegment(pr, targets, segId, negate = true,
         docsComp = "docs_removed", base = base)
     }
-  }
-
-  /** Registry probe for the LM delete: base model on the even-doc_id
-    * reference, the doc_id % 8 == 2 slice of it removed by count
-    * subtraction (idempotent re-delete each run), the whole corpus
-    * scored from the served model. Oracle-equal to a from-scratch
-    * model over the surviving reference.
-    */
-  def lmDeleteProbe(documents: DataFrame, base: String): DataFrame = {
-    val marker = s"$base/MARKER_BASE"
-    val expected = lmIndexMarkerPrefix(documents) + " split=even"
-    if (Snapshot.layoutStale(base, "lm") ||
-        !IndexFS.markerEquals(marker, expected)) {
-      lmBuildIndex(documents, base).count()
-      IndexFS.writeString(marker, expected)
-    }
-    lmDelete(documents.filter(col("doc_id") % 8 === 2), base)
-    lmScoreStored(documents, base)
   }
 
   /** COMPACT the stored LM: fold every delta segment — appends AND
@@ -1749,27 +1621,6 @@ object Text {
     deltaComps.foreach(txn.dropComp)
     txn.commit(onStep)
     ()
-  }
-
-  /** Registry probe for the full LM maintenance cycle: build on the
-    * even-doc_id reference, append the %4==1 batch, delete the %8==2
-    * slice, COMPACT the generations away, score the corpus from the
-    * (now single-generation) model. Oracle-equal to a from-scratch
-    * model over (even ∪ %4==1) ∖ %8==2; a second run is a clean
-    * no-op end to end (everything already recorded/removed/folded).
-    */
-  def lmCompactProbe(documents: DataFrame, base: String): DataFrame = {
-    val marker = s"$base/MARKER_BASE"
-    val expected = lmIndexMarkerPrefix(documents) + " split=even"
-    if (Snapshot.layoutStale(base, "lm") ||
-        !IndexFS.markerEquals(marker, expected)) {
-      lmBuildIndex(documents, base).count()
-      IndexFS.writeString(marker, expected)
-    }
-    lmAppend(documents.filter(col("doc_id") % 4 === 1), base)
-    lmDelete(documents.filter(col("doc_id") % 8 === 2), base)
-    lmCompact(documents.sparkSession, base)
-    lmScoreStored(documents, base)
   }
 
   /** Fuzzy string matching, BLOCKED: a candidate pair must share at
@@ -2569,29 +2420,11 @@ object Text {
     val snap = Snapshot.require(base)
     val buckets = phrases.flatMap(_._2.split(" ")).distinct
       .map(termBucketDriver).distinct.sorted
-    val base0 = snap.read(spark, "pos")
-      .filter(col("bucket").isin(buckets: _*))
-      .select(col("doc_id"), col("pos"), col("term"))
-    // serve base ∪ delta segments ([[bm25Append]]'s LSM write): a doc
-    // present in the delta shadows ALL its base postings (the doc-set
-    // anti-join is unfiltered by bucket — a re-appended doc whose new
-    // text dropped a term must not keep matching via stale postings)
-    val withDelta = snap.readOpt(spark, "pos_delta") match {
-      case Some(delta) =>
-        base0.join(delta.select(col("doc_id")).distinct(),
-            Seq("doc_id"), "left_anti")
-          .unionByName(delta
-            .filter(col("bucket").isin(buckets: _*))
-            .select(col("doc_id"), col("pos"), col("term")))
-      case None => base0
-    }
+    val withDelta = servedPostings(spark, snap, "pos", buckets,
+      Seq("doc_id", "pos", "term"))
     // tombstones exclude docs from BOTH generations
-    val pos = snap.readOpt(spark, "tombstones") match {
-      case Some(t) =>
-        withDelta.join(broadcast(t), Seq("doc_id"), "left_anti")
-      case None => withDelta
-    }
-    phraseMatch(pos, phraseTermsDF(spark, phrases))
+    phraseMatch(StoredLayout.minusTombstones(snap, withDelta, "doc_id"),
+      phraseTermsDF(spark, phrases))
   }
 
   /** Collocation mining: the corpus's top-k adjacent-pair collocations

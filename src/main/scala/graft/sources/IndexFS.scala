@@ -17,6 +17,11 @@ import org.apache.spark.sql.SparkSession
   * configuration, which carries the cluster's filesystem bindings
   * and credentials.
   *
+  * This object holds filesystem primitives and the writer lease only.
+  * What the control files MEAN — the `MARKER`/`MARKER_BASE` freshness
+  * contract, the `_VERSION` stamp, wipe-on-stale and the pristine
+  * cache — is decided in one place, [[StoredLayout]].
+  *
   * Semantics notes for object stores: `rename` is atomic on HDFS and
   * a copy on S3A — the compaction protocol ([[graft.ops.Text.lmCompact]])
   * therefore orders operations so that a non-atomic rename can only
@@ -151,8 +156,8 @@ object IndexFS {
 
   /** Copy a stored layout's contents into `dst` (recursively, byte-
     * identical), skipping the writer lease and staging residue — the
-    * PRISTINE-LAYOUT CACHE primitive: deterministic-replay probes
-    * (dedup_admit, sim_ivfpq_admit) must start from a clean standing
+    * PRISTINE-LAYOUT CACHE primitive ([[StoredLayout.restoreBase]]):
+    * deterministic-replay probes (dedup_admit, sim_ivfpq_admit) start from a clean standing
     * index every run, and restoring a byte-identical copy is much
     * cheaper than re-running the build. The skip matters: a copied
     * lease file would make the restored layout look writer-held and
@@ -201,8 +206,7 @@ object IndexFS {
               // rewritten in place by RawLocalFileSystem.create — and
               // their .crc sidecars) stay real copies: a shared inode
               // there would let a writer corrupt the pristine cache.
-              if (f.getFileName.toString.endsWith(".parquet") &&
-                  !sys.env.contains("GRAFT_NO_HARDLINK")) {
+              if (f.getFileName.toString.endsWith(".parquet")) {
                 Files.deleteIfExists(dst)
                 try { Files.createLink(dst, f); () }
                 catch { case _: java.io.IOException | _: UnsupportedOperationException =>
@@ -283,168 +287,6 @@ object IndexFS {
           Some(new String(bytes.toByteArray, StandardCharsets.UTF_8))
         } finally in.close()
       } catch { case _: org.apache.hadoop.fs.ChecksumException => None }
-  }
-
-  /** Marker freshness by prefix: the marker file exists and starts
-    * with `prefix` (the geometry/listing fingerprint of the corpus
-    * the index was built from).
-    */
-  def markerFresh(markerPath: String, prefix: String): Boolean =
-    readStringOpt(markerPath).exists(_.startsWith(prefix))
-
-  /** Marker freshness by full equality. */
-  def markerEquals(markerPath: String, expected: String): Boolean =
-    readStringOpt(markerPath).contains(expected)
-
-  /** Deterministic-replay layouts via the pristine cache: ensure `base`
-    * holds the UNTOUCHED standing index a replay probe must start
-    * from. When `<base>_pristine` carries a fresh `MARKER` (prefix
-    * contract, same as the lazy-rebuild gates) the layout restores by
-    * filesystem copy — byte-identical to the build, so everything
-    * downstream (segment ids, manifests, hashes) replays exactly;
-    * otherwise `build` runs against `base` and its result is
-    * snapshotted into the cache for the next replay. All under the
-    * writer lease; the lease file itself is never copied
-    * ([[copyLayout]]), so the restored layout is immediately
-    * writable.
-    */
-  def restorePristine(base: String, markerPrefix: String)
-                     (build: => Unit): Unit =
-    withWriterLease(base) {
-      val cache = s"${base}_pristine"
-      if (markerFresh(s"$cache/MARKER", markerPrefix)) {
-        wipeLayout(base)
-        copyLayout(cache, base)
-      } else {
-        build
-        // the build itself may snapshot the cache (dedupBuildIndex
-        // does, so a plain rebuild primes the shared layout's replay
-        // cache) — skip the redundant second copy when it did
-        if (!markerFresh(s"$cache/MARKER", markerPrefix)) {
-          deleteRecursive(cache)
-          copyLayout(base, cache)
-        }
-      }
-    }
-
-  /** Snapshot `base` into its pristine cache (`<base>_pristine`) —
-    * called by a build that wants later [[restorePristine]] calls on
-    * the same layout to restore by filesystem copy instead of
-    * re-paying the build.
-    */
-  def snapshotPristine(base: String): Unit = {
-    val cache = s"${base}_pristine"
-    deleteRecursive(cache)
-    copyLayout(base, cache)
-  }
-
-  // ------------------------------------------------------------------
-  // Layout-version contract. Freshness markers guard CONTENT drift
-  // (corpus changed → rebuild); _VERSION guards SHAPE drift (the
-  // on-disk layout format itself changed). The two must fail
-  // differently: stale content rebuilds silently, a foreign version
-  // fails LOUDLY — a v1 reader that "lazily rebuilt" a v2 layout
-  // would clobber data a newer deployment still serves.
-  // ------------------------------------------------------------------
-
-  /** Current on-disk layout version per stored-index kind. Bump the
-    * value here (one line) when a kind's physical layout changes
-    * incompatibly; old layouts then fail loudly instead of being
-    * misread or clobbered.
-    */
-  val layoutVersions: Map[String, Int] =
-    Map("bm25" -> 2, "lm" -> 2, "ivfpq" -> 2, "dedup" -> 3, "table" -> 1,
-      "ann" -> 1)
-
-  private def versionPath(base: String): String = s"$base/_VERSION"
-
-  // a base holding ONLY snapshot manifests (a versioned table) is not
-  // a pre-contract index layout
-  private val manifestDirNameForVersioning = "_SNAPSHOTS"
-
-  private def versionLine(kind: String): String =
-    s"graft-layout kind=$kind v=${layoutVersions(kind)}"
-
-  /** Stamp `base` as holding `kind`'s current layout version — called
-    * by every index build alongside its freshness marker.
-    */
-  def stampVersion(base: String, kind: String): Unit =
-    writeString(versionPath(base), versionLine(kind))
-
-  /** How `base`'s on-disk layout version relates to this reader. */
-  sealed trait VersionState
-  /** Matches this reader's version (or no `_VERSION` yet — a not-yet-
-    * built base, where the freshness marker governs).
-    */
-  case object VersionCurrent extends VersionState
-  /** An OLDER version of the same kind: this reader may wipe and
-    * rebuild it in place (self-upgrade) — the pre-snapshot layouts
-    * migrate through this path.
-    */
-  case object VersionStale extends VersionState
-
-  /** Classify `base`'s layout version. A NEWER version or a different
-    * KIND fails loudly — a newer/foreign layout must not be silently
-    * misread or lazily clobbered (a deployment still serving it would
-    * lose data); an OLDER version of the same kind returns
-    * [[VersionStale]] so the build path can wipe and rebuild.
-    */
-  def versionState(base: String, kind: String): VersionState =
-    readStringOpt(versionPath(base)) match {
-      case None =>
-        // no _VERSION: a not-yet-built base is Current (the marker
-        // governs), but a base that already HAS content is a
-        // pre-contract layout — treat as Stale so the build path
-        // wipes and rebuilds it under the current shape
-        if (listNames(base).exists(n => !n.startsWith("_WRITER_LEASE") &&
-            n != manifestDirNameForVersioning))
-          VersionStale
-        else VersionCurrent
-      case Some(txt) =>
-        val t = txt.trim
-        if (t == versionLine(kind)) VersionCurrent
-        else {
-          val kv = t.stripPrefix("graft-layout ").split("\\s+")
-            .flatMap(_.split("=") match {
-              case Array(k, v) => Some(k -> v); case _ => None
-            }).toMap
-          val sameKind = kv.get("kind").contains(kind)
-          val older = kv.get("v").flatMap(_.toIntOption)
-            .exists(_ < layoutVersions(kind))
-          if (sameKind && older) VersionStale
-          else throw new IllegalStateException(
-            s"stored layout $base: layout-version mismatch — on disk " +
-              s"'$t', this reader understands '${versionLine(kind)}'. " +
-              "Refusing to read or lazily rebuild: a newer/foreign " +
-              "layout must not be silently misread or clobbered. " +
-              "Rebuild the layout with a matching library version or " +
-              "point at a compatible base.")
-        }
-    }
-
-  /** Fail loudly unless `base` is readable by this reader (current
-    * version or not-yet-built). Probe-path guard: a STALE layout must
-    * go through its build path (which wipes and rebuilds), never be
-    * read directly.
-    */
-  def requireVersion(base: String, kind: String): Unit =
-    versionState(base, kind) match {
-      case VersionCurrent => ()
-      case VersionStale => throw new IllegalStateException(
-        s"stored layout $base: on-disk layout is an older '$kind' " +
-          "version — rebuild it (the build path self-upgrades) before " +
-          "probing.")
-    }
-
-  /** Delete everything under `base` except the writer-lease file and
-    * the held lease's tombstones — the self-upgrade wipe. Caller must
-    * hold the writer lease.
-    */
-  def wipeLayout(base: String): Unit = {
-    scala.Predef.require(holdsLease(base),
-      s"wipeLayout($base) outside the writer lease")
-    listNames(base).filterNot(_.startsWith("_WRITER_LEASE"))
-      .foreach(n => deleteRecursive(s"$base/$n"))
   }
 
   // ------------------------------------------------------------------

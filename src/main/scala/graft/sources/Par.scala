@@ -1,6 +1,7 @@
 package graft.sources
 
-import java.util.concurrent.{Callable, Executors, Future => JFuture, ThreadFactory}
+import java.util.concurrent.{CompletableFuture, CompletionException, ExecutionException,
+  Executors, Future => JFuture, ThreadFactory, TimeUnit, TimeoutException}
 
 import org.apache.spark.sql.SparkSession
 
@@ -34,46 +35,80 @@ private[graft] object Par {
   })
 
   /** Thread-local Spark scheduling properties worth carrying onto the
-    * pool thread so concurrent jobs keep the caller's UI label and
-    * cancellation group.
+    * pool thread so concurrent jobs keep the caller's UI label,
+    * cancellation group and job tags.
     */
   private val carried = Seq("spark.job.description", "spark.jobGroup.id",
-    "spark.job.interruptOnCancel", "spark.scheduler.pool")
+    "spark.job.interruptOnCancel", "spark.scheduler.pool", "spark.job.tags")
+
+  def newTag(): String = s"graft-par-${java.util.UUID.randomUUID()}"
 
   /** Submit one thunk for background execution. The returned future
     * rethrows the thunk's failure on `get`. The caller's session and
-    * job-label properties are re-established on the pool thread.
+    * job-label properties are re-established on the pool thread, and
+    * every job the thunk runs carries the Spark job tag `tag` — a tag,
+    * not a job group, which would replace the caller's own group.
     */
-  def submit[T](spark: SparkSession)(thunk: () => T): JFuture[T] = {
-    val props = carried.map(k =>
-      k -> spark.sparkContext.getLocalProperty(k))
-    pool.submit(new Callable[T] {
-      override def call(): T = {
-        SparkSession.setActiveSession(spark)
-        props.foreach { case (k, v) =>
-          spark.sparkContext.setLocalProperty(k, v)
-        }
-        thunk()
-      }
-    })
+  def submit[T](spark: SparkSession, tag: String = newTag())
+               (thunk: () => T): CompletableFuture[T] = {
+    val sc = spark.sparkContext
+    val props = carried.map(k => k -> sc.getLocalProperty(k))
+    CompletableFuture.supplyAsync(() => {
+      SparkSession.setActiveSession(spark)
+      props.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+      sc.addJobTag(tag)
+      try thunk() finally sc.removeJobTag(tag)
+    }, pool)
   }
 
   /** Run independent thunks concurrently, returning results in input
-    * order. The first failure is rethrown (unwrapped from the executor)
-    * after every thunk has been submitted — no partial-submission
-    * ambiguity. A single thunk runs inline.
+    * order. A single thunk runs inline. The first failure ends the
+    * rest ([[awaitAll]]) and is rethrown unwrapped from the executor.
     */
   def run[T](spark: SparkSession)(thunks: Seq[() => T]): Seq[T] =
     if (thunks.sizeIs <= 1) thunks.map(_())
-    else thunks.map(submit(spark)).map(await)
+    else {
+      val tag = newTag()
+      awaitAll(spark, tag, thunks.map(submit(spark, tag)))
+    }
+
+  /** Join `all`, whose jobs carry `tag`, returning their results in
+    * order. The first failure to COMPLETE (a failure must not wait
+    * behind a slow sibling) cancels every job carrying the tag —
+    * repeatedly, while a sibling may still start one — and is rethrown
+    * only once every future has ended: no sibling job is left running
+    * and no side effect after a cancelled job lands.
+    */
+  def awaitAll[T](spark: SparkSession, tag: String,
+                  all: Seq[CompletableFuture[T]]): Seq[T] = {
+    val firstFailure = new CompletableFuture[Throwable]()
+    all.foreach(_.whenComplete((_, e) => if (e != null) firstFailure.complete(e)))
+    try CompletableFuture.anyOf(CompletableFuture.allOf(all: _*), firstFailure).join()
+    catch { case _: CompletionException => () }
+    if (all.exists(_.isCompletedExceptionally)) {
+      val sc = spark.sparkContext
+      all.foreach { f =>
+        while (!f.isDone) {
+          sc.cancelJobsWithTag(tag)
+          try { f.get(100, TimeUnit.MILLISECONDS); () }
+          catch { case _: TimeoutException | _: ExecutionException => () }
+        }
+      }
+      throw unwrap(firstFailure.join())
+    }
+    all.map(await)
+  }
+
+  private def unwrap(e: Throwable): Throwable = e match {
+    case _: CompletionException | _: ExecutionException =>
+      Option(e.getCause).getOrElse(e)
+    case _ => e
+  }
 
   /** `get` with the executor wrapper stripped, so callers see the same
     * exception type the sequential formulation threw.
     */
   def await[T](f: JFuture[T]): T =
     try f.get()
-    catch {
-      case e: java.util.concurrent.ExecutionException =>
-        throw Option(e.getCause).getOrElse(e)
-    }
+    catch { case e: ExecutionException => throw unwrap(e) }
 }

@@ -72,6 +72,11 @@ import org.apache.spark.sql.types.StructType
   * leaf set are computed once and served from caches on every later
   * read ([[Manifest.read]]); a repeated probe of an unchanged layout
   * plans without touching the filesystem.
+  *
+  * Manifests say which generations are live, not whether a layout is
+  * fresh: the freshness `MARKER`, the `_VERSION` stamp, wipe-on-stale
+  * and the pristine cache belong to [[StoredLayout]], the one owner
+  * of the stored-index lifecycle.
   */
 object Snapshot {
 
@@ -324,18 +329,6 @@ object Snapshot {
     current(base).getOrElse(throw new IllegalStateException(
       s"stored layout $base has no published snapshot manifest"))
 
-  /** True iff the layout at `base` cannot be served as-is and must go
-    * through its build path's wipe-and-rebuild: an OLDER same-kind
-    * `_VERSION`, or layout content with no snapshot manifest (a
-    * pre-snapshot layout, or one whose manifest directory was lost —
-    * either way unreadable under the current contract). Newer/foreign
-    * versions still throw from [[IndexFS.versionState]].
-    */
-  def layoutStale(base: String, kind: String): Boolean =
-    IndexFS.versionState(base, kind) == IndexFS.VersionStale ||
-      (!enabled(base) && IndexFS.listNames(base)
-        .exists(n => !n.startsWith("_") && !n.startsWith(".")))
-
   private def load(base: String, id: Long): Manifest = {
     val path = s"${manifestDir(base)}/${manifestName(id)}"
     val txt = IndexFS.readStringOpt(path).getOrElse(
@@ -382,10 +375,12 @@ object Snapshot {
       prev.map(_.comps).getOrElse(Map.empty)
     private var committed = false
     /** In-flight staging writes; joined (and failures rethrown)
-      * before the commit's fold/publish steps.
+      * before the commit's fold/publish steps. Their jobs carry `tag`,
+      * so a failed write cancels its siblings ([[awaitStaged]]).
       */
-    private val inflight =
-      scala.collection.mutable.Buffer.empty[java.util.concurrent.Future[Unit]]
+    private val inflight = scala.collection.mutable.Buffer
+      .empty[(SparkSession, java.util.concurrent.CompletableFuture[Unit])]
+    private val tag = Par.newTag()
 
     /** One data write into a hidden staging directory, one rename
       * into place as `comp/gsn=<stamp>`. The staged subtree is
@@ -406,8 +401,6 @@ object Snapshot {
       * each component's frame was independent by construction (all
       * call sites stage from materialized checkpoints or disjoint
       * derivations, never from another component's staged output).
-      * `graft.snapshot.parallelStage=false` reverts to inline writes
-      * (the A/B lever).
       */
     private def stageIn(df: DataFrame, comp: String, partCols: Seq[String],
                         stamp: Long = gsn): Unit = {
@@ -423,17 +416,19 @@ object Snapshot {
           throw new java.io.IOException(
             s"snapshot stage rename $stage -> $dst failed")
       }
-      if (confBool("graft.snapshot.parallelStage", dflt = true))
-        inflight += Par.submit(df.sparkSession)(work)
-      else work()
+      inflight += df.sparkSession -> Par.submit(df.sparkSession, tag)(work)
     }
 
-    /** Join every in-flight staging write, rethrowing the first
-      * failure — the barrier between data staging and the commit's
-      * manifest work.
+    /** Join every in-flight staging write — the barrier between data
+      * staging and the commit's manifest work. The first failure
+      * cancels the other writes' jobs and is rethrown once all have
+      * ended ([[Par.awaitAll]]), so no write still renames a leaf into
+      * place after the transaction has failed.
       */
     private def awaitStaged(): Unit = {
-      inflight.foreach(Par.await)
+      inflight.headOption.foreach { case (spark, _) =>
+        Par.awaitAll(spark, tag, inflight.map(_._2).toSeq)
+      }
       inflight.clear()
     }
 

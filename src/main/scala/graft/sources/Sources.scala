@@ -39,24 +39,21 @@ object Sources {
     *    whole board in the round-11 A/B — disk blocks ride the OS
     *    page cache without competing with execution memory.
     *
-    * `graft.checkpoint.mode` (session conf) overrides the automatic
-    * choice: `reliable` | `disk` | `memdisk` — the A/B lever; `auto`
-    * (default) picks by master/checkpoint-dir as above.
+    * `graft.checkpoint.mode` (session conf): `auto` (default) picks by
+    * master/checkpoint-dir as above; `reliable` forces the cluster
+    * branch (a local harness measuring checkpoint-file bytes). Any
+    * other value fails loudly.
     */
   private[graft] def truncatingCheckpoint(df: DataFrame): DataFrame = {
     val sc = df.sparkSession.sparkContext
-    val mode = sys.env.get("SPARK_GRAFT_CKPT")
-      .orElse(df.sparkSession.conf.getOption("graft.checkpoint.mode"))
-      .getOrElse("auto")
-    mode match {
+    df.sparkSession.conf.getOption("graft.checkpoint.mode").getOrElse("auto") match {
       case "reliable" => df.checkpoint()
-      case "disk" => adaptiveCoalesce(
-        df.localCheckpoint(true, org.apache.spark.storage.StorageLevel.DISK_ONLY))
-      case "memdisk" => df.localCheckpoint()
-      case _ =>
+      case "auto" =>
         if (!sc.isLocal && sc.getCheckpointDir.isDefined) df.checkpoint()
         else adaptiveCoalesce(df.localCheckpoint(true,
           org.apache.spark.storage.StorageLevel.DISK_ONLY))
+      case other => throw new IllegalArgumentException(
+        s"graft.checkpoint.mode=$other: expected auto or reliable")
     }
   }
 
@@ -74,11 +71,9 @@ object Sources {
     * a narrow coalesce, no shuffle. A genuinely large frame (GBs at
     * 100 TB batch sizes) keeps its partitions untouched; downstream
     * CPU-heavy consumers re-`spread()` explicitly regardless, so no
-    * compute stage loses parallelism. `SPARK_GRAFT_CKPT_COALESCE=0`
-    * disables (A/B lever).
+    * compute stage loses parallelism.
     */
-  private def adaptiveCoalesce(ck: DataFrame): DataFrame = {
-    if (sys.env.get("SPARK_GRAFT_CKPT_COALESCE").contains("0")) return ck
+  private def adaptiveCoalesce(ck: DataFrame): DataFrame =
     org.apache.spark.sql.graftbridge.PlanBridge.materializedFootprint(ck) match {
       case Some((bytes, nParts)) if nParts > 1 =>
         val advisory =
@@ -90,7 +85,6 @@ object Sources {
         if (target < nParts) ck.coalesce(target.toInt) else ck
       case _ => ck
     }
-  }
 
   /** Suffix-form syntax for [[truncatingCheckpoint]] so the ~30
     * maintenance call sites stay one-word.

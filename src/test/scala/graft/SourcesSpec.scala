@@ -295,8 +295,8 @@ class SourcesSpec extends SparkTestBase {
     def key(r: org.apache.spark.sql.Row) =
       (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))
     val inline = Text.bm25TopK(docs, 10).collect().map(key).toSeq
-    assert(Text.bm25AppendProbe(docs, b2, 10).collect().map(key).toSeq === inline)
-    assert(Text.bm25AppendProbe(docs, b2, 10).collect().map(key).toSeq === inline)
+    assert(Scenarios.bm25AppendProbe(docs, b2, 10).collect().map(key).toSeq === inline)
+    assert(Scenarios.bm25AppendProbe(docs, b2, 10).collect().map(key).toSeq === inline)
   }
 
   test("stored-index deletion: tombstones serve correctly, compaction folds them in") {
@@ -430,15 +430,22 @@ class SourcesSpec extends SparkTestBase {
     // listing fingerprint (metadata-only); constructing a fresh probe
     // must now trigger at most the ivfpq query-vector localCheckpoint
     // job — never a count over embeddings/documents.
-    import graft.ops.{Similarity, Text}
+    import graft.ops.{Dedup, Similarity, Text}
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val emb = Tables.embeddings(spark, sf)
     val docs = Tables.documents(spark, sf)
+    val split = Text.trainValSplit(docs).select(col("doc_id"), col("split"))
+    val ws = docs.join(split, Seq("doc_id"))
+    val hist = ws.filter(col("split") === "train")
+    val batch = ws.filter(col("split") =!= "train")
     val b1 = tmp("ivfpqfresh"); val b2 = tmp("bm25fresh")
-    val b3 = tmp("lmfresh")
+    val b3 = tmp("lmfresh"); val b4 = tmp("dedupfresh")
+    val b5 = tmp("annfresh")
     Similarity.ivfpqBuildIndex(emb, b1, 16).count()
     Text.bm25BuildIndex(docs, b2).count()
     Text.lmBuildIndex(docs, b3).count()
+    Dedup.dedupBuildIndex(hist, b4).count()
+    Text.hybridStored(docs, b2, b5).count() // builds the ann layout
     // parquet reads legitimately launch file-listing jobs on the INDEX
     // artifacts; the regression shape is specifically an eager count()
     // from the ops files (the v1 markers' corpus aggregate), so match
@@ -453,11 +460,14 @@ class SourcesSpec extends SparkTestBase {
       Similarity.ivfpqProbeStored(emb, b1, 4, 5) // constructed, not run
       Text.bm25ProbeStored(docs, b2, 10)
       Text.lmScoreStored(docs, b3)
+      Dedup.incrementalNearDupStored(batch, hist, b4)
+      Text.hybridStored(docs, b2, b5)
       Thread.sleep(1000) // listener bus is async
       import scala.jdk.CollectionConverters._
       val counts = stages.iterator().asScala
         .filter(n => n.startsWith("count at Similarity.scala") ||
-          n.startsWith("count at Text.scala")).toList
+          n.startsWith("count at Text.scala") ||
+          n.startsWith("count at Dedup.scala")).toList
       assert(counts.isEmpty,
         s"fresh probes launched corpus aggregates: $counts — the " +
           "count() leaked back into the freshness check")
@@ -1312,32 +1322,50 @@ class SourcesSpec extends SparkTestBase {
   }
 
   test("layout _VERSION contract: a foreign version fails loudly, never silently rebuilds") {
-    import graft.ops.Text
-    import graft.sources.IndexFS
+    import graft.ops.{Dedup, Similarity, Text}
+    import graft.sources.{IndexFS, StoredLayout}
     val docs = Tables.documents(spark, sf)
-    val base = tmp("versioned")
-    Text.bm25BuildIndex(docs, base).count()
-    assert(IndexFS.readStringOpt(s"$base/_VERSION")
-      .exists(_.startsWith("graft-layout kind=bm25 v=")))
-    val markerBefore = IndexFS.readStringOpt(s"$base/MARKER")
-    // a layout stamped by a FUTURE library version must not be misread
-    // or clobbered by this reader's lazy rebuild — loud failure only
-    IndexFS.writeString(s"$base/_VERSION", "graft-layout kind=bm25 v=99")
-    val ex = intercept[IllegalStateException] {
-      Text.bm25ProbeStored(docs, base, 5).count()
+    val emb = Tables.embeddings(spark, sf)
+    val split = Text.trainValSplit(docs).select(col("doc_id"), col("split"))
+    val ws = docs.join(split, Seq("doc_id"))
+    val hist = ws.filter(col("split") === "train")
+    val batch = ws.filter(col("split") =!= "train")
+    val hybridLex = tmp("versioned-hybrid-bm25")
+    // every stored family: (kind, base, probe — lazily building the
+    // layout when it is absent or stale)
+    def family(kind: String)(probe: String => Long) = {
+      val base = tmp(s"versioned-$kind")
+      (kind, base, () => probe(base))
     }
-    assert(ex.getMessage.contains("layout-version mismatch"))
-    assert(IndexFS.readStringOpt(s"$base/MARKER") === markerBefore,
-      "mismatch handling touched the layout (clobber risk)")
-    // wrong KIND at the same version is the same loud failure
-    IndexFS.writeString(s"$base/_VERSION", "graft-layout kind=ivfpq v=1")
-    intercept[IllegalStateException] { Text.bm25ProbeStored(docs, base, 5).count() }
-    // matching version serves; absent _VERSION (pre-contract layout)
-    // is accepted and governed by the freshness marker alone
-    IndexFS.stampVersion(base, "bm25")
-    assert(Text.bm25ProbeStored(docs, base, 5).count() > 0)
-    IndexFS.deleteRecursive(s"$base/_VERSION")
-    assert(Text.bm25ProbeStored(docs, base, 5).count() > 0)
+    val families = Seq(
+      family("bm25")(b => Text.bm25ProbeStored(docs, b, 5).count()),
+      family("lm")(b => Text.lmScoreStored(docs, b).count()),
+      family("ivfpq")(b => Similarity.ivfpqProbeStored(emb, b, 4, 5).count()),
+      family("dedup")(b => Dedup.incrementalNearDupStored(batch, hist, b).count()),
+      family("ann")(b => Text.hybridStored(docs, hybridLex, b).count()))
+    families.foreach { case (kind, base, probe) =>
+      assert(probe() > 0, s"$kind: cold probe")
+      assert(IndexFS.readStringOpt(s"$base/_VERSION")
+        .exists(_.startsWith(s"graft-layout kind=$kind v=")), kind)
+      val markerBefore = IndexFS.readStringOpt(s"$base/MARKER")
+      // a layout stamped by a FUTURE library version must not be misread
+      // or clobbered by this reader's lazy rebuild — loud failure only
+      IndexFS.writeString(s"$base/_VERSION", s"graft-layout kind=$kind v=99")
+      val ex = intercept[IllegalStateException](probe())
+      assert(ex.getMessage.contains("layout-version mismatch"), kind)
+      assert(IndexFS.readStringOpt(s"$base/MARKER") === markerBefore,
+        s"$kind: mismatch handling touched the layout (clobber risk)")
+      // wrong KIND at the same version is the same loud failure
+      val foreign = if (kind == "ivfpq") "bm25" else "ivfpq"
+      IndexFS.writeString(s"$base/_VERSION", s"graft-layout kind=$foreign v=1")
+      intercept[IllegalStateException](probe())
+      // matching version serves; absent _VERSION (pre-contract layout)
+      // is accepted and governed by the freshness marker alone
+      StoredLayout.stampVersion(base, kind)
+      assert(probe() > 0, s"$kind: restamped layout")
+      IndexFS.deleteRecursive(s"$base/_VERSION")
+      assert(probe() > 0, s"$kind: pre-contract layout")
+    }
   }
 
   test("lease heartbeat: a slow-but-alive writer outliving staleMs is NOT broken") {
@@ -1458,17 +1486,17 @@ class SourcesSpec extends SparkTestBase {
     val censusA = Dedup.dedupBuildIndex(train, baseA).collect().map(key)
     val probeA1 = Dedup.incrementalNearDupStored(batch, train, baseA)
       .collect().map(key)
-    val admitA = Dedup.dedupAdmitProbe(docs, baseA).collect().map(key)
+    val admitA = Scenarios.dedupAdmitProbe(docs, baseA).collect().map(key)
     // the replay left delta segments; the stored probe must not see them
     val probeA2 = Dedup.incrementalNearDupStored(batch, train, baseA)
       .collect().map(key)
     assert(probeA2 === probeA1,
       "stored probe changed after the admission replay mutated the shared base")
 
-    // order B: admit replay FIRST (cold — its restorePristine builds the
+    // order B: admit replay FIRST (cold — its pristine restore builds the
     // train index and primes the cache), then the stored probe
     val baseB = tmp("dedupshareB")
-    val admitB = Dedup.dedupAdmitProbe(docs, baseB).collect().map(key)
+    val admitB = Scenarios.dedupAdmitProbe(docs, baseB).collect().map(key)
     val probeB = Dedup.incrementalNearDupStored(batch, train, baseB)
       .collect().map(key)
     assert(admitB === admitA, "admit replay depends on slot order")
@@ -1506,6 +1534,14 @@ class SourcesSpec extends SparkTestBase {
           Option(f.listFiles).toSeq.flatten.exists(anyRddDir))
       assert(anyRddDir(new java.io.File(dir)),
         "no reliable checkpoint written despite reliable mode")
+      // the mode is auto or reliable; anything else (a typo, or the
+      // retired disk/memdisk values) fails loudly instead of running
+      // as auto
+      Seq("disk", "memdisk", "relaible").foreach { bad =>
+        spark.conf.set("graft.checkpoint.mode", bad)
+        val ex = intercept[IllegalArgumentException](runCc())
+        assert(ex.getMessage.contains(s"graft.checkpoint.mode=$bad"))
+      }
     } finally {
       spark.conf.unset("graft.checkpoint.mode")
       spark.sparkContext.setCheckpointDir(null)
@@ -1574,7 +1610,7 @@ class SourcesSpec extends SparkTestBase {
       txn.writeFull(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), "data")
       txn.commit()
       IndexFS.writeString(s"$base/MARKER", "hl-test v1")
-      IndexFS.snapshotPristine(base)
+      graft.sources.StoredLayout.snapshotPristine(base)
     }
     def parquetFiles(dir: String): Seq[java.io.File] = {
       def walk(f: java.io.File): Seq[java.io.File] =
@@ -1589,7 +1625,7 @@ class SourcesSpec extends SparkTestBase {
     // overwrite the control file in place, delete a parquet part —
     // the exact mutation classes a maintenance writer performs
     IndexFS.withWriterLease(base) {
-      IndexFS.wipeLayout(base)
+      graft.sources.StoredLayout.wipeLayout(base)
       IndexFS.copyLayout(cache, base)
     }
     IndexFS.writeString(s"$base/MARKER", "hl-test v1 MUTATED after restore")
@@ -1600,5 +1636,75 @@ class SourcesSpec extends SparkTestBase {
     assert(after === cached, "pristine cache changed under base mutation")
     assert(IndexFS.readStringOpt(s"$cache/MARKER").contains("hl-test v1"),
       "pristine MARKER changed under base mutation")
+  }
+
+  test("Par.run: a failing thunk cancels its slow sibling's job and " +
+      "joins it before rethrowing") {
+    import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.AtomicBoolean
+    import org.apache.spark.TaskContext
+    import org.apache.spark.scheduler.{JobSucceeded, SparkListener,
+      SparkListenerJobEnd, SparkListenerJobStart}
+    import graft.sources.Par
+    val sc = spark.sparkContext
+    val slowJobs = ConcurrentHashMap.newKeySet[Int]()
+    val jobEnds = new ConcurrentHashMap[Int, SparkListenerJobEnd]()
+    val slowRunning = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).flatMap(p =>
+            Option(p.getProperty("spark.job.description"))).contains("slow-sibling")) {
+          slowJobs.add(j.jobId)
+          slowRunning.countDown()
+        }
+      override def onJobEnd(j: SparkListenerJobEnd): Unit = {
+        jobEnds.put(j.jobId, j); ()
+      }
+    }
+    val landed = new AtomicBoolean(false)
+    // the slow sibling: one 30 s job (its tasks stop early once killed),
+    // then a side effect that must never land once its job is cancelled
+    val slow: () => Long = () => {
+      sc.setJobDescription("slow-sibling")
+      val n = sc.parallelize(1 to 4, 4).map { x =>
+        val t0 = System.nanoTime()
+        while (!TaskContext.get().isInterrupted() &&
+            System.nanoTime() - t0 < 30000000000L) Thread.sleep(20)
+        x
+      }.count()
+      landed.set(true)
+      n
+    }
+    // the failing thunk throws once the sibling's job is running
+    val failing: () => Long = () => {
+      slowRunning.await(60, TimeUnit.SECONDS)
+      throw new IllegalStateException("sibling failed")
+    }
+    sc.addSparkListener(listener)
+    try {
+      val t0 = System.nanoTime()
+      // the slow thunk comes FIRST: an in-order join would sit behind it
+      val ex = intercept[IllegalStateException] {
+        Par.run(spark)(Seq(slow, failing))
+      }
+      val returnedAt = System.currentTimeMillis()
+      assert(ex.getMessage === "sibling failed")
+      assert(System.nanoTime() - t0 < 20000000000L,
+        "run waited for the slow sibling instead of cancelling it")
+      val deadline = System.currentTimeMillis() + 30000L
+      while (System.currentTimeMillis() < deadline &&
+          (slowJobs.isEmpty || !slowJobs.stream().allMatch(jobEnds.containsKey(_))))
+        Thread.sleep(50) // the listener bus is asynchronous
+      assert(!slowJobs.isEmpty, "the slow sibling's job never started")
+      slowJobs.forEach { id =>
+        val end = jobEnds.get(id)
+        assert(end != null, s"slow job $id never ended")
+        assert(end.jobResult != JobSucceeded, s"slow job $id ran to completion")
+        assert(end.time <= returnedAt,
+          s"slow job $id was still running when run returned")
+      }
+      Thread.sleep(500)
+      assert(!landed.get(), "the cancelled sibling's side effect landed")
+    } finally sc.removeSparkListener(listener)
   }
 }
