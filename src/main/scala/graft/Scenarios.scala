@@ -100,10 +100,6 @@ object Scenarios {
         base, nlist).count()
     }
 
-  private def ivfpqQueries(embeddings: DataFrame, nQueries: Int): DataFrame =
-    embeddings.filter(col("vec_id") < nQueries)
-      .select(col("vec_id"), col("embedding")).localCheckpoint()
-
   /** Append the vec_id mod 5 = 4 fifth to the mod-5 base every run
     * (idempotent), probe the merged layout over the full corpus.
     */
@@ -116,7 +112,7 @@ object Scenarios {
     ensureMod5Base(embeddings, base, nlist)
     Similarity.ivfpqAppend(embeddings.filter(col("vec_id") % 5 === 4), base)
     Similarity.ivfpqScoreStored(embeddings.sparkSession, base,
-      ivfpqQueries(embeddings, nQueries), k, nprobe, shortlist)
+      Similarity.heldQueries(embeddings, nQueries), k, nprobe, shortlist)
   }
 
   /** Streaming-ingestion replay over the IVFADC layout (the vector
@@ -133,7 +129,7 @@ object Scenarios {
                       shortlist: Int = 20): DataFrame = {
     val spark = embeddings.sparkSession
     ensureMod5Base(embeddings, base, nlist, forceRestore = true)
-    val queries = ivfpqQueries(embeddings, nQueries)
+    val queries = Similarity.heldQueries(embeddings, nQueries)
     (0 until nBatches).map { b =>
       Similarity.ivfpqAppend(embeddings.filter(col("vec_id") % 5 === 4 &&
         pmod(expr("vec_id div 5"), lit(nBatches)) === b), base)
@@ -161,7 +157,7 @@ object Scenarios {
     Similarity.ivfpqDelete(embeddings.filter(col("vec_id") % 7 === 3)
       .select(col("vec_id")), base)
     Similarity.ivfpqScoreStored(embeddings.sparkSession, base,
-      ivfpqQueries(embeddings, nQueries), k, nprobe, shortlist)
+      Similarity.heldQueries(embeddings, nQueries), k, nprobe, shortlist)
   }
 
   /** Batch analog of the streaming admission gate ([[Dedup.dedupAdmit]]):

@@ -155,8 +155,7 @@ object WeakScale {
       report(s"ivfpq_index_mb_x$k", ivBytes / 1e6)
       // pre-materialize the query vectors so the measured bytes are
       // INDEX reads, not the corpus scan that fishes out the queries
-      val queries = emb.filter(col("vec_id") < 4)
-        .select(col("vec_id"), col("embedding")).localCheckpoint()
+      val queries = graft.ops.Similarity.heldQueries(emb, 4)
       val probeDf = graft.ops.Similarity.ivfpqScoreStored(spark, ivBase,
         queries, 5, 4, 20)
       probeDf.count() // warm (codegen, broadcast build)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.sources.{IndexFS, Snapshot, StoredLayout}
+import graft.sources.{IndexFS, Snapshot, Sources, StoredLayout}
 import graft.sources.Sources.MaintCheckpointSyntax
 
 /** Deduplication operators over `documents` — the LLM-pipeline dedup
@@ -72,12 +72,6 @@ object Dedup {
       .otherwise(array().cast("array<string>"))
     array_distinct(grams)
   }
-
-  /** Convenience wrapper over raw text (spec/API use; hot paths
-    * materialize the token column first).
-    */
-  def shingleSet(text: Column, w: Int = 3): Column =
-    shinglesFromTokens(Text.tokens(text), w)
 
   /** doc_id + one row per distinct shingle.
     *
@@ -479,28 +473,27 @@ object Dedup {
     // (≤ numBands × kB, collected driver-side like the IVF cell lists):
     // the postings scan prunes to exactly those partition directories —
     // colliding postings, not the whole postings table
-    val batchBands = minhashBands(batch, "batch_id", w)
-      .withColumn("kb", kbCol(kB)).localCheckpoint()
+    val batchBands = Sources.hold(minhashBands(batch, "batch_id", w)
+      .withColumn("kb", kbCol(kB)), None)
     val bandsH = prunedBands(spark, snap, "bands", batchBands, kB)
-    val cand = batchBands
+    val cand = Sources.hold(batchBands.df
       .join(bandsH, Seq("band_idx", "band_key"))
-      .select(col("batch_id"), col("hist_id")).distinct()
-      .localCheckpoint()
-    nearDupVerdicts(batch, cand,
+      .select(col("batch_id"), col("hist_id")).distinct(), None)
+    nearDupVerdicts(batch, cand.df,
       prunedShingles(spark, snap, "shingles", cand, dB),
       snap.read(spark, "sizes"), w, threshold)
   }
 
   /** The stored band postings pruned to the probe's own key buckets:
     * one static (band_idx, kb) IN-list over the partitioned layout.
-    * The collect is bounded by geometry (≤ numBands × kB tuples).
+    * The list is bounded by geometry (≤ numBands × kB tuples) and
+    * comes from the held batch band rows ([[Sources.hold]]).
     */
   private def prunedBands(spark: org.apache.spark.sql.SparkSession,
                           snap: Snapshot.Manifest, comp: String,
-                          batchBands: DataFrame, kB: Int): DataFrame = {
-    val pairs = batchBands.select(col("band_idx"), col("kb"))
-      .distinct().collect()
-      .map(r => (r.getInt(0), r.getLong(1))).toSeq.sorted
+                          batchBands: Sources.Held, kB: Int): DataFrame = {
+    val pairs = batchBands.keys(col("band_idx"), col("kb"))
+      .map(r => (r.getInt(0), r.getLong(1))).sorted
     lastProbeParts.set(lastProbeParts.get.copy(bandParts = pairs))
     // compare against INT literals: the partition columns discover as
     // IntegerType, and a cast on the partition attribute would defeat
@@ -524,13 +517,14 @@ object Dedup {
     * verification touches only colliding history documents, so the
     * token-level artifact — the one that grows with corpus tokens —
     * reads a candidate-bounded partition subset, never wholesale. The
-    * collect is bounded by dB (≤ the bucket count).
+    * list is bounded by dB (≤ the bucket count) and comes from the held
+    * candidate rows.
     */
   private def prunedShingles(spark: org.apache.spark.sql.SparkSession,
                              snap: Snapshot.Manifest, comp: String,
-                             cand: DataFrame, dB: Int): DataFrame = {
-    val buckets = cand.select(dbCol(col("hist_id"), dB).as("db"))
-      .distinct().collect().map(_.getLong(0)).toSeq.sorted
+                             cand: Sources.Held, dB: Int): DataFrame = {
+    val buckets = cand.keys(dbCol(col("hist_id"), dB).as("db"))
+      .map(_.getLong(0)).sorted
     lastProbeParts.set(lastProbeParts.get.copy(shingleBuckets = buckets))
     val b0 = snap.read(spark, comp)
       .filter(col("db").isin(buckets.map(_.toInt): _*))
@@ -612,17 +606,16 @@ object Dedup {
     // scan only the candidates' doc buckets — admission I/O is bounded
     // by colliding buckets + doc-level artifacts, never the corpus
     // (byte-gated in graft.WeakScale at ×1 vs ×8)
-    val batchBands = minhashBands(freshB, "batch_id", w)
-      .withColumn("kb", kbCol(kB)).localCheckpoint()
+    val batchBands = Sources.hold(minhashBands(freshB, "batch_id", w)
+      .withColumn("kb", kbCol(kB)), None)
     val bandsH = prunedBands(spark, snap, "bands", batchBands, kB)
-    val cand = batchBands
+    val cand = Sources.hold(batchBands.df
       .join(bandsH, Seq("band_idx", "band_key"))
       // a PARTIALLY-appended replay (bands landed, sizes didn't) must
       // not match itself either
       .filter(col("batch_id") =!= col("hist_id"))
-      .select(col("batch_id"), col("hist_id")).distinct()
-      .localCheckpoint()
-    val verdicts = nearDupVerdicts(freshB, cand,
+      .select(col("batch_id"), col("hist_id")).distinct(), None)
+    val verdicts = nearDupVerdicts(freshB, cand.df,
       prunedShingles(spark, snap, "shingles", cand, dB),
       sizesH, w, threshold)
       .maintCheckpoint()
@@ -659,7 +652,7 @@ object Dedup {
       // compaction folds them); bucket-partitioning the 4-directory
       // write cost more in dynamic-partition commit overhead than the
       // pruning it enabled was worth
-      val admBands = batchBands
+      val admBands = batchBands.df
         .join(admitted.select(col("doc_id").as("batch_id")),
           Seq("batch_id"), "left_semi")
         .select(col("batch_id").as("hist_id"), col("band_idx"),

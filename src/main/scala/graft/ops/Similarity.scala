@@ -1,10 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, MapType, StructField, StructType}
 
-import graft.sources.{IndexFS, Snapshot, StoredLayout}
+import graft.sources.{IndexFS, Snapshot, Sources, StoredLayout}
 import graft.sources.Sources.MaintCheckpointSyntax
 
 /** Similarity search over the `embeddings` table (`Array[Float]`
@@ -53,17 +54,39 @@ object Similarity {
     * sort each. The rank window here touches only the ≤ k×queries
     * survivors. Ordering is (score DESC, neighbor_id ASC), made total
     * by the negated-id tiebreak in the heap's second component.
+    * `nKeys`, when the caller knows its query count, bounds the tail
+    * ([[rankedTail]]).
     */
   private[ops] def topKRanked(scored: DataFrame, scoreCol: String,
-                              k: Int): DataFrame = {
+                              k: Int, nKeys: Option[Long] = None): DataFrame = {
     val pruned = org.apache.spark.sql.graftbridge.PlanBridge.topKPerKey(
         scored.withColumn("__tie", -col("neighbor_id")),
         Seq("query_id"), Seq(scoreCol, "__tie"), k)
       .drop("__tie")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col(scoreCol).desc, col("neighbor_id"))
-    pruned.withColumn("rank", row_number().over(w).cast("long"))
-      .orderBy(col("query_id"), col("rank"))
+    rankedTail(pruned, "query_id", scoreCol, "neighbor_id", nKeys.map(_ * k))
+  }
+
+  /** Rank column + output order over per-key top-k survivors
+    * (`rank` = row_number by (score DESC, id ASC), rows ordered by
+    * (key, rank)). When the caller bounds the survivors on the driver
+    * (`maxRows`, e.g. queries × k) and they fit
+    * [[graft.sources.Sources.HeldBytes]], the tail runs in ONE
+    * partition: `coalesce(1)` satisfies the window's clustering with
+    * no shuffle, and a local sort gives the final order — instead of
+    * the window's hash shuffle plus the range-partitioned `orderBy`'s
+    * sampling job and shuffle. Unbounded (corpus-wide) callers keep
+    * the range sort. Both tails return the same rows in the same
+    * order.
+    */
+  private[graft] def rankedTail(pruned: DataFrame, key: String,
+                              scoreCol: String, id: String,
+                              maxRows: Option[Long]): DataFrame = {
+    val w = Window.partitionBy(col(key)).orderBy(col(scoreCol).desc, col(id))
+    def ranked(df: DataFrame) =
+      df.withColumn("rank", row_number().over(w).cast("long"))
+    if (maxRows.exists(Sources.fitsHeld(_, pruned.schema)))
+      ranked(pruned.coalesce(1)).sortWithinPartitions(col(key), col("rank"))
+    else ranked(pruned).orderBy(col(key), col("rank"))
   }
 
   /** Brute-force cosine top-k: corpus ⋈ broadcast(queries), score,
@@ -132,27 +155,24 @@ object Similarity {
     // executors in every loop's tail. Overlap them from driver threads
     // (guide §2.6); each chain computes exactly what it computed
     // before, so the gate output is bit-identical.
-    val bfF = graft.sources.Par.submit(spark)(() =>
-      cosineTopK(embeddings, nQueries, k)
-        .select(col("query_id"), col("neighbor_id"))
-        .localCheckpoint())
+    //
     // shared training: pq/ivf/ivfpq/filtered quantize identically to
     // their standalone formulations (deterministic training over the
     // same inputs), so ONE coarse quantizer and ONE codebook table
     // serve four arms. The residual arm trains on unit vectors
     // (different centroids by construction) and stays independent;
     // SQ8's per-dim min/max "training" is one cheap aggregate.
-    val centF = graft.sources.Par.submit(spark)(() =>
-      kmeansCentroids(embeddings, nlist))
-    val unitCbF = graft.sources.Par.submit(spark) { () =>
-      val u = unitVectors(embeddings).localCheckpoint()
-      (u, pqCodebooks(u).localCheckpoint())
-    }
-    val resArmF = graft.sources.Par.submit(spark)(() =>
-      ivfpqResidualTopK(embeddings, nQueries, k))
-    val bf = graft.sources.Par.await(bfF)
-    val centroids = graft.sources.Par.await(centF)
-    val (unit, codebooks) = graft.sources.Par.await(unitCbF)
+    val Seq(Seq(bf), Seq(centroids), Seq(unit, codebooks), Seq(resArm)) =
+      graft.sources.Par.run(spark)(Seq(
+        () => Seq(cosineTopK(embeddings, nQueries, k)
+          .select(col("query_id"), col("neighbor_id"))
+          .localCheckpoint()),
+        () => Seq(kmeansCentroids(embeddings, nlist)),
+        () => {
+          val u = unitVectors(embeddings).localCheckpoint()
+          Seq(u, pqCodebooks(u).localCheckpoint())
+        },
+        () => Seq(ivfpqResidualTopK(embeddings, nQueries, k))))
     def gate(variant: String, truth: DataFrame,
              approx: DataFrame): DataFrame =
       truth.join(approx.select(col("query_id").as("q2"),
@@ -185,8 +205,7 @@ object Similarity {
         ivfTopKWith(embeddings, centroids, nQueries, k, nprobe)),
       "ivfpq" -> gate("ivfpq", bf, ivfpqTopKWith(embeddings, unit,
         centroids, codebooks, nQueries, k, nprobe)),
-      "ivfpq_res" -> gate("ivfpq_res", bf,
-        graft.sources.Par.await(resArmF)),
+      "ivfpq_res" -> gate("ivfpq_res", bf, resArm),
       "ivf_filtered" -> gate("ivf_filtered", fbf, ivfFilteredTopKWith(
         embeddings, centroids, nQueries, k, nprobe, labelMod)))
     // bespoke fold (shared ground truth + quantizers): deposit the arm
@@ -972,12 +991,15 @@ object Similarity {
     // the unit→codebook chain — overlap the two training loops
     // (guide §2.6); both are deterministic, so the index and the
     // result are bit-identical to the sequential formulation
-    val centF = graft.sources.Par.submit(embeddings.sparkSession)(() =>
-      kmeansCentroids(embeddings, nlist))
-    val unit = unitVectors(embeddings).localCheckpoint()
-    val codebooks = pqCodebooks(unit).localCheckpoint()
-    ivfpqTopKWith(embeddings, unit, graft.sources.Par.await(centF),
-      codebooks, nQueries, k, nprobe, shortlist)
+    val Seq(Seq(centroids), Seq(unit, codebooks)) =
+      graft.sources.Par.run(embeddings.sparkSession)(Seq(
+        () => Seq(kmeansCentroids(embeddings, nlist)),
+        () => {
+          val u = unitVectors(embeddings).localCheckpoint()
+          Seq(u, pqCodebooks(u).localCheckpoint())
+        }))
+    ivfpqTopKWith(embeddings, unit, centroids, codebooks, nQueries, k,
+      nprobe, shortlist)
   }
 
   /** [[ivfpqTopK]] with precomputed unit vectors, coarse quantizer,
@@ -1186,11 +1208,13 @@ object Similarity {
     val spark = embeddings.sparkSession
     // coarse-quantizer training is independent of the unit→codebook
     // chain — overlap the two loops (guide §2.6, deterministic both)
-    val centF = graft.sources.Par.submit(spark)(() =>
-      kmeansCentroids(embeddings, nlist))
-    val unit = unitVectors(embeddings).maintCheckpoint()
-    val codebooks = pqCodebooks(unit).maintCheckpoint()
-    val centroids = graft.sources.Par.await(centF)
+    val Seq(Seq(centroids), Seq(unit, codebooks)) =
+      graft.sources.Par.run(spark)(Seq(
+        () => Seq(kmeansCentroids(embeddings, nlist)),
+        () => {
+          val u = unitVectors(embeddings).maintCheckpoint()
+          Seq(u, pqCodebooks(u).maintCheckpoint())
+        }))
     // assignment feeds BOTH the cells write and the codes join —
     // checkpoint it so the corpus-wide argmax runs once, not per sink
     val assigned =
@@ -1234,9 +1258,106 @@ object Similarity {
                        shortlist: Int = 20): DataFrame = {
     val spark = embeddings.sparkSession
     ensureIvfpqFresh(embeddings, base, nlist)
-    val queries = embeddings.filter(col("vec_id") < nQueries)
-      .select(col("vec_id"), col("embedding")).localCheckpoint()
-    ivfpqScoreStored(spark, base, queries, k, nprobe, shortlist)
+    ivfpqScoreStored(spark, base, heldQueries(embeddings, nQueries), k,
+      nprobe, shortlist)
+  }
+
+  /** The probe's query vectors (`vec_id < nQueries`; `vec_id` is the
+    * corpus's non-negative key, so at most nQueries rows), held on the
+    * driver ([[Sources.hold]]): one scan, then every consumer (cell
+    * ranking, LUT, re-rank broadcast) reads the held rows.
+    */
+  private[graft] def heldQueries(embeddings: DataFrame,
+                                 nQueries: Int): Sources.Held =
+    Sources.hold(embeddings.filter(col("vec_id") < nQueries)
+      .select(col("vec_id"), col("embedding")), Some(nQueries.toLong))
+
+  /** Each query's `nprobe` best stored centroids by (cosine DESC,
+    * centroid_id ASC) as (query_id, [qe,] cell), held on the driver:
+    * at most queries × nprobe rows, and the probed-cell IN-list comes
+    * from the held rows. With the queries and the centroids both held,
+    * the ranking runs on the driver ([[probeOrder]]) — no job at all;
+    * otherwise it is a Spark window over the broadcast centroids.
+    */
+  private def probeCells(queries: Sources.Held, centroids: Sources.Held,
+                         nprobe: Int, withQe: Boolean): Sources.Held = {
+    val spark = queries.df.sparkSession
+    val schema = StructType(Seq(StructField("query_id", LongType)) ++
+      (if (withQe) Seq(queries.df.schema("embedding").copy(name = "qe"))
+       else Nil) :+ StructField("cell", LongType))
+    (queries.rows, centroids.rows) match {
+      case (Some(qs), Some(cs)) =>
+        val cents = cs.map(r => (r.getAs[Number]("centroid_id").longValue,
+          doubles(r, "ce")))
+        Sources.local(spark, qs.flatMap { q =>
+          val qid = q.getAs[Number]("vec_id").longValue
+          probeOrder(doubles(q, "embedding"), cents).take(nprobe).map(c =>
+            Row.fromSeq(Seq(qid) ++
+              (if (withQe) Seq(q.get(q.fieldIndex("embedding"))) else Nil) :+ c))
+        }, schema)
+      case _ =>
+        val pw = Window.partitionBy(col("query_id"))
+          .orderBy(col("cs").desc, col("centroid_id"))
+        Sources.hold(queries.df
+          .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
+          .join(broadcast(centroids.df))
+          .select(col("query_id"), col("qe"), col("centroid_id"),
+            cosine(col("qe"), col("ce")).as("cs"))
+          .withColumn("rn", row_number().over(pw))
+          .filter(col("rn") <= nprobe)
+          .select(schema.fieldNames.map {
+            case "cell" => col("centroid_id").as("cell")
+            case c => col(c)
+          }: _*), queries.size.map(_ * nprobe))
+    }
+  }
+
+  /** A vector column of a held row as doubles (float elements widen
+    * exactly, as in [[dot]]).
+    */
+  private def doubles(r: Row, c: String): IndexedSeq[Double] =
+    r.getSeq[Number](r.fieldIndex(c)).map(_.doubleValue).toIndexedSeq
+
+  /** Driver-side twin of [[dot]]: the same in-order double fold, so
+    * every value is bit-identical to the Spark expression's.
+    */
+  private def dotRows(a: IndexedSeq[Double], b: IndexedSeq[Double]): Double = {
+    val n = math.min(a.length, b.length)
+    var acc = 0.0
+    var i = 0
+    while (i < n) { acc += a(i) * b(i); i += 1 }
+    acc
+  }
+
+  /** Centroid ids by (cosine DESC, id ASC) for one query vector:
+    * [[cosine]]'s arithmetic in its order (dot / √|q|² / √|c|²) and
+    * Spark's double ordering (0.0 = −0.0, NaN largest) — the exact
+    * order of the probe window.
+    */
+  private def probeOrder(qe: IndexedSeq[Double],
+                         cents: Seq[(Long, IndexedSeq[Double])]): Seq[Long] = {
+    val nq = math.sqrt(dotRows(qe, qe))
+    cents.map { case (id, ce) =>
+        (dotRows(qe, ce) / nq / math.sqrt(dotRows(ce, ce)), id) }
+      .sortWith { case ((a, i), (b, j)) =>
+        val c = if (a == b) 0 else java.lang.Double.compare(a, b)
+        if (c != 0) c > 0 else i < j
+      }.map(_._2)
+  }
+
+  /** Driver-side ADC lookup table of one held query: (m·ksub + code) →
+    * dot(unit query subvector m, codebook centroid), the values the
+    * Spark LUT path computes, by the same arithmetic.
+    */
+  private def lutRow(qe: IndexedSeq[Double],
+                     codebooks: Seq[Row]): Map[Long, Double] = {
+    val nrm = math.sqrt(dotRows(qe, qe))
+    val unit = qe.map(_ / nrm)
+    codebooks.map { r =>
+      val m = r.getAs[Number]("m").intValue
+      (m.toLong * pqKsub + r.getAs[Number]("code").longValue) ->
+        dotRows(unit.slice(m * pqDsub, m * pqDsub + pqDsub), doubles(r, "ce"))
+    }.toMap
   }
 
   /** FILTERED search over the STORED index — [[ivfFilteredTopK]]'s
@@ -1263,19 +1384,20 @@ object Similarity {
     val spark = embeddings.sparkSession
     ensureIvfpqFresh(embeddings, base, nlist)
     val snap = Snapshot.require(base)
-    val centroids = snap.read(spark, "centroids")
     // the predicate is `label % labelMod = 0` — the SAME semantics as
     // the inline ivfFilteredTopK and the registry oracle — but pushed
     // to the stored layout as a literal IN-list DERIVED from the
     // layout's own label domain: an IN-list lands in the cells scan's
     // PushedFilters (an arithmetic form would only filter post-scan —
     // membership and range predicates are what parquet pushdown
-    // evaluates against row-group statistics). The domain scan reads
-    // one column; if the domain is too wide for an IN-list (> 1024
-    // passing labels) fall back to the post-scan arithmetic filter
-    // rather than a mile-long pushdown literal.
+    // evaluates against row-group statistics). The domain is a held
+    // component (one column, read once per live leaf set); the
+    // labelMod filter runs per probe. If the domain is too wide for an
+    // IN-list (> 1024 passing labels) fall back to the post-scan
+    // arithmetic filter rather than a mile-long pushdown literal.
     val cells0 = snap.read(spark, "cells")
-    val passing = cells0.select(col("label")).na.drop().distinct()
+    val passing = snap.held(spark, "cells", "label domain",
+        _.select(col("label")).na.drop().distinct()).df
       .filter(pmod(col("label"), lit(labelMod)) === 0)
       .limit(1025).collect().map(_.get(0).asInstanceOf[Number].intValue).toSeq
     val cells = (if (passing.size <= 1024)
@@ -1283,27 +1405,18 @@ object Similarity {
       else cells0.filter(pmod(col("label"), lit(labelMod)) === 0))
       .select(col("vec_id"), col("embedding"),
         col("cell").cast("long").as("cell"))
-    val probes = embeddings.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-      .join(broadcast(centroids))
-      .select(col("query_id"), col("qe"), col("centroid_id"),
-        cosine(col("qe"), col("ce")).as("cs"))
-    val pw = Window.partitionBy(col("query_id"))
-      .orderBy(col("cs").desc, col("centroid_id"))
-    val probeCells = probes.withColumn("rn", row_number().over(pw))
-      .filter(col("rn") <= nprobe)
-      .select(col("query_id"), col("qe"), col("centroid_id").as("cell"))
-      .localCheckpoint() // feeds the cell census AND the scoring join
+    val queries = heldQueries(embeddings, nQueries)
+    val probed = probeCells(queries, snap.held(spark, "centroids"), nprobe,
+      withQe = true)
     // static probed-cell IN-list (≤ nlist values) — deterministic
     // partition pruning, same contract as [[ivfpqScoreStored]]
-    val probedCellVals = probeCells.select(col("cell")).distinct()
-      .collect().map(_.getLong(0)).toSeq.sorted
+    val probedCellVals = probed.keys(col("cell")).map(_.getLong(0)).sorted
     val scored = cells.filter(col("cell").isin(probedCellVals: _*))
-      .join(broadcast(probeCells), Seq("cell"))
+      .join(broadcast(probed.df), Seq("cell"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         cosine(col("qe"), col("embedding")).as("sim"))
-    topKRanked(scored, "sim", k)
+    topKRanked(scored, "sim", k, queries.size)
   }
 
   /** Index HEALTH for a stored IVFADC layout — the observability half
@@ -1483,40 +1596,28 @@ object Similarity {
     * ([[graft.Scenarios]]); reads ONLY the persisted artifacts.
     */
   private[graft] def ivfpqScoreStored(spark: org.apache.spark.sql.SparkSession,
-                               base: String, queries: DataFrame, k: Int,
+                               base: String, queries: Sources.Held, k: Int,
                                nprobe: Int, shortlist: Int): DataFrame = {
     // ONE manifest resolution pins the whole probe to a consistent
     // snapshot: concurrent maintenance publishes new generations but
-    // never touches the files this resolution references
+    // never touches the files this resolution references. The
+    // quantizers are held components: read once per live leaf set.
     val snap = Snapshot.require(base)
-    val centroids = snap.read(spark, "centroids")
-    val codebooks = snap.read(spark, "codebooks")
-    // probe ranking: the query's nprobe best stored centroids
-    val probes = queries
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-      .join(broadcast(centroids))
-      .select(col("query_id"), col("centroid_id"),
-        cosine(col("qe"), col("ce")).as("cs"))
-    val pw = Window.partitionBy(col("query_id"))
-      .orderBy(col("cs").desc, col("centroid_id"))
-    val probeCells = probes.withColumn("rn", row_number().over(pw))
-      .filter(col("rn") <= nprobe)
-      .select(col("query_id"), col("centroid_id").as("cell"))
-      .localCheckpoint() // feeds the cell census, the ADC join, and
-                         // would otherwise recompute per consumer
-    // the probed-cell SET, collected driver-side: ≤ nlist values (the
-    // distinct union of every query's nprobe cells), pushed into BOTH
-    // index scans as a STATIC partition IN-filter. Dynamic partition
-    // pruning is not trusted with this contract: its default
-    // reuseBroadcastOnly mode silently drops the pruning filter
-    // whenever the probe broadcast fails canonical reuse matching
-    // (found by the weak-scaling harness — the plan showed
-    // `dynamicpruning` while every cell directory was read), whereas a
-    // literal IN-list prunes deterministically at planning time. The
-    // collect is metadata-size, same bound as the maintenance ops'
-    // affected-cell lists.
-    val probedCellVals = probeCells.select(col("cell")).distinct()
-      .collect().map(_.getLong(0)).toSeq.sorted
+    val codebooks = snap.held(spark, "codebooks")
+    // probe ranking: the query's nprobe best stored centroids, held
+    // (feeds the cell IN-list, the LUT join and the ADC join)
+    val probed = probeCells(queries, snap.held(spark, "centroids"), nprobe,
+      withQe = false)
+    // the probed-cell SET: ≤ nlist values (the distinct union of every
+    // query's nprobe cells), pushed into BOTH index scans as a STATIC
+    // partition IN-filter. Dynamic partition pruning is not trusted
+    // with this contract: its default reuseBroadcastOnly mode silently
+    // drops the pruning filter whenever the probe broadcast fails
+    // canonical reuse matching (found by the weak-scaling harness —
+    // the plan showed `dynamicpruning` while every cell directory was
+    // read), whereas a literal IN-list prunes deterministically at
+    // planning time.
+    val probedCellVals = probed.keys(col("cell")).map(_.getLong(0)).sorted
     // tombstone serving: deleted vectors drop out of the candidate set
     // via anti-join (no stats to go stale here, unlike BM25 — the
     // tombstoned probe is already EXACTLY the index minus the deletes;
@@ -1528,17 +1629,37 @@ object Similarity {
     // per-query ADC LUT from the stored codebooks (unit-normalized
     // queries: per-row normalization, identical to normalizing the
     // corpus then filtering)
-    val qsubs = unitVectors(queries)
-      .select(col("vec_id").as("query_id"), posexplode(
-        array((0 until pqM).map(m => subvec(col("embedding"), m)): _*))
-        .as(Seq("m", "qsv")))
-    val lut = qsubs.join(broadcast(codebooks), Seq("m"))
-      .select(col("query_id"), (col("m") * pqKsub + col("code")).as("mk"),
-        dot(col("qsv"), col("ce")).as("pd"))
-    val lutMaps = lut.groupBy(col("query_id"))
-      .agg(map_from_entries(sort_array(collect_list(
-        struct(col("mk"), col("pd"))))).as("lut"))
-    val probeLuts = probeCells.join(lutMaps, Seq("query_id"))
+    val probeLuts = (queries.rows, codebooks.rows, probed.rows) match {
+      case (Some(qs), Some(cbs), Some(cells)) =>
+        // held queries and codebooks: the LUTs are built on the driver
+        // and ride the probed cells as one driver-built frame. It is
+        // RDD-backed, not a local relation, so a filter on it survives
+        // optimisation as the selective predicate that keeps dynamic
+        // partition pruning on the codes scan (same one broadcast job
+        // either way). The filter is the constant `cell >= 0` (cell ids
+        // are centroid ids): a per-probe literal list would compile a
+        // new class for every probed-cell set.
+        val luts = qs.map(q => q.getAs[Number]("vec_id").longValue ->
+          lutRow(doubles(q, "embedding"), cbs)).toMap
+        spark.createDataFrame(spark.sparkContext.parallelize(cells.map(r =>
+            Row(r.getLong(0), luts(r.getLong(0)), r.getLong(1))), 1),
+          StructType(Seq(StructField("query_id", LongType),
+            StructField("lut", MapType(LongType, DoubleType, false)),
+            StructField("cell", LongType))))
+          .filter(col("cell") >= 0)
+      case _ =>
+        val qsubs = unitVectors(queries.df)
+          .select(col("vec_id").as("query_id"), posexplode(
+            array((0 until pqM).map(m => subvec(col("embedding"), m)): _*))
+            .as(Seq("m", "qsv")))
+        val lut = qsubs.join(broadcast(codebooks.df), Seq("m"))
+          .select(col("query_id"), (col("m") * pqKsub + col("code")).as("mk"),
+            dot(col("qsv"), col("ce")).as("pd"))
+        lut.groupBy(col("query_id"))
+          .agg(map_from_entries(sort_array(collect_list(
+            struct(col("mk"), col("pd"))))).as("lut"))
+          .join(broadcast(probed.df), Seq("query_id"))
+    }
     // ADC over the stored codes: the broadcast probed-cell join keys
     // the partitioned scan on `cell` → dynamic partition pruning
     val adc = codesCells.join(broadcast(probeLuts), Seq("cell"))
@@ -1560,7 +1681,7 @@ object Similarity {
     val storedVecs = snap.read(spark, "cells")
       .filter(col("cell").isin(probedCellVals: _*))
       .select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"))
-    val q = queries
+    val q = queries.df
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
     // the shortlist BROADCASTS into the re-rank (queries × shortlist
     // rows vs the corpus-scale vector table): no shuffle join, and no
@@ -1572,7 +1693,7 @@ object Similarity {
       .join(broadcast(q), Seq("query_id"))
       .select(col("query_id"), col("neighbor_id"),
         cosine(col("qe"), col("ce")).as("sim"))
-    topKRanked(scored, "sim", k)
+    topKRanked(scored, "sim", k, queries.size)
   }
 
   /** APPEND a vector batch into a stored IVFADC layout using the
@@ -1669,21 +1790,6 @@ object Similarity {
     ()
   }
 
-  /** recall@k of residual IVFADC against brute-force cosine. */
-  def ivfpqResidualRecall(embeddings: DataFrame, nQueries: Int,
-                          k: Int): DataFrame = {
-    val bf = cosineTopK(embeddings, nQueries, k)
-      .select(col("query_id"), col("neighbor_id"))
-    val iv = ivfpqResidualTopK(embeddings, nQueries, k)
-      .select(col("query_id").as("q2"), col("neighbor_id").as("n2"))
-    bf.join(iv,
-        col("query_id") === col("q2") && col("neighbor_id") === col("n2"),
-        "left")
-      .groupBy(col("query_id"))
-      .agg((count(col("n2")).cast("double") / k).as("recall_at_k"))
-      .orderBy(col("query_id"))
-  }
-
   /** Maximal Marginal Relevance (Carbonell-Goldstein): diversity-aware
     * top-k — greedily pick argmax of λ·sim(q,c) − (1−λ)·max_{s∈S}
     * sim(c,s) over the unpicked candidates. The retrieval stack's
@@ -1751,23 +1857,6 @@ object Similarity {
               cosine(col("cemb"), col("semb"))).as("maxsel"))
     }
     picked.orderBy(col("query_id"), col("mmr_rank"))
-  }
-
-  /** recall@k of IVFADC against brute-force cosine — probe pruning and
-    * compression loss measured together, the number a production index
-    * actually monitors.
-    */
-  def ivfpqRecall(embeddings: DataFrame, nQueries: Int, k: Int): DataFrame = {
-    val bf = cosineTopK(embeddings, nQueries, k)
-      .select(col("query_id"), col("neighbor_id"))
-    val iv = ivfpqTopK(embeddings, nQueries, k)
-      .select(col("query_id").as("q2"), col("neighbor_id").as("n2"))
-    bf.join(iv,
-        col("query_id") === col("q2") && col("neighbor_id") === col("n2"),
-        "left")
-      .groupBy(col("query_id"))
-      .agg((count(col("n2")).cast("double") / k).as("recall_at_k"))
-      .orderBy(col("query_id"))
   }
 
   /** Banded random-hyperplane LSH for embedding-cosine NEAR-DUP
@@ -1938,25 +2027,6 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"),
         cosine(col("qe"), col("ce")).as("sim"))
     topKRanked(scored, "sim", k)
-  }
-
-  /** recall@k of SQ8 against brute force — the quantization-quality
-    * gate, same shape as [[pqRecall]]. SQ8's per-dimension resolution
-    * is 8 bits (vs PQ's 8 bits per 16-dim subspace), so its recall
-    * floor is far higher; the gate documents the compression/quality
-    * trade numerically.
-    */
-  def sqRecall(embeddings: DataFrame, nQueries: Int, k: Int): DataFrame = {
-    val bf = cosineTopK(embeddings, nQueries, k)
-      .select(col("query_id"), col("neighbor_id"))
-    val sq = sqTopK(embeddings, nQueries, k)
-      .select(col("query_id").as("q2"), col("neighbor_id").as("n2"))
-    bf.join(sq,
-        col("query_id") === col("q2") && col("neighbor_id") === col("n2"),
-        "left")
-      .groupBy(col("query_id"))
-      .agg((count(col("n2")).cast("double") / k).as("recall_at_k"))
-      .orderBy(col("query_id"))
   }
 
   /** Approximate kNN-GRAPH construction: every vector's top-k among

@@ -500,7 +500,7 @@ object Text {
     * engines (ln is the one libm-dependent piece of BM25 — swapping it
     * in changes one line and downgrades the oracle to a rows-only
     * check). The per-(query, doc) term sum folds in sorted term order
-    * (collect→sort→fold, ≤|query| structs per buffer), the oracle
+    * ([[bm25Ranked]]: one conditional sum per term slot), the oracle
     * mirroring it with `list_sum(list(s ORDER BY term))`.
     *
     * Scale shape: ONE corpus tokenize builds the checkpointed
@@ -514,12 +514,6 @@ object Text {
     */
   def bm25TopK(documents: DataFrame, k: Int = 10): DataFrame = {
     val spark = documents.sparkSession
-    import spark.implicits._
-    // per-query DISTINCT terms, expanded driver-side (a literal
-    // constant — no explode in the plan)
-    val qterms = bm25Queries
-      .flatMap { case (id, q) => q.split(" ").distinct.map(t => (id, t)) }
-      .toDF("query_id", "term")
     // the (doc, term, tf) inverted-index frame is MATERIALIZED once
     // (localCheckpoint — the engine's trained-artifact device): three
     // consumers read it (match, dl, df), and per-consumer column
@@ -536,33 +530,89 @@ object Text {
       .agg(count(lit(1)).as("tf"))
       .localCheckpoint()
     val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
-    val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val stats = dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("tot_dl"))
+    val stats = dl.agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L))).head()
+    bm25Ranked(tf, dl, stats.getLong(0), stats.getLong(1), k)
+  }
+
+  /** [[bm25Queries]]' per-query DISTINCT terms, each with its SLOT:
+    * the term's position in its query's sorted term list (the terms
+    * are ASCII literals, so Scala's string order is Spark's). No term
+    * belongs to two queries, so a term alone names its (query, slot).
+    */
+  private lazy val bm25Slots: Seq[(Long, String, Int)] = {
+    val slots = bm25Queries.flatMap { case (id, q) =>
+      q.split(" ").distinct.sorted.toSeq.zipWithIndex
+        .map { case (t, j) => (id, t, j) }
+    }
+    require(slots.map(_._2).distinct.size == slots.size,
+      "bm25Queries share a term")
+    slots
+  }
+
+  /** The ONE BM25 scoring expression and ranked top-k, shared by
+    * [[bm25TopK]] (inline inverted index) and [[bm25ScoreStored]]
+    * (stored postings): `tf` (doc_id, term, tf), `dl` (doc_id, dl) and
+    * the corpus stats `nDocs`/`totDl`, which enter the plan as literals
+    * (a one-row frame cross-joined in costs a broadcast job per probe).
+    *
+    * Postings are filtered to the query terms FIRST and per-term df
+    * derives from those rows: a term's postings are complete in `tf`
+    * (for the stored layout: bucket-complete across the base and every
+    * delta segment, which hash terms identically), so the count is the
+    * EXACT document frequency — fresher than Lucene's stale-df trade,
+    * and free (the stored df/ artifact is build-time observability
+    * for [[bm25Health]], not a serving input).
+    *
+    * The per-(query, doc) sum folds in sorted term order, as the
+    * oracle's `list_sum(list(s ORDER BY term))` does. Each term is one
+    * slot: a conditional `sum` per slot holds that term's score (at
+    * most one posting per (query, doc, term), so the sum IS the score)
+    * and the slots fold left from 0.0 in slot order. An absent slot
+    * adds 0.0, which leaves every partial sum unchanged (scores are
+    * positive), so the result is bit-identical to folding the sorted
+    * present terms — with plain hash aggregates instead of a
+    * collect/sort/lambda fold per group.
+    */
+  private def bm25Ranked(tf: DataFrame, dl: DataFrame, nDocs: Long,
+                         totDl: Long, k: Int): DataFrame = {
+    val qtf = tf.filter(col("term").isin(bm25Slots.map(_._2): _*))
+    val df = qtf.groupBy(col("term")).agg(count(lit(1)).as("df"))
+    // each posting takes its (query_id, slot) by literal map lookups,
+    // not a broadcast join (one job per probe)
+    val tagged = qtf
+      .withColumn("query_id",
+        element_at(typedLit(bm25Slots.map(x => x._2 -> x._1).toMap), col("term")))
+      .withColumn("slot",
+        element_at(typedLit(bm25Slots.map(x => x._2 -> x._3).toMap), col("term")))
     val k1p1 = bm25K1 + 1.0
     val oneMinusB = 1.0 - bm25B
-    val idf = (col("n_docs").cast("double") - col("df").cast("double")
+    val idf = (lit(nDocs).cast("double") - col("df").cast("double")
       + lit(0.5)) / (col("df").cast("double") + lit(0.5))
-    val avgdl = col("tot_dl").cast("double") / col("n_docs").cast("double")
+    // an empty corpus has no postings to score (and 0/0 would fail
+    // constant folding under ANSI)
+    val avgdl = if (nDocs == 0) lit(null).cast("double")
+      else lit(totDl).cast("double") / lit(nDocs).cast("double")
     val s = idf * ((col("tf").cast("double") * lit(k1p1)) /
       (col("tf").cast("double") + lit(bm25K1) *
         (lit(oneMinusB) + lit(bm25B) * (col("dl").cast("double") / avgdl))))
-    val matched = tf.join(broadcast(qterms), Seq("term"))
+    val matched = tagged
       .join(dl, Seq("doc_id"))
       .join(df, Seq("term"))
-      .crossJoin(broadcast(stats))
-      .select(col("query_id"), col("doc_id"), col("term"), s.as("s"))
+      .select(col("query_id"), col("doc_id"), col("slot"), s.as("s"))
+    val slots = (0 to bm25Slots.map(_._3).max)
+      .map(j => sum(when(col("slot") === j, col("s"))).as(s"__s$j"))
     val scored = matched.groupBy(col("query_id"), col("doc_id"))
-      .agg(aggregate(sort_array(collect_list(struct(col("term"), col("s")))),
-        lit(0.0), (acc, x) => acc + x.getField("s")).as("score"))
+      .agg(slots.head, slots.tail: _*)
+      .select(col("query_id"), col("doc_id"),
+        slots.indices.foldLeft(lit(0.0)) { (acc, j) =>
+          acc + coalesce(col(s"__s$j"), lit(0.0))
+        }.as("score"))
     val pruned = org.apache.spark.sql.graftbridge.PlanBridge.topKPerKey(
         scored.withColumn("__tie", -col("doc_id")),
         Seq("query_id"), Seq("score", "__tie"), k)
       .drop("__tie")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("doc_id"))
-    pruned.withColumn("rank", row_number().over(w).cast("long"))
-      .orderBy(col("query_id"), col("rank"))
+    Similarity.rankedTail(pruned, "query_id", "score", "doc_id",
+      Some(bm25Queries.size.toLong * k))
   }
 
   /** Bucket count for the stored inverted-index layout: terms hash
@@ -773,16 +823,12 @@ object Text {
     */
   private[graft] def bm25ScoreStored(spark: org.apache.spark.sql.SparkSession,
                               base: String, k: Int): DataFrame = {
-    import spark.implicits._
     // ONE manifest resolution pins the whole probe — base postings,
     // delta segments, doc lengths, stats, and tombstones are all read
     // as of the same snapshot, so a probe racing maintenance is
     // internally consistent (never base-from-one-generation with
     // stats-from-another)
     val snap = Snapshot.require(base)
-    val qterms = bm25Queries
-      .flatMap { case (id, q) => q.split(" ").distinct.map(t => (id, t)) }
-      .toDF("query_id", "term")
     // the probed buckets, computed driver-side from the literal terms
     val buckets = bm25Queries
       .flatMap(_._2.split(" ")).distinct
@@ -790,55 +836,22 @@ object Text {
     val tfGen = servedPostings(spark, snap, "tf", buckets,
       Seq("doc_id", "term", "tf"))
     val dl0 = snap.read(spark, "dl")
-    val stats0 = snap.read(spark, "stats")
+    // the one-row corpus stats: a held component
+    val stats = snap.held(spark, "stats").df
+      .select(col("n_docs"), coalesce(col("tot_dl"), lit(0L))).head()
     // tombstone serving: deleted docs are excluded from MATCHING
     // (postings/dl anti-join the tombstone sidecar) and from the
     // corpus stats (adjusted by the tombstoned docs' lengths)
-    val (tf, dl, stats) = snap.readOpt(spark, "tombstones") match {
+    val (tf, dl, removed) = snap.readOpt(spark, "tombstones") match {
       case Some(tomb) =>
-        val removed = dl0.join(broadcast(tomb), Seq("doc_id"))
-          .agg(coalesce(count(lit(1)), lit(0L)).as("rm_n"),
-            coalesce(sum(col("dl")), lit(0L)).as("rm_dl"))
         (tfGen.join(broadcast(tomb), Seq("doc_id"), "left_anti"),
           dl0.join(broadcast(tomb), Seq("doc_id"), "left_anti"),
-          stats0.crossJoin(broadcast(removed))
-            .select((col("n_docs") - col("rm_n")).as("n_docs"),
-              (col("tot_dl") - col("rm_dl")).as("tot_dl")))
-      case None => (tfGen, dl0, stats0)
+          dl0.join(broadcast(tomb), Seq("doc_id"))
+            .agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L))).head())
+      case None => (tfGen, dl0, org.apache.spark.sql.Row(0L, 0L))
     }
-    // per-term df derives from the SERVED postings themselves: a
-    // term's postings are bucket-complete across every generation
-    // (base and deltas hash terms identically), so counting the rows
-    // already read yields EXACT document frequency — fresher than
-    // Lucene's stale-df trade, and free (the df/ artifact on disk is
-    // build-time observability for [[bm25Health]], not a serving
-    // input)
-    val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val k1p1 = bm25K1 + 1.0
-    val oneMinusB = 1.0 - bm25B
-    val idf = (col("n_docs").cast("double") - col("df").cast("double")
-      + lit(0.5)) / (col("df").cast("double") + lit(0.5))
-    val avgdl = col("tot_dl").cast("double") / col("n_docs").cast("double")
-    val s = idf * ((col("tf").cast("double") * lit(k1p1)) /
-      (col("tf").cast("double") + lit(bm25K1) *
-        (lit(oneMinusB) + lit(bm25B) * (col("dl").cast("double") / avgdl))))
-    val matched = tf.join(broadcast(qterms), Seq("term"))
-      .join(dl, Seq("doc_id"))
-      .join(df, Seq("term"))
-      .crossJoin(broadcast(stats))
-      .select(col("query_id"), col("doc_id"), col("term"), s.as("s"))
-    val scored = matched.groupBy(col("query_id"), col("doc_id"))
-      .agg(aggregate(sort_array(collect_list(struct(col("term"), col("s")))),
-        lit(0.0), (acc, x) => acc + x.getField("s")).as("score"))
-    val pruned = org.apache.spark.sql.graftbridge.PlanBridge.topKPerKey(
-        scored.withColumn("__tie", -col("doc_id")),
-        Seq("query_id"), Seq("score", "__tie"), k)
-      .drop("__tie")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("doc_id"))
-    pruned.withColumn("rank", row_number().over(w).cast("long"))
-      .orderBy(col("query_id"), col("rank"))
+    bm25Ranked(tf, dl, stats.getLong(0) - removed.getLong(0),
+      stats.getLong(1) - removed.getLong(1), k)
   }
 
   /** APPEND a document batch into the stored BM25 layout — the

@@ -3,7 +3,9 @@ package graft.sources
 import java.net.{URLDecoder, URLEncoder}
 import java.nio.charset.StandardCharsets
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -71,7 +73,17 @@ import org.apache.spark.sql.types.StructType
   * never reused. So a leaf's file LISTING and the read SCHEMA of a
   * leaf set are computed once and served from caches on every later
   * read ([[Manifest.read]]); a repeated probe of an unchanged layout
-  * plans without touching the filesystem.
+  * plans without touching the filesystem. The same argument covers
+  * the ROWS of small components ([[Manifest.held]]: IVFADC centroids
+  * and codebooks, BM25 corpus stats, the cells label domain): held on
+  * the driver under the exact live-leaf key, they are read by no job
+  * after the first probe of a leaf set. The bounds: one component (or
+  * view) is held only when its planner estimate fits
+  * [[Sources.HeldBytes]] (4 MB), all held rows together stay within
+  * that same 4 MB and [[HeldEntries]] entries (least recently used
+  * evicted), and a context's entries go when it stops. Only rows
+  * derived from a component are held — never anything computed from
+  * a probe's queries or parameters.
   *
   * Manifests say which generations are live, not whether a layout is
   * fresh: the freshness `MARKER`, the `_VERSION` stamp, wipe-on-stale
@@ -108,6 +120,58 @@ object Snapshot {
     def put(key: String, schema: StructType): Unit =
       m.synchronized { m.put(key, schema); () }
     def size: Int = m.synchronized(m.size)
+  }
+
+  /** Most entries [[heldCache]] keeps. */
+  private[graft] val HeldEntries = 64
+
+  /** Small immutable components held on the driver
+    * ([[Manifest.held]]): rows keyed like [[schemaCache]] by the exact
+    * sorted live-leaf list, plus the name of the view derived from it.
+    * Least recently used entries are evicted past [[HeldEntries]]
+    * entries or past [[Sources.HeldBytes]] estimated bytes in total,
+    * and a context's entries are dropped when it stops.
+    */
+  private[graft] object heldCache {
+    final case class Entry(sc: org.apache.spark.SparkContext,
+                           schema: StructType, rows: Seq[Row], bytes: Long)
+    private val m = new java.util.LinkedHashMap[String, Entry](16, 0.75f, true)
+    private var bytes = 0L
+    private val watched =
+      java.util.concurrent.ConcurrentHashMap.newKeySet[org.apache.spark.SparkContext]()
+
+    def get(key: String): Option[Entry] = m.synchronized(Option(m.get(key)))
+
+    def put(key: String, e: Entry): Unit = {
+      if (!e.sc.isStopped && watched.add(e.sc))
+        e.sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+          override def onApplicationEnd(
+              end: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
+            drop(_.sc eq e.sc)
+            watched.remove(e.sc)
+          }
+        })
+      m.synchronized {
+        Option(m.put(key, e)).foreach(old => bytes -= old.bytes)
+        bytes += e.bytes
+        val it = m.values.iterator
+        while ((m.size > HeldEntries || bytes > Sources.HeldBytes) && it.hasNext) {
+          bytes -= it.next().bytes
+          it.remove()
+        }
+      }
+    }
+
+    private def drop(p: Entry => Boolean): Unit = m.synchronized {
+      val it = m.values.iterator
+      while (it.hasNext) { val e = it.next(); if (p(e)) { bytes -= e.bytes; it.remove() } }
+    }
+
+    def size: Int = m.synchronized(m.size)
+
+    /** The context of every entry, one per entry. */
+    def contexts: Seq[org.apache.spark.SparkContext] =
+      m.synchronized(m.values.asScala.map(_.sc).toSeq)
   }
 
   /** The trailing generation-stamp partition column added to every
@@ -206,6 +270,36 @@ object Snapshot {
       */
     def readOpt(spark: SparkSession, comp: String): Option[DataFrame] =
       if (!has(comp)) None else scan(spark, comp)
+
+    /** A small component — or the `view` of it that `derive` computes
+      * (a label domain, say) — held on the driver and served as a
+      * local relation: after the first read of a leaf set no job reads
+      * it, and its rows are on hand for driver-side math. Keyed by the
+      * exact live-leaf list, so the argument that makes [[schemaCache]]
+      * correct holds here too: same leaves ⇒ same bytes ⇒ same rows,
+      * and any append, compact, rebuild or GC that changes the leaves
+      * misses and re-reads. Only a frame whose planner size estimate
+      * fits [[Sources.HeldBytes]] is held; a larger one is returned as
+      * the ordinary Spark-side read (no rows). Nothing derived from
+      * probe parameters belongs here — `derive` sees only the component.
+      */
+    def held(spark: SparkSession, comp: String, view: String = "",
+             derive: DataFrame => DataFrame = identity): Sources.Held = {
+      val key = s"${schemaKey(comp)}\n#$view"
+      def local(e: heldCache.Entry): Sources.Held =
+        Sources.local(spark, e.rows, e.schema)
+      heldCache.get(key).map(local).getOrElse {
+        val df = derive(read(spark, comp))
+        val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
+        if (est > Sources.HeldBytes) new Sources.Held(df, None)
+        else {
+          val e = heldCache.Entry(spark.sparkContext, df.schema,
+            df.collect().toSeq, est.toLong)
+          heldCache.put(key, e)
+          local(e)
+        }
+      }
+    }
 
     private def scan(spark: SparkSession, comp: String): Option[DataFrame] = {
       val c = comps.getOrElse(comp, throw new IllegalStateException(

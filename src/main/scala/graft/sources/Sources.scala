@@ -1,13 +1,16 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, MapType, StringType, StructType}
 
 /** Sources & sinks beyond the fixture parquet (SURVEY.md §2.2
-  * "Scans/sources/sinks"): CSV and JSON readers/writers, in-memory
-  * relations, partitioned parquet output, and the O18-style bulk
-  * writeback (the reference's per-row commit protocol generalized to a
-  * partition-overwrite MERGE).
+  * "Scans/sources/sinks"): CSV and JSON readers/writers, driver-held
+  * probe frames ([[hold]]), partitioned parquet output, and the
+  * O18-style bulk writeback (the reference's per-row commit protocol
+  * generalized to a partition-overwrite MERGE).
   */
 object Sources {
 
@@ -126,12 +129,87 @@ object Sources {
   def readText(spark: SparkSession, path: String): DataFrame =
     spark.read.text(path)
 
-  /** In-memory relation from driver-side rows (small dimension / lookup
-    * tables only — this materializes on the driver by construction).
+  /** Largest estimated footprint, in bytes, of a frame held on the
+    * driver: a [[hold]] frame, a single-partition ranked tail
+    * ([[graft.ops.Similarity.rankedTail]]), and one held snapshot
+    * component ([[Snapshot.Manifest.held]]) — also the bound on all
+    * held components together.
     */
-  def inMemory[T : org.apache.spark.sql.Encoder](
-      spark: SparkSession, rows: Seq[T]): DataFrame =
-    spark.createDataset(rows).toDF()
+  private[graft] val HeldBytes: Long = 4L << 20
+
+  /** Planner-side row width used against [[HeldBytes]]: fixed-width
+    * columns at their size, and a generous 1 KB allowance for every
+    * variable-width value (arrays, maps, binary), whose length is not
+    * known before the rows exist. Strings count at 64 bytes.
+    */
+  private def rowWidth(t: DataType): Long = t match {
+    case s: StructType => 8L + s.fields.map(f => rowWidth(f.dataType)).sum
+    case _: ArrayType | _: MapType | _: BinaryType => 1024L
+    case _: StringType => 64L
+    case other => other.defaultSize.toLong
+  }
+
+  /** True iff `rows` rows of `schema` fit [[HeldBytes]]. */
+  private[graft] def fitsHeld(rows: Long, schema: StructType): Boolean =
+    rows >= 0 && rows <= HeldBytes / rowWidth(schema)
+
+  /** A probe-sized frame kept on the driver ([[hold]]): `df` is what
+    * downstream plans read, `rows` its rows when they fit
+    * [[HeldBytes]].
+    */
+  private[graft] final class Held private[graft] (val df: DataFrame,
+                                                  val rows: Option[Seq[Row]]) {
+    /** Distinct values of `cols` over the frame. From held rows the
+      * projection folds over a local relation on the driver, so no
+      * Spark job runs; otherwise one Spark-side distinct collects them.
+      */
+    def keys(cols: Column*): Seq[Row] = rows match {
+      case Some(rs) => df.sparkSession.createDataFrame(rs.asJava, df.schema)
+        .select(cols: _*).collect().toSeq.distinct
+      case None => df.select(cols: _*).distinct().collect().toSeq
+    }
+
+    /** The row count, when the rows are held. */
+    def size: Option[Long] = rows.map(_.size.toLong)
+  }
+
+  /** Rows already on the driver as a held frame over a local relation. */
+  private[graft] def local(spark: SparkSession, rows: Seq[Row],
+                           schema: StructType): Held =
+    new Held(spark.createDataFrame(rows.asJava, schema), Some(rows))
+
+  /** The HELD-FRAME idiom: materialise a probe-sized frame once and
+    * keep it on the driver. Probes build a few frames of a few hundred
+    * rows (query vectors, probed cells, batch band keys) that feed
+    * several consumers and a partition IN-list; checkpointing them,
+    * then counting or collecting their key sets, cost one Spark job per
+    * step, and on the serving path per-job overhead, not data, sets
+    * latency.
+    *
+    * `maxRows` is the caller's own bound on the frame (from its
+    * parameters: `nQueries`, `nQueries × nprobe`); when that many rows
+    * fit [[HeldBytes]], ONE collect runs and the frame becomes a
+    * `LocalRelation` of the collected rows: consumers never re-run
+    * its subtree, key sets ([[Held.keys]]) and counts come from the
+    * rows in Scala, and callers can compute over the rows directly.
+    * (Broadcasting a local relation still costs one small job.)
+    *
+    * Fallback, when the bound is unknown (`None`: a caller-supplied
+    * batch) or too large: the Spark-side `localCheckpoint()`. Its
+    * measured storage footprint then decides whether the rows are read
+    * back (one job, no shuffle) for the key sets; the plans keep the
+    * checkpoint either way. Large frames never touch the driver.
+    */
+  private[graft] def hold(df: DataFrame, maxRows: Option[Long]): Held =
+    maxRows match {
+      case Some(n) if fitsHeld(n, df.schema) =>
+        local(df.sparkSession, df.collect().toSeq, df.schema)
+      case _ =>
+        val ck = df.localCheckpoint()
+        val small = org.apache.spark.sql.graftbridge.PlanBridge
+          .materializedFootprint(ck).exists(_._1 <= HeldBytes)
+        new Held(ck, if (small) Some(ck.collect().toSeq) else None)
+    }
 
   /** Partitioned parquet sink: one directory per partition value —
     * the layout that makes partition PRUNING work on re-read (filters

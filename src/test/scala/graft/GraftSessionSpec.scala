@@ -57,8 +57,7 @@ class GraftSessionSpec extends SparkTestBase {
     try {
       val emb = Tables.embeddings(spark, sf)
       Similarity.ivfpqBuildIndex(emb, base, 16).count()
-      val queries = emb.filter(col("vec_id") < 4)
-        .select(col("vec_id"), col("embedding")).localCheckpoint()
+      val queries = Similarity.heldQueries(emb, 4)
       val probe = Similarity.ivfpqScoreStored(spark, base, queries, 5, 4, 20)
       probe.count() // warm: codegen + broadcast build
       // task-level input-byte accounting, as in graft.WeakScale

@@ -950,8 +950,7 @@ class SourcesSpec extends SparkTestBase {
     val base = tmp("fscount")
     val emb = Tables.embeddings(spark, sf)
     Similarity.ivfpqBuildIndex(emb, base, 8).count()
-    val queries = emb.filter(col("vec_id") < 2)
-      .select(col("vec_id"), col("embedding")).localCheckpoint()
+    val queries = Similarity.heldQueries(emb, 2)
     Similarity.ivfpqScoreStored(spark, base, queries, 3, 2, 10).count() // warm
     val before = IndexFS.controlCalls.get()
     val probe = Similarity.ivfpqScoreStored(spark, base, queries, 3, 2, 10)
@@ -1705,6 +1704,47 @@ class SourcesSpec extends SparkTestBase {
       }
       Thread.sleep(500)
       assert(!landed.get(), "the cancelled sibling's side effect landed")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("Par.run: a failing ivfpqBuildIndex training chain cancels and " +
+      "joins its sibling before the build throws") {
+    import java.util.concurrent.ConcurrentHashMap
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+      SparkListenerJobStart}
+    import graft.ops.{Similarity, Text}
+    val sc = spark.sparkContext
+    val emb = Tables.embeddings(spark, sf)
+    // a vector only the unit→codebook chain reads: outside the k-means
+    // training sample and past the nlist seed ids
+    val poisonId = emb.filter(col("vec_id") >= 16 &&
+        Text.tokenHash(col("vec_id").cast("string")) % 100 >= Similarity.trainPct)
+      .agg(min(col("vec_id"))).head().getLong(0)
+    val poison = udf { (id: Long, e: Seq[Float]) =>
+      if (id == poisonId) throw new IllegalStateException("poisoned vector")
+      e
+    }
+    val poisoned = emb.withColumn("embedding",
+      poison(col("vec_id"), col("embedding")))
+    val started = ConcurrentHashMap.newKeySet[Int]()
+    val ended = new ConcurrentHashMap[Int, Long]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = { started.add(j.jobId); () }
+      override def onJobEnd(j: SparkListenerJobEnd): Unit = { ended.put(j.jobId, j.time); () }
+    }
+    sc.addSparkListener(listener)
+    try {
+      intercept[Exception] {
+        Similarity.ivfpqBuildIndex(poisoned, tmp("parbuild"), 16)
+      }
+      val returnedAt = System.currentTimeMillis()
+      org.apache.spark.graftbridge.ListenerBridge.waitUntilListenerBusEmpty(sc)
+      assert(!started.isEmpty)
+      started.forEach { id =>
+        assert(ended.containsKey(id), s"build job $id never ended")
+        assert(ended.get(id) <= returnedAt,
+          s"build job $id was still running when the build threw")
+      }
     } finally sc.removeSparkListener(listener)
   }
 }

@@ -599,8 +599,7 @@ class StreamingSpec extends SparkTestBase {
       assert(ids.length === n.toInt, s"$b/$part has ${ids.length} rows, want $n")
       assert(ids.distinct.length === ids.length, s"$b/$part has duplicate vec_ids")
     }
-    val queries = emb.filter(col("vec_id") < 4)
-      .select(col("vec_id"), col("embedding")).localCheckpoint()
+    val queries = Similarity.heldQueries(emb, 4)
     def probe(b: String) = Similarity.ivfpqScoreStored(spark, b, queries, 5, 4, 20)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSeq
     assert(probe(idx) === probe(ref))

@@ -1,7 +1,8 @@
 #!/usr/bin/env bash
 # Full pre-round-end validation: oracle compare at every SF, cross-
-# parallelism determinism, plan audit, test suite, bench line.
-# Usage: tools/roundcheck.sh   (from the repo root; ~15 min)
+# parallelism determinism, plan audit, weak-scaling byte gates, the
+# engine benchmark's selftest, test suite, bench line.
+# Usage: tools/roundcheck.sh   (from the repo root; ~25 min)
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -10,6 +11,12 @@ sbt -batch test | grep -E 'Tests:|All tests'
 
 echo "== plan audit =="
 sbt -batch "runMain graft.PlanAudit" | grep -E '^(\[info\] )?(PASS|FAIL|==)' | tail -3
+
+echo "== weak scaling (sf0.1, x8: stored-probe byte gates) =="
+sbt -batch "runMain graft.WeakScale /root/testdata/sf0.1 8" | grep -E '== weak-scaling' | tail -1
+
+echo "== perfbench selftest =="
+python3 perfbench/run.py --selftest | tail -1
 
 for sf in 0.001 0.01 0.1; do
   echo "== oracle compare sf$sf =="
