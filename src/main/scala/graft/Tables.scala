@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.SparkContext
-import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Loaders for the driver-generated fixture tables (TESTDATA.md /
@@ -32,19 +30,11 @@ object Tables {
   private[graft] val relationCache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
 
-  /** Contexts whose stop already evicts their sessions' entries. */
-  private val evicting =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[SparkContext]()
-
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val sc = spark.sparkContext
-    if (!sc.isStopped && evicting.add(sc))
-      sc.addSparkListener(new SparkListener {
-        override def onApplicationEnd(end: SparkListenerApplicationEnd): Unit = {
-          relationCache.keySet.removeIf(_._1.sparkContext eq sc)
-          evicting.remove(sc)
-        }
-      })
+    graft.sources.Sources.onContextEnd(sc, "Tables.relationCache") {
+      relationCache.keySet.removeIf(_._1.sparkContext eq sc); ()
+    }
     val path = s"$sfDir/$name.parquet"
     relationCache.computeIfAbsent((spark, path), _ => spark.read.parquet(path))
   }

@@ -1273,43 +1273,24 @@ object Similarity {
       .select(col("vec_id"), col("embedding")), Some(nQueries.toLong))
 
   /** Each query's `nprobe` best stored centroids by (cosine DESC,
-    * centroid_id ASC) as (query_id, [qe,] cell), held on the driver:
-    * at most queries × nprobe rows, and the probed-cell IN-list comes
-    * from the held rows. With the queries and the centroids both held,
-    * the ranking runs on the driver ([[probeOrder]]) — no job at all;
-    * otherwise it is a Spark window over the broadcast centroids.
+    * centroid_id ASC) as (query_id, [qe,] cell), ranked on the driver
+    * ([[probeOrder]]) from the held query and centroid rows — no job
+    * at all. At most queries × nprobe rows, held, so the probed-cell
+    * IN-list comes from the rows too.
     */
   private def probeCells(queries: Sources.Held, centroids: Sources.Held,
                          nprobe: Int, withQe: Boolean): Sources.Held = {
-    val spark = queries.df.sparkSession
     val schema = StructType(Seq(StructField("query_id", LongType)) ++
       (if (withQe) Seq(queries.df.schema("embedding").copy(name = "qe"))
        else Nil) :+ StructField("cell", LongType))
-    (queries.rows, centroids.rows) match {
-      case (Some(qs), Some(cs)) =>
-        val cents = cs.map(r => (r.getAs[Number]("centroid_id").longValue,
-          doubles(r, "ce")))
-        Sources.local(spark, qs.flatMap { q =>
-          val qid = q.getAs[Number]("vec_id").longValue
-          probeOrder(doubles(q, "embedding"), cents).take(nprobe).map(c =>
-            Row.fromSeq(Seq(qid) ++
-              (if (withQe) Seq(q.get(q.fieldIndex("embedding"))) else Nil) :+ c))
-        }, schema)
-      case _ =>
-        val pw = Window.partitionBy(col("query_id"))
-          .orderBy(col("cs").desc, col("centroid_id"))
-        Sources.hold(queries.df
-          .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-          .join(broadcast(centroids.df))
-          .select(col("query_id"), col("qe"), col("centroid_id"),
-            cosine(col("qe"), col("ce")).as("cs"))
-          .withColumn("rn", row_number().over(pw))
-          .filter(col("rn") <= nprobe)
-          .select(schema.fieldNames.map {
-            case "cell" => col("centroid_id").as("cell")
-            case c => col(c)
-          }: _*), queries.size.map(_ * nprobe))
-    }
+    val cents = centroids.all.map(r =>
+      (r.getAs[Number]("centroid_id").longValue, doubles(r, "ce")))
+    Sources.local(queries.df.sparkSession, queries.all.flatMap { q =>
+      val qid = q.getAs[Number]("vec_id").longValue
+      probeOrder(doubles(q, "embedding"), cents).take(nprobe).map(c =>
+        Row.fromSeq(Seq(qid) ++
+          (if (withQe) Seq(q.get(q.fieldIndex("embedding"))) else Nil) :+ c))
+    }, schema)
   }
 
   /** A vector column of a held row as doubles (float elements widen
@@ -1346,8 +1327,8 @@ object Similarity {
   }
 
   /** Driver-side ADC lookup table of one held query: (m·ksub + code) →
-    * dot(unit query subvector m, codebook centroid), the values the
-    * Spark LUT path computes, by the same arithmetic.
+    * dot(unit query subvector m, codebook centroid), by the arithmetic
+    * of [[unitVectors]], [[subvec]] and [[dot]].
     */
   private def lutRow(qe: IndexedSeq[Double],
                      codebooks: Seq[Row]): Map[Long, Double] = {
@@ -1626,40 +1607,25 @@ object Similarity {
       .filter(col("cell").isin(probedCellVals: _*))
       .select(col("vec_id"), col("codes"), col("cell").cast("long").as("cell")),
       "vec_id")
-    // per-query ADC LUT from the stored codebooks (unit-normalized
+    // per-query ADC LUT from the held codebooks (unit-normalized
     // queries: per-row normalization, identical to normalizing the
-    // corpus then filtering)
-    val probeLuts = (queries.rows, codebooks.rows, probed.rows) match {
-      case (Some(qs), Some(cbs), Some(cells)) =>
-        // held queries and codebooks: the LUTs are built on the driver
-        // and ride the probed cells as one driver-built frame. It is
-        // RDD-backed, not a local relation, so a filter on it survives
-        // optimisation as the selective predicate that keeps dynamic
-        // partition pruning on the codes scan (same one broadcast job
-        // either way). The filter is the constant `cell >= 0` (cell ids
-        // are centroid ids): a per-probe literal list would compile a
-        // new class for every probed-cell set.
-        val luts = qs.map(q => q.getAs[Number]("vec_id").longValue ->
-          lutRow(doubles(q, "embedding"), cbs)).toMap
-        spark.createDataFrame(spark.sparkContext.parallelize(cells.map(r =>
-            Row(r.getLong(0), luts(r.getLong(0)), r.getLong(1))), 1),
-          StructType(Seq(StructField("query_id", LongType),
-            StructField("lut", MapType(LongType, DoubleType, false)),
-            StructField("cell", LongType))))
-          .filter(col("cell") >= 0)
-      case _ =>
-        val qsubs = unitVectors(queries.df)
-          .select(col("vec_id").as("query_id"), posexplode(
-            array((0 until pqM).map(m => subvec(col("embedding"), m)): _*))
-            .as(Seq("m", "qsv")))
-        val lut = qsubs.join(broadcast(codebooks.df), Seq("m"))
-          .select(col("query_id"), (col("m") * pqKsub + col("code")).as("mk"),
-            dot(col("qsv"), col("ce")).as("pd"))
-        lut.groupBy(col("query_id"))
-          .agg(map_from_entries(sort_array(collect_list(
-            struct(col("mk"), col("pd"))))).as("lut"))
-          .join(broadcast(probed.df), Seq("query_id"))
-    }
+    // corpus then filtering), built on the driver; the LUTs ride the
+    // probed cells as one driver-built frame. It is RDD-backed, not a
+    // local relation, so a filter on it survives optimisation as the
+    // selective predicate that keeps dynamic partition pruning on the
+    // codes scan (same one broadcast job either way). The filter is
+    // the constant `cell >= 0` (cell ids are centroid ids): a
+    // per-probe literal list would compile a new class for every
+    // probed-cell set.
+    val cbs = codebooks.all
+    val luts = queries.all.map(q => q.getAs[Number]("vec_id").longValue ->
+      lutRow(doubles(q, "embedding"), cbs)).toMap
+    val probeLuts = spark.createDataFrame(spark.sparkContext.parallelize(
+        probed.all.map(r => Row(r.getLong(0), luts(r.getLong(0)), r.getLong(1))), 1),
+      StructType(Seq(StructField("query_id", LongType),
+        StructField("lut", MapType(LongType, DoubleType, false)),
+        StructField("cell", LongType))))
+      .filter(col("cell") >= 0)
     // ADC over the stored codes: the broadcast probed-cell join keys
     // the partitioned scan on `cell` → dynamic partition pruning
     val adc = codesCells.join(broadcast(probeLuts), Seq("cell"))

@@ -3,6 +3,7 @@ package graft.sources
 import java.util.concurrent.{CompletableFuture, CompletionException, ExecutionException,
   Executors, Future => JFuture, ThreadFactory, TimeUnit, TimeoutException}
 
+import org.apache.spark.graftbridge.ListenerBridge
 import org.apache.spark.sql.SparkSession
 
 /** Driver-side overlap of INDEPENDENT Spark actions (optimization
@@ -76,8 +77,9 @@ private[graft] object Par {
     * order. The first failure to COMPLETE (a failure must not wait
     * behind a slow sibling) cancels every job carrying the tag —
     * repeatedly, while a sibling may still start one — and is rethrown
-    * only once every future has ended: no sibling job is left running
-    * and no side effect after a cancelled job lands.
+    * only once every future has ended and no job carrying the tag
+    * runs: no sibling job is left running and no side effect after a
+    * cancelled job lands.
     */
   def awaitAll[T](spark: SparkSession, tag: String,
                   all: Seq[CompletableFuture[T]]): Seq[T] = {
@@ -93,6 +95,17 @@ private[graft] object Par {
           try { f.get(100, TimeUnit.MILLISECONDS); () }
           catch { case _: TimeoutException | _: ExecutionException => () }
         }
+      }
+      // a cancelled query's own threads (an in-flight broadcast, which
+      // inherits the tag) can still submit a job after its thunk ended:
+      // cancel until no tagged job has run for two checks in a row
+      var quiet = 0
+      while (quiet < 2) {
+        Thread.sleep(20)
+        try ListenerBridge.waitUntilListenerBusEmpty(sc)
+        catch { case _: TimeoutException => () }
+        if (ListenerBridge.runsTagged(sc, tag)) { sc.cancelJobsWithTag(tag); quiet = 0 }
+        else quiet += 1
       }
       throw unwrap(firstFailure.join())
     }

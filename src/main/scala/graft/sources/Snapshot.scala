@@ -75,9 +75,12 @@ import org.apache.spark.sql.types.StructType
   * read ([[Manifest.read]]); a repeated probe of an unchanged layout
   * plans without touching the filesystem. The same argument covers
   * the ROWS of small components ([[Manifest.held]]: IVFADC centroids
-  * and codebooks, BM25 corpus stats, the cells label domain): held on
-  * the driver under the exact live-leaf key, they are read by no job
-  * after the first probe of a leaf set. The bounds: one component (or
+  * and codebooks, BM25 corpus stats, the cells label domain), with one
+  * addition: the rows a read returns also depend on each leaf's
+  * include/exclude partition lists, which a partition drop changes
+  * without adding a leaf. So held rows are keyed by the exact live
+  * OWNERS (leaves plus those lists), and are read by no job after the
+  * first probe of a snapshot's component. The bounds: one component (or
   * view) is held only when its planner estimate fits
   * [[Sources.HeldBytes]] (4 MB), all held rows together stay within
   * that same 4 MB and [[HeldEntries]] entries (least recently used
@@ -110,69 +113,58 @@ object Snapshot {
     * same schema, forever — an evicted entry re-infers to the same
     * schema).
     */
-  private[graft] object schemaCache {
-    private val m = new java.util.LinkedHashMap[String, StructType](64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, StructType]): Boolean =
-        this.size > SchemaCacheEntries
+  private[graft] val schemaCache =
+    new Lru[StructType](SchemaCacheEntries, Long.MaxValue, _ => 0L)
+
+  /** A synchronized map that evicts its least recently used entries
+    * past `maxEntries` entries or past `maxWeight` summed `weight`.
+    */
+  private[graft] final class Lru[V](maxEntries: Int, maxWeight: Long,
+                                    weight: V => Long) {
+    private var total = 0L
+    private val m = new java.util.LinkedHashMap[String, V](64, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[String, V]): Boolean = {
+        val evict = this.size > maxEntries
+        if (evict) total -= weight(e.getValue)
+        evict
+      }
     }
-    def get(key: String): Option[StructType] = m.synchronized(Option(m.get(key)))
-    def put(key: String, schema: StructType): Unit =
-      m.synchronized { m.put(key, schema); () }
+    def get(key: String): Option[V] = m.synchronized(Option(m.get(key)))
+    def put(key: String, v: V): Unit = m.synchronized {
+      Option(m.put(key, v)).foreach(old => total -= weight(old))
+      total += weight(v)
+      removeIf(_ => total > maxWeight)
+    }
+    /** Drop every entry `p` holds for, eldest first (`p` may read the
+      * running weight: `put` drops entries until it fits).
+      */
+    def removeIf(p: V => Boolean): Unit = m.synchronized {
+      val it = m.values.iterator
+      while (it.hasNext) { val v = it.next(); if (p(v)) { total -= weight(v); it.remove() } }
+    }
     def size: Int = m.synchronized(m.size)
+    def values: Seq[V] = m.synchronized(m.values.asScala.toSeq)
   }
 
   /** Most entries [[heldCache]] keeps. */
   private[graft] val HeldEntries = 64
 
-  /** Small immutable components held on the driver
-    * ([[Manifest.held]]): rows keyed like [[schemaCache]] by the exact
-    * sorted live-leaf list, plus the name of the view derived from it.
-    * Least recently used entries are evicted past [[HeldEntries]]
-    * entries or past [[Sources.HeldBytes]] estimated bytes in total,
-    * and a context's entries are dropped when it stops.
+  /** A held component's rows ([[Manifest.held]]), its estimated size,
+    * and the context that read it.
     */
-  private[graft] object heldCache {
-    final case class Entry(sc: org.apache.spark.SparkContext,
-                           schema: StructType, rows: Seq[Row], bytes: Long)
-    private val m = new java.util.LinkedHashMap[String, Entry](16, 0.75f, true)
-    private var bytes = 0L
-    private val watched =
-      java.util.concurrent.ConcurrentHashMap.newKeySet[org.apache.spark.SparkContext]()
+  private[graft] final case class HeldEntry(sc: org.apache.spark.SparkContext,
+                                            schema: StructType, rows: Seq[Row],
+                                            bytes: Long)
 
-    def get(key: String): Option[Entry] = m.synchronized(Option(m.get(key)))
-
-    def put(key: String, e: Entry): Unit = {
-      if (!e.sc.isStopped && watched.add(e.sc))
-        e.sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-          override def onApplicationEnd(
-              end: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-            drop(_.sc eq e.sc)
-            watched.remove(e.sc)
-          }
-        })
-      m.synchronized {
-        Option(m.put(key, e)).foreach(old => bytes -= old.bytes)
-        bytes += e.bytes
-        val it = m.values.iterator
-        while ((m.size > HeldEntries || bytes > Sources.HeldBytes) && it.hasNext) {
-          bytes -= it.next().bytes
-          it.remove()
-        }
-      }
-    }
-
-    private def drop(p: Entry => Boolean): Unit = m.synchronized {
-      val it = m.values.iterator
-      while (it.hasNext) { val e = it.next(); if (p(e)) { bytes -= e.bytes; it.remove() } }
-    }
-
-    def size: Int = m.synchronized(m.size)
-
-    /** The context of every entry, one per entry. */
-    def contexts: Seq[org.apache.spark.SparkContext] =
-      m.synchronized(m.values.asScala.map(_.sc).toSeq)
-  }
+  /** Small immutable components held on the driver
+    * ([[Manifest.held]]), keyed by the component's exact live owners
+    * plus the name of the view derived from it. Least recently used
+    * entries are evicted past [[HeldEntries]] entries or past
+    * [[Sources.HeldBytes]] estimated bytes in total, and a context's
+    * entries are dropped when it stops.
+    */
+  private[graft] val heldCache =
+    new Lru[HeldEntry](HeldEntries, Sources.HeldBytes, _.bytes)
 
   /** The trailing generation-stamp partition column added to every
     * snapshot-managed component. Not a data column: readers drop it.
@@ -273,28 +265,33 @@ object Snapshot {
 
     /** A small component — or the `view` of it that `derive` computes
       * (a label domain, say) — held on the driver and served as a
-      * local relation: after the first read of a leaf set no job reads
-      * it, and its rows are on hand for driver-side math. Keyed by the
-      * exact live-leaf list, so the argument that makes [[schemaCache]]
-      * correct holds here too: same leaves ⇒ same bytes ⇒ same rows,
-      * and any append, compact, rebuild or GC that changes the leaves
-      * misses and re-reads. Only a frame whose planner size estimate
-      * fits [[Sources.HeldBytes]] is held; a larger one is returned as
-      * the ordinary Spark-side read (no rows). Nothing derived from
-      * probe parameters belongs here — `derive` sees only the component.
+      * local relation: after the first read of a snapshot's component
+      * no job reads it, and its rows are on hand for driver-side math.
+      * Keyed by the component's exact live owners — each generation
+      * leaf with its include/exclude partition lists, which together
+      * decide the rows a read returns. Leaves are immutable, so the
+      * same owners always read the same rows, and any append, compact,
+      * rebuild, GC or partition drop that changes them misses and
+      * re-reads. Only a frame whose planner size estimate fits
+      * [[Sources.HeldBytes]] is held; a larger one is returned as the
+      * ordinary Spark-side read (no rows). Nothing derived from probe
+      * parameters belongs here — `derive` sees only the component.
       */
     def held(spark: SparkSession, comp: String, view: String = "",
              derive: DataFrame => DataFrame = identity): Sources.Held = {
-      val key = s"${schemaKey(comp)}\n#$view"
-      def local(e: heldCache.Entry): Sources.Held =
+      val owners = comps.get(comp).toSeq.flatMap(_.owners).map(_.toString).sorted
+      val key = (s"$base/$comp" +: owners :+ s"#$view").mkString("\n")
+      def local(e: HeldEntry): Sources.Held =
         Sources.local(spark, e.rows, e.schema)
       heldCache.get(key).map(local).getOrElse {
         val df = derive(read(spark, comp))
         val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
         if (est > Sources.HeldBytes) new Sources.Held(df, None)
         else {
-          val e = heldCache.Entry(spark.sparkContext, df.schema,
-            df.collect().toSeq, est.toLong)
+          val sc = spark.sparkContext
+          Sources.onContextEnd(sc, "Snapshot.heldCache")(
+            heldCache.removeIf(_.sc eq sc))
+          val e = HeldEntry(sc, df.schema, df.collect().toSeq, est.toLong)
           heldCache.put(key, e)
           local(e)
         }

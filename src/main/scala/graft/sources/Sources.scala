@@ -129,6 +129,29 @@ object Sources {
   def readText(spark: SparkSession, path: String): DataFrame =
     spark.read.text(path)
 
+  /** (context, hook name) pairs whose [[onContextEnd]] listener is
+    * registered.
+    */
+  private val endHooks = java.util.concurrent.ConcurrentHashMap
+    .newKeySet[(org.apache.spark.SparkContext, String)]()
+
+  /** Run `f` when `sc` stops — how a driver-side cache drops a
+    * context's entries so a stopped session does not stay reachable.
+    * One listener per (context, `name`); later calls with the same
+    * pair, or on a stopped context, register nothing.
+    */
+  private[graft] def onContextEnd(sc: org.apache.spark.SparkContext,
+                                  name: String)(f: => Unit): Unit =
+    if (!sc.isStopped && endHooks.add((sc, name)))
+      sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+        override def onApplicationEnd(
+            end: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
+          f
+          endHooks.remove((sc, name))
+          ()
+        }
+      })
+
   /** Largest estimated footprint, in bytes, of a frame held on the
     * driver: a [[hold]] frame, a single-partition ranked tail
     * ([[graft.ops.Similarity.rankedTail]]), and one held snapshot
@@ -171,6 +194,11 @@ object Sources {
 
     /** The row count, when the rows are held. */
     def size: Option[Long] = rows.map(_.size.toLong)
+
+    /** The held rows, or the frame collected now — for driver-side
+      * math over frames that a plan would broadcast anyway.
+      */
+    def all: Seq[Row] = rows.getOrElse(df.collect().toSeq)
   }
 
   /** Rows already on the driver as a held frame over a local relation. */

@@ -73,7 +73,7 @@ class StoredProbeSpec extends SparkTestBase {
     assert(bounded.nonEmpty && bounded === tail(None))
   }
 
-  test("held components: a new leaf set is re-read, a GC'd layout keeps " +
+  test("held components: new owners are re-read, a GC'd layout keeps " +
       "serving its live rows") {
     val base = tmp("held")
     def commit(f: Snapshot.Txn => Unit): Unit = IndexFS.withWriterLease(base) {
@@ -92,6 +92,11 @@ class StoredProbeSpec extends SparkTestBase {
     // an append-shaped commit replaces one partition: new leaf set
     commit(_.writeParts(Seq((3L, 1)).toDF("v", "p"), "c", Seq("p"), Seq(Seq("1"))))
     assert(held() === Seq((1L, 0), (3L, 1)))
+    // a partition drop keeps the leaf set and changes only ownership
+    val leaves = Snapshot.require(base).schemaKey("c")
+    commit(_.dropParts("c", Seq(Seq("0"))))
+    assert(Snapshot.require(base).schemaKey("c") === leaves)
+    assert(held() === Seq((3L, 1)))
     // a rebuild-shaped commit replaces the component
     commit(_.writeFull(Seq((5L, 2)).toDF("v", "p"), "c", "p"))
     assert(held() === Seq((5L, 2)))
@@ -116,8 +121,7 @@ class StoredProbeSpec extends SparkTestBase {
     (iv, bm, dd)
   }
 
-  test("stored probes: warm job counts stay at their pinned figures, and " +
-      "the driver-side probe math equals the Spark-side path") {
+  test("stored probes: warm job counts stay at their pinned figures") {
     val (iv, bm, dd) = layouts
     val probes = Seq[(String, Int, () => Any)](
       ("ivfpqProbeStored", 7, () => Similarity.ivfpqProbeStored(emb, iv, 8, 5).collect()),
@@ -129,20 +133,13 @@ class StoredProbeSpec extends SparkTestBase {
       val (_, n) = jobs(f())
       assert(n <= pinned, s"$name ran $n jobs, pinned at $pinned")
     }
-    // the held queries take the driver-side cell ranking and LUT; an
-    // unheld query frame takes the Spark window and LUT aggregation
-    val queries = Similarity.heldQueries(emb, 8)
-    val spark0 = new Sources.Held(queries.df.localCheckpoint(), None)
-    def rows(h: Sources.Held) =
-      Similarity.ivfpqScoreStored(spark, iv, h, 5, 4, 20).collect().toSeq
-    assert(rows(queries) === rows(spark0))
   }
 
   test("held components: no entry survives the context's stop()") {
     val (iv, _, _) = layouts
     Similarity.ivfpqProbeStored(emb, iv, 4, 5).collect()
     val sc = spark.sparkContext
-    def entries = Snapshot.heldCache.contexts.count(_ eq sc)
+    def entries = Snapshot.heldCache.values.count(_.sc eq sc)
     assert(entries > 0)
     spark.stop()
     assert(entries === 0, "a stopped context's held rows are still cached")
