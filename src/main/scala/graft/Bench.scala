@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs every registered query at
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query and total
   * wall-clock seconds.
@@ -89,26 +87,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // runtime bloom-filter injection OFF: byte-measured pure overhead
-      // on the stored-ANN serving path — join-size products on the ADC
-      // subtree trip the rule into scanning the (already cell-pruned)
-      // vector table an extra time per probe to "reduce" a
-      // heap-bounded shortlist of a few hundred rows (see
-      // graft.WeakScale; deployments embedding the library should set
-      // the same for ANN serving sessions)
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // reliable checkpointing for the iterative ops (Graph.iterCheckpoint
-    // picks this up; a cluster deployment points it at HDFS/S3)
-    spark.sparkContext.setCheckpointDir(
-      s"${System.getProperty("java.io.tmpdir")}/graft_ckpt_bench")
+    val spark = GraftSession.harness("bench").getOrCreate()
     // provenance: the bench measures the AQE-ON plans (the Spark 4
     // default and the 100×-scale deployment default); only PLANS.md's
     // static dumps run AQE-off, for readability
@@ -359,13 +338,22 @@ object Bench {
     * the merged-run count, the noise index, the record's SF tag, and
     * the core count it was measured at (`_cpus`; records from rounds
     * ≤ 12 predate the tag — every committed one was a 32-core run, so
-    * absent reads as 32).
+    * absent reads as 32) and its noise epoch (`_noise_epoch`; absent
+    * reads as 1).
     */
   final case class BenchRecord(queries: Map[String, Double], runs: Int,
                                noise: Option[(Int, Double, Double)],
                                sf: Option[String],
                                armsJson: Option[String],
-                               cpus: Option[Int] = None)
+                               cpus: Option[Int] = None,
+                               epoch: Int = 1)
+
+  /** The board's baseline epoch. Epoch 1: records up to round 12.
+    * Epoch 2: the board runs on [[GraftSession.harness]] (the shipped
+    * extensions and the 256-entry codegen cache). Records of different
+    * epochs are never merged or compared.
+    */
+  val NoiseEpoch = 2
 
   /** Real-JSON parse of a bench_full.json record (jackson, shipped in
     * Spark's classpath). Only top-level numeric fields whose name does
@@ -402,7 +390,9 @@ object Bench {
         val arms = Option(root.get("_arms")).filter(_.isObject)
           .map(_.toString).filter(_ != "{}")
         val cpus = Option(root.get("_cpus")).filter(_.isInt).map(_.asInt())
-        Some(BenchRecord(qs, runs, noise, sf, arms, cpus))
+        val epoch = Option(root.get("_noise_epoch")).filter(_.isInt)
+          .map(_.asInt()).getOrElse(1)
+        Some(BenchRecord(qs, runs, noise, sf, arms, cpus, epoch))
       }
     } catch { case _: Throwable => None }
 
@@ -444,8 +434,7 @@ object Bench {
                 wallS: Option[Double] = None): Unit = {
     val requested = pathOverride.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL", "bench_full.json"))
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.toIntOption)
-      .getOrElse(4)
+    val cpus = GraftSession.harnessCpus
     def readAt(p: String): Option[BenchRecord] =
       (try Some(java.nio.file.Files.readString(
           java.nio.file.Paths.get(p))) catch { case _: Throwable => None })
@@ -458,30 +447,34 @@ object Bench {
     // mismatched run writes BESIDE the record (bench_full_c<cpus>.json),
     // leaving the existing record byte-identical. Records from rounds
     // ≤ 12 predate the `_cpus` tag; absent reads as 32 (all were
-    // 32-core runs).
+    // 32-core runs). A record of another noise epoch is kept the same
+    // way: same-core runs of a new epoch write `_e<epoch>` beside it.
     val path = readAt(requested) match {
-      case Some(p) if p.cpus.getOrElse(32) != cpus =>
+      case Some(p) if p.cpus.getOrElse(32) != cpus || p.epoch != NoiseEpoch =>
+        val tag =
+          if (p.cpus.getOrElse(32) != cpus) s"_c$cpus" else s"_e$NoiseEpoch"
         val div =
           if (requested.endsWith(".json"))
-            requested.stripSuffix(".json") + s"_c$cpus.json"
-          else requested + s"_c$cpus"
+            requested.stripSuffix(".json") + s"$tag.json"
+          else requested + tag
         System.err.println(s"[bench] record at $requested is " +
-          s"${p.cpus.getOrElse(32)}-core; this run is $cpus-core — " +
-          s"writing $div instead")
+          s"${p.cpus.getOrElse(32)}-core epoch ${p.epoch}; this run is " +
+          s"$cpus-core epoch $NoiseEpoch — writing $div instead")
         div
       case _ => requested
     }
-    // prior same-SF same-cpus record, read on EVERY run: a merge run
-    // floors its per-query values with it (TOP-LEVEL values only — real
-    // JSON parse, so nested arm tags and rerun sub-timings can never
-    // floor a query's committed minimum); a fresh run uses it ONLY to
-    // carry the `_arms` block forward when this run captured none (arms
-    // are opt-in visibility — without this a round's first record reset
-    // them to {} until the next arms-enabled run, ADVICE r11)
+    // prior same-SF same-cpus same-epoch record, read on EVERY run: a
+    // merge run floors its per-query values with it (TOP-LEVEL values
+    // only — real JSON parse, so nested arm tags and rerun sub-timings
+    // can never floor a query's committed minimum); a fresh run uses it
+    // ONLY to carry the `_arms` block forward when this run captured
+    // none (arms are opt-in visibility — without this a round's first
+    // record reset them to {} until the next arms-enabled run, ADVICE r11)
     val names = results.map(_._1).toSet
     val prior: Option[BenchRecord] = readAt(path)
         .filter(_.sf.contains(sfDir))
         .filter(_.cpus.getOrElse(32) == cpus)
+        .filter(_.epoch == NoiseEpoch)
     val priorVals: Map[String, Double] =
       if (!merge) Map.empty
       else prior.map(_.queries.filter(kv => names(kv._1))).getOrElse(Map.empty)
@@ -520,6 +513,7 @@ object Bench {
     val tail = s"""  "_total": ${f"${merged.map(_._2).sum}%.3f"},
                   |$ni$ws  "_runs": ${priorRuns + 1},
                   |  "_cpus": $cpus,
+                  |  "_noise_epoch": $NoiseEpoch,
                   |  "_codegen_fallbacks": $fb,
                   |  "_reruns": $rr,
                   |  "_arms": $am,

@@ -51,6 +51,16 @@ import org.apache.spark.sql.SparkSession
   *    heap retained after session stop rose 84.1 → 87.0 MB (+3.4%,
   *    median of ten runs) on that workload; a 2,000-entry cache kept
   *    about 7.6 MB more (+9%).
+  *
+  * Every main in this repository (`Verify`, `Bench`, `PlanAudit`,
+  * `WeakScale`, `PlanDump`, `ProfileQuery`) starts from [[harness]]:
+  * this builder on `SPARK_GRAFT_CPUS` cores ([[harnessCpus]]) with the
+  * UI off, log level ERROR and a per-harness checkpoint dir. Two of
+  * them chain named overrides on top: `PlanAudit.overrides` (AQE off,
+  * untruncated scan metadata) and `WeakScale.overrides` (reliable
+  * checkpoints, untruncated scan metadata). The specs' shared session
+  * applies [[configs]] with the extension installed per session, so a
+  * plain session on the same context can serve as the control.
   */
 object GraftSession {
 
@@ -70,8 +80,24 @@ object GraftSession {
               shufflePartitions: Option[Int] = None): SparkSession.Builder = {
     val parts = shufflePartitions.getOrElse(
       Runtime.getRuntime.availableProcessors())
-    configs(parts).foldLeft(SparkSession.builder().master(master)) {
-      case (b, (k, v)) => b.config(k, v)
-    }
+    SparkSession.builder().master(master).config(configs(parts))
   }
+
+  /** Cores the mains run on: `SPARK_GRAFT_CPUS`, else the box's cores. */
+  private[graft] lazy val harnessCpus: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.toIntOption)
+      .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  /** The mains' session: [[builder]] on [[harnessCpus]] cores, UI off,
+    * log level ERROR, and `<tmpdir>/graft_ckpt_<name>` as the
+    * checkpoint dir, so the iterative operators checkpoint reliably
+    * (`Graph.iterCheckpoint`; a cluster deployment points it at
+    * durable storage).
+    */
+  private[graft] def harness(name: String): SparkSession.Builder =
+    builder(s"local[$harnessCpus]", Some(harnessCpus))
+      .config("spark.ui.enabled", "false")
+      .config("spark.log.level", "ERROR")
+      .config("spark.checkpoint.dir",
+        s"${System.getProperty("java.io.tmpdir")}/graft_ckpt_$name")
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Physical-plan audit: asserts the plan properties that matter at
   * 100 TB for representative registry queries — predicate pushdown into
   * the parquet scan, column pruning (ReadSchema), broadcast joins for
@@ -9,29 +7,19 @@ import org.apache.spark.sql.SparkSession
   * codegen coverage. Run: `sbt "runMain graft.PlanAudit [sfDir]"`.
   */
 object PlanAudit {
+  /** The audit's settings on top of [[GraftSession.harness]]. */
+  private[graft] val overrides: Map[String, String] = Map(
+    // audit the STATIC plan shape: with AQE on, codegen spans and
+    // ReusedExchange only surface in the final adaptive plan
+    "spark.sql.adaptive.enabled" -> "false",
+    // stored layouts carry a leading generation-stamp partition
+    // filter; keep scan metadata untruncated so the bucket/cell
+    // pruning assertions below see the full PartitionFilters list
+    "spark.sql.maxMetadataStringLength" -> "2048")
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      // runtime bloom-filter injection OFF: byte-measured pure overhead
-      // on the stored-ANN serving path — join-size products on the ADC
-      // subtree trip the rule into scanning the (already cell-pruned)
-      // vector table an extra time per probe to "reduce" a
-      // heap-bounded shortlist of a few hundred rows (see
-      // graft.WeakScale; deployments embedding the library should set
-      // the same for ANN serving sessions)
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      // audit the STATIC plan shape: with AQE on, codegen spans and
-      // ReusedExchange only surface in the final adaptive plan
-      .config("spark.sql.adaptive.enabled", "false")
-      // stored layouts carry a leading generation-stamp partition
-      // filter; keep scan metadata untruncated so the bucket/cell
-      // pruning assertions below see the full PartitionFilters list
-      .config("spark.sql.maxMetadataStringLength", "2048")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.harness("planaudit").config(overrides).getOrCreate()
 
     var failures = 0
     def audit(name: String)(checks: (String, String => Boolean)*): Unit = {
@@ -868,7 +856,7 @@ object PlanAudit {
     // hybrid retrieval over the STANDING indexes: neither arm touches
     // the corpus at probe time — no tokenize explode anywhere, lexical
     // scans carry static bucket filters, the semantic cells scan is
-    // DPP-pruned to the probed cells, and each arm plus the fusion
+    // statically pruned to the probed cells, and each arm plus the fusion
     // prunes through its own heap node
     audit("txt_hybrid_stored")(
       ("no corpus tokenize/brute-force scoring (no Generate)",

@@ -27,13 +27,7 @@ object ProfileQuery {
     val sfDir = args(0)
     val name = args(1)
     val nRuns = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder(s"local[$cpus]", Some(cpus.toInt))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.sparkContext.setCheckpointDir(
-      s"${System.getProperty("java.io.tmpdir")}/graft_ckpt_bench")
+    val spark = GraftSession.harness("profile").getOrCreate()
 
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[JobRec]()
     val byId = new java.util.concurrent.ConcurrentHashMap[Int, JobRec]()
@@ -70,12 +64,9 @@ object ProfileQuery {
         HiveCatalogMetrics.METRIC_FILES_DISCOVERED.getCount - discovered0
       val cacheHits =
         HiveCatalogMetrics.METRIC_FILE_CACHE_HITS.getCount - cacheHits0
-      import scala.jdk.CollectionConverters._
       // drain the listener bus so every end event lands
-      val deadline = System.currentTimeMillis() + 3000
-      while (System.currentTimeMillis() < deadline &&
-          jobs.iterator().asScala.exists(_.end == 0L))
-        Thread.sleep(50)
+      org.apache.spark.graftbridge.ListenerBridge
+        .waitUntilListenerBusEmpty(spark.sparkContext)
       import scala.jdk.CollectionConverters._
       val recs = jobs.iterator().asScala.toSeq.sortBy(_.start)
       val sumJob = recs.map(j => math.max(0L, j.end - j.start)).sum / 1e3

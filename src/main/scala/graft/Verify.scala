@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,26 +8,7 @@ object Verify {
     val outDir = args(1)
     // optional trailing args: run only the named queries (fast iteration)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // runtime bloom-filter injection OFF: byte-measured pure overhead
-      // on the stored-ANN serving path — join-size products on the ADC
-      // subtree trip the rule into scanning the (already cell-pruned)
-      // vector table an extra time per probe to "reduce" a
-      // heap-bounded shortlist of a few hundred rows (see
-      // graft.WeakScale; deployments embedding the library should set
-      // the same for ANN serving sessions)
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // reliable checkpointing for the iterative ops (Graph.iterCheckpoint
-    // picks this up; a cluster deployment points it at HDFS/S3)
-    spark.sparkContext.setCheckpointDir(
-      s"${System.getProperty("java.io.tmpdir")}/graft_ckpt_verify")
+    val spark = GraftSession.harness("verify").getOrCreate()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

@@ -3,7 +3,7 @@ package graft
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Weak-scaling evidence for the stored-index design claims: duplicate
@@ -21,45 +21,34 @@ import org.apache.spark.sql.functions._
   */
 object WeakScale {
 
+  /** The harness's settings on top of [[GraftSession.harness]]. */
+  private[graft] val overrides: Map[String, String] = Map(
+    // the probe checks read the pushed cell/bucket IN-lists from plan
+    // text: keep scan metadata untruncated (Spark's default cuts it at
+    // 100 characters)
+    "spark.sql.maxMetadataStringLength" -> "4096",
+    // RELIABLE maintenance checkpoints for THIS harness only: the
+    // byte gates are statements about LAYOUT file I/O, measured via
+    // task inputMetrics — which also counts every block-manager
+    // re-read of a persisted intermediate. Under the round-12
+    // default (DISK_ONLY localCheckpoint on local masters) a
+    // maintenance op's own bounded intermediates re-read per
+    // consumer as UNCOMPRESSED rows and inflated "bytes read" ~8×
+    // against budgets stated in parquet bytes (bm25 compact ×8 read
+    // 127 MB by the counter vs 6.8 MB actually scanned from files),
+    // with ZERO change in layout I/O: the scan sets and plans are
+    // identical in both modes (reliable-checkpoint file reads never
+    // landed in inputMetrics either, which is what the r11-committed
+    // numbers were measured under). Pinning reliable mode here keeps
+    // the instrument's semantics (and cross-round comparability)
+    // while the shipped default stays DISK_ONLY for the bench and
+    // production local runs.
+    "graft.checkpoint.mode" -> "reliable")
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val scaleK = args.lift(1).map(_.toInt).getOrElse(8)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // runtime bloom-filter injection OFF: byte-measured pure overhead
-      // on the stored-ANN serving path — join-size products on the ADC
-      // subtree trip the rule into scanning the (already cell-pruned)
-      // vector table an extra time per probe to "reduce" a
-      // heap-bounded shortlist of a few hundred rows (see
-      // graft.WeakScale; deployments embedding the library should set
-      // the same for ANN serving sessions)
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "false")
-      .config("spark.sql.maxMetadataStringLength", "4096")
-      .config("spark.ui.enabled", "false")
-      // RELIABLE maintenance checkpoints for THIS harness only: the
-      // byte gates are statements about LAYOUT file I/O, measured via
-      // task inputMetrics — which also counts every block-manager
-      // re-read of a persisted intermediate. Under the round-12
-      // default (DISK_ONLY localCheckpoint on local masters) a
-      // maintenance op's own bounded intermediates re-read per
-      // consumer as UNCOMPRESSED rows and inflated "bytes read" ~8×
-      // against budgets stated in parquet bytes (bm25 compact ×8 read
-      // 127 MB by the counter vs 6.8 MB actually scanned from files),
-      // with ZERO change in layout I/O: the scan sets and plans are
-      // identical in both modes (reliable-checkpoint file reads never
-      // landed in inputMetrics either, which is what the r11-committed
-      // numbers were measured under). Pinning reliable mode here keeps
-      // the instrument's semantics (and cross-round comparability)
-      // while the shipped default stays DISK_ONLY for the bench and
-      // production local runs.
-      .config("graft.checkpoint.mode", "reliable")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.sparkContext.setCheckpointDir(
-      s"${System.getProperty("java.io.tmpdir")}/graft_ckpt_weakscale")
+    val spark = GraftSession.harness("weakscale").config(overrides).getOrCreate()
 
     // task-level input-bytes accounting: the probe-I/O claims are
     // about BYTES SCANNED, which executor task metrics report exactly

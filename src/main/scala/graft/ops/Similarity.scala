@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, MapType, StructField, StructType}
+import scala.jdk.CollectionConverters._
 
 import graft.sources.{IndexFS, Snapshot, Sources, StoredLayout}
 import graft.sources.Sources.MaintCheckpointSyntax
@@ -1244,10 +1245,9 @@ object Similarity {
     * centroids, M×ksub codebooks, and the cell-partitioned code/vector
     * layouts; the corpus table is touched only for the nQueries query
     * vectors (fresh queries against a standing index — the production
-    * read path). The ADC join keys the cell-partitioned codes scan on
-    * the broadcast probed-cell frame, so dynamic partition pruning
-    * trims the scan to the probed cell DIRECTORIES at runtime
-    * (spec-asserted) — at 100 TB a probe reads nprobe/nlist of the
+    * read path). The codes and vector scans carry the probed cells as
+    * a static partition IN-list, so a probe reads only the probed cell
+    * DIRECTORIES (spec-asserted) — at 100 TB a probe reads nprobe/nlist of the
     * index bytes, which is the measurable difference between this and
     * the build-inline queries in the bench. Rebuilds lazily iff the
     * marker is absent/stale (registry queries stay independently
@@ -1347,7 +1347,7 @@ object Similarity {
     * files (written by the build), so the query-time predicate is an
     * ordinary PUSHED-DOWN Parquet filter on the probed cell
     * partitions (plan-audited: `PushedFilters` carries the label
-    * predicate, dynamic partition pruning trims to nprobe
+    * predicate, a static probed-cell IN-list trims to nprobe
     * directories) — never a join against the corpus, and ONE
     * full-corpus index serves every predicate.
     *
@@ -1610,24 +1610,17 @@ object Similarity {
     // per-query ADC LUT from the held codebooks (unit-normalized
     // queries: per-row normalization, identical to normalizing the
     // corpus then filtering), built on the driver; the LUTs ride the
-    // probed cells as one driver-built frame. It is RDD-backed, not a
-    // local relation, so a filter on it survives optimisation as the
-    // selective predicate that keeps dynamic partition pruning on the
-    // codes scan (same one broadcast job either way). The filter is
-    // the constant `cell >= 0` (cell ids are centroid ids): a
-    // per-probe literal list would compile a new class for every
-    // probed-cell set.
+    // probed cells as one local relation
     val cbs = codebooks.all
     val luts = queries.all.map(q => q.getAs[Number]("vec_id").longValue ->
       lutRow(doubles(q, "embedding"), cbs)).toMap
-    val probeLuts = spark.createDataFrame(spark.sparkContext.parallelize(
-        probed.all.map(r => Row(r.getLong(0), luts(r.getLong(0)), r.getLong(1))), 1),
+    val probeLuts = spark.createDataFrame(
+      probed.all.map(r => Row(r.getLong(0), luts(r.getLong(0)), r.getLong(1))).asJava,
       StructType(Seq(StructField("query_id", LongType),
         StructField("lut", MapType(LongType, DoubleType, false)),
         StructField("cell", LongType))))
-      .filter(col("cell") >= 0)
-    // ADC over the stored codes: the broadcast probed-cell join keys
-    // the partitioned scan on `cell` → dynamic partition pruning
+    // ADC over the stored codes (already pruned to the probed cells by
+    // the static IN-list above), joined to the broadcast LUT frame
     val adc = codesCells.join(broadcast(probeLuts), Seq("cell"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),

@@ -38,17 +38,10 @@ object Progress {
     spark.sparkContext.addSparkListener(listener)
     try {
       val result = body
-      // listener events post asynchronously; wait until counts stabilize
-      var prev = (-1L, -1L, -1L)
-      var cur = listener.snapshot
-      var waited = 0
-      while (cur != prev && waited < 2000) {
-        prev = cur
-        Thread.sleep(100)
-        waited += 100
-        cur = listener.snapshot
-      }
-      (result, cur)
+      // listener events post asynchronously: drain the bus first
+      org.apache.spark.graftbridge.ListenerBridge
+        .waitUntilListenerBusEmpty(spark.sparkContext)
+      (result, listener.snapshot)
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 }

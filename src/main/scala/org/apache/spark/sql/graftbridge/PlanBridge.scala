@@ -18,14 +18,14 @@ object PlanBridge {
     * a unique tiebreak folded into the last one — as columns first, so
     * every expression the node holds is an already-resolved
     * AttributeReference of the analyzed child). Registers the planner
-    * strategy idempotently on first use; the strategy is also
-    * injectable up front via `graft.functions.GraftExtensions`.
+    * strategy on first use unless the session's planner already has it
+    * (injected up front by `graft.functions.GraftExtensions`).
     */
   def topKPerKey(df: DataFrame, keyCols: Seq[String], orderCols: Seq[String],
                  k: Int, registerStrategy: Boolean = true): DataFrame = {
     val spark = df.sparkSession.asInstanceOf[ClassicSparkSession]
     if (registerStrategy &&
-        !spark.experimental.extraStrategies.contains(TopKPerKeyStrategy)) {
+        !spark.sessionState.planner.strategies.contains(TopKPerKeyStrategy)) {
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ TopKPerKeyStrategy
     }

@@ -110,8 +110,7 @@ class BenchRecordSpec extends AnyFunSuite {
   test("a run at a different core count writes BESIDE the committed " +
       "record, never over it (round-12 verdict: the driver's local[8] " +
       "scaling run clobbered the 32-core reference)") {
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.toIntOption)
-      .getOrElse(4)
+    val cpus = GraftSession.harnessCpus
     val path = java.nio.file.Files
       .createTempFile("graft-benchcpus", ".json").toString
     // a committed record measured at a DIFFERENT core count
@@ -139,15 +138,39 @@ class BenchRecordSpec extends AnyFunSuite {
     Bench.writeFull(Seq("qa" -> 0.4), "/x/sf0.1", pathOverride = Some(path))
     val after = Bench.parseRecord(java.nio.file.Files.readString(
       java.nio.file.Paths.get(path))).get
-    if (cpus == 32) // same count: plain overwrite, now tagged
-      assert(after.queries === Map("qa" -> 0.4) && after.cpus === Some(32))
-    else // mismatch: untouched
-      assert(after.queries === Map("qa" -> 1.0) && after.cpus === None)
+    // mismatch (or, at 32 cores, an untagged record's epoch 1): untouched
+    assert(after.queries === Map("qa" -> 1.0) && after.cpus === None)
+  }
+
+  test("a run never merges into a record of another noise epoch: it " +
+      "writes beside it, stamped with its own epoch") {
+    val cpus = GraftSession.harnessCpus
+    val path = java.nio.file.Files
+      .createTempFile("graft-benchepoch", ".json").toString
+    // a same-core, same-SF record without the stamp (epoch 1)
+    val committed = s"""{
+      |  "qa": 1.000,
+      |  "_runs": 4,
+      |  "_cpus": $cpus,
+      |  "_sf": "/x/sf0.1"
+      |}""".stripMargin
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(path), committed)
+    assert(Bench.parseRecord(committed).get.epoch === 1)
+    Bench.writeFull(Seq("qa" -> 2.0), "/x/sf0.1", pathOverride = Some(path),
+      merge = true)
+    assert(java.nio.file.Files.readString(
+      java.nio.file.Paths.get(path)) === committed)
+    val side = path.stripSuffix(".json") + s"_e${Bench.NoiseEpoch}.json"
+    val txt = java.nio.file.Files.readString(java.nio.file.Paths.get(side))
+    assert(txt.contains("\"_noise_epoch\": 2"), txt)
+    val rec = Bench.parseRecord(txt).get
+    // not floored by the epoch-1 record's 1.000, and a first run
+    assert(rec.queries === Map("qa" -> 2.0) && rec.runs === 1 &&
+      rec.epoch === 2 && rec.cpus === Some(cpus), rec)
   }
 
   test("writeFull stamps _cpus and a same-cpus merge still floors") {
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.toIntOption)
-      .getOrElse(4)
+    val cpus = GraftSession.harnessCpus
     val path = java.nio.file.Files
       .createTempFile("graft-benchcpus2", ".json").toString
     Bench.writeFull(Seq("qa" -> 2.0), "/x/sf0.1", pathOverride = Some(path))

@@ -216,17 +216,20 @@ class FunctionsSpec extends SparkTestBase {
   }
 
   test("GraftExtensions wires a fresh session: SQL function + planner strategy") {
-    val s2 = extensionSession()
-    assert(s2 ne spark, "expected a brand-new session")
+    // the shared session is built with the extension; the plain one,
+    // on the same context, is not
+    val plain = plainSession()
+    assert(plain ne spark, "expected a brand-new session")
+    val dot = "SELECT vector_dot(array(1.0F,2.0F), array(3.0F,4.0F)) AS d"
+    intercept[org.apache.spark.sql.AnalysisException](plain.sql(dot))
     // injected SQL function resolves
-    val d = s2.sql("SELECT vector_dot(array(1.0F,2.0F), array(3.0F,4.0F)) AS d")
-      .head().getDouble(0)
+    val d = spark.sql(dot).head().getDouble(0)
     assert(d === 11.0)
     // injected planner strategy plans the custom node WITHOUT the
     // PlanBridge fallback registration
-    assert(!s2.experimental.extraStrategies.contains(
+    assert(!spark.experimental.extraStrategies.contains(
       graft.plans.TopKPerKeyStrategy))
-    import s2.implicits._
+    import spark.implicits._
     val df = Seq((1L, 5L), (1L, 9L), (1L, 7L), (2L, 3L))
       .toDF("key", "ord")
     val got = org.apache.spark.sql.graftbridge.PlanBridge

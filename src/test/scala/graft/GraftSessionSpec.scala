@@ -20,10 +20,18 @@ class GraftSessionSpec extends SparkTestBase {
     assert(c("spark.sql.extensions") === "graft.functions.GraftExtensions")
     assert(c("spark.sql.session.timeZone") === "UTC")
     assert(c("spark.sql.shuffle.partitions") === "8")
-    // and the builder really applies them: a throwaway builder's
-    // options are not inspectable, so assert via the map the builder
-    // itself folds over — plus the shared test session (built with the
-    // same settings) serves below with bounded bytes
+    // and the builder really applies them: the shared test session is
+    // built from the same map (asserted below) and serves with bounded
+    // bytes; the mains' harness sessions are checked in the last test
+  }
+
+  test("the shared spec session is the shipped one: ParamLiterals and " +
+      "the 256-entry codegen cache") {
+    assert(spark.sessionState.columnarRules.contains(graft.plans.ParamLiterals.Hook))
+    (GraftSession.configs(4) - "spark.sql.extensions").foreach { case (k, v) =>
+      assert(spark.conf.get(k) === v, k)
+    }
+    assert(spark.sessionState.conf.codegenCacheMaxEntries === 256)
   }
 
   test("GraftSession.configs caps the codegen cache at 256 classes and " +
@@ -42,11 +50,8 @@ class GraftSessionSpec extends SparkTestBase {
   test("a session configured per GraftSession serves the stored ANN " +
       "probe within the WeakScale task-bytes bound") {
     import graft.ops.Similarity
-    // apply the runtime-settable serving config exactly as
-    // GraftSession.builder would
     val servingKey = "spark.sql.optimizer.runtime.bloomFilter.enabled"
-    val saved = spark.conf.getOption(servingKey)
-    spark.conf.set(servingKey, GraftSession.configs(4)(servingKey))
+    assert(spark.conf.get(servingKey) === GraftSession.configs(4)(servingKey))
     // plan-text introspection below needs the full INSET list, not the
     // 100-char default truncation (same setting as graft.WeakScale)
     val metaKey = "spark.sql.maxMetadataStringLength"
@@ -109,15 +114,34 @@ class GraftSessionSpec extends SparkTestBase {
         s"probe read $measured B > bound ${probedBytes * 2 + 200000L} B " +
           s"(probed partitions: $probedBytes B) — serving config not effective")
     } finally {
-      saved match {
-        case Some(v) => spark.conf.set(servingKey, v)
-        case None    => spark.conf.unset(servingKey)
-      }
       savedMeta match {
         case Some(v) => spark.conf.set(metaKey, v)
         case None    => spark.conf.unset(metaKey)
       }
       graft.sources.IndexFS.deleteRecursive(base)
+    }
+  }
+
+  test("every main's session is GraftSession.configs plus exactly its " +
+      "named overrides") {
+    // a harness session needs its own context: this test stops the
+    // shared one; later suites' sessions start a fresh one
+    spark.stop()
+    val n = GraftSession.harnessCpus
+    def confOf(overrides: Map[String, String]): Map[String, String] = {
+      val s = GraftSession.harness("spec").config(overrides).getOrCreate()
+      try {
+        assert(s.sparkContext.master === s"local[$n]")
+        assert(s.sparkContext.getCheckpointDir.exists(_.contains("graft_ckpt_spec")))
+        assert(s.sessionState.columnarRules.contains(graft.plans.ParamLiterals.Hook))
+        s.conf.getAll.filter { case (k, _) =>
+          k.startsWith("spark.sql.") || k.startsWith("graft.") }
+      } finally s.stop()
+    }
+    val shipped = confOf(Map.empty)
+    assert(GraftSession.configs(n).toSet.subsetOf(shipped.toSet), shipped)
+    Seq(PlanAudit.overrides, WeakScale.overrides).foreach { o =>
+      assert(confOf(o) === shipped ++ o)
     }
   }
 }

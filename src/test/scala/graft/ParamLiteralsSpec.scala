@@ -16,7 +16,7 @@ import graft.plans.ParamLiteral
   */
 class ParamLiteralsSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
-  private lazy val ext = extensionSession()
+  private lazy val plain = plainSession()
 
   private lazy val path: String = {
     import spark.implicits._
@@ -53,25 +53,25 @@ class ParamLiteralsSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
   private def withAqe[T](on: Boolean)(f: => T): T = {
     val key = "spark.sql.adaptive.enabled"
-    val saved = Seq(spark, ext).map(_.conf.get(key))
-    Seq(spark, ext).foreach(_.conf.set(key, on.toString))
+    val saved = Seq(spark, plain).map(_.conf.get(key))
+    Seq(spark, plain).foreach(_.conf.set(key, on.toString))
     try f
-    finally Seq(spark, ext).zip(saved).foreach { case (s, v) => s.conf.set(key, v) }
+    finally Seq(spark, plain).zip(saved).foreach { case (s, v) => s.conf.set(key, v) }
   }
 
   test("a re-run with other numeric literals compiles nothing") {
     Seq(true, false).foreach { aqe =>
       withAqe(aqe) {
-        job(ext, 3, 5).collect()
+        job(spark, 3, 5).collect()
         val before = compiles()
-        val got = job(ext, 11, 7).collect()
+        val got = job(spark, 11, 7).collect()
         assert(compiles() - before === 0, s"aqe=$aqe")
-        assert(got.toSeq === job(spark, 11, 7).collect().toSeq)
+        assert(got.toSeq === job(plain, 11, 7).collect().toSeq)
         // control: the plain session inlines the constants and compiles
         // (constants unseen so far, so no class is cached for them)
-        val plain = compiles()
-        job(spark, if (aqe) 17 else 23, if (aqe) 9 else 13).collect()
-        assert(compiles() - plain > 0, s"aqe=$aqe")
+        val mark = compiles()
+        job(plain, if (aqe) 17 else 23, if (aqe) 9 else 13).collect()
+        assert(compiles() - mark > 0, s"aqe=$aqe")
       }
     }
   }
@@ -79,11 +79,11 @@ class ParamLiteralsSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   test("scans keep their literals: pushdown, explain text, plan placement") {
     Seq(true, false).foreach { aqe =>
       withAqe(aqe) {
-        val withExt = job(ext, 20, 3)
-        val plain = job(spark, 20, 3)
-        withExt.collect(); plain.collect()
+        val withExt = job(spark, 20, 3)
+        val control = job(plain, 20, 3)
+        withExt.collect(); control.collect()
         val text = normalized(withExt)
-        assert(text === normalized(plain), s"aqe=$aqe")
+        assert(text === normalized(control), s"aqe=$aqe")
         assert(text.contains("PushedFilters: [IsNotNull(q), " +
           "GreaterThanOrEqual(q,20), LessThanOrEqual(q,29)]"), text)
         val nodes = plans(withExt)
@@ -121,7 +121,7 @@ class ParamLiteralsSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
           "sum(lk % 4) AS g FROM param_lit_t WHERE k NOT IN (0, 1, 2) GROUP BY s") })
     for (aqe <- Seq(true, false); (q, i) <- queries.zipWithIndex) withAqe(aqe) {
       def rows(s: SparkSession): Seq[String] = q(s).collect().map(_.toString).sorted.toSeq
-      assert(rows(ext) === rows(spark), s"query $i aqe=$aqe")
+      assert(rows(spark) === rows(plain), s"query $i aqe=$aqe")
     }
   }
 }

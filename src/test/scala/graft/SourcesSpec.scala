@@ -101,7 +101,7 @@ class SourcesSpec extends SparkTestBase {
       s"scan read ${scan.metrics("numFiles").value} files, dirs hold $probedFiles")
   }
 
-  test("stored IVFADC index: probe matches the inline plan, DPP prunes the codes scan") {
+  test("stored IVFADC index: probe matches the inline plan, IN-list prunes the codes scan") {
     import graft.ops.Similarity
     val emb = Tables.embeddings(spark, sf)
     val base = tmp("ivfpqidx")
@@ -117,11 +117,29 @@ class SourcesSpec extends SparkTestBase {
     val inline = Similarity.ivfpqTopK(emb, 4, 5).collect().map(key).toSeq
     val probe = Similarity.ivfpqProbeStored(emb, base, 4, 5)
     assert(probe.collect().map(key).toSeq === inline)
-    // the ADC join keys the cell-partitioned codes scan on the
-    // broadcast probed-cell frame → dynamic partition pruning trims
-    // the scan to the probed cell directories at runtime
-    val plan = probe.queryExecution.executedPlan.toString
-    assert(plan.toLowerCase.contains("dynamicpruning"), plan.take(1500))
+    // the executed codes scan carries the probed cells as a static
+    // partition IN-list: a metadata-only prune to those directories
+    import org.apache.spark.sql.catalyst.expressions.{In, InSet, Literal}
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val codesScan = new AdaptiveSparkPlanHelper {}
+      .collect(probe.queryExecution.executedPlan) { case f: FileSourceScanExec => f }
+      .find(_.relation.location.rootPaths.exists(_.toString.contains("/codes/")))
+      .getOrElse(fail(s"no codes scan in ${probe.queryExecution.executedPlan}"))
+    assert(codesScan.metadata("PartitionFilters").contains("cell"),
+      s"no partition filter in ${codesScan.metadata}")
+    def onCell(e: org.apache.spark.sql.catalyst.expressions.Expression) =
+      e.references.exists(_.name == "cell")
+    val inCells = codesScan.partitionFilters.flatMap(_.collect {
+      case In(c, list) if onCell(c) =>
+        list.collect { case Literal(v, _) => v.toString.toLong }
+      case InSet(c, set) if onCell(c) => set.toSeq.map(_.toString.toLong)
+    }).flatten.toSet
+    val allCells = new java.io.File(base, "codes").listFiles.filter(_.isDirectory)
+      .flatMap(_.listFiles).map(_.getName).filter(_.startsWith("cell="))
+      .map(_.stripPrefix("cell=").toLong).toSet
+    assert(inCells.nonEmpty && inCells.subsetOf(allCells),
+      s"probed cells $inCells not among the stored cells $allCells")
     // stale marker forces a rebuild (index tracks its corpus)
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(base, "MARKER"), "stale")
@@ -462,7 +480,8 @@ class SourcesSpec extends SparkTestBase {
       Text.lmScoreStored(docs, b3)
       Dedup.incrementalNearDupStored(batch, hist, b4)
       Text.hybridStored(docs, b2, b5)
-      Thread.sleep(1000) // listener bus is async
+      org.apache.spark.graftbridge.ListenerBridge
+        .waitUntilListenerBusEmpty(spark.sparkContext)
       import scala.jdk.CollectionConverters._
       val counts = stages.iterator().asScala
         .filter(n => n.startsWith("count at Similarity.scala") ||

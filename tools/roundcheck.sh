@@ -13,7 +13,7 @@ echo "== plan audit =="
 sbt -batch "runMain graft.PlanAudit" | grep -E '^(\[info\] )?(PASS|FAIL|==)' | tail -3
 
 echo "== weak scaling (sf0.1, x8: stored-probe byte gates) =="
-sbt -batch "runMain graft.WeakScale /root/testdata/sf0.1 8" | grep -E '== weak-scaling' | tail -1
+SPARK_GRAFT_CPUS="$(nproc)" sbt -batch "runMain graft.WeakScale /root/testdata/sf0.1 8" | grep -E '== weak-scaling' | tail -1
 
 echo "== perfbench selftest =="
 python3 perfbench/run.py --selftest | tail -1
@@ -32,6 +32,8 @@ SPARK_GRAFT_CPUS=4  sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/
 SPARK_GRAFT_CPUS=32 sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/roundcheck_d32" >/dev/null
 python3 tools/determinism_check.py /tmp/roundcheck_d4 /tmp/roundcheck_d32 | tail -1
 
+# a box with other than 32 cores writes bench_full_c<cores>.json beside
+# the 32-core record
 echo "== bench sf0.1 =="
-SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
+SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS="$(nproc)" \
   sbt -batch "runMain graft.Bench" | grep '"metric"'
