@@ -8,6 +8,9 @@ package graft
   * steady-state engine time (JIT + codegen-compile noise would
   * otherwise dominate the many sub-second queries and make per-query
   * numbers meaningless across rounds).
+  * Two runs started at once on one box share the stored layouts and
+  * fail each other's writer lease: give each its own
+  * `-Djava.io.tmpdir` (see [[Verify]]).
   */
 object Bench {
 
@@ -397,16 +400,47 @@ object Bench {
     } catch { case _: Throwable => None }
 
   /** Prior-round per-query seconds for the outlier defense: the
-    * committed bench_full.json (or SPARK_GRAFT_BENCH_REF). Missing or
-    * unparseable file → empty map → no re-runs, plain pass minimums.
+    * [[recordPath]] record of bench_full.json (or SPARK_GRAFT_BENCH_REF).
+    * Missing, unparseable, or of another core count or noise epoch →
+    * empty map → no re-runs, plain pass minimums.
     */
-  def readRef(): Map[String, Double] = {
-    val path = sys.env.getOrElse("SPARK_GRAFT_BENCH_REF",
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL", "bench_full.json"))
-    try parseRecord(java.nio.file.Files.readString(
-        java.nio.file.Paths.get(path)))
+  def readRef(requested: String = sys.env.getOrElse("SPARK_GRAFT_BENCH_REF",
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL", "bench_full.json")))
+      : Map[String, Double] =
+    readAt(recordPath(requested))
+      .filter(r => r.cpus.getOrElse(32) == GraftSession.harnessCpus &&
+        r.epoch == NoiseEpoch)
       .map(_.queries).getOrElse(Map.empty)
-    catch { case _: Throwable => Map.empty }
+
+  private def readAt(p: String): Option[BenchRecord] =
+    (try Some(java.nio.file.Files.readString(
+        java.nio.file.Paths.get(p))) catch { case _: Throwable => None })
+      .flatMap(parseRecord)
+
+  /** The record this run reads its reference from and writes to.
+    *
+    * CORE-COUNT GUARD: the committed record is the per-query reference
+    * the outlier defense and the round-over-round diff key on, and
+    * every committed one is a 32-core measurement — a run at another
+    * core count (a scaling run at local[8]) must not
+    * clobber it (round 12's verdict: exactly that happened). A
+    * mismatched run uses the record BESIDE it (bench_full_c<cpus>.json),
+    * leaving the existing record byte-identical. Records from rounds
+    * ≤ 12 predate the `_cpus` tag; absent reads as 32 (all were
+    * 32-core runs). A record of another noise epoch is kept the same
+    * way: same-core runs of a new epoch use `_e<epoch>` beside it.
+    */
+  private[graft] def recordPath(requested: String): String = {
+    val cpus = GraftSession.harnessCpus
+    readAt(requested) match {
+      case Some(p) if p.cpus.getOrElse(32) != cpus || p.epoch != NoiseEpoch =>
+        val tag =
+          if (p.cpus.getOrElse(32) != cpus) s"_c$cpus" else s"_e$NoiseEpoch"
+        if (requested.endsWith(".json"))
+          requested.stripSuffix(".json") + s"$tag.json"
+        else requested + tag
+      case _ => requested
+    }
   }
 
   /** All per-query minimums → bench_full.json in the repo root (or
@@ -435,34 +469,11 @@ object Bench {
     val requested = pathOverride.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL", "bench_full.json"))
     val cpus = GraftSession.harnessCpus
-    def readAt(p: String): Option[BenchRecord] =
-      (try Some(java.nio.file.Files.readString(
-          java.nio.file.Paths.get(p))) catch { case _: Throwable => None })
-        .flatMap(parseRecord)
-    // CORE-COUNT GUARD: the committed record is the per-query reference
-    // the outlier defense and the round-over-round diff key on, and
-    // every committed one is a 32-core measurement — a run at another
-    // core count (the driver's own scaling run at local[8]) must not
-    // clobber it (round 12's verdict: exactly that happened). A
-    // mismatched run writes BESIDE the record (bench_full_c<cpus>.json),
-    // leaving the existing record byte-identical. Records from rounds
-    // ≤ 12 predate the `_cpus` tag; absent reads as 32 (all were
-    // 32-core runs). A record of another noise epoch is kept the same
-    // way: same-core runs of a new epoch write `_e<epoch>` beside it.
-    val path = readAt(requested) match {
-      case Some(p) if p.cpus.getOrElse(32) != cpus || p.epoch != NoiseEpoch =>
-        val tag =
-          if (p.cpus.getOrElse(32) != cpus) s"_c$cpus" else s"_e$NoiseEpoch"
-        val div =
-          if (requested.endsWith(".json"))
-            requested.stripSuffix(".json") + s"$tag.json"
-          else requested + tag
-        System.err.println(s"[bench] record at $requested is " +
-          s"${p.cpus.getOrElse(32)}-core epoch ${p.epoch}; this run is " +
-          s"$cpus-core epoch $NoiseEpoch — writing $div instead")
-        div
-      case _ => requested
-    }
+    val path = recordPath(requested)
+    if (path != requested)
+      System.err.println(s"[bench] record at $requested is of another " +
+        s"core count or noise epoch; this run is $cpus-core epoch " +
+        s"$NoiseEpoch — writing $path instead")
     // prior same-SF same-cpus same-epoch record, read on EVERY run: a
     // merge run floors its per-query values with it (TOP-LEVEL values
     // only — real JSON parse, so nested arm tags and rerun sub-timings

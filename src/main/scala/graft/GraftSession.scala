@@ -18,9 +18,9 @@ import org.apache.spark.sql.SparkSession
   * ```scala
   * val spark = GraftSession.builder(master = "local[8]").getOrCreate()
   * // cluster deployments: point the checkpoint dir at durable storage
-  * // so the iterative operators (connected components, label
-  * // propagation, k-means) checkpoint RELIABLY — an executor loss then
-  * // replays one round, not the whole loop (Graph.iterCheckpoint)
+  * // so the graph and label-propagation loops checkpoint RELIABLY — an
+  * // executor loss replays one round, not the whole loop. Trained
+  * // centroids and codebooks are held on the driver: no round to lose.
   * spark.sparkContext.setCheckpointDir("hdfs:///checkpoints/graft")
   * Tables.registerViews(spark, "/data/sf0.01")
   * spark.sql("SELECT vector_dot(embedding, embedding) FROM embeddings")
@@ -90,9 +90,9 @@ object GraftSession {
 
   /** The mains' session: [[builder]] on [[harnessCpus]] cores, UI off,
     * log level ERROR, and `<tmpdir>/graft_ckpt_<name>` as the
-    * checkpoint dir, so the iterative operators checkpoint reliably
-    * (`Graph.iterCheckpoint`; a cluster deployment points it at
-    * durable storage).
+    * checkpoint dir of the graph and label-propagation loops' reliable
+    * checkpoints ([[graft.sources.Sources.truncatingCheckpoint]]; a
+    * cluster deployment points it at durable storage).
     */
   private[graft] def harness(name: String): SparkSession.Builder =
     builder(s"local[$harnessCpus]", Some(harnessCpus))

@@ -449,7 +449,7 @@ object PlanAudit {
     // phash clusters: the CC capstone over the banded pairs. The edge
     // build's plan contract is audited via mm_phash_dups above; the
     // returned labeling is MATERIALIZED behind a checkpoint boundary
-    // (connectedComponents localCheckpoints its output so the cached
+    // (connectedComponents checkpoints its output so the cached
     // per-round edge sets can be released) — assert that boundary, and
     // that nothing downstream of it re-enumerates pairs
     auditDf("mm_phash_family/clusters",
@@ -586,9 +586,9 @@ object PlanAudit {
         !p.contains("CartesianProduct") &&
           !p.contains("BroadcastNestedLoopJoin")))
 
-    // BPE training + encode fold: every round's vocabulary and winner
-    // materialize behind checkpoints, so the merges arm is the 1-row
-    // winner scans unioned; the encode arm adds exactly ONE corpus
+    // BPE training + encode fold: every round's vocabulary materializes
+    // behind a checkpoint and its winner is held, so the merges arm is
+    // the 1-row winner rows unioned; the encode arm adds exactly ONE corpus
     // scan (tokenize → vocabulary-lookup join → per-doc aggregate) —
     // the apply phase never replays the merge replaces over the corpus
     audit("txt_bpe_train")(
@@ -638,7 +638,7 @@ object PlanAudit {
         p.contains("TopKPerKeyPartial") && p.contains("TopKPerKeyFinal")),
       ("native vector_dot in scoring", _.contains("vector_dot")),
       // params trained ONCE: the min/max training (posexplode + agg) is
-      // checkpointed out of the serving plan — encode and dequantize
+      // held out of the serving plan — encode and dequantize
       // both read the one-row artifact, so no Generate remains anywhere
       ("single checkpointed training (no posexplode subtree in plan)",
         p => !p.contains("Generate")))
@@ -899,7 +899,7 @@ object PlanAudit {
       ("no broadcast nested loop", p =>
         !p.contains("BroadcastNestedLoopJoin")))
 
-    // connected components: the star rounds are localCheckpoint'ed
+    // connected components: the star rounds are checkpointed
     // (groupBy-min + equi-join per round, composed by the loop), and
     // the returned labeling is materialized behind a checkpoint
     // boundary so the loop's cached edge sets can be released — the

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops._
+import graft.sources.Sources.MaintCheckpointSyntax
 
 /** Driver contract — registry of every implemented operator
   * (SURVEY.md §2) as `(SparkSession, sfDir) => DataFrame`, each paired
@@ -138,7 +139,7 @@ object SparkEntry {
     // O18 end to end: stage → MERGE writeback → census (the oracle
     // recomputes the UPDATE's effect as a CASE over the same input)
     "bu_merge" -> ((s, d) =>
-      graft.sources.Sources.mergeProbe(s, d, mergeSinkBase(d))),
+      graft.sources.Sources.mergeProbe(s, d, layoutBase("merge_sink", d))),
 
     // ---- registry folds (round-7 pruning): each runs a whole variant
     // family as ONE multi-assert query; the ops functions behind every
@@ -176,7 +177,7 @@ object SparkEntry {
     // the pair arm's candidate enumeration is computed ONCE and feeds
     // the cluster arm's connected components
     "mm_phash_family" -> ((s, d) => {
-      val dups = Multimodal.phashDups(documents(s, d)).localCheckpoint()
+      val dups = Multimodal.phashDups(documents(s, d)).maintCheckpoint()
       foldedQuery(Seq("id1" -> "long", "id2" -> "long", "hamming" -> "long",
           "doc_id" -> "long", "canon_id" -> "long", "n_members" -> "long"),
         "dups" -> dups,
@@ -580,7 +581,7 @@ object SparkEntry {
     // round-0 graph is computed ONCE and feeds both arms
     "sim_knn_family" -> ((s, d) => {
       val e = embeddings(s, d)
-      val g = Similarity.knnGraph(e, 5).localCheckpoint()
+      val g = Similarity.knnGraph(e, 5).maintCheckpoint()
       foldedQuery(Seq("query_id" -> "long", "neighbor_id" -> "long",
           "sim" -> "double", "rank" -> "long"),
         "graph" -> g,
@@ -610,47 +611,47 @@ object SparkEntry {
     // _stored probes ONLY the persisted artifacts (the production
     // serving path; rebuilds lazily iff the marker is stale)
     "sim_ivfpq_build" -> ((s, d) =>
-      Similarity.ivfpqBuildIndex(embeddings(s, d), ivfpqIndexBase(d), 16)),
+      Similarity.ivfpqBuildIndex(embeddings(s, d), layoutBase("ivfpq_index", d), 16)),
     "sim_ivfpq_stored" -> ((s, d) =>
-      Similarity.ivfpqProbeStored(embeddings(s, d), ivfpqIndexBase(d), 8, 5)),
+      Similarity.ivfpqProbeStored(embeddings(s, d), layoutBase("ivfpq_index", d), 8, 5)),
     // filtered search over the STANDING layout: the label column rides
     // in the cell partitions, so the predicate is a pushed-down
     // Parquet filter on the probed directories — no corpus join
     "sim_ivfpq_filtered" -> ((s, d) =>
-      Similarity.ivfpqFilteredStored(embeddings(s, d), ivfpqIndexBase(d), 8, 5)),
+      Similarity.ivfpqFilteredStored(embeddings(s, d), layoutBase("ivfpq_index", d), 8, 5)),
     // index observability: per-cell occupancy of the standing IVFADC
     // layout (appends drift cells away from the trained balance; the
     // hot flag is the "rebuild now" signal a scheduler polls)
     "sim_ivfpq_health" -> ((s, d) =>
-      Similarity.ivfpqHealth(embeddings(s, d), ivfpqIndexBase(d), 16)),
+      Similarity.ivfpqHealth(embeddings(s, d), layoutBase("ivfpq_index", d), 16)),
     // the maintenance ACTION the health flag calls for: hot cells
     // split 2-means-style around a deterministic pivot; report is the
     // occupancy after (registry threshold 1.1x mean so balanced
     // fixtures still exercise the split)
     "sim_ivfpq_resplit" -> ((s, d) =>
-      Similarity.ivfpqResplit(embeddings(s, d), ivfpqIndexBase(d), 16, 110)),
+      Similarity.ivfpqResplit(embeddings(s, d), layoutBase("ivfpq_index", d), 16, 110)),
     // ...and the probe over the resplit generation: split halves are
     // served via the augmented centroid table (pivots at cell+16)
     "sim_ivfpq_resprobe" -> ((s, d) =>
-      Similarity.ivfpqProbeResplit(embeddings(s, d), ivfpqIndexBase(d), 8, 5)),
+      Similarity.ivfpqProbeResplit(embeddings(s, d), layoutBase("ivfpq_index", d), 8, 5)),
     // index MAINTENANCE: quantizers train on the base four-fifths
     // (lazy build, marker), every run replays the idempotent batch
     // append into the cell partitions (dynamic partition overwrite),
     // then probes the merged layout over the full corpus
     "sim_ivfpq_append" -> ((s, d) =>
-      Scenarios.ivfpqAppendProbe(embeddings(s, d), ivfpqMod5IndexBase(d), 8, 5)),
+      Scenarios.ivfpqAppendProbe(embeddings(s, d), layoutBase("ivfpq_mod5", d), 8, 5)),
     // index deletion: every seventh vector tombstones out of the
     // standing index; the probe serves around the sidecar with NO
     // layout rewrite and is already exact (quantizers keep their
     // full-corpus training). Compaction equivalence is spec-proven.
     "sim_ivfpq_delete" -> ((s, d) =>
-      Scenarios.ivfpqDeleteProbe(embeddings(s, d), ivfpqDeleteIndexBase(d), 8, 5)),
+      Scenarios.ivfpqDeleteProbe(embeddings(s, d), layoutBase("ivfpq_delete", d), 8, 5)),
     // streaming-ingestion analog: three fixed vector batches replay
     // through the production append (pristine base restored per run),
     // the production probe serves after each — one tagged result block
     // per ingest step, the ANN twin of dedup_admit
     "sim_ivfpq_admit" -> ((s, d) =>
-      Scenarios.ivfpqAdmitProbe(embeddings(s, d), ivfpqMod5IndexBase(d),
+      Scenarios.ivfpqAdmitProbe(embeddings(s, d), layoutBase("ivfpq_mod5", d),
         3, 8, 5)),
     "txt_span_cut" -> ((s, d) => Text.spanCut(documents(s, d))),
     "txt_hybrid_rrf" -> ((s, d) => Text.hybridRrf(documents(s, d))),
@@ -658,7 +659,7 @@ object SparkEntry {
     // stored BM25 buckets, semantic arm probing the stored stub-vector
     // IVF cells — no corpus tokenize or brute-force scoring at probe
     "txt_hybrid_stored" -> ((s, d) =>
-      Text.hybridStored(documents(s, d), bm25IndexBase(d), hybridAnnIndexBase(d))),
+      Text.hybridStored(documents(s, d), layoutBase("bm25_index", d), layoutBase("hybrid_ann", d))),
     "txt_lm_quality" -> ((s, d) => Text.lmQuality(documents(s, d))),
     // the quality-scoring build-once/score-many pair (the CCNet
     // shape): _build trains the reference bigram LM (the
@@ -667,62 +668,62 @@ object SparkEntry {
     // the WHOLE corpus against the standing model — training is
     // paid once per reference, not once per scoring batch
     "txt_lm_build" -> ((s, d) =>
-      Text.lmBuildIndex(documents(s, d), lmIndexBase(d))),
+      Text.lmBuildIndex(documents(s, d), layoutBase("lm_index", d))),
     "txt_lm_stored" -> ((s, d) =>
-      Text.lmScoreStored(documents(s, d), lmIndexBase(d))),
+      Text.lmScoreStored(documents(s, d), layoutBase("lm_index", d))),
     // LM maintenance: the reference corpus grows — a batch's counts
     // merge in as an additive delta segment (never a model rebuild),
     // and scoring serves the per-key SUM across generations
     "txt_lm_append" -> ((s, d) =>
-      Scenarios.lmAppendProbe(documents(s, d), lmAppendIndexBase(d))),
+      Scenarios.lmAppendProbe(documents(s, d), layoutBase("lm_append", d))),
     // LM deletion by SUBTRACTION: the count tables are additive, so a
     // delta segment carrying the victims' counts negated serves exact
     // removal with no rebuild (net-zero keys drop at serve time)
     "txt_lm_delete" -> ((s, d) =>
-      Scenarios.lmDeleteProbe(documents(s, d), lmDeleteIndexBase(d))),
+      Scenarios.lmDeleteProbe(documents(s, d), layoutBase("lm_delete", d))),
     // the full maintenance cycle: append + delete + COMPACT (fold the
     // generations into the base; the served model is unchanged, the
     // serve-time aggregation disappears from the probe plan)
     "txt_lm_compact" -> ((s, d) =>
-      Scenarios.lmCompactProbe(documents(s, d), lmCompactIndexBase(d))),
+      Scenarios.lmCompactProbe(documents(s, d), layoutBase("lm_compact", d))),
     // the lexical build-once/probe-many pair: _build persists the
     // bucket-partitioned inverted index, _stored scores the fixed
     // query set from the persisted artifacts only (static bucket
     // partition pruning — the query terms are plan-time literals)
     "txt_bm25_build" -> ((s, d) =>
-      Text.bm25BuildIndex(documents(s, d), bm25IndexBase(d))),
+      Text.bm25BuildIndex(documents(s, d), layoutBase("bm25_index", d))),
     "txt_bm25_stored" -> ((s, d) =>
-      Text.bm25ProbeStored(documents(s, d), bm25IndexBase(d))),
+      Text.bm25ProbeStored(documents(s, d), layoutBase("bm25_index", d))),
     // phrase search over the STORED positional postings (the v3
     // layout's pos/ extension): static bucket filters from the
     // literal phrase terms, no corpus tokenize at probe time
     "txt_phrase_stored" -> ((s, d) =>
-      Text.phraseSearchStored(documents(s, d), bm25IndexBase(d))),
+      Text.phraseSearchStored(documents(s, d), layoutBase("bm25_index", d))),
     // index observability: per-bucket postings/term mass of the
     // standing BM25 layout (vocabulary drift from appends shows up
     // here as hot buckets dominating probe I/O)
     "txt_bm25_health" -> ((s, d) =>
-      Text.bm25Health(documents(s, d), bm25IndexBase(d))),
+      Text.bm25Health(documents(s, d), layoutBase("bm25_index", d))),
     // the action on the health signal: hot buckets split by the next
     // md5 bit of the term hash — probes over the split layout keep
     // their STATIC partition filters (the split key is plan-time
     // computable from the literal query terms)
     "txt_bm25_resplit" -> ((s, d) =>
-      Text.bm25Resplit(documents(s, d), bm25IndexBase(d), 110)),
+      Text.bm25Resplit(documents(s, d), layoutBase("bm25_index", d), 110)),
     // index MAINTENANCE: build on the base four-fifths (lazy, marker),
     // merge the batch fifth into the affected bucket partitions every
     // run (dynamic partition overwrite — the measured cost IS the
     // append), probe the merged layout; result-identical to the
     // inline index over the full corpus, so the oracle is bm25Oracle
     "txt_bm25_append" -> ((s, d) =>
-      Scenarios.bm25AppendProbe(documents(s, d), bm25AppendIndexBase(d))),
+      Scenarios.bm25AppendProbe(documents(s, d), layoutBase("bm25_append", d))),
     // index deletion: every seventh document tombstones out, then
     // COMPACTION rewrites only the affected buckets and re-derives
     // their df — after which the probe is exactly the inline index
     // over the surviving corpus (the tombstone-serving half, with its
     // documented stale df, is spec-proven)
     "txt_bm25_delete" -> ((s, d) =>
-      Scenarios.bm25DeleteProbe(documents(s, d), bm25DeleteIndexBase(d))),
+      Scenarios.bm25DeleteProbe(documents(s, d), layoutBase("bm25_delete", d))),
     "txt_gopher_gate" -> ((s, d) => Text.gopherGate(documents(s, d))),
     // PII scan + redaction over a deterministically PII-planted twin
     // of the corpus (the fixtures carry no natural PII, so both
@@ -741,7 +742,7 @@ object SparkEntry {
       val split = Text.trainValSplit(docs).select(col("doc_id"), col("split"))
       Dedup.dedupBuildIndex(
         docs.join(split, Seq("doc_id")).filter(col("split") === "train"),
-        dedupIndexBase(d))
+        layoutBase("neardup_index", d))
     }),
     "dedup_incr_stored" -> ((s, d) => {
       val docs = documents(s, d)
@@ -750,7 +751,7 @@ object SparkEntry {
       Dedup.incrementalNearDupStored(
         withSplit.filter(col("split") =!= "train"),
         withSplit.filter(col("split") === "train"),
-        dedupIndexBase(d))
+        layoutBase("neardup_index", d))
     }),
     // the streaming admission gate's deterministic batch analog: three
     // fixed micro-batches replayed in order against the standing index
@@ -762,69 +763,19 @@ object SparkEntry {
     // and the stored probe restores before serving iff deltas are
     // present ([[graft.ops.Dedup.incrementalNearDupStored]]).
     "dedup_admit" -> ((s, d) =>
-      Scenarios.dedupAdmitProbe(documents(s, d), dedupIndexBase(d))),
+      Scenarios.dedupAdmitProbe(documents(s, d), layoutBase("neardup_index", d))),
   )
 
-  /** Per-SF stored-index location for the build-once/probe-many pair
+  /** Per-SF stored-layout location `<tmpdir>/graft_<name>/<sf>`
     * (tmpdir: the index is a derived artifact, rebuilt lazily whenever
-    * its marker goes stale).
+    * its marker goes stale). ONE standing mod-5 layout (`ivfpq_mod5`)
+    * serves BOTH IVFADC maintenance slots (`sim_ivfpq_append`,
+    * `sim_ivfpq_admit`): same base split, same base-trained quantizers,
+    * same marker contract — one base build and one pristine cache
+    * instead of two ([[Scenarios.ensureMod5Base]]).
     */
-  private def ivfpqIndexBase(sfDir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_ivfpq_index/" +
-      new java.io.File(sfDir).getName
-
-  /** ONE standing mod-5 layout serves BOTH IVFADC maintenance slots
-    * (`sim_ivfpq_append`, `sim_ivfpq_admit`): same base split, same
-    * base-trained quantizers, same marker contract — one base build
-    * and one pristine cache instead of two
-    * ([[Scenarios.ensureMod5Base]]).
-    */
-  private def ivfpqMod5IndexBase(sfDir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_ivfpq_mod5/" +
-      new java.io.File(sfDir).getName
-
-  private def bm25IndexBase(sfDir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_bm25_index/" +
-      new java.io.File(sfDir).getName
-
-  private def bm25AppendIndexBase(sfDir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_bm25_append/" +
-      new java.io.File(sfDir).getName
-
-  private def lmIndexBase(sfDir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_lm_index/" +
-      new java.io.File(sfDir).getName
-
-  private def lmAppendIndexBase(sfDir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_lm_append/" +
-      new java.io.File(sfDir).getName
-
-  private def lmDeleteIndexBase(sfDir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_lm_delete/" +
-      new java.io.File(sfDir).getName
-
-  private def lmCompactIndexBase(sfDir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_lm_compact/" +
-      new java.io.File(sfDir).getName
-
-  private def hybridAnnIndexBase(sfDir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_hybrid_ann/" +
-      new java.io.File(sfDir).getName
-
-  private def bm25DeleteIndexBase(sfDir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_bm25_delete/" +
-      new java.io.File(sfDir).getName
-
-  private def dedupIndexBase(sfDir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_neardup_index/" +
-      new java.io.File(sfDir).getName
-
-  private def ivfpqDeleteIndexBase(sfDir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_ivfpq_delete/" +
-      new java.io.File(sfDir).getName
-
-  private def mergeSinkBase(sfDir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_merge_sink/" +
+  private def layoutBase(name: String, sfDir: String): String =
+    s"${System.getProperty("java.io.tmpdir")}/graft_$name/" +
       new java.io.File(sfDir).getName
 
   /** DuckDB-dialect oracle per query (same parquet tables,

@@ -1,7 +1,11 @@
 package graft
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB oracle compare.
+  * Stored layouts live under `<java.io.tmpdir>/graft_<name>/<sf>`: two
+  * runs started at once on one box share them and fail each other's
+  * writer lease. Give each concurrent run its own `-Djava.io.tmpdir`.
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Sources
+
 /** Count-Min sketch (Cormode & Muthukrishnan 2005) over the token
   * stream — the fixed-size frequency summary a streaming/merge-heavy
   * pipeline keeps when exact per-token counts would be unbounded state.
@@ -90,15 +92,18 @@ object CountMin {
         col("doc_id"))
       .select(explode(Text.tokens(col("text"))).as("token"))
     val counters = sketch(tok, col("token"))
-    // the head is materialized (k rows) so the top-k runs as a terminal
+    // the head is held (k rows) so the top-k runs as a terminal
     // TakeOrderedAndProject job — left inline, a mid-plan orderBy+limit
     // plans as a full range-sort of the vocabulary under the joins
-    val exact = tok.groupBy(col("token")).agg(count(lit(1)).as("exact_n"))
-      .orderBy(col("exact_n").desc, col("token")).limit(k)
-      .localCheckpoint()
+    val exact = Sources.hold(
+      tok.groupBy(col("token")).agg(count(lit(1)).as("exact_n"))
+        .orderBy(col("exact_n").desc, col("token")).limit(k),
+      Some(k.toLong)).df
+    // k rows in one partition: the output sort needs no exchange
     estimate(exact, "token", counters)
       .select(col("token"), col("exact_n"), col("est_n"),
         (col("est_n") - col("exact_n")).as("overcount"))
+      .coalesce(1)
       .orderBy(col("exact_n").desc, col("token"))
   }
 }

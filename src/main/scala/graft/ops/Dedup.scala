@@ -193,13 +193,13 @@ object Dedup {
     // (band, salt) — each (a,b) pair emerges exactly once (at salt(b)),
     // so results are salt-INVARIANT (oracle computes the unsalted plan;
     // spec-proven) while a hot bucket's pair work spreads over `salts`
-    // reducers. The bands frame is localCheckpoint'ed so the signature
+    // reducers. The bands frame is checkpointed so the signature
     // pipeline runs ONCE even though the two join sides now project
     // different salt columns (alias-reuse can no longer dedupe them).
     val bands = sigs.select(
         col("doc_id"),
         posexplode(array(bandKeys: _*)).as(Seq("band_idx", "band_key")))
-      .localCheckpoint()
+      .maintCheckpoint()
     val x = bands
       .withColumn("salt", explode(sequence(lit(0L), lit(salts - 1L))))
       .alias("x")
@@ -725,16 +725,16 @@ object Dedup {
           struct(col("doc2").as("src"), col("doc1").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // labels are localCheckpoint'ed per round, not merely persisted:
+    // labels are checkpointed per round, not merely persisted:
     // each round's plan references the previous labels TWICE (neighbor
     // join + self), so without lineage truncation the logical tree
     // doubles per round — at round ~8 the plan string alone OOMs the
     // driver (found by the deep-chain spec). Checkpointing caps every
     // round's plan at one join over two leaf RDDs, which is also what
     // a 100 TB run needs: driver memory independent of round count.
-    var labels = Graph.iterCheckpoint(
-      edges.select(col("src").as("id")).distinct()
-        .select(col("id"), col("id").as("label")))
+    var labels = edges.select(col("src").as("id")).distinct()
+      .select(col("id"), col("id").as("label"))
+      .maintCheckpoint()
     var changed = 1L
     var rounds = 0
     while (changed > 0 && rounds < maxRounds) {
@@ -750,11 +750,12 @@ object Dedup {
       // are clique-ish (diameter ~2, propagation already converges in
       // 2-3 rounds). Re-introduce it (or large-star/small-star) only if
       // a real corpus produces deep chains and the round cap trips.
-      val next = Graph.iterCheckpoint(labels
+      val next = labels
         .join(nbrMin, col("id") === col("src"), "left")
         .select(col("id"), col("label").as("old_label"),
           least(col("label"), coalesce(col("nbr_label"), col("label")))
-            .as("label")))
+            .as("label"))
+        .maintCheckpoint()
       changed = next.filter(col("label") =!= col("old_label")).count()
       labels = next.select(col("id"), col("label"))
       rounds += 1

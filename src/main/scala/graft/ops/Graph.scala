@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.sources.Sources.MaintCheckpointSyntax
+
 /** Iterative graph analytics as DataFrame rounds — the Pregel-style
   * computation family (PageRank here; the dedup family's connected
   * components in [[Dedup.nearDupClusters]] is the same shape). Each
@@ -25,18 +27,6 @@ object Graph {
     * signed-64 even before ANSI overflow checks would fire.
     */
   val scale: Long = 1000000000000L
-
-  /** Lineage truncation for iterative driver loops — delegates to
-    * [[graft.sources.Sources.truncatingCheckpoint]]: reliable
-    * checkpoints on a cluster (losing an executor mid-loop replays at
-    * most one round), one-pass DISK_ONLY local checkpoints on a local
-    * master where reliability to the same local disk buys nothing and
-    * the reliable path's second subtree execution per round is pure
-    * waste. Result-identical either way: both truncate the plan to a
-    * leaf.
-    */
-  private[graft] def iterCheckpoint(df: DataFrame): DataFrame =
-    graft.sources.Sources.truncatingCheckpoint(df)
 
   /** Nation→nation trade edges: customer's nation → supplier's nation
     * for every trade relationship in the fact table, self-loops
@@ -147,7 +137,7 @@ object Graph {
     * hi→lo): every node hi re-points its smaller neighbors and itself
     * at its minimum neighbor. Both are one groupBy-min + one equi-join
     * per round — never a collect, never a broadcast of |V| — and the
-    * driver loop only composes plans (each round localCheckpoint'ed so
+    * driver loop only composes plans (each round checkpointed so
     * round k doesn't replay rounds 0..k−1). At the fixpoint the edge
     * set IS the component assignment: a star from every member to its
     * component's minimum id.
@@ -173,10 +163,11 @@ object Graph {
         .unionAll(cur.select(col("lo").as("u"), col("hi").as("v")))
       val mins = sym.groupBy(col("u")).agg(min(col("v")).as("mv"))
         .select(col("u"), least(col("mv"), col("u")).as("m"))
-      val afterLarge = iterCheckpoint(canon(
+      val afterLarge = canon(
         sym.join(mins, Seq("u"))
           .filter(col("v") > col("u"))
-          .select(col("v").as("hi"), col("m").as("lo"))))
+          .select(col("v").as("hi"), col("m").as("lo")))
+        .maintCheckpoint()
       // small-star over the hi→lo orientation
       val minsS = afterLarge.groupBy(col("hi")).agg(min(col("lo")).as("m"))
       val afterSmall = canon(
@@ -208,7 +199,7 @@ object Graph {
     // of leaking until context shutdown
     val out = members.join(sizes, Seq("component"))
       .select(col("id"), col("component"), col("n_members"))
-      .localCheckpoint()
+      .maintCheckpoint()
     cur.unpersist()
     out
   }

@@ -136,7 +136,7 @@ object Similarity {
   /** All six recall gates in ONE pass — the engine behind the folded
     * `sim_recall_gates` registry entry. The unfiltered arms (pq, sq,
     * ivf, ivfpq, ivfpq_res) compare against the SAME brute-force
-    * ground truth, so it is scored ONCE and checkpointed —
+    * ground truth, so it is scored ONCE and held (nQueries·k rows) —
     * [[cosineTopK]] is deterministic, so sharing it is
     * result-identical to the per-gate formulations the oracle
     * re-derives, while saving four full-corpus exact passes. The
@@ -152,7 +152,7 @@ object Similarity {
     // the four training/ground-truth chains below are INDEPENDENT of
     // each other (bf truth; coarse quantizer; unit→PQ codebooks; the
     // residual arm's own full training), and each one materializes
-    // eagerly through checkpointed loops — sequentially they idled the
+    // eagerly round by round — sequentially they idled the
     // executors in every loop's tail. Overlap them from driver threads
     // (guide §2.6); each chain computes exactly what it computed
     // before, so the gate output is bit-identical.
@@ -165,13 +165,13 @@ object Similarity {
     // SQ8's per-dim min/max "training" is one cheap aggregate.
     val Seq(Seq(bf), Seq(centroids), Seq(unit, codebooks), Seq(resArm)) =
       graft.sources.Par.run(spark)(Seq(
-        () => Seq(cosineTopK(embeddings, nQueries, k)
-          .select(col("query_id"), col("neighbor_id"))
-          .localCheckpoint()),
+        () => Seq(Sources.hold(cosineTopK(embeddings, nQueries, k)
+          .select(col("query_id"), col("neighbor_id")),
+          Some(nQueries.toLong * k)).df),
         () => Seq(kmeansCentroids(embeddings, nlist)),
         () => {
-          val u = unitVectors(embeddings).localCheckpoint()
-          Seq(u, pqCodebooks(u).localCheckpoint())
+          val u = unitVectors(embeddings).maintCheckpoint()
+          Seq(u, pqCodebooks(u))
         },
         () => Seq(ivfpqResidualTopK(embeddings, nQueries, k))))
     def gate(variant: String, truth: DataFrame,
@@ -556,16 +556,16 @@ object Similarity {
     * the embeddings of the `nlist` lowest vec_ids of the FULL corpus
     * (deterministic, sample-independent seeding); update = the
     * per-dimension [[twoLevelMean]] of each cell's sampled members, so
-    * no aggregation buffer ever holds a whole cell. Each iteration is
-    * localCheckpoint'ed: centroids are nlist rows, and truncating the
-    * lineage stops iteration i from re-running iterations 0..i−1 (and
-    * lets the final quantizer feed both the assignment and the probe
-    * chain without recomputation).
+    * no aggregation buffer ever holds a whole cell. Each iteration's
+    * centroids (nlist rows) are held on the driver ([[Sources.hold]]):
+    * iteration i never re-runs iterations 0..i−1, and the returned
+    * quantizer is a local relation that feeds both the assignment and
+    * the probe chain without recomputation.
     */
   def kmeansCentroids(embeddings: DataFrame, nlist: Int,
                       iters: Int = ivfIters): DataFrame = {
     // the sample is re-scanned every iteration — checkpoint the filter
-    val sample = trainingSample(embeddings).localCheckpoint()
+    val sample = trainingSample(embeddings).maintCheckpoint()
     var cent = embeddings.filter(col("vec_id") < nlist)
       .select(col("vec_id").as("centroid_id"),
         transform(col("embedding"), x => x.cast("double")).as("ce"))
@@ -574,10 +574,10 @@ object Similarity {
         .select(col("cell"), col("vec_id"),
           posexplode(col("embedding")).as(Seq("j", "v")))
       val means = twoLevelMean(dims, Seq("cell", "j"))
-      cent = Graph.iterCheckpoint(means.groupBy(col("cell"))
+      cent = Sources.hold(means.groupBy(col("cell"))
         .agg(transform(sort_array(collect_list(struct(col("j"), col("mv")))),
           x => x.getField("mv")).as("ce"))
-        .select(col("cell").as("centroid_id"), col("ce")))
+        .select(col("cell").as("centroid_id"), col("ce")), Some(nlist.toLong)).df
     }
     cent
   }
@@ -627,7 +627,7 @@ object Similarity {
 
   /** IVF top-k: probe the query's `nprobe` best cells, exact-score only
     * their members. Assignment and probing share ONE trained quantizer
-    * (checkpointed nlist-row frame, broadcast to both sides).
+    * (a held nlist-row frame, broadcast to both sides).
     */
   def ivfTopK(embeddings: DataFrame, nQueries: Int, k: Int,
               nlist: Int = 16, nprobe: Int = 4): DataFrame =
@@ -819,7 +819,8 @@ object Similarity {
     * ~3 s at sf0.1). Per subspace the math is unchanged: first-ksub
     * seed, argmin-L2 with (d2, code) tie-break, ordered-fold means,
     * fixed [[pqIters]] rounds — the deterministic contract of
-    * [[kmeansCentroids]], quantizing raw coordinates, not directions.
+    * [[kmeansCentroids]] (each round held on the driver), quantizing
+    * raw coordinates, not directions.
     */
   def pqCodebooks(unit: DataFrame): DataFrame = {
     // training reads only the hash-sample (bounded input at scale);
@@ -828,7 +829,8 @@ object Similarity {
     val subs = trainingSample(unit).select(col("vec_id"), posexplode(
         array((0 until pqM).map(m => subvec(col("embedding"), m)): _*))
         .as(Seq("m", "sv")))
-      .localCheckpoint() // re-read every round; don't re-slice the corpus
+      .maintCheckpoint() // re-read every round; don't re-slice the corpus
+    val parallelism = unit.sparkSession.sparkContext.defaultParallelism
     var cent = unit.filter(col("vec_id") < pqKsub)
       .select(col("vec_id"), posexplode(
         array((0 until pqM).map(m => subvec(col("embedding"), m)): _*))
@@ -838,7 +840,10 @@ object Similarity {
     for (_ <- 1 to pqIters) {
       // argmin-L2 as min_by over the total (d2, code) key: map-side
       // partial combine, no window sort (same device as assignCells)
-      val scored = subs.join(broadcast(cent), Seq("m"))
+      // spread on the argmin's own key: the scoring keeps every core,
+      // and the aggregation below needs no further exchange
+      val scored = subs.repartition(parallelism, col("m"), col("vec_id"))
+        .join(broadcast(cent), Seq("m"))
         .select(col("m"), col("vec_id"), col("sv"), col("code"),
           l2sq(col("sv"), col("ce")).as("d2"))
       val assigned = scored.groupBy(col("m"), col("vec_id"))
@@ -849,11 +854,11 @@ object Similarity {
       val dims = assigned.select(col("m"), col("cell"), col("vec_id"),
         posexplode(col("sv")).as(Seq("j", "v")))
       val means = twoLevelMean(dims, Seq("m", "cell", "j"))
-      cent = means.groupBy(col("m"), col("cell"))
+      cent = Sources.hold(means.groupBy(col("m"), col("cell"))
         .agg(transform(sort_array(collect_list(struct(col("j"), col("mv")))),
           x => x.getField("mv")).as("ce"))
-        .select(col("m"), col("cell").as("code"), col("ce"))
-        .localCheckpoint()
+        .select(col("m"), col("cell").as("code"), col("ce")),
+        Some(pqM.toLong * pqKsub)).df
     }
     cent
   }
@@ -892,8 +897,8 @@ object Similarity {
   def pqTopK(embeddings: DataFrame, nQueries: Int, k: Int): DataFrame = {
     // normalization feeds training, encoding, AND the query LUTs —
     // checkpoint once instead of re-normalizing per consumer
-    val unit = unitVectors(embeddings).localCheckpoint()
-    pqTopKWith(unit, pqCodebooks(unit).localCheckpoint(), nQueries, k)
+    val unit = unitVectors(embeddings).maintCheckpoint()
+    pqTopKWith(unit, pqCodebooks(unit), nQueries, k)
   }
 
   /** [[pqTopK]] with precomputed unit vectors and trained codebooks —
@@ -903,7 +908,9 @@ object Similarity {
     */
   private[graft] def pqTopKWith(unit: DataFrame, codebooks: DataFrame,
                                 nQueries: Int, k: Int): DataFrame = {
-    val codes = pqEncode(unit, codebooks)
+    // the checkpointed `unit` may arrive coalesced: spread the scoring
+    val codes = pqEncode(unit.repartition(
+      unit.sparkSession.sparkContext.defaultParallelism, col("vec_id")), codebooks)
     val qsubs = unit.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), posexplode(
         array((0 until pqM).map(m => subvec(col("embedding"), m)): _*))
@@ -996,8 +1003,8 @@ object Similarity {
       graft.sources.Par.run(embeddings.sparkSession)(Seq(
         () => Seq(kmeansCentroids(embeddings, nlist)),
         () => {
-          val u = unitVectors(embeddings).localCheckpoint()
-          Seq(u, pqCodebooks(u).localCheckpoint())
+          val u = unitVectors(embeddings).maintCheckpoint()
+          Seq(u, pqCodebooks(u))
         }))
     ivfpqTopKWith(embeddings, unit, centroids, codebooks, nQueries, k,
       nprobe, shortlist)
@@ -1015,7 +1022,9 @@ object Similarity {
                                    shortlist: Int = 20): DataFrame = {
     // index build (once per corpus, the write-side cost): cell
     // assignment ⋈ PQ codes on vec_id — co-partitioned equi-join
-    val codesCells = pqEncode(unit, codebooks)
+    val codesCells = pqEncode(unit.repartition(
+        unit.sparkSession.sparkContext.defaultParallelism, col("vec_id")),
+        codebooks) // spread as in pqTopKWith
       .join(assignCells(embeddings, centroids)
         .select(col("vec_id"), col("cell")), Seq("vec_id"))
     // query side: nprobe best cells (same ranking as ivfTopK)…
@@ -1080,7 +1089,7 @@ object Similarity {
   def ivfpqResidualTopK(embeddings: DataFrame, nQueries: Int, k: Int,
                         nlist: Int = 16, nprobe: Int = 4,
                         shortlist: Int = 20): DataFrame = {
-    val unit = unitVectors(embeddings).localCheckpoint()
+    val unit = unitVectors(embeddings).maintCheckpoint()
     val cent = kmeansCentroids(unit, nlist)
     val assigned = assignCells(unit, cent)
     // residuals feed BOTH codebook training and encoding — checkpoint
@@ -1088,9 +1097,8 @@ object Similarity {
       .select(col("vec_id"),
         zip_with(col("embedding"), col("ce"), (x, c) => x - c).as("embedding"),
         col("cell"))
-      .localCheckpoint()
+      .maintCheckpoint()
     val codebooks = pqCodebooks(res.select(col("vec_id"), col("embedding")))
-      .localCheckpoint()
     val codesCells = pqEncode(res.select(col("vec_id"), col("embedding")),
         codebooks)
       .join(res.select(col("vec_id"), col("cell")), Seq("vec_id"))
@@ -1214,7 +1222,7 @@ object Similarity {
         () => Seq(kmeansCentroids(embeddings, nlist)),
         () => {
           val u = unitVectors(embeddings).maintCheckpoint()
-          Seq(u, pqCodebooks(u).maintCheckpoint())
+          Seq(u, pqCodebooks(u))
         }))
     // assignment feeds BOTH the cells write and the codes join —
     // checkpoint it so the corpus-wide argmax runs once, not per sink
@@ -1229,8 +1237,9 @@ object Similarity {
     val snap = b.commit(indexMarker(embeddings, nlist)) { txn =>
       txn.writeFull(assigned, "cells", "cell")
       txn.writeFull(codesCells, "codes", "cell")
-      txn.writeFull(centroids, "centroids")
-      txn.writeFull(codebooks, "codebooks")
+      // the held quantizers are a few KB: one file each
+      txn.writeFull(centroids.coalesce(1), "centroids")
+      txn.writeFull(codebooks.coalesce(1), "codebooks")
       txn.dropComp("tombstones")
       txn.dropComp("cells_resplit")
     }
@@ -1508,26 +1517,28 @@ object Similarity {
     val snap = Snapshot.require(base)
     val cellsAll = snap.read(spark, "cells")
       .select(col("vec_id"), col("embedding"), col("cell").cast("long").as("cell"))
-      .localCheckpoint()
+      .maintCheckpoint()
     val counts = cellsAll.groupBy(col("cell")).agg(count(lit(1)).as("n"))
     val total = cellsAll.agg(count(lit(1)).as("n_total"))
-    val hot = counts.join(broadcast(total))
+    val hot = Sources.hold(counts.join(broadcast(total))
       .filter(col("n") * lit(nlist.toLong) * lit(100L) >
         col("n_total") * lit(hotFactorPct.toLong))
-      .select(col("cell")).localCheckpoint()
+      .select(col("cell")), Some(nlist.toLong)).df
     val pivotIds = cellsAll.join(broadcast(hot), Seq("cell"))
       .groupBy(col("cell")).agg(min(col("vec_id")).as("pivot_id"))
     val halfOneCents = cellsAll
       .select(col("vec_id").as("pivot_id"), col("embedding").as("pe"))
       .join(broadcast(pivotIds), Seq("pivot_id"))
       .select((col("cell") + lit(nlist.toLong)).as("cell"), col("pe").as("ce"))
-    val aug = snap.read(spark, "centroids")
+    val aug = Sources.hold(snap.read(spark, "centroids")
       .select(col("centroid_id").cast("long").as("cell"), col("ce"))
-      .unionByName(halfOneCents)
-      .localCheckpoint() // ≤ 2·nlist rows
+      .unionByName(halfOneCents), Some(2L * nlist)).df
+    // spread for the scoring below: the checkpointed cells may arrive
+    // coalesced
     val layout = cellsAll.join(broadcast(hot), Seq("cell"), "left_anti")
       .unionByName(snap.read(spark, "cells_resplit")
         .select(col("vec_id"), col("embedding"), col("cell").cast("long").as("cell")))
+      .repartition(spark.sparkContext.defaultParallelism, col("vec_id"))
     val probes = embeddings.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
       .join(broadcast(aug))
@@ -1782,7 +1793,7 @@ object Similarity {
         scored.withColumn("__tie", -col("cand_id")),
         Seq("query_id"), Seq("simq", "__tie"), nCand)
       .drop("__tie")
-      .localCheckpoint() // shortlist feeds all k greedy steps
+      .maintCheckpoint() // shortlist feeds all k greedy steps
     // per-query argmax = the two-phase heap node with k=1: map-side
     // partials prune every partition to one row per query before the
     // shuffle. A max_by carrying the embedding payload would plan
@@ -1864,7 +1875,7 @@ object Similarity {
     * and a hot cell's pair work spreads over `salts` reducers. Results
     * are salt-INVARIANT — the registry oracle computes the unsalted
     * plan — and the per-shard candidate bound is asserted in OpsSpec on
-    * a skewed corpus. One assignment pass (localCheckpoint'ed) feeds
+    * a skewed corpus. One assignment pass (checkpointed) feeds
     * both join sides; training reads the bounded hash-sample.
     *
     * Cost note: replicating the keep side ×salts multiplies its
@@ -1882,7 +1893,7 @@ object Similarity {
                threshold: Double = 0.2, salts: Int = 8): DataFrame = {
     val assigned =
       assignCells(embeddings, kmeansCentroids(embeddings, nlist))
-        .localCheckpoint()
+        .maintCheckpoint()
     val keep = assigned.select(col("cell"), col("vec_id").as("keep_id"),
       col("embedding").as("keep_emb"))
       .withColumn("salt", explode(sequence(lit(0L), lit(salts - 1L))))
@@ -1941,9 +1952,9 @@ object Similarity {
     * (constant across the corpus) encode as 0. The params row is a
     * one-row broadcast carrier, so encoding is a single corpus scan.
     * Callers that also DECODE (sqTopK) pass the trained `params` frame
-    * in, so one min/max training aggregation feeds both sides — the
-    * same checkpointed-artifact device as every other trained frame
-    * here; the default trains fresh.
+    * in, so one min/max training aggregation feeds both sides — held
+    * on the driver like every other trained artifact here; the default
+    * trains fresh.
     */
   def sqEncode(embeddings: DataFrame, params: DataFrame = null): DataFrame =
     embeddings
@@ -1969,9 +1980,9 @@ object Similarity {
     */
   def sqTopK(embeddings: DataFrame, nQueries: Int, k: Int): DataFrame = {
     // ONE min/max training aggregation feeds encode AND dequantize —
-    // localCheckpoint'ed (one row) so the second consumer cannot replay
-    // the full-corpus posexplode+agg training subtree
-    val params = sqParamArrays(embeddings).localCheckpoint()
+    // held (one row) so the second consumer cannot replay the
+    // full-corpus posexplode+agg training subtree
+    val params = Sources.hold(sqParamArrays(embeddings), Some(1L)).df
     val recon = sqEncode(embeddings, params)
       .crossJoin(broadcast(params))
       .select(col("vec_id").as("neighbor_id"),
@@ -2010,7 +2021,7 @@ object Similarity {
     * emerges exactly once — at salt(b) — so candidates are
     * salt-INVARIANT (the oracles compute the unsalted plan;
     * spec-proven) while a hot bucket's pair work spreads over `salts`
-    * reducers. The banded frame is localCheckpoint'ed (pruned to the
+    * reducers. The banded frame is checkpointed (pruned to the
     * 3 join columns first) so the banding pipeline runs once even
     * though the two sides now project different salt columns.
     */
@@ -2021,7 +2032,7 @@ object Similarity {
         col("vec_id"))
       .select(col("vec_id"),
         posexplode(bandKeys(col("embedding"))).as(Seq("band_idx", "band_key")))
-      .localCheckpoint()
+      .maintCheckpoint()
     val x = banded
       .withColumn("salt", explode(sequence(lit(0L), lit(salts - 1L))))
       .alias("x")
@@ -2080,7 +2091,7 @@ object Similarity {
     knnRefineWith(embeddings,
       knnGraph(embeddings, k, salts)
         .select(col("query_id"), col("neighbor_id"))
-        .localCheckpoint(), k, nlist)
+        .maintCheckpoint(), k, nlist)
 
   /** [[knnRefine]] with a precomputed round-0 graph — the sharing
     * point the folded `sim_knn_family` registry entry uses so the
@@ -2101,7 +2112,7 @@ object Similarity {
         col("vec_id") === col("query_id"), "left_anti")
     val assigned = assignCells(embeddings, kmeansCentroids(embeddings, nlist))
       .select(col("vec_id"), col("cell"))
-      .localCheckpoint()
+      .maintCheckpoint()
     val orphCand = assigned.join(orphans, Seq("vec_id"))
       .select(col("vec_id").as("id1"), col("cell"))
       .join(assigned.select(col("vec_id").as("id2"), col("cell")), Seq("cell"))
@@ -2151,10 +2162,10 @@ object Similarity {
                      rounds: Int = 3): DataFrame = {
     val g = knnGraph(embeddings, k)
       .select(col("query_id").as("dst"), col("neighbor_id").as("src"))
-      .localCheckpoint()
-    var labels = Graph.iterCheckpoint(
-      embeddings.select(col("vec_id"),
-        when(col("vec_id") < nSeeds, col("label").cast("long")).as("lbl")))
+      .maintCheckpoint()
+    var labels = embeddings.select(col("vec_id"),
+        when(col("vec_id") < nSeeds, col("label").cast("long")).as("lbl"))
+      .maintCheckpoint()
     for (_ <- 1 to rounds) {
       val votes = g
         .join(labels.select(col("vec_id").as("src"), col("lbl")), Seq("src"))
@@ -2166,11 +2177,12 @@ object Similarity {
       val best = votes.groupBy(col("dst"))
         .agg(max_by(col("lbl"), struct(col("votes"), -col("lbl")))
           .as("new_lbl"))
-      labels = Graph.iterCheckpoint(labels
+      labels = labels
         .join(best, labels("vec_id") === best("dst"), "left")
         .select(col("vec_id"),
           when(col("vec_id") < nSeeds, col("lbl"))
-            .otherwise(coalesce(col("new_lbl"), col("lbl"))).as("lbl")))
+            .otherwise(coalesce(col("new_lbl"), col("lbl"))).as("lbl"))
+        .maintCheckpoint()
     }
     labels.select(col("vec_id"), (col("vec_id") < nSeeds).as("is_seed"),
         coalesce(col("lbl"), lit(-1L)).as("label"))

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.sources.{IndexFS, Snapshot, StoredLayout}
+import graft.sources.{IndexFS, Snapshot, Sources, StoredLayout}
 import graft.sources.Sources.MaintCheckpointSyntax
 
 /** Text-analysis operators over the `documents` table — the
@@ -282,8 +282,9 @@ object Text {
     *
     * Scale shape: one corpus scan + per-round (vocabulary-keyed pair
     * aggregation + 1-row winner broadcast + per-row replace); each
-    * round's vocabulary localCheckpoints so round r+1 starts from a
-    * materialized table instead of an r-deep expression tree.
+    * round's vocabulary is checkpointed so round r+1 starts from a
+    * materialized table instead of an r-deep expression tree, and each
+    * round's 1-row winner is held on the driver.
     */
   def bpeTrain(documents: DataFrame, nMerges: Int = 4): DataFrame =
     bpeRounds(documents, nMerges)._1
@@ -304,7 +305,7 @@ object Text {
         concat_ws("|", expr(
           "transform(sequence(1, length(w)), i -> substring(w, i, 1))")))
         .as("s"))
-      .localCheckpoint()
+      .maintCheckpoint()
     val merges = (1 to nMerges).map { r =>
       val pairs = cur
         .select(col("wc"), expr(
@@ -317,15 +318,15 @@ object Text {
           .as("p"))
         .groupBy(col("p.l").as("left_sym"), col("p.r").as("right_sym"))
         .agg(sum(col("wc")).as("pair_count"))
-      val winner = pairs
+      // 1 row: feeds the merge apply AND the report
+      val winner = Sources.hold(pairs
         .orderBy(col("pair_count").desc, col("left_sym"), col("right_sym"))
-        .limit(1)
-        .localCheckpoint() // 1 row: feeds the merge apply AND the report
+        .limit(1), Some(1L)).df
       cur = cur.join(broadcast(winner))
         .select(col("w"), col("wc"),
           expr("replace(s, '|' || left_sym || '|' || right_sym, " +
             "'|' || left_sym || right_sym)").as("s"))
-        .localCheckpoint()
+        .maintCheckpoint()
       winner.select(lit(r.toLong).as("merge_round"),
         col("left_sym"), col("right_sym"),
         concat(col("left_sym"), col("right_sym")).as("merged"),
@@ -515,7 +516,7 @@ object Text {
   def bm25TopK(documents: DataFrame, k: Int = 10): DataFrame = {
     val spark = documents.sparkSession
     // the (doc, term, tf) inverted-index frame is MATERIALIZED once
-    // (localCheckpoint — the engine's trained-artifact device): three
+    // (checkpointed — the engine's trained-artifact device): three
     // consumers read it (match, dl, df), and per-consumer column
     // pruning gives each a *different* tokenize subplan, so exchange
     // reuse cannot deduplicate them — without the checkpoint the
@@ -528,7 +529,7 @@ object Text {
         explode(tokens(lower(col("text")))).as("term"))
       .groupBy(col("doc_id"), col("term"))
       .agg(count(lit(1)).as("tf"))
-      .localCheckpoint()
+      .maintCheckpoint()
     val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
     val stats = dl.agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L))).head()
     bm25Ranked(tf, dl, stats.getLong(0), stats.getLong(1), k)
@@ -1194,11 +1195,11 @@ object Text {
         val dv = documents
           .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
           .select(col("doc_id").as("vec_id"), stubVec(col("text")).as("embedding"))
-        val centroids = Similarity.kmeansCentroids(dv, nlist).localCheckpoint()
+        val centroids = Similarity.kmeansCentroids(dv, nlist)
         b.commit(expected) { txn =>
           txn.writeFull(Similarity.assignCells(dv, centroids),
             "cells", "cell")
-          txn.writeFull(centroids, "centroids")
+          txn.writeFull(centroids.coalesce(1), "centroids") // held: one file
         }
       }
     }
@@ -1210,23 +1211,23 @@ object Text {
     val pw = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id"))
       .orderBy(col("cs").desc, col("centroid_id"))
-    val probeCells = qv.join(broadcast(cent))
+    // held: feeds the cell census AND the scoring join
+    val probeCells = Sources.hold(qv.join(broadcast(cent))
       .select(col("query_id"), col("qv"), col("centroid_id"),
         Similarity.cosine(col("qv"), col("ce")).as("cs"))
       .withColumn("rn", row_number().over(pw))
       .filter(col("rn") <= nprobe)
-      .select(col("query_id"), col("qv"), col("centroid_id").as("cell"))
-      .localCheckpoint() // feeds the cell census AND the scoring join
-    // static probed-cell IN-list (≤ nlist values, collected from the
-    // literal queries' ranking) — deterministic partition pruning,
-    // same contract as the IVFADC serving core
-    val probedCellVals = probeCells.select(col("cell")).distinct()
-      .collect().map(_.getLong(0)).toSeq.sorted
+      .select(col("query_id"), col("qv"), col("centroid_id").as("cell")),
+      Some(bm25Queries.size.toLong * nprobe))
+    // static probed-cell IN-list (≤ nlist values, from the literal
+    // queries' ranking) — deterministic partition pruning, same
+    // contract as the IVFADC serving core
+    val probedCellVals = probeCells.keys(col("cell")).map(_.getLong(0)).sorted
     val cells = annSnap.read(spark, "cells")
       .filter(col("cell").isin(probedCellVals: _*))
       .select(col("vec_id").as("doc_id"), col("embedding"),
         col("cell").cast("long").as("cell"))
-    val scored = cells.join(broadcast(probeCells), Seq("cell"))
+    val scored = cells.join(broadcast(probeCells.df), Seq("cell"))
       .select(col("query_id"), col("doc_id"),
         Similarity.cosine(col("qv"), col("embedding")).as("cs"))
     val semPruned = org.apache.spark.sql.graftbridge.PlanBridge.topKPerKey(
@@ -1303,7 +1304,7 @@ object Text {
     * fewer than 2 tokens score 0 over 0 pairs.
     */
   def lmQuality(documents: DataFrame): DataFrame = {
-    val base = bigramPairs(documents).localCheckpoint()
+    val base = bigramPairs(documents).maintCheckpoint()
     val bi = base.groupBy(col("w1"), col("w2"))
       .agg(count(lit(1)).as("n_pair"))
     val uni = base.groupBy(col("w1")).agg(count(lit(1)).as("n_w1"))
@@ -2155,7 +2156,7 @@ object Text {
     * this reports WHERE — the ranges a corpus cutter actually removes.
     *
     * Scale shape: grams travel as 60-bit hashes with their position in
-    * a MATERIALIZED positional index (localCheckpoint — per-consumer
+    * a MATERIALIZED positional index (checkpointed — per-consumer
     * column pruning gives the dup-set aggregation and the position
     * join-back different tokenize subplans, so exchange reuse can't
     * deduplicate them; the checkpoint makes the corpus tokenize run
@@ -2182,7 +2183,7 @@ object Text {
       .select(col("doc_id"), posexplode(gramHashes).as(Seq("p0", "h")))
       .select(col("doc_id"), (col("p0") + 1).cast("long").as("pos"), col("h"))
       .repartition(parallelism, col("h"))
-      .localCheckpoint()
+      .maintCheckpoint()
     val dupGrams = base.groupBy(col("h"))
       .agg(count(lit(1)).as("tot"))
       .filter(col("tot") >= 2)
@@ -2467,7 +2468,7 @@ object Text {
       .repartition(parallelism, col("doc_id"))
       .select(col("doc_id"),
         posexplode(tokens(lower(col("text")))).as(Seq("p0", "tok")))
-      .localCheckpoint()
+      .maintCheckpoint()
     val uni = toks.groupBy(col("tok")).agg(count(lit(1)).as("c1"))
     val nTok = toks.agg(count(lit(1)).as("n_tok"))
     val wd = org.apache.spark.sql.expressions.Window
@@ -2539,7 +2540,7 @@ object Text {
         pmod(tokenHash(col("feat")), lit(dsirBuckets.toLong)).as("bucket"))
     val membership = documents.select(col("doc_id"),
       col("source").isin(dsirTargetSources: _*).as("is_t"))
-    val fm = feats.join(membership, Seq("doc_id")).localCheckpoint()
+    val fm = feats.join(membership, Seq("doc_id")).maintCheckpoint()
     val counts = fm.groupBy(col("bucket"))
       .agg(sum(when(col("is_t"), 1L).otherwise(0L)).as("ct"),
         sum(when(!col("is_t"), 1L).otherwise(0L)).as("cs"))

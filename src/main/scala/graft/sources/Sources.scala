@@ -14,12 +14,24 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, MapType, Str
   */
 object Sources {
 
-  /** Lineage truncation for stored-layout MAINTENANCE materializations
-    * (build/append/delete/compact under the writer lease) and the
-    * iterative driver loops ([[graft.ops.Graph.iterCheckpoint]]
-    * delegates here). Result-identical in every mode; what varies is
-    * WHERE the materialized rows live and how many times the subtree
-    * runs:
+  /** THE materialisation policy of `graft.ops`: an intermediate frame
+    * falls in exactly one of three cases.
+    *
+    *  - **(a) bounded by the operator's own parameters** (trained
+    *    centroids and codebooks, SQ params, a BPE winner, probed cells,
+    *    an exact top-k head): [[hold]] with that bound. The values are
+    *    still computed in Spark; only the rows move to the driver, and
+    *    consumers read a local relation.
+    *  - **(b) corpus-sized with more than one consumer** (stored-layout
+    *    maintenance under the writer lease, training samples, the
+    *    iterative graph and label loops): this function, spelled
+    *    `.maintCheckpoint()`. The read side may come back coalesced
+    *    ([[adaptiveCoalesce]]); a CPU-heavy consumer spreads itself.
+    *  - **(c) one consumer, or already materialised** (a held frame, a
+    *    frame this function returned): no checkpoint at all.
+    *
+    * Result-identical in every mode; what varies is WHERE the
+    * materialized rows live and how many times the subtree runs:
     *
     *  - **cluster** (non-local master AND a checkpoint directory
     *    configured): RELIABLE `df.checkpoint()` — the rounds land on
@@ -89,8 +101,8 @@ object Sources {
       case _ => ck
     }
 
-  /** Suffix-form syntax for [[truncatingCheckpoint]] so the ~30
-    * maintenance call sites stay one-word.
+  /** Suffix-form syntax for [[truncatingCheckpoint]] — case (b) of the
+    * policy, maintenance materializations and driver loops alike.
     */
   private[graft] implicit class MaintCheckpointSyntax(private val df: DataFrame) extends AnyVal {
     def maintCheckpoint(): DataFrame = Sources.truncatingCheckpoint(df)
@@ -257,8 +269,7 @@ object Sources {
     */
   def writeIvfCells(embeddings: DataFrame, path: String,
                     nlist: Int): DataFrame = {
-    val centroids = graft.ops.Similarity
-      .kmeansCentroids(embeddings, nlist).maintCheckpoint()
+    val centroids = graft.ops.Similarity.kmeansCentroids(embeddings, nlist)
     val assigned = graft.ops.Similarity.assignCells(embeddings, centroids)
     writePartitioned(assigned, path, "cell")
     centroids

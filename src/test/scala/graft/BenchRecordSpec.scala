@@ -169,6 +169,22 @@ class BenchRecordSpec extends AnyFunSuite {
       rec.epoch === 2 && rec.cpus === Some(cpus), rec)
   }
 
+  test("the outlier defense reads the same-core, same-epoch record the " +
+      "run writes beside, and none when only a mismatched record exists") {
+    val path = java.nio.file.Files.createTempDirectory("graft-benchref")
+      .resolve("bench_full.json").toString
+    // an untagged record: 32-core, epoch 1 — mismatched at any core
+    // count (core count or epoch)
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(path),
+      """{"qa": 0.100, "qb": 0.100, "_runs": 4, "_sf": "/x/sf0.1"}""")
+    assert(Bench.readRef(path) === Map.empty)
+    // this run's record lands beside it, and the reference follows it
+    Bench.writeFull(Seq("qa" -> 2.0, "qb" -> 3.0), "/x/sf0.1",
+      pathOverride = Some(path))
+    assert(Bench.recordPath(path) !== path)
+    assert(Bench.readRef(path) === Map("qa" -> 2.0, "qb" -> 3.0))
+  }
+
   test("writeFull stamps _cpus and a same-cpus merge still floors") {
     val cpus = GraftSession.harnessCpus
     val path = java.nio.file.Files

@@ -135,6 +135,24 @@ class StoredProbeSpec extends SparkTestBase {
     }
   }
 
+  test("trained artifacts are held on the driver, and a small IVFADC " +
+      "build runs its pinned job count") {
+    val unit = emb.select(col("vec_id"),
+      Similarity.normalized(col("embedding")).as("embedding"))
+    assert(isLocal(Similarity.kmeansCentroids(emb, 16)))
+    assert(isLocal(Similarity.pqCodebooks(unit)))
+    // sqTopK's encode and decode both read the one-row params held
+    val sqPlan = Similarity.sqTopK(emb, 8, 5).queryExecution.analyzed
+    assert(sqPlan.collect {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+        if l.output.map(_.name) == Seq("mns", "sps") => l
+    }.nonEmpty, "sqTopK's params are not a local relation")
+    // an added checkpoint shows up as extra jobs here (50 alone, 51
+    // after the suites before it: the two training chains run at once)
+    val (_, n) = jobs(Similarity.ivfpqBuildIndex(emb, tmp("ivfpq-pin"), 16).count())
+    assert(n <= 51, s"ivfpqBuildIndex ran $n jobs, pinned at 51")
+  }
+
   test("held components: no entry survives the context's stop()") {
     val (iv, _, _) = layouts
     Similarity.ivfpqProbeStored(emb, iv, 4, 5).collect()

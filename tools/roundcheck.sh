@@ -1,10 +1,20 @@
 #!/usr/bin/env bash
-# Full pre-round-end validation: oracle compare at every SF, cross-
-# parallelism determinism, plan audit, weak-scaling byte gates, the
-# engine benchmark's selftest, test suite, bench line.
+# Full pre-round-end validation: the ops materialisation-idiom grep,
+# oracle compare at every SF, cross-parallelism determinism, plan
+# audit, weak-scaling byte gates, the engine benchmark's selftest,
+# test suite, bench line.
 # Usage: tools/roundcheck.sh   (from the repo root; ~25 min)
 set -euo pipefail
 cd "$(dirname "$0")/.."
+
+echo "== materialisation idioms =="
+# ops materialise through Sources.hold (bounded frames) or
+# .maintCheckpoint() (corpus-sized, several consumers) only
+if grep -rn 'localCheckpoint(' src/main/scala/graft/ops/ ||
+   grep -rn 'iterCheckpoint' src/main; then
+  echo "FAIL: raw localCheckpoint( in graft/ops or iterCheckpoint in src/main"
+  exit 1
+fi
 
 echo "== tests =="
 sbt -batch test | grep -E 'Tests:|All tests'
