@@ -212,18 +212,12 @@ object Bench {
     // take 3 passes: the probe is instantaneous and a merge run's
     // minimums become the committed record, so the stronger defense is
     // worth its cost there (and merge runs are builder-side, off the
-    // driver's budget). SPARK_GRAFT_PASSES overrides for experiments —
-    // parsed defensively (non-numeric or <1 falls back to the
-    // adaptive default rather than throwing after the warmup pass was
-    // already paid).
+    // driver's budget).
     val mergeRun = sys.env.get("SPARK_GRAFT_BENCH_MERGE").contains("1")
-    val nPasses = sys.env.get("SPARK_GRAFT_PASSES")
-      .flatMap(_.toIntOption).filter(_ >= 1)
-      .getOrElse {
-        if (mergeRun) 3
-        else if (probeIndex.exists(_ <= 1.1)) 2
-        else 3
-      }
+    val nPasses =
+      if (mergeRun) 3
+      else if (probeIndex.exists(_ <= 1.1)) 2
+      else 3
     System.err.println(s"[bench] timed passes: $nPasses")
     val passes = (0 until nPasses).map { i =>
       val order = new scala.util.Random(7919 * (i + 1)).shuffle(names)

@@ -6,7 +6,8 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Measurement harness (optimization guide §1): run ONE registry query
   * repeatedly on a [[GraftSession]] (so the extension's planner rules
-  * are in the plans) and print a per-Spark-job breakdown — submission
+  * are in the plans) and print, for every run, a per-Spark-job
+  * breakdown — submission
   * gap, duration, and the call site of the job's result stage — plus
   * each run's codegen compile count and compile time, its file-listing
   * jobs, and the files its scans discovered by listing against those
@@ -76,17 +77,15 @@ object ProfileQuery {
       System.err.println(f"    codegen: $compiles compiles, $compileMs%.0f ms compiling")
       System.err.println(s"    listing: ${recs.count(_.listing)} listing jobs, " +
         s"$discovered files discovered, $cacheHits file-cache hits")
-      if (r == nRuns - 1 || sys.env.contains("GRAFT_PROFILE_ALL")) {
-        var prevEnd = recs.headOption.map(_.start).getOrElse(0L)
-        recs.foreach { j =>
-          val gap = (j.start - prevEnd) / 1e3
-          val dur = math.max(0L, j.end - j.start) / 1e3
-          prevEnd = math.max(prevEnd, j.end)
-          val mark = if (dur >= 0.2 || gap >= 0.2) " *" else ""
-          System.err.println(
-            f"  job ${j.id}%4d  gap=$gap%6.2f  dur=$dur%6.2f  " +
-              f"tasks=${j.nTasks}%4d  ${j.site.take(90)}$mark")
-        }
+      var prevEnd = recs.headOption.map(_.start).getOrElse(0L)
+      recs.foreach { j =>
+        val gap = (j.start - prevEnd) / 1e3
+        val dur = math.max(0L, j.end - j.start) / 1e3
+        prevEnd = math.max(prevEnd, j.end)
+        val mark = if (dur >= 0.2 || gap >= 0.2) " *" else ""
+        System.err.println(
+          f"  job ${j.id}%4d  gap=$gap%6.2f  dur=$dur%6.2f  " +
+            f"tasks=${j.nTasks}%4d  ${j.site.take(90)}$mark")
       }
     }
     spark.stop()

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.sources.{IndexFS, Snapshot, Sources, StoredLayout}
+import graft.sources.{Snapshot, Sources, StoredLayout}
 import graft.sources.Sources.MaintCheckpointSyntax
 
 /** Deduplication operators over `documents` — the LLM-pipeline dedup
@@ -502,9 +502,9 @@ object Dedup {
       .select(col("hist_id"), col("band_idx").cast("int").as("band_idx"),
         col("band_key"))
     val b0 = shape(snap.read(spark, comp)
-      .filter(pairs.map { case (b, kb) =>
+      .filter(Sources.anyOf(pairs.map { case (b, kb) =>
         col("band_idx") === b && col("kb") === kb.toInt
-      }.reduceOption(_ || _).getOrElse(lit(false))))
+      })))
     // delta segments are batch-sized and unbucketed — served whole,
     // like BM25's LSM deltas, until a compaction folds them
     snap.readOpt(spark, s"${comp}_delta") match {
@@ -581,12 +581,12 @@ object Dedup {
   def dedupAdmit(batch: DataFrame, base: String, w: Int = 3,
                  threshold: Double = 0.3,
                  docsPerSegFile: Long = defaultDocsPerSegFile): DataFrame =
-      IndexFS.withWriterLease(base) {
+      Snapshot.transact(base) { txn =>
     val spark = batch.sparkSession
     StoredLayout.requireBuilt(base, "dedup")
     // ONE manifest resolution pins the whole admission pass; serve
     // base ∪ delta segments for every artifact
-    val snap = Snapshot.require(base)
+    val snap = txn.snap
     val (kB, dB) = bucketGeometry(base)
     val b = batch.maintCheckpoint()
     val sizesH = {
@@ -659,10 +659,8 @@ object Dedup {
           col("band_key"))
         .withColumn("seg", lit(segId))
 
-      // the three delta segments flip in ONE manifest publish — a
-      // crash can no longer leave bands landed with sizes missing
-      // (the partially-appended-replay window shrinks to zero)
-      val txn = Snapshot.begin(base)
+      // the three delta segments flip in ONE manifest publish: a crash
+      // never leaves bands landed with sizes missing
       txn.writeParts(admBands.repartition(col("band_idx")),
         "bands_delta", Seq("seg", "band_idx"),
         (0 until numBands).map(i => Seq(segId, i.toString)))
@@ -677,7 +675,6 @@ object Dedup {
         sh.groupBy(col("doc_id")).agg(count(lit(1)).as("szh"))
           .withColumn("seg", lit(segId)),
         "sizes_delta", Seq("seg"), Seq(Seq(segId)))
-      txn.commit()
     }
     b.select(col("doc_id"))
       .join(verdicts, Seq("doc_id"), "left")

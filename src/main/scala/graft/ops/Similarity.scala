@@ -1459,40 +1459,38 @@ object Similarity {
       IndexFS.withWriterLease(base) {
     val spark = embeddings.sparkSession
     ensureIvfpqFresh(embeddings, base, nlist)
-    val snap = Snapshot.require(base)
-    val cells = snap.read(spark, "cells")
-      .select(col("vec_id"), col("embedding"), col("cell").cast("long").as("cell"))
-      .maintCheckpoint() // one read feeds counts, pivots, and assignment
-    val counts = cells.groupBy(col("cell")).agg(count(lit(1)).as("n"))
-    val total = cells.agg(count(lit(1)).as("n_total"))
-    // hot iff n > (hotFactorPct/100)× the mean cell — exact integers.
-    // Production pairs this with ivfpqHealth's 200; the registry
-    // instance runs at 110 so the near-balanced fixtures still
-    // exercise the split machinery
-    val hot = counts.join(broadcast(total))
-      .filter(col("n") * lit(nlist.toLong) * lit(100L) >
-        col("n_total") * lit(hotFactorPct.toLong))
-      .select(col("cell"))
-    val resplit = resplitAssignment(cells, hot,
-      snap.read(spark, "centroids"), nlist)
-      .maintCheckpoint() // feeds the staging write AND the report
-    val splitRows = resplit.filter(col("pe").isNotNull)
-      .select(col("vec_id"), col("embedding"), col("new_cell").as("cell"))
-    // the staged split cells' ids — ≤ 2·nlist values (each hot cell
-    // yields its own id and id+nlist), so the collect is metadata-size
-    val splitCells = splitRows.select(col("cell")).distinct()
-      .collect().map(r => Seq(r.getLong(0).toString)).toSeq
-    if (splitCells.nonEmpty) {
-      val txn = Snapshot.begin(base)
-      txn.writeParts(splitRows, "cells_resplit", Seq("cell"), splitCells)
-      txn.commit()
+    Snapshot.transact(base) { txn =>
+      val cells = txn.snap.read(spark, "cells")
+        .select(col("vec_id"), col("embedding"), col("cell").cast("long").as("cell"))
+        .maintCheckpoint() // one read feeds counts, pivots, and assignment
+      val counts = cells.groupBy(col("cell")).agg(count(lit(1)).as("n"))
+      val total = cells.agg(count(lit(1)).as("n_total"))
+      // hot iff n > (hotFactorPct/100)× the mean cell — exact integers.
+      // Production pairs this with ivfpqHealth's 200; the registry
+      // instance runs at 110 so the near-balanced fixtures still
+      // exercise the split machinery
+      val hot = counts.join(broadcast(total))
+        .filter(col("n") * lit(nlist.toLong) * lit(100L) >
+          col("n_total") * lit(hotFactorPct.toLong))
+        .select(col("cell"))
+      val resplit = resplitAssignment(cells, hot,
+        txn.snap.read(spark, "centroids"), nlist)
+        .maintCheckpoint() // feeds the staging write AND the report
+      val splitRows = resplit.filter(col("pe").isNotNull)
+        .select(col("vec_id"), col("embedding"), col("new_cell").as("cell"))
+      // the staged split cells' ids — ≤ 2·nlist values (each hot cell
+      // yields its own id and id+nlist), so the collect is metadata-size
+      val splitCells = splitRows.select(col("cell")).distinct()
+        .collect().map(r => Seq(r.getLong(0).toString)).toSeq
+      if (splitCells.nonEmpty)
+        txn.writeParts(splitRows, "cells_resplit", Seq("cell"), splitCells)
+      resplit.groupBy(col("new_cell"))
+        .agg(min(col("cell")).as("parent_cell"),
+          count(lit(1)).as("n_members"))
+        .select(col("new_cell"), col("parent_cell"), col("n_members"),
+          (col("new_cell") >= nlist).as("is_split_half"))
+        .orderBy(col("new_cell"))
     }
-    resplit.groupBy(col("new_cell"))
-      .agg(min(col("cell")).as("parent_cell"),
-        count(lit(1)).as("n_members"))
-      .select(col("new_cell"), col("parent_cell"), col("n_members"),
-        (col("new_cell") >= nlist).as("is_split_half"))
-      .orderBy(col("new_cell"))
   }
 
   /** PROBE over the RESPLIT serving generation — what makes
@@ -1680,9 +1678,9 @@ object Similarity {
     * what the registry oracle re-derives.
     */
   def ivfpqAppend(batch: DataFrame, base: String): Unit =
-      IndexFS.withWriterLease(base) {
+      Snapshot.transact(base) { txn =>
     val spark = batch.sparkSession
-    val snap = Snapshot.require(base)
+    val snap = txn.snap
     val centroids = snap.read(spark, "centroids")
     val codebooks = snap.read(spark, "codebooks")
     val assigned =
@@ -1712,12 +1710,9 @@ object Similarity {
     // defensive materialization needed)
     if (affected.nonEmpty) { // an empty batch is a no-op
       val parts = affected.map(c => Seq(c.toString))
-      val txn = Snapshot.begin(base)
       txn.writeParts(mergedCells, "cells", Seq("cell"), parts)
       txn.writeParts(mergedCodes, "codes", Seq("cell"), parts)
-      txn.commit()
     }
-    ()
   }
 
   /** DELETE vectors from the stored IVFADC layout — tombstoned, same
@@ -1737,27 +1732,21 @@ object Similarity {
     * spec-proven — because the tombstoned probe was already exact.
     */
   def ivfpqCompact(spark: org.apache.spark.sql.SparkSession,
-                   base: String): Unit = IndexFS.withWriterLease(base) {
-    val snap = Snapshot.require(base)
-    val tomb = snap.readOpt(spark, "tombstones") match {
-      case Some(t) => t
-      case None    => return
-    }
+                   base: String): Unit = Snapshot.transact(base) { txn =>
     // the affected-cell rewrites AND the tombstone clear are one
     // atomic manifest flip — no window where a probe could see the
     // compacted layout with the tombstones still applied (or vice
     // versa), which the old rewrite-then-clear ordering had
-    val txn = Snapshot.begin(base)
-    StoredLayout.rewriteMinusTombstones(snap, txn, "cells", "cell", "vec_id",
-        Seq("vec_id", "embedding", "label"), tomb)
-      .foreach { case (_, affected) =>
-        // codes share the cells' partitioning: rewrite the same cells
-        StoredLayout.rewriteMinusTombstones(snap, txn, "codes", "cell",
-          "vec_id", Seq("vec_id", "codes"), tomb, parts = Some(affected))
-      }
-    txn.dropComp("tombstones")
-    txn.commit()
-    ()
+    txn.snap.readOpt(spark, "tombstones").foreach { tomb =>
+      StoredLayout.rewriteMinusTombstones(txn, "cells", "cell", "vec_id",
+          Seq("vec_id", "embedding", "label"), tomb)
+        .foreach { case (_, affected) =>
+          // codes share the cells' partitioning: rewrite the same cells
+          StoredLayout.rewriteMinusTombstones(txn, "codes", "cell",
+            "vec_id", Seq("vec_id", "codes"), tomb, parts = Some(affected))
+        }
+      txn.dropComp("tombstones")
+    }
   }
 
   /** Maximal Marginal Relevance (Carbonell-Goldstein): diversity-aware

@@ -751,11 +751,10 @@ object Text {
     * string comparisons against it would silently null out.
     */
   private def scrubSegments(spark: org.apache.spark.sql.SparkSession,
-                            snap: Option[Snapshot.Manifest],
                             txn: Snapshot.Txn, comp: String,
                             cols: Seq[String], dropIds: DataFrame,
                             excludeSeg: Option[String] = None): Unit = {
-    val delta0 = snap.flatMap(_.readOpt(spark, comp)) match {
+    val delta0 = txn.snap.readOpt(spark, comp) match {
       case Some(d) => d.withColumn("seg", col("seg").cast("string"))
         .withColumn("bucket", col("bucket").cast("long"))
       case None => return
@@ -873,9 +872,8 @@ object Text {
     * registry oracle checks end-to-end.
     */
   def bm25Append(batch: DataFrame, base: String): Unit =
-      IndexFS.withWriterLease(base) {
+      Snapshot.transact(base) { txn =>
     val spark = batch.sparkSession
-    val snap = Snapshot.require(base)
     // ONE batch tokenize: the positional frame feeds the tf fold AND
     // the positional delta segment
     val posB = positionalPostings(batch)
@@ -887,64 +885,62 @@ object Text {
       .select(col("doc_id"), col("term"), col("tf"), col("bucket"))
       .maintCheckpoint()
     // an empty batch is a no-op
-    if (tfB.isEmpty) return
-    val batchIds = tfB.select(col("doc_id")).distinct()
-    // doc lengths and corpus stats stay merged artifacts: they are
-    // doc-count-sized and one-row — the cheap end of the index
-    val dlB = tfB.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
-    val mergedDl = snap.read(spark, "dl")
-      .join(batchIds, Seq("doc_id"), "left_anti")
-      .unionByName(dlB)
-      .maintCheckpoint() // feeds the dl write AND the stats fold
-    // token-level postings (tf AND positions) append as DELTA SEGMENTS
-    // (Lucene segment semantics: write the new postings, never
-    // read-modify-rewrite the standing ones — the token-level tables
-    // are the index's largest artifacts, and an in-place bucket merge
-    // rewrites most of them for any batch whose vocabulary spans the
-    // buckets). Segment id = order-insensitive hash of the batch's
-    // doc set, so a crash-replayed batch REPLACES its own segments'
-    // ownership (exactly-once) while successive distinct batches
-    // accumulate side by side. The probes shadow base postings by the
-    // union of the delta doc sets; per-term df derives at probe time
-    // from the served postings (bucket-complete across generations),
-    // so no df merge is needed at all.
-    val segId = segmentId(posB)
-    val txn = Snapshot.begin(base)
-    txn.writeFull(mergedDl, "dl")
-    txn.writeFull(mergedDl.agg(count(lit(1)).as("n_docs"),
-      sum(col("dl")).as("tot_dl")), "stats")
-    // a doc RE-appended in a later batch must not survive in an older
-    // segment: scrub it from any other segment that carries it (zero
-    // I/O when batches are disjoint — the common ingestion case); the
-    // scrub joins THIS transaction, so dl/stats, the scrub, and the
-    // new segment all flip atomically
-    scrubSegments(spark, Some(snap), txn, "tf_delta",
-      Seq("doc_id", "term", "tf", "bucket"), batchIds,
-      excludeSeg = Some(segId))
-    scrubSegments(spark, Some(snap), txn, "pos_delta",
-      Seq("doc_id", "pos", "term", "bucket"), batchIds,
-      excludeSeg = Some(segId))
-    // a replayed batch reuses its segment id with possibly different
-    // text: drop the old segment's ENTIRE claim first (whatever
-    // buckets it covered), then claim exactly the buckets this batch
-    // wrote — ownership stays equal to physical data, so "the delta
-    // is gone" remains readable straight off the manifest
-    val segBuckets = tfB.select(col("bucket")).distinct()
-      .collect().map(_.getLong(0)).toSeq.sorted // bounded by bm25Buckets
-    val parts = segBuckets.map(b => Seq(segId, b.toString))
-    Seq("tf_delta", "pos_delta").foreach(txn.dropPrefix(_, Seq(segId)))
-    txn.writeParts(
-      tfB.withColumn("seg", lit(segId))
-        .select(col("seg"), col("doc_id"), col("term"), col("tf"),
-          col("bucket")),
-      "tf_delta", Seq("seg", "bucket"), parts)
-    txn.writeParts(
-      posB.withColumn("seg", lit(segId))
-        .select(col("seg"), col("doc_id"), col("pos"), col("term"),
-          col("bucket")),
-      "pos_delta", Seq("seg", "bucket"), parts)
-    txn.commit()
-    ()
+    if (!tfB.isEmpty) {
+      val batchIds = tfB.select(col("doc_id")).distinct()
+      // doc lengths and corpus stats stay merged artifacts: they are
+      // doc-count-sized and one-row — the cheap end of the index
+      val dlB = tfB.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
+      val mergedDl = txn.snap.read(spark, "dl")
+        .join(batchIds, Seq("doc_id"), "left_anti")
+        .unionByName(dlB)
+        .maintCheckpoint() // feeds the dl write AND the stats fold
+      // token-level postings (tf AND positions) append as DELTA SEGMENTS
+      // (Lucene segment semantics: write the new postings, never
+      // read-modify-rewrite the standing ones — the token-level tables
+      // are the index's largest artifacts, and an in-place bucket merge
+      // rewrites most of them for any batch whose vocabulary spans the
+      // buckets). Segment id = order-insensitive hash of the batch's
+      // doc set, so a crash-replayed batch REPLACES its own segments'
+      // ownership (exactly-once) while successive distinct batches
+      // accumulate side by side. The probes shadow base postings by the
+      // union of the delta doc sets; per-term df derives at probe time
+      // from the served postings (bucket-complete across generations),
+      // so no df merge is needed at all.
+      val segId = segmentId(posB)
+      txn.writeFull(mergedDl, "dl")
+      txn.writeFull(mergedDl.agg(count(lit(1)).as("n_docs"),
+        sum(col("dl")).as("tot_dl")), "stats")
+      // a doc RE-appended in a later batch must not survive in an older
+      // segment: scrub it from any other segment that carries it (zero
+      // I/O when batches are disjoint — the common ingestion case); the
+      // scrub joins THIS transaction, so dl/stats, the scrub, and the
+      // new segment all flip atomically
+      scrubSegments(spark, txn, "tf_delta",
+        Seq("doc_id", "term", "tf", "bucket"), batchIds,
+        excludeSeg = Some(segId))
+      scrubSegments(spark, txn, "pos_delta",
+        Seq("doc_id", "pos", "term", "bucket"), batchIds,
+        excludeSeg = Some(segId))
+      // a replayed batch reuses its segment id with possibly different
+      // text: drop the old segment's ENTIRE claim first (whatever
+      // buckets it covered), then claim exactly the buckets this batch
+      // wrote — ownership stays equal to physical data, so "the delta
+      // is gone" remains readable straight off the manifest
+      val segBuckets = tfB.select(col("bucket")).distinct()
+        .collect().map(_.getLong(0)).toSeq.sorted // bounded by bm25Buckets
+      val parts = segBuckets.map(b => Seq(segId, b.toString))
+      Seq("tf_delta", "pos_delta").foreach(txn.dropPrefix(_, Seq(segId)))
+      txn.writeParts(
+        tfB.withColumn("seg", lit(segId))
+          .select(col("seg"), col("doc_id"), col("term"), col("tf"),
+            col("bucket")),
+        "tf_delta", Seq("seg", "bucket"), parts)
+      txn.writeParts(
+        posB.withColumn("seg", lit(segId))
+          .select(col("seg"), col("doc_id"), col("pos"), col("term"),
+            col("bucket")),
+        "pos_delta", Seq("seg", "bucket"), parts)
+    }
   }
 
   /** Hybrid retrieval: reciprocal-rank fusion (Cormack et al. 2009 —
@@ -1009,43 +1005,42 @@ object Text {
       IndexFS.withWriterLease(base) {
     val spark = documents.sparkSession
     ensureBm25Fresh(documents, base)
-    val tf = Snapshot.require(base).read(spark, "tf")
-      .select(col("doc_id"), col("term"), col("tf"),
-        col("bucket").cast("long").as("bucket"))
-      .maintCheckpoint() // one read feeds counts and the split
-    val counts = tf.groupBy(col("bucket")).agg(count(lit(1)).as("n"))
-    val total = tf.agg(count(lit(1)).as("n_total"))
-    val hot = counts.join(broadcast(total))
-      .filter(col("n") * lit(bm25Buckets.toLong) * lit(100L) >
-        col("n_total") * lit(hotFactorPct.toLong))
-      .select(col("bucket"), lit(true).as("is_hot"))
-    val sub = pmod(expr(s"h div $bm25Buckets"), lit(2L))
-    val split = tf
-      .join(broadcast(hot), Seq("bucket"), "left")
-      .withColumn("h", tokenHash(col("term")))
-      .withColumn("new_bucket",
-        when(col("is_hot").isNull, col("bucket"))
-          .otherwise(col("bucket") + lit(bm25Buckets.toLong) * sub))
-      .maintCheckpoint() // feeds the staging write AND the report
-    val splitRows = split.filter(col("is_hot").isNotNull)
-      .select(col("doc_id"), col("term"), col("tf"),
-        col("new_bucket").as("bucket"))
-    // the staged split buckets' ids — ≤ 2·bm25Buckets values, so the
-    // collect is metadata-size
-    val splitBuckets = splitRows.select(col("bucket")).distinct()
-      .collect().map(r => Seq(r.getLong(0).toString)).toSeq
-    if (splitBuckets.nonEmpty) {
-      val txn = Snapshot.begin(base)
-      txn.writeParts(splitRows, "tf_resplit", Seq("bucket"), splitBuckets)
-      txn.commit()
+    Snapshot.transact(base) { txn =>
+      val tf = txn.snap.read(spark, "tf")
+        .select(col("doc_id"), col("term"), col("tf"),
+          col("bucket").cast("long").as("bucket"))
+        .maintCheckpoint() // one read feeds counts and the split
+      val counts = tf.groupBy(col("bucket")).agg(count(lit(1)).as("n"))
+      val total = tf.agg(count(lit(1)).as("n_total"))
+      val hot = counts.join(broadcast(total))
+        .filter(col("n") * lit(bm25Buckets.toLong) * lit(100L) >
+          col("n_total") * lit(hotFactorPct.toLong))
+        .select(col("bucket"), lit(true).as("is_hot"))
+      val sub = pmod(expr(s"h div $bm25Buckets"), lit(2L))
+      val split = tf
+        .join(broadcast(hot), Seq("bucket"), "left")
+        .withColumn("h", tokenHash(col("term")))
+        .withColumn("new_bucket",
+          when(col("is_hot").isNull, col("bucket"))
+            .otherwise(col("bucket") + lit(bm25Buckets.toLong) * sub))
+        .maintCheckpoint() // feeds the staging write AND the report
+      val splitRows = split.filter(col("is_hot").isNotNull)
+        .select(col("doc_id"), col("term"), col("tf"),
+          col("new_bucket").as("bucket"))
+      // the staged split buckets' ids — ≤ 2·bm25Buckets values, so the
+      // collect is metadata-size
+      val splitBuckets = splitRows.select(col("bucket")).distinct()
+        .collect().map(r => Seq(r.getLong(0).toString)).toSeq
+      if (splitBuckets.nonEmpty)
+        txn.writeParts(splitRows, "tf_resplit", Seq("bucket"), splitBuckets)
+      split.groupBy(col("new_bucket"))
+        .agg(min(col("bucket")).as("parent_bucket"),
+          count(lit(1)).as("n_postings"),
+          countDistinct(col("term")).as("n_terms"))
+        .select(col("new_bucket"), col("parent_bucket"), col("n_postings"),
+          col("n_terms"), (col("new_bucket") >= bm25Buckets).as("is_split_half"))
+        .orderBy(col("new_bucket"))
     }
-    split.groupBy(col("new_bucket"))
-      .agg(min(col("bucket")).as("parent_bucket"),
-        count(lit(1)).as("n_postings"),
-        countDistinct(col("term")).as("n_terms"))
-      .select(col("new_bucket"), col("parent_bucket"), col("n_postings"),
-        col("n_terms"), (col("new_bucket") >= bm25Buckets).as("is_split_half"))
-      .orderBy(col("new_bucket"))
   }
 
   /** DELETE documents from the stored BM25 layout — tombstoned: the
@@ -1070,50 +1065,45 @@ object Text {
     * registry oracle checks end-to-end.
     */
   def bm25Compact(spark: org.apache.spark.sql.SparkSession,
-                  base: String): Unit = IndexFS.withWriterLease(base) {
-    val snap = Snapshot.require(base)
-    val tomb = snap.readOpt(spark, "tombstones") match {
-      case Some(t) => t.maintCheckpoint() // feeds every rewrite below
-      case None    => return
-    }
+                  base: String): Unit = Snapshot.transact(base) { txn =>
     // the bucket rewrites, the dl/stats refresh, the delta scrubs, and
     // the tombstone clear all flip in ONE manifest publish: a probe
     // racing the compaction serves either the tombstoned layout or the
     // fully compacted one — no window where the sidecar is gone while
     // stale postings still serve
-    val txn = Snapshot.begin(base)
-    // the kept postings feed the tf stage AND the df re-derive
-    StoredLayout.rewriteMinusTombstones(snap, txn, "tf", "bucket", "doc_id",
-        Seq("doc_id", "term", "tf"), tomb, checkpoint = true)
-      .foreach { case (tfAff, affected) =>
-        txn.writeParts(
-          tfAff.groupBy(col("term")).agg(count(lit(1)).as("df"))
-            .withColumn("bucket", termBucket(col("term"))),
-          "df", Seq("bucket"), affected.map(b => Seq(b.toString)))
-        StoredLayout.rewriteMinusTombstones(snap, txn, "pos", "bucket",
-          "doc_id", Seq("doc_id", "pos", "term"), tomb)
-      }
-    // Everything below runs whether or not any BASE bucket was hit: a
-    // doc appended after the build lives ONLY in delta segments and dl,
-    // so gating it on base-postings membership would resurrect the doc
-    // the moment the sidecar clears (found by the total-wipe spec).
-    // doc lengths and corpus stats drop the tombstoned docs…
-    val dl = snap.read(spark, "dl")
-      .join(broadcast(tomb), Seq("doc_id"), "left_anti")
-      .maintCheckpoint() // feeds the dl write AND the stats fold
-    txn.writeFull(dl, "dl")
-    txn.writeFull(dl.agg(count(lit(1)).as("n_docs"),
-      sum(col("dl")).as("tot_dl")), "stats")
-    // …and the delta segments (tf and positions) drop theirs; only
-    // (seg, bucket) partitions actually carrying a tombstoned doc
-    // rewrite, and an emptied-out partition just loses its ownership
-    scrubSegments(spark, Some(snap), txn, "tf_delta",
-      Seq("doc_id", "term", "tf", "bucket"), tomb)
-    scrubSegments(spark, Some(snap), txn, "pos_delta",
-      Seq("doc_id", "pos", "term", "bucket"), tomb)
-    txn.dropComp("tombstones")
-    txn.commit()
-    ()
+    txn.snap.readOpt(spark, "tombstones").foreach { t =>
+      val tomb = t.maintCheckpoint() // feeds every rewrite below
+      // the kept postings feed the tf stage AND the df re-derive
+      StoredLayout.rewriteMinusTombstones(txn, "tf", "bucket", "doc_id",
+          Seq("doc_id", "term", "tf"), tomb, checkpoint = true)
+        .foreach { case (tfAff, affected) =>
+          txn.writeParts(
+            tfAff.groupBy(col("term")).agg(count(lit(1)).as("df"))
+              .withColumn("bucket", termBucket(col("term"))),
+            "df", Seq("bucket"), affected.map(b => Seq(b.toString)))
+          StoredLayout.rewriteMinusTombstones(txn, "pos", "bucket",
+            "doc_id", Seq("doc_id", "pos", "term"), tomb)
+        }
+      // Everything below runs whether or not any BASE bucket was hit: a
+      // doc appended after the build lives ONLY in delta segments and
+      // dl, so gating it on base-postings membership would resurrect
+      // the doc the moment the sidecar clears (found by the total-wipe
+      // spec). doc lengths and corpus stats drop the tombstoned docs…
+      val dl = txn.snap.read(spark, "dl")
+        .join(broadcast(tomb), Seq("doc_id"), "left_anti")
+        .maintCheckpoint() // feeds the dl write AND the stats fold
+      txn.writeFull(dl, "dl")
+      txn.writeFull(dl.agg(count(lit(1)).as("n_docs"),
+        sum(col("dl")).as("tot_dl")), "stats")
+      // …and the delta segments (tf and positions) drop theirs; only
+      // (seg, bucket) partitions actually carrying a tombstoned doc
+      // rewrite, and an emptied-out partition just loses its ownership
+      scrubSegments(spark, txn, "tf_delta",
+        Seq("doc_id", "term", "tf", "bucket"), tomb)
+      scrubSegments(spark, txn, "pos_delta",
+        Seq("doc_id", "pos", "term", "bucket"), tomb)
+      txn.dropComp("tombstones")
+    }
   }
 
   /** md5-stub embedding: one hex pair per dimension, exact /255 — the
@@ -1475,15 +1465,6 @@ object Text {
       serve("uni", Seq("w1"), "n_w1"))
   }
 
-  /** APPEND to the stored LM: extend the reference corpus. Only
-    * documents never seen in any generation count (anti-join the
-    * recorded reference doc sets); their bigram/unigram counts land
-    * as a delta segment keyed by the order-insensitive hash of the
-    * new-doc set — a crash-replayed batch overwrites its OWN segment
-    * (the [[bm25Append]] device), and serving sums counts per key
-    * across generations, so the merged model is exactly the
-    * from-scratch model over the unioned reference.
-    */
   /** Every doc id ever recorded in any generation — including removed
     * ones: a deleted id is BURNED (the count algebra can't tell one
     * re-entry from a replay, so re-ingestion happens under a new id —
@@ -1512,32 +1493,39 @@ object Text {
     d
   }
 
+  /** APPEND to the stored LM: extend the reference corpus. Only
+    * documents never seen in any generation count (anti-join the
+    * recorded reference doc sets); their bigram/unigram counts land
+    * as a delta segment keyed by the order-insensitive hash of the
+    * new-doc set — a crash-replayed batch overwrites its OWN segment
+    * (the [[bm25Append]] device), and serving sums counts per key
+    * across generations, so the merged model is exactly the
+    * from-scratch model over the unioned reference.
+    */
   def lmAppend(batch: DataFrame, base: String): Unit =
-      IndexFS.withWriterLease(base) {
+      Snapshot.transact(base) { txn =>
     val spark = batch.sparkSession
-    val snap = Snapshot.require(base)
-    val fresh = batch.join(lmEverSeen(spark, snap), Seq("doc_id"),
+    val fresh = batch.join(lmEverSeen(spark, txn.snap), Seq("doc_id"),
         "left_anti")
       .maintCheckpoint()
     if (!fresh.isEmpty) {
       val segId = segmentId(fresh)
       val pr = bigramPairs(fresh).maintCheckpoint()
       // the three delta segments flip in ONE manifest publish — no
-      // window where the counts serve without the doc-set record (the
-      // old write order existed only to keep a crash replayable)
-      lmWriteSegment(pr, fresh, segId, negate = false,
-        docsComp = "docs_delta", base = base)
+      // window where the counts serve without the doc-set record
+      lmWriteSegment(txn, pr, fresh, segId, negate = false,
+        docsComp = "docs_delta")
     }
   }
 
   /** Stage one LM delta segment (bigram + unigram counts and its doc
-    * set) and publish it atomically — shared by [[lmAppend]] (positive
-    * counts into `docs_delta`) and [[lmDelete]] (negated counts into
+    * set) into `txn` — shared by [[lmAppend]] (positive counts into
+    * `docs_delta`) and [[lmDelete]] (negated counts into
     * `docs_removed`).
     */
-  private def lmWriteSegment(pr: DataFrame, docs: DataFrame, segId: String,
-                             negate: Boolean, docsComp: String,
-                             base: String): Unit = {
+  private def lmWriteSegment(txn: Snapshot.Txn, pr: DataFrame, docs: DataFrame,
+                             segId: String, negate: Boolean,
+                             docsComp: String): Unit = {
     val cnt = if (negate) -count(lit(1)) else count(lit(1))
     val bi = pr.groupBy(col("w1"), col("w2")).agg(cnt.as("n_pair"))
       .withColumn("bucket", termBucket(col("w1")))
@@ -1549,7 +1537,6 @@ object Text {
     val segBuckets = bi.select(col("bucket")).distinct()
       .collect().map(_.getLong(0)).toSeq.sorted // bounded by bm25Buckets
     val parts = segBuckets.map(b => Seq(segId, b.toString))
-    val txn = Snapshot.begin(base)
     Seq("bi_delta", "uni_delta").foreach(txn.dropPrefix(_, Seq(segId)))
     if (parts.nonEmpty) { // all-single-token docs carry no bigrams
       txn.writeParts(bi, "bi_delta", Seq("seg", "bucket"), parts)
@@ -1563,8 +1550,6 @@ object Text {
     txn.writeParts(
       docs.select(col("doc_id")).withColumn("seg", lit(segId)),
       docsComp, Seq("seg"), Seq(Seq(segId)))
-    txn.commit()
-    ()
   }
 
   /** DELETE from the stored LM: remove reference documents by
@@ -1574,23 +1559,19 @@ object Text {
     * [[lmModel]]). Only documents currently IN the model subtract
     * (idempotent: a replayed delete finds its victims already
     * removed); the victims' ids are recorded so the removal is
-    * tracked and a removed id never re-enters. Write order (counts
-    * first, the removal record last) keeps a mid-crash replay exact:
-    * the recomputed victim set and segment id are identical, so the
-    * replay overwrites its own partial segment.
+    * tracked and a removed id never re-enters.
     */
   def lmDelete(victims: DataFrame, base: String): Unit =
-      IndexFS.withWriterLease(base) {
+      Snapshot.transact(base) { txn =>
     val spark = victims.sparkSession
-    val snap = Snapshot.require(base)
     val targets = victims
-      .join(lmServedDocs(spark, snap), Seq("doc_id"), "left_semi")
+      .join(lmServedDocs(spark, txn.snap), Seq("doc_id"), "left_semi")
       .maintCheckpoint()
     if (!targets.isEmpty) {
       val segId = "del" + segmentId(targets)
       val pr = bigramPairs(targets).maintCheckpoint()
-      lmWriteSegment(pr, targets, segId, negate = true,
-        docsComp = "docs_removed", base = base)
+      lmWriteSegment(txn, pr, targets, segId, negate = true,
+        docsComp = "docs_removed")
     }
   }
 
@@ -1612,29 +1593,26 @@ object Text {
     * every delta component. A crash before the publish leaves the
     * generations standing (a replay refolds from them); after it the
     * deltas are gone from the manifest, so a replay is a clean no-op.
-    * This retires the bespoke `_COMPACT_COMMIT` two-phase protocol —
-    * the manifest IS the commit point. `onStep` forwards to the
-    * snapshot commit's fault-injection hook: (1) fold staged,
-    * manifest not yet published; (2) published; (3) GC done.
+    * `onStep` forwards to the snapshot commit's fault-injection hook:
+    * (1) fold staged, manifest not yet published; (2) published;
+    * (3) GC done.
     */
   def lmCompact(spark: org.apache.spark.sql.SparkSession,
                 base: String,
                 onStep: Int => Unit = _ => ()): Unit =
-      IndexFS.withWriterLease(base) {
-    val snap = Snapshot.require(base)
+      Snapshot.transact(base, onStep) { txn =>
+    val snap = txn.snap
     val deltaComps = Seq("bi_delta", "uni_delta", "docs_delta",
       "docs_removed")
-    if (!deltaComps.exists(snap.has)) return
-    val (bi, uni) = lmModel(spark, snap)
-    val txn = Snapshot.begin(base)
-    txn.writeFull(bi.withColumn("bucket", termBucket(col("w1"))),
-      "bi", "bucket")
-    txn.writeFull(uni.withColumn("bucket", termBucket(col("w1"))),
-      "uni", "bucket")
-    txn.writeFull(lmServedDocs(spark, snap), "docs")
-    deltaComps.foreach(txn.dropComp)
-    txn.commit(onStep)
-    ()
+    if (deltaComps.exists(snap.has)) {
+      val (bi, uni) = lmModel(spark, snap)
+      txn.writeFull(bi.withColumn("bucket", termBucket(col("w1"))),
+        "bi", "bucket")
+      txn.writeFull(uni.withColumn("bucket", termBucket(col("w1"))),
+        "uni", "bucket")
+      txn.writeFull(lmServedDocs(spark, snap), "docs")
+      deltaComps.foreach(txn.dropComp)
+    }
   }
 
   /** Fuzzy string matching, BLOCKED: a candidate pair must share at

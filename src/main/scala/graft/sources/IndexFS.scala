@@ -309,7 +309,7 @@ object IndexFS {
   }
 
   /** True iff this thread currently holds the writer lease on `base`
-    * — the precondition for snapshot publishes and layout wipes.
+    * — the precondition for layout wipes.
     */
   def holdsLease(base: String): Boolean = held.get().contains(base)
 

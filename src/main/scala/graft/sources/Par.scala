@@ -75,11 +75,9 @@ private[graft] object Par {
 
   /** Join `all`, whose jobs carry `tag`, returning their results in
     * order. The first failure to COMPLETE (a failure must not wait
-    * behind a slow sibling) cancels every job carrying the tag —
-    * repeatedly, while a sibling may still start one — and is rethrown
-    * only once every future has ended and no job carrying the tag
-    * runs: no sibling job is left running and no side effect after a
-    * cancelled job lands.
+    * behind a slow sibling) is rethrown after [[cancelAndDrain]]: no
+    * sibling job is left running and no side effect after a cancelled
+    * job lands.
     */
   def awaitAll[T](spark: SparkSession, tag: String,
                   all: Seq[CompletableFuture[T]]): Seq[T] = {
@@ -88,28 +86,37 @@ private[graft] object Par {
     try CompletableFuture.anyOf(CompletableFuture.allOf(all: _*), firstFailure).join()
     catch { case _: CompletionException => () }
     if (all.exists(_.isCompletedExceptionally)) {
-      val sc = spark.sparkContext
-      all.foreach { f =>
-        while (!f.isDone) {
-          sc.cancelJobsWithTag(tag)
-          try { f.get(100, TimeUnit.MILLISECONDS); () }
-          catch { case _: TimeoutException | _: ExecutionException => () }
-        }
-      }
-      // a cancelled query's own threads (an in-flight broadcast, which
-      // inherits the tag) can still submit a job after its thunk ended:
-      // cancel until no tagged job has run for two checks in a row
-      var quiet = 0
-      while (quiet < 2) {
-        Thread.sleep(20)
-        try ListenerBridge.waitUntilListenerBusEmpty(sc)
-        catch { case _: TimeoutException => () }
-        if (ListenerBridge.runsTagged(sc, tag)) { sc.cancelJobsWithTag(tag); quiet = 0 }
-        else quiet += 1
-      }
+      cancelAndDrain(spark, tag, all)
       throw unwrap(firstFailure.join())
     }
     all.map(await)
+  }
+
+  /** Cancel every job carrying `tag` — repeatedly, while one of `all`
+    * may still start one — until each of `all` has ended and no job
+    * carrying the tag runs. Their results and failures are dropped.
+    */
+  def cancelAndDrain(spark: SparkSession, tag: String,
+                     all: Seq[JFuture[_]]): Unit = {
+    val sc = spark.sparkContext
+    all.foreach { f =>
+      while (!f.isDone) {
+        sc.cancelJobsWithTag(tag)
+        try { f.get(100, TimeUnit.MILLISECONDS); () }
+        catch { case _: TimeoutException | _: ExecutionException => () }
+      }
+    }
+    // a cancelled query's own threads (an in-flight broadcast, which
+    // inherits the tag) can still submit a job after its thunk ended:
+    // cancel until no tagged job has run for two checks in a row
+    var quiet = 0
+    while (quiet < 2) {
+      Thread.sleep(20)
+      try ListenerBridge.waitUntilListenerBusEmpty(sc)
+      catch { case _: TimeoutException => () }
+      if (ListenerBridge.runsTagged(sc, tag)) { sc.cancelJobsWithTag(tag); quiet = 0 }
+      else quiet += 1
+    }
   }
 
   private def unwrap(e: Throwable): Throwable = e match {

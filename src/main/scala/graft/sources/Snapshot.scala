@@ -4,6 +4,7 @@ import java.net.{URLDecoder, URLEncoder}
 import java.nio.charset.StandardCharsets
 
 import scala.jdk.CollectionConverters._
+import scala.util.chaining._
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -52,12 +53,20 @@ import org.apache.spark.sql.types.StructType
   * new leaves, flip one manifest". A crash before the publish leaves
   * unreferenced leaves (reclaimed by grace-period GC) and readers
   * never see them; a crash after the publish is a completed
-  * operation. This retires the bespoke crash protocols the layouts
-  * used to carry (`swapInPlace` rename choreography, the LM
-  * compactor's `_COMPACT_COMMIT` two-phase swap): the manifest IS the
-  * commit point. Generalizes the reference's per-row commit
+  * operation: the manifest IS the commit point. Generalizes the
+  * reference's per-row commit
   * no-partial-visibility contract (Odoo-Batch-Processing.user.js:554-621)
   * to whole-layout maintenance.
+  *
+  * [[transact]] is the one write path. It takes the layout's writer
+  * lease, resolves the base manifest once, and hands the caller's body
+  * a [[Txn]] that stages new leaves and edits ownership against that
+  * manifest. Then it commits. If the body or the commit throws, it
+  * aborts: the staging writes are cancelled and joined, nothing is
+  * deleted, and no published manifest is touched. A transaction that
+  * staged nothing and left ownership unchanged publishes no manifest
+  * and runs no GC, so a conditional maintenance step needs no
+  * transaction of its own.
   *
   * Stamps are random 63-bit values, not a counter: a writer that
   * crashed after writing data but before publishing can never collide
@@ -314,19 +323,19 @@ object Snapshot {
     def tuplesPred(ts: Seq[Seq[String]]): Column =
       if (c.partCols.size == 1)
         col(c.partCols.head).cast("string").isin(ts.map(_.head): _*)
-      else ts.map { t =>
+      else Sources.anyOf(ts.map { t =>
         c.partCols.zip(t).map { case (p, v) =>
           col(p).cast("string") === lit(v)
         }.reduce(_ && _)
-      }.reduce(_ || _)
-    c.owners.map { o =>
+      })
+    Sources.anyOf(c.owners.map { o =>
       val g = col(GSN) === lit(o.gsn)
       o.include match {
         case Some(ts) => if (ts.isEmpty) lit(false) else g && tuplesPred(ts)
         case None =>
           if (o.exclude.isEmpty) g else g && !tuplesPred(o.exclude)
       }
-    }.reduceOption(_ || _).getOrElse(lit(false))
+    })
   }
 
   // ------------------------------------------------------------------
@@ -428,7 +437,7 @@ object Snapshot {
   }
 
   // ------------------------------------------------------------------
-  // Writer side. All under the layout's writer lease.
+  // Writer side: [[transact]] and its [[Txn]].
   // ------------------------------------------------------------------
 
   /** A fresh random 63-bit generation stamp (see the object scaladoc:
@@ -440,20 +449,37 @@ object Snapshot {
     (u.getMostSignificantBits ^ u.getLeastSignificantBits) & Long.MaxValue
   }
 
-  /** Start a snapshot transaction against the latest manifest (or an
-    * empty one). Caller must hold the layout's writer lease —
-    * manifest numbering and ownership arithmetic assume one writer.
-    */
-  def begin(base: String): Txn = {
-    scala.Predef.require(IndexFS.holdsLease(base),
-      s"Snapshot.begin($base) outside the layout's writer lease")
-    new Txn(base, current(base))
+  /** Layouts with a transaction open on this thread ([[transact]]). */
+  private val open = new ThreadLocal[Set[String]] {
+    override def initialValue(): Set[String] = Set.empty
   }
 
-  /** A snapshot transaction: data writes land under a fresh random
-    * generation stamp as they are issued (never touching live files);
-    * ownership mutations accumulate in memory; [[Txn.commit]] flips
-    * them live with one atomic manifest publish, then GCs.
+  /** Run `body` in a snapshot transaction on `base` (see the object
+    * doc), under the writer lease — re-entrant, so a caller whose lease
+    * also covers a freshness gate, an adoption or a wipe keeps it.
+    * `onStep` is [[Txn.commit]]'s fault-injection hook. A second
+    * transaction on `base` opened inside `body` fails: it would commit
+    * ownership computed against a manifest the outer one replaces.
+    */
+  def transact[T](base: String, onStep: Int => Unit = _ => ())
+                 (body: Txn => T): T = {
+    if (open.get.contains(base))
+      throw new IllegalStateException(
+        s"nested snapshot transaction on $base: one is already open on this thread")
+    IndexFS.withWriterLease(base) {
+      open.set(open.get + base)
+      val txn = new Txn(base, current(base))
+      try body(txn).tap(_ => txn.commit(onStep))
+      catch { case e: Throwable => txn.abort(); throw e }
+      finally open.set(open.get - base)
+    }
+  }
+
+  /** A snapshot transaction, opened only by [[transact]]: data writes
+    * land under a fresh random generation stamp as they are issued
+    * (never touching live files); ownership mutations accumulate in
+    * memory; [[commit]] flips them live with one atomic manifest
+    * publish, then GCs.
     */
   final class Txn private[Snapshot] (val base: String,
                                      prev: Option[Manifest]) {
@@ -462,36 +488,39 @@ object Snapshot {
       */
     val gsn: Long = randomStamp()
     private val nextId: Long = prev.map(_.id + 1).getOrElse(1L)
-    private var comps: Map[String, Comp] =
+    private val prevComps: Map[String, Comp] =
       prev.map(_.comps).getOrElse(Map.empty)
-    private var committed = false
+    private var comps: Map[String, Comp] = prevComps
+    private var latest: Option[Manifest] = prev
+
+    /** The base manifest this transaction resolved, or, once it has
+      * committed, the one it published. Fails loudly on a layout with
+      * none (a maintenance op runs after a build).
+      */
+    def snap: Manifest = latest.getOrElse(throw new IllegalStateException(
+      s"stored layout $base has no published snapshot manifest"))
     /** In-flight staging writes; joined (and failures rethrown)
       * before the commit's fold/publish steps. Their jobs carry `tag`,
       * so a failed write cancels its siblings ([[awaitStaged]]).
       */
     private val inflight = scala.collection.mutable.Buffer
       .empty[(SparkSession, java.util.concurrent.CompletableFuture[Unit])]
-    private val tag = Par.newTag()
+    private[graft] val tag = Par.newTag()
 
     /** One data write into a hidden staging directory, one rename
       * into place as `comp/gsn=<stamp>`. The staged subtree is
       * invisible to every reader until the manifest publish: readers
       * only select stamps their resolved manifest owns.
       *
-      * The write runs ASYNCHRONOUSLY (guide §2.6): a transaction that
-      * stages several components — every build writes 3-5, every
-      * append/admit cycle 2-3 — used to run those independent write
-      * jobs strictly one after another, leaving the executors idle in
-      * each job's tail and the driver idle in each commit protocol's
-      * rename. Submitting them from pool threads overlaps job tails,
-      * commit protocols, and the caller's own driver work between
-      * calls; [[commit]] joins every write (rethrowing the first
-      * failure) before any manifest arithmetic that could observe the
-      * staged files. The written bytes, file layout, and ownership
-      * arithmetic order are exactly the sequential formulation's —
-      * each component's frame was independent by construction (all
-      * call sites stage from materialized checkpoints or disjoint
-      * derivations, never from another component's staged output).
+      * The write runs ASYNCHRONOUSLY (guide §2.6): a build stages 3-5
+      * independent components and an append/admit cycle 2-3, and pool
+      * threads overlap their job tails, commit protocols and the
+      * caller's driver work. [[commit]] joins every write (rethrowing
+      * the first failure) before any manifest arithmetic that could
+      * observe the staged files. Bytes, file layout and ownership
+      * arithmetic are the sequential formulation's: every call site
+      * stages from checkpoints or disjoint derivations, never from
+      * another component's staged output.
       */
     private def stageIn(df: DataFrame, comp: String, partCols: Seq[String],
                         stamp: Long = gsn): Unit = {
@@ -516,12 +545,19 @@ object Snapshot {
       * ended ([[Par.awaitAll]]), so no write still renames a leaf into
       * place after the transaction has failed.
       */
-    private def awaitStaged(): Unit = {
-      inflight.headOption.foreach { case (spark, _) =>
+    private def awaitStaged(): Unit =
+      try inflight.headOption.foreach { case (spark, _) =>
         Par.awaitAll(spark, tag, inflight.map(_._2).toSeq)
-      }
-      inflight.clear()
-    }
+      } finally inflight.clear()
+
+    /** End a failed transaction: cancel and join its in-flight staging
+      * writes ([[Par.cancelAndDrain]]). A leaf or `.staging` subtree that
+      * landed first is left to grace-period GC, like a crashed writer's.
+      */
+    private[Snapshot] def abort(): Unit =
+      try inflight.headOption.foreach { case (spark, _) =>
+        Par.cancelAndDrain(spark, tag, inflight.map(_._2).toSeq)
+      } finally inflight.clear()
 
     /** Write `df` as the component's complete new content: this stamp
       * owns every partition it carries (exclude-form owner — no
@@ -673,14 +709,16 @@ object Snapshot {
     /** Publish the accumulated state as the next manifest (atomic
       * exclusive create — the commit point), then garbage-collect
       * generations unreferenced by the kept manifests and older than
-      * the grace period. `onStep` is a fault-injection hook for the
-      * crash-window specs: (1) data written, not yet published;
-      * (2) published — the new snapshot is live; (3) GC done.
+      * the grace period. A transaction that staged nothing and left
+      * ownership unchanged publishes nothing and runs no GC. `onStep`
+      * is a fault-injection hook for the crash-window specs: (1) data
+      * written, not yet published; (2) published — the new snapshot is
+      * live; (3) GC done.
       */
-    def commit(onStep: Int => Unit = _ => ()): Manifest = {
-      scala.Predef.require(!committed, s"snapshot txn on $base: double commit")
-      committed = true
+    private[Snapshot] def commit(onStep: Int => Unit): Unit = {
+      val changed = inflight.nonEmpty || comps != prevComps
       awaitStaged() // all leaves on disk before foldOwners can re-read them
+      if (!changed) return
       foldOwners()
       awaitStaged() // foldOwners stages the folded generations itself
       onStep(1)
@@ -720,10 +758,10 @@ object Snapshot {
         throw new IllegalStateException(
           s"snapshot publish of $path lost a rename race — another " +
             "writer published under our lease (broken lease?)")
+      latest = Some(m)
       onStep(2)
       gc(base)
       onStep(3)
-      m
     }
   }
 

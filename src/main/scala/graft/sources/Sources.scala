@@ -251,6 +251,17 @@ object Sources {
         new Held(ck, if (small) Some(ck.collect().toSeq) else None)
     }
 
+  /** The OR of `cs` as a balanced tree (`lit(false)` when empty): Spark
+    * converts a Column recursively, and a left-deep `reduce(_ || _)`
+    * over thousands of partition tuples overflows the default stack.
+    */
+  private[graft] def anyOf(cs: Seq[Column]): Column = {
+    def tree(v: IndexedSeq[Column]): Column =
+      if (v.size == 1) v.head
+      else { val (l, r) = v.splitAt(v.size / 2); tree(l) || tree(r) }
+    if (cs.isEmpty) lit(false) else tree(cs.toIndexedSeq)
+  }
+
   /** Partitioned parquet sink: one directory per partition value —
     * the layout that makes partition PRUNING work on re-read (filters
     * on the partition column never touch non-matching files).
@@ -366,12 +377,7 @@ object Sources {
     * until GC's grace period passes.
     */
   def writeVersioned(df: DataFrame, base: String): Unit =
-    IndexFS.withWriterLease(base) {
-      val txn = Snapshot.begin(base)
-      txn.writeFull(df, tableComp)
-      txn.commit()
-      ()
-    }
+    Snapshot.transact(base)(_.writeFull(df, tableComp))
 
   /** Upgrade a plain parquet directory to the versioned layout on its
     * first rewrite: stage its rows as a fresh generation, publish,
@@ -394,10 +400,8 @@ object Sources {
   private def adoptIfPlain(spark: SparkSession, base: String): Unit =
     IndexFS.withWriterLease(base) {
       if (!Snapshot.enabled(base) && IndexFS.hasParquet(base)) {
-        val txn = Snapshot.begin(base)
-        txn.writeFull(spark.read.parquet(rootParquetFiles(base): _*),
-          tableComp)
-        txn.commit()
+        Snapshot.transact(base)(_.writeFull(
+          spark.read.parquet(rootParquetFiles(base): _*), tableComp))
         IndexFS.writeString(s"$base/$adoptedMarker",
           System.currentTimeMillis().toString)
       }
@@ -428,15 +432,18 @@ object Sources {
       }
     }
 
-  /** Stage `df` as the table's next generation and publish it,
-    * returning the rows written. The count is observed on the staged
-    * write itself, so no job re-reads the committed table.
+  /** Stage `rewrite` of the (adopted) table as its next generation
+    * and publish it, returning the rows written. The count is observed
+    * on the staged write itself, so no job re-reads the committed
+    * table.
     */
-  private def commitCounted(base: String, df: DataFrame): Long = {
+  private def commitCounted(spark: SparkSession, base: String)
+                           (rewrite: DataFrame => DataFrame): Long = {
     val written = Observation()
-    val txn = Snapshot.begin(base)
-    txn.writeFull(df.observe(written, count(lit(1)).as("rows")), tableComp)
-    txn.commit()
+    Snapshot.transact(base) { txn =>
+      txn.writeFull(rewrite(txn.snap.read(spark, tableComp))
+        .observe(written, count(lit(1)).as("rows")), tableComp)
+    }
     written.get("rows").asInstanceOf[Long]
   }
 
@@ -454,12 +461,11 @@ object Sources {
                         updates: DataFrame, key: String, column: String): Long =
     IndexFS.withWriterLease(targetPath) {
       adoptIfPlain(spark, targetPath)
-      val target = readVersioned(spark, targetPath)
       val upd = updates.select(col(key), col(column).as("__newval"))
-      val merged = target.join(broadcast(upd), Seq(key), "left")
-        .withColumn(column, coalesce(col("__newval"), col(column)))
-        .drop("__newval")
-      commitCounted(targetPath, merged)
+      commitCounted(spark, targetPath)(
+        _.join(broadcast(upd), Seq(key), "left")
+          .withColumn(column, coalesce(col("__newval"), col(column)))
+          .drop("__newval"))
     }
 
   /** O18 registry probe — the MERGE sink end to end, replayable: stage
@@ -506,11 +512,9 @@ object Sources {
              updates: DataFrame, key: String): Long =
     IndexFS.withWriterLease(targetPath) {
       adoptIfPlain(spark, targetPath)
-      val target = readVersioned(spark, targetPath)
-      val merged = target
+      commitCounted(spark, targetPath)(target => target
         .join(broadcast(updates.select(col(key))), Seq(key), "left_anti")
-        .unionByName(updates.select(target.columns.map(col): _*))
-      commitCounted(targetPath, merged)
+        .unionByName(updates.select(target.columns.map(col): _*)))
     }
 
   /** Small-file compaction: rewrite a directory into ⌈rows/target⌉
@@ -523,12 +527,12 @@ object Sources {
   def compact(spark: SparkSession, path: String, rowsPerFile: Long): Long =
     IndexFS.withWriterLease(path) {
       adoptIfPlain(spark, path)
-      val df = readVersioned(spark, path)
-      val n = df.count()
-      val files = math.max(1L, (n + rowsPerFile - 1) / rowsPerFile).toInt
-      val txn = Snapshot.begin(path)
-      txn.writeFull(df.repartition(files), tableComp)
-      txn.commit()
-      files.toLong
+      Snapshot.transact(path) { txn =>
+        val df = txn.snap.read(spark, tableComp)
+        val n = df.count()
+        val files = math.max(1L, (n + rowsPerFile - 1) / rowsPerFile).toInt
+        txn.writeFull(df.repartition(files), tableComp)
+        files.toLong
+      }
     }
 }

@@ -169,10 +169,7 @@ object StoredLayout {
       * `_VERSION` and `marker` are written.
       */
     def commit(marker: => String)(stage: Snapshot.Txn => Unit): Snapshot.Manifest = {
-      IndexFS.mkdirs(base)
-      val txn = Snapshot.begin(base)
-      stage(txn)
-      val snap = txn.commit()
+      val snap = Snapshot.transact(base) { txn => stage(txn); txn }.snap
       stampVersion(base, kind)
       IndexFS.writeString(markerPath(base), marker)
       if (primePristine) snapshotPristine(base)
@@ -253,16 +250,12 @@ object StoredLayout {
     * anti-join it at once; compaction folds it in later.
     */
   def tombstone(ids: DataFrame, base: String): Unit =
-    IndexFS.withWriterLease(base) {
-      val snap = Snapshot.require(base)
-      val merged = (snap.readOpt(ids.sparkSession, "tombstones") match {
+    Snapshot.transact(base) { txn =>
+      val merged = (txn.snap.readOpt(ids.sparkSession, "tombstones") match {
           case Some(t) => t.unionByName(ids)
           case None    => ids
         }).distinct()
-      val txn = Snapshot.begin(base)
       txn.writeFull(merged, "tombstones")
-      txn.commit()
-      ()
     }
 
   /** `df` minus the rows whose `idCol` is tombstoned in `snap`. */
@@ -272,19 +265,19 @@ object StoredLayout {
       .fold(df)(t => df.join(broadcast(t), Seq(idCol), "left_anti"))
 
   /** COMPACT one component partitioned by `partCol`: stage into `txn`
-    * the partitions holding a tombstoned `idCol` (found by one id-joined
-    * scan, or `parts` from a sibling component) minus those rows, as
-    * (`cols`, `partCol`). Returns the kept rows (checkpointed when a
-    * caller derives more from them) and the partition values; None
-    * when no partition holds a tombstoned id.
+    * the partitions of its base manifest holding a tombstoned `idCol`
+    * (found by one id-joined scan, or `parts` from a sibling component)
+    * minus those rows, as (`cols`, `partCol`). Returns the kept rows
+    * (checkpointed when a caller derives more from them) and the
+    * partition values; None when no partition holds a tombstoned id.
     */
-  def rewriteMinusTombstones(snap: Snapshot.Manifest, txn: Snapshot.Txn,
+  def rewriteMinusTombstones(txn: Snapshot.Txn,
                              comp: String, partCol: String, idCol: String,
                              cols: Seq[String], tomb: DataFrame,
                              parts: Option[Seq[Long]] = None,
                              checkpoint: Boolean = false)
       : Option[(DataFrame, Seq[Long])] = {
-    val all = snap.read(tomb.sparkSession, comp)
+    val all = txn.snap.read(tomb.sparkSession, comp)
     val affected = parts.getOrElse(all.join(broadcast(tomb), Seq(idCol))
       .select(col(partCol).cast("long")).distinct()
       .collect().map(_.getLong(0)).toSeq.sorted)

@@ -7,7 +7,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.sources.{IndexFS, Snapshot}
+import graft.sources.Snapshot
 
 /** Snapshot reads list each immutable generation leaf once per JVM and
   * infer each leaf set's schema once (bounded), while returning exactly
@@ -22,12 +22,7 @@ class SnapshotListingSpec extends SparkTestBase {
   /** One committed transaction writing each (frame, comp, partCols). */
   private def commit(base: String)(
       writes: (Snapshot.Txn => Unit)*): Snapshot.Manifest =
-    IndexFS.withWriterLease(base) {
-      IndexFS.mkdirs(base)
-      val txn = Snapshot.begin(base)
-      writes.foreach(_(txn))
-      txn.commit()
-    }
+    Snapshot.transact(base) { txn => writes.foreach(_(txn)); txn }.snap
 
   private final case class Listing(jobs: Int, discovered: Long, hits: Long)
 

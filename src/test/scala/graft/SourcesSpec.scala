@@ -672,11 +672,8 @@ class SourcesSpec extends SparkTestBase {
       val tgt = tmp(s"snapcrash$failAt")
       Sources.writeVersioned(oldData.toSeq.toDF("v"), tgt)
       intercept[Crash] {
-        IndexFS.withWriterLease(tgt) {
-          val txn = Snapshot.begin(tgt)
-          txn.writeFull(newData.toSeq.toDF("v"), "data")
-          txn.commit(s => if (s == failAt) throw Crash(s))
-        }
+        Snapshot.transact(tgt, onStep = s => if (s == failAt) throw Crash(s))(
+          _.writeFull(newData.toSeq.toDF("v"), "data"))
       }
       // the manifest IS the commit point: a crash before the publish
       // (step 1) leaves the old table live; at/after it (steps 2, 3)
@@ -845,12 +842,11 @@ class SourcesSpec extends SparkTestBase {
     val tgt = tmp("snapfoldempty")
     spark.conf.set("graft.snapshot.foldOwnerTuples", "4")
     try {
-      IndexFS.withWriterLease(tgt) {
-        // many txns claiming tuples for a component written from EMPTY
-        // frames: directories exist, zero parquet files — over the fold
-        // threshold, a fold read would throw schema inference errors
-        (1 to 6).foreach { s =>
-          val txn = Snapshot.begin(tgt)
+      // many txns claiming tuples for a component written from EMPTY
+      // frames: directories exist, zero parquet files — over the fold
+      // threshold, a fold read would throw schema inference errors
+      (1 to 6).foreach { s =>
+        Snapshot.transact(tgt) { txn =>
           val seg = f"seg$s%03d"
           val empty = Seq.empty[(Long, String)].toDF("v", "seg")
             .filter(lit(false))
@@ -858,7 +854,6 @@ class SourcesSpec extends SparkTestBase {
           // an unrelated healthy component in the same layout — ITS
           // commit must not be poisoned by the empty one
           txn.writeFull(Seq((s.toLong, seg)).toDF("v", "seg"), "healthy")
-          txn.commit()
         }
       }
       val snap = Snapshot.require(tgt)
@@ -877,14 +872,12 @@ class SourcesSpec extends SparkTestBase {
     try {
       // the LSM append shape: every txn claims a NEW (seg, b) tuple
       // set, so without folding the manifest grows O(txns × buckets)
-      IndexFS.withWriterLease(tgt) {
-        (1 to 50).foreach { s =>
-          val txn = Snapshot.begin(tgt)
+      (1 to 50).foreach { s =>
+        Snapshot.transact(tgt) { txn =>
           val seg = f"seg$s%03d"
           val rows = (0 until 8).map(b => (s.toLong * 10 + b, seg, b.toString))
           txn.writeParts(rows.toDF("v", "seg", "b"), "d", Seq("seg", "b"),
             (0 until 8).map(b => Seq(seg, b.toString)))
-          txn.commit()
         }
       }
       val msize = new java.io.File(s"$tgt/_SNAPSHOTS").listFiles
@@ -902,13 +895,11 @@ class SourcesSpec extends SparkTestBase {
         .map(b => s.toLong * 10 + b)).sorted)
       // and a segment replay (dropPrefix) still supersedes its claim
       // even when the old claim was folded into an exclude-form owner
-      IndexFS.withWriterLease(tgt) {
-        val txn = Snapshot.begin(tgt)
+      Snapshot.transact(tgt) { txn =>
         txn.dropPrefix("d", Seq("seg007"))
         val rows = (0 until 8).map(b => (9000L + b, "seg007", b.toString))
         txn.writeParts(rows.toDF("v", "seg", "b"), "d", Seq("seg", "b"),
           (0 until 8).map(b => Seq("seg007", b.toString)))
-        txn.commit()
       }
       val replayed = Snapshot.require(tgt).read(spark, "d")
         .filter(col("seg") === "seg007").select(col("v")).as[Long]
@@ -931,12 +922,15 @@ class SourcesSpec extends SparkTestBase {
     assert(rootFiles.nonEmpty)
     // simulate a crash mid-adoption: a staged data/ generation exists
     // next to the root part-files with NO manifest — the exact window
-    // where a directory glob fails partition discovery
-    IndexFS.withWriterLease(base) {
-      val txn = Snapshot.begin(base)
-      txn.writeFull(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), "data")
-      // no commit — crash before publish
+    // where a directory glob fails partition discovery. Step 1 of the
+    // commit is "data written, not published"
+    case object Crash extends RuntimeException
+    intercept[Crash.type] {
+      Snapshot.transact(base, onStep = s => if (s == 1) throw Crash)(
+        _.writeFull(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), "data"))
     }
+    assert(IndexFS.listNames(s"$base/data").exists(_.startsWith("gsn=")),
+      "no staged data/ leaf: the crash window was not reached")
     assert(!Snapshot.enabled(base))
     // the mixed directory is still readable through the library path
     assert(Sources.readVersioned(spark, base).count() === 2L)
@@ -1624,9 +1618,8 @@ class SourcesSpec extends SparkTestBase {
     val cache = s"${base}_pristine"
     IndexFS.withWriterLease(base) {
       IndexFS.mkdirs(base)
-      val txn = graft.sources.Snapshot.begin(base)
-      txn.writeFull(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), "data")
-      txn.commit()
+      graft.sources.Snapshot.transact(base)(
+        _.writeFull(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), "data"))
       IndexFS.writeString(s"$base/MARKER", "hl-test v1")
       graft.sources.StoredLayout.snapshotPristine(base)
     }

@@ -76,13 +76,7 @@ class StoredProbeSpec extends SparkTestBase {
   test("held components: new owners are re-read, a GC'd layout keeps " +
       "serving its live rows") {
     val base = tmp("held")
-    def commit(f: Snapshot.Txn => Unit): Unit = IndexFS.withWriterLease(base) {
-      IndexFS.mkdirs(base)
-      val txn = Snapshot.begin(base)
-      f(txn)
-      txn.commit()
-      ()
-    }
+    def commit(f: Snapshot.Txn => Unit): Unit = Snapshot.transact(base)(f)
     def held() = Snapshot.require(base).held(spark, "c").rows.get
       .map(r => (r.getLong(0), r.getInt(1))).sortBy(_._1)
     commit(_.writeFull(Seq((1L, 0), (2L, 1)).toDF("v", "p"), "c", "p"))

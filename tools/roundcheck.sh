@@ -1,8 +1,8 @@
 #!/usr/bin/env bash
 # Full pre-round-end validation: the ops materialisation-idiom grep,
 # oracle compare at every SF, cross-parallelism determinism, plan
-# audit, weak-scaling byte gates, the engine benchmark's selftest,
-# test suite, bench line.
+# audit, weak-scaling byte gates, the engine benchmark's selftest and
+# index_ingest smoke run, test suite, bench line.
 # Usage: tools/roundcheck.sh   (from the repo root; ~25 min)
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -27,6 +27,16 @@ SPARK_GRAFT_CPUS="$(nproc)" sbt -batch "runMain graft.WeakScale /root/testdata/s
 
 echo "== perfbench selftest =="
 python3 perfbench/run.py --selftest | tail -1
+
+# the only end-to-end run of the stored-index append, delete, compact
+# and admit transactions; run.py keeps its own 175 s limit
+echo "== perfbench index_ingest smoke =="
+ingest="$(python3 perfbench/run.py --workload index_ingest --seed 21 --seconds 10 --trace 0 | tail -1)" || true
+echo "$ingest"
+if ! python3 -c 'import json, sys; r = json.loads(sys.argv[1]); sys.exit(0 if r.get("correct") is True and r.get("failed") == 0 else 1)' "$ingest"; then
+  echo "FAIL: index_ingest smoke run is not correct or failed ops"
+  exit 1
+fi
 
 for sf in 0.001 0.01 0.1; do
   echo "== oracle compare sf$sf =="
