@@ -394,13 +394,13 @@ object Bench {
     } catch { case _: Throwable => None }
 
   /** Prior-round per-query seconds for the outlier defense: the
-    * [[recordPath]] record of bench_full.json (or SPARK_GRAFT_BENCH_REF).
-    * Missing, unparseable, or of another core count or noise epoch →
-    * empty map → no re-runs, plain pass minimums.
+    * [[recordPath]] record of SPARK_GRAFT_BENCH_FULL (default
+    * bench_full.json) — the record [[writeFull]] writes. Missing,
+    * unparseable, or of another core count or noise epoch → empty
+    * map → no re-runs, plain pass minimums.
     */
-  def readRef(requested: String = sys.env.getOrElse("SPARK_GRAFT_BENCH_REF",
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL", "bench_full.json")))
-      : Map[String, Double] =
+  def readRef(requested: String = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL",
+      "bench_full.json")): Map[String, Double] =
     readAt(recordPath(requested))
       .filter(r => r.cpus.getOrElse(32) == GraftSession.harnessCpus &&
         r.epoch == NoiseEpoch)

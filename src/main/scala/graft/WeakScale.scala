@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -52,27 +49,7 @@ object WeakScale {
 
     // task-level input-bytes accounting: the probe-I/O claims are
     // about BYTES SCANNED, which executor task metrics report exactly
-    val bytesRead = new AtomicLong(0L)
-    val bytesWritten = new AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
-        if (te.taskMetrics != null) {
-          bytesRead.addAndGet(te.taskMetrics.inputMetrics.bytesRead)
-          bytesWritten.addAndGet(te.taskMetrics.outputMetrics.bytesWritten)
-        }
-    })
-    def measured[T](body: => T): (T, Double, Long, Long) = {
-      // listener events drain asynchronously; settle before snapshots
-      org.apache.spark.graftbridge.ListenerBridge
-        .waitUntilListenerBusEmpty(spark.sparkContext)
-      val b0 = bytesRead.get(); val w0 = bytesWritten.get()
-      val t0 = System.nanoTime()
-      val r = body
-      org.apache.spark.graftbridge.ListenerBridge
-        .waitUntilListenerBusEmpty(spark.sparkContext)
-      ((r, (System.nanoTime() - t0) / 1e9, bytesRead.get() - b0,
-        bytesWritten.get() - w0))
-    }
+    def measured[T](body: => T): (T, RunMetrics.Run) = RunMetrics.measure(spark.sparkContext)(body)
     def dirBytes(path: String): Long = {
       def walk(f: java.io.File): Long =
         if (f.isDirectory) Option(f.listFiles).toSeq.flatten.map(walk).sum
@@ -110,10 +87,10 @@ object WeakScale {
       val docs = enlarged("documents", "doc_id", k)
       val bmBase = s"$work/bm25_x$k"
       graft.sources.IndexFS.deleteRecursive(bmBase)
-      val (_, tBuild, _, _) = measured {
+      val (_, bmBuild) = measured {
         graft.ops.Text.bm25BuildIndex(docs, bmBase).count()
       }
-      report(s"bm25_build_sec_x$k", tBuild)
+      report(s"bm25_build_sec_x$k", bmBuild.wallS)
       val idxBytes = dirBytes(bmBase)
       report(s"bm25_index_mb_x$k", idxBytes / 1e6)
       // measure the SERVING core only (the wrapper's freshness check
@@ -121,13 +98,13 @@ object WeakScale {
       // bytes-read number a pure statement about the index layout);
       // warm once for codegen, then measure
       graft.ops.Text.bm25ScoreStored(spark, bmBase, 10).count()
-      val (rows, tProbe, pBytes, _) = measured {
+      val (rows, bmProbe) = measured {
         graft.ops.Text.bm25ScoreStored(spark, bmBase, 10).count()
       }
       require(rows > 0, s"bm25 probe served no rows at x$k")
-      report(s"bm25_probe_sec_x$k", tProbe)
-      report(s"bm25_probe_mb_x$k", pBytes / 1e6)
-      report(s"bm25_probe_frac_x$k", pBytes.toDouble / idxBytes)
+      report(s"bm25_probe_sec_x$k", bmProbe.wallS)
+      report(s"bm25_probe_mb_x$k", bmProbe.bytesRead / 1e6)
+      report(s"bm25_probe_frac_x$k", bmProbe.bytesRead.toDouble / idxBytes)
 
       // ---------- IVFADC ----------
       val emb = enlarged("embeddings", "vec_id", k)
@@ -136,10 +113,10 @@ object WeakScale {
       // nlist 64 with 4 queries x nprobe 4: the probed-cell UNION of
       // the batch stays well under the cell count (<= 16/64), so the
       // fraction claim measures the layout, not probe saturation
-      val (_, tIvBuild, _, _) = measured {
+      val (_, ivBuild) = measured {
         graft.ops.Similarity.ivfpqBuildIndex(emb, ivBase, 64).count()
       }
-      report(s"ivfpq_build_sec_x$k", tIvBuild)
+      report(s"ivfpq_build_sec_x$k", ivBuild.wallS)
       val ivBytes = dirBytes(ivBase)
       report(s"ivfpq_index_mb_x$k", ivBytes / 1e6)
       // pre-materialize the query vectors so the measured bytes are
@@ -148,7 +125,7 @@ object WeakScale {
       val probeDf = graft.ops.Similarity.ivfpqScoreStored(spark, ivBase,
         queries, 5, 4, 20)
       probeDf.count() // warm (codegen, broadcast build)
-      val (ivRows, tIvProbe, ivPBytes, _) = measured { probeDf.count() }
+      val (ivRows, ivProbe) = measured { probeDf.count() }
       require(ivRows > 0, s"ivfpq probe served no rows at x$k")
       // ground truth for the pruning claim: the cell IN-list the probe
       // actually pushed (read off the executed scan) and the on-disk
@@ -170,11 +147,11 @@ object WeakScale {
       val probedBytes = probedCells.toSeq.map(c =>
         dirBytes(s"$ivBase/cells/$gen/cell=$c") +
           dirBytes(s"$ivBase/codes/$gen/cell=$c")).sum
-      report(s"ivfpq_probe_sec_x$k", tIvProbe)
-      report(s"ivfpq_probe_mb_x$k", ivPBytes / 1e6)
+      report(s"ivfpq_probe_sec_x$k", ivProbe.wallS)
+      report(s"ivfpq_probe_mb_x$k", ivProbe.bytesRead / 1e6)
       report(s"ivfpq_probed_cells_x$k", probedCells.size.toDouble)
       report(s"ivfpq_probed_part_mb_x$k", probedBytes / 1e6)
-      report(s"ivfpq_probe_frac_x$k", ivPBytes.toDouble / ivBytes)
+      report(s"ivfpq_probe_frac_x$k", ivProbe.bytesRead.toDouble / ivBytes)
 
       // ---------- maintenance: LSM append + tombstone compact ----------
       // the SAME fixed batch at every scale: maintenance I/O must be
@@ -189,12 +166,12 @@ object WeakScale {
       // full: doc-count-sized doc lengths + the one-row stats
       val docLevel = dirBytes(s"$bmBase/dl") + dirBytes(s"$bmBase/stats")
       report(s"bm25_doclevel_mb_x$k", docLevel / 1e6)
-      val (_, tApp, appRead, appWrite) = measured {
+      val (_, bmApp) = measured {
         graft.ops.Text.bm25Append(batchDocs, bmBase)
       }
-      report(s"bm25_append_sec_x$k", tApp)
-      report(s"bm25_append_read_mb_x$k", appRead / 1e6)
-      report(s"bm25_append_write_mb_x$k", appWrite / 1e6)
+      report(s"bm25_append_sec_x$k", bmApp.wallS)
+      report(s"bm25_append_read_mb_x$k", bmApp.bytesRead / 1e6)
+      report(s"bm25_append_write_mb_x$k", bmApp.bytesWritten / 1e6)
 
       // bm25 tombstone compact: fix a doc slice, fold it out. Reads
       // decompose into the (doc_id)-column discovery scan over the
@@ -203,16 +180,16 @@ object WeakScale {
       // those artifacts.
       graft.ops.Text.bm25Delete(
         docs.filter(col("doc_id") < 100).select(col("doc_id")), bmBase)
-      val (_, _, bmDisc, _) = measured {
+      val (_, bmDisc) = measured {
         graft.sources.Snapshot.require(bmBase).read(spark, "tf")
           .agg(sum(col("doc_id"))).head
       }
-      report(s"bm25_discovery_mb_x$k", bmDisc / 1e6)
+      report(s"bm25_discovery_mb_x$k", bmDisc.bytesRead / 1e6)
       val docLevel2 = dirBytes(s"$bmBase/dl") + dirBytes(s"$bmBase/stats")
       val deltaPre =
         dirBytes(s"$bmBase/tf_delta") + dirBytes(s"$bmBase/pos_delta")
       val tfGensPre = graft.sources.IndexFS.listNames(s"$bmBase/tf").toSet
-      val (_, tBmCmp, bmCmpRead, bmCmpWrite) = measured {
+      val (_, bmCmp) = measured {
         graft.ops.Text.bm25Compact(spark, bmBase)
       }
       val bmCmpGen = {
@@ -226,9 +203,9 @@ object WeakScale {
       val bmCmpPre = bmCmpBuckets.map(b => tfGensPre.toSeq.map(g =>
         dirBytes(s"$bmBase/tf/$g/$b") + dirBytes(s"$bmBase/pos/$g/$b") +
           dirBytes(s"$bmBase/df/$g/$b")).sum).sum + deltaPre
-      report(s"bm25_compact_sec_x$k", tBmCmp)
-      report(s"bm25_compact_read_mb_x$k", bmCmpRead / 1e6)
-      report(s"bm25_compact_write_mb_x$k", bmCmpWrite / 1e6)
+      report(s"bm25_compact_sec_x$k", bmCmp.wallS)
+      report(s"bm25_compact_read_mb_x$k", bmCmp.bytesRead / 1e6)
+      report(s"bm25_compact_write_mb_x$k", bmCmp.bytesWritten / 1e6)
       report(s"bm25_compact_buckets_x$k", bmCmpBuckets.size.toDouble)
       report(s"bm25_compact_pre_mb_x$k", bmCmpPre / 1e6)
       report(s"bm25_doclevel2_mb_x$k", docLevel2 / 1e6)
@@ -240,7 +217,7 @@ object WeakScale {
       val quantBytes =
         dirBytes(s"$ivBase/centroids") + dirBytes(s"$ivBase/codebooks")
       report(s"ivfpq_quantizer_mb_x$k", quantBytes / 1e6)
-      val (_, tIvApp, ivAppRead, ivAppWrite) = measured {
+      val (_, ivApp) = measured {
         graft.ops.Similarity.ivfpqAppend(batchVecs, ivBase)
       }
       // the appended generation's cell list IS the affected-partition
@@ -255,9 +232,9 @@ object WeakScale {
         .listNames(s"$ivBase/cells/$appGen").filter(_.startsWith("cell="))
       val affPre = affCells.map(c => dirBytes(s"$ivBase/cells/$gen/$c") +
         dirBytes(s"$ivBase/codes/$gen/$c")).sum
-      report(s"ivfpq_append_sec_x$k", tIvApp)
-      report(s"ivfpq_append_read_mb_x$k", ivAppRead / 1e6)
-      report(s"ivfpq_append_write_mb_x$k", ivAppWrite / 1e6)
+      report(s"ivfpq_append_sec_x$k", ivApp.wallS)
+      report(s"ivfpq_append_read_mb_x$k", ivApp.bytesRead / 1e6)
+      report(s"ivfpq_append_write_mb_x$k", ivApp.bytesWritten / 1e6)
       report(s"ivfpq_append_cells_x$k", affCells.size.toDouble)
       report(s"ivfpq_affected_pre_mb_x$k", affPre / 1e6)
 
@@ -266,13 +243,13 @@ object WeakScale {
       // plus the affected partitions' rewrite
       graft.ops.Similarity.ivfpqDelete(
         emb.filter(col("vec_id") < 50).select(col("vec_id")), ivBase)
-      val (_, _, discBytes, _) = measured {
+      val (_, ivDisc) = measured {
         graft.sources.Snapshot.require(ivBase).read(spark, "cells")
           .agg(sum(col("vec_id")), sum(col("cell").cast("long"))).head
       }
-      report(s"ivfpq_discovery_mb_x$k", discBytes / 1e6)
+      report(s"ivfpq_discovery_mb_x$k", ivDisc.bytesRead / 1e6)
       val gensPre = graft.sources.IndexFS.listNames(s"$ivBase/cells").toSet
-      val (_, tCmp, cmpRead, cmpWrite) = measured {
+      val (_, ivCmp) = measured {
         graft.ops.Similarity.ivfpqCompact(spark, ivBase)
       }
       val cmpGen = {
@@ -286,9 +263,9 @@ object WeakScale {
       val cmpPre = cmpCells.map(c => gensPre.toSeq.map(g =>
         dirBytes(s"$ivBase/cells/$g/$c") +
           dirBytes(s"$ivBase/codes/$g/$c")).sum).sum
-      report(s"ivfpq_compact_sec_x$k", tCmp)
-      report(s"ivfpq_compact_read_mb_x$k", cmpRead / 1e6)
-      report(s"ivfpq_compact_write_mb_x$k", cmpWrite / 1e6)
+      report(s"ivfpq_compact_sec_x$k", ivCmp.wallS)
+      report(s"ivfpq_compact_read_mb_x$k", ivCmp.bytesRead / 1e6)
+      report(s"ivfpq_compact_write_mb_x$k", ivCmp.bytesWritten / 1e6)
       report(s"ivfpq_compact_cells_x$k", cmpCells.size.toDouble)
       report(s"ivfpq_compact_pre_mb_x$k", cmpPre / 1e6)
 
@@ -303,10 +280,10 @@ object WeakScale {
       // sizes artifact; writes bounded by the three delta segments.
       val dedupBase = s"$work/dedup_x$k"
       graft.sources.IndexFS.deleteRecursive(dedupBase)
-      val (_, tDBuild, _, _) = measured {
+      val (_, dBuild) = measured {
         graft.ops.Dedup.dedupBuildIndex(docs, dedupBase).count()
       }
-      report(s"dedup_build_sec_x$k", tDBuild)
+      report(s"dedup_build_sec_x$k", dBuild.wallS)
       def dedupGen(comp: String): String = {
         val gs = graft.sources.IndexFS.listNames(s"$dedupBase/$comp")
         require(gs.size == 1, s"expected one generation: $gs"); gs.head
@@ -324,7 +301,7 @@ object WeakScale {
             reverse(col("text"))).otherwise(col("text")))
         .withColumn("doc_id", col("doc_id") + lit(900000000L))
         .localCheckpoint() // batch derivation out of the measurement
-      val (_, tAdmit, admRead, admWrite) = measured {
+      val (_, admit) = measured {
         graft.ops.Dedup.dedupAdmit(admitBatch, dedupBase).count()
       }
       val pp = graft.ops.Dedup.lastProbeParts.get
@@ -335,9 +312,9 @@ object WeakScale {
       val admitDeltaBytes = dirBytes(s"$dedupBase/bands_delta") +
         dirBytes(s"$dedupBase/shingles_delta") +
         dirBytes(s"$dedupBase/sizes_delta")
-      report(s"dedup_admit_sec_x$k", tAdmit)
-      report(s"dedup_admit_read_mb_x$k", admRead / 1e6)
-      report(s"dedup_admit_write_mb_x$k", admWrite / 1e6)
+      report(s"dedup_admit_sec_x$k", admit.wallS)
+      report(s"dedup_admit_read_mb_x$k", admit.bytesRead / 1e6)
+      report(s"dedup_admit_write_mb_x$k", admit.bytesWritten / 1e6)
       report(s"dedup_probed_bands_mb_x$k", probedBandBytes / 1e6)
       report(s"dedup_probed_shingles_mb_x$k", probedShingleBytes / 1e6)
       report(s"dedup_admit_delta_mb_x$k", admitDeltaBytes / 1e6)

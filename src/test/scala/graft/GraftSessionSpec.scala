@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 
 /** The library session builder must ship the byte-verified serving
@@ -66,20 +63,8 @@ class GraftSessionSpec extends SparkTestBase {
       val probe = Similarity.ivfpqScoreStored(spark, base, queries, 5, 4, 20)
       probe.count() // warm: codegen + broadcast build
       // task-level input-byte accounting, as in graft.WeakScale
-      val bytesRead = new AtomicLong(0L)
-      val listener = new SparkListener {
-        override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
-          if (te.taskMetrics != null)
-            bytesRead.addAndGet(te.taskMetrics.inputMetrics.bytesRead)
-      }
-      org.apache.spark.graftbridge.ListenerBridge
-        .waitUntilListenerBusEmpty(spark.sparkContext)
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        assert(probe.count() > 0)
-        org.apache.spark.graftbridge.ListenerBridge
-          .waitUntilListenerBusEmpty(spark.sparkContext)
-      } finally spark.sparkContext.removeSparkListener(listener)
+      val (rows, run) = RunMetrics.measure(spark.sparkContext)(probe.count())
+      assert(rows > 0)
       // the probed-cell IN-list the executed scan actually pushed, and
       // the on-disk bytes of exactly those partitions — the same bound
       // WeakScale enforces at sf0.1 ×1/×8
@@ -106,7 +91,7 @@ class GraftSessionSpec extends SparkTestBase {
       val probedBytes = probedCells.toSeq.map(c =>
         dirBytes(s"$base/cells/$gen/cell=$c") +
           dirBytes(s"$base/codes/$gen/cell=$c")).sum
-      val measured = bytesRead.get()
+      val measured = run.bytesRead
       // same slack as WeakScale: 2× covers footer/page accounting; the
       // excluded failure mode (bloom filter re-scanning the vector
       // table once per probe) shows as a multiple of the index size

@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.metrics.source.HiveCatalogMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -15,9 +11,6 @@ import graft.sources.Snapshot
   */
 class SnapshotListingSpec extends SparkTestBase {
   import spark.implicits._
-
-  private def tmp(name: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-$name").toString + "/t"
 
   /** One committed transaction writing each (frame, comp, partCols). */
   private def commit(base: String)(
@@ -31,26 +24,8 @@ class SnapshotListingSpec extends SparkTestBase {
     * file-status cache.
     */
   private def listing[T](body: => T): (T, Listing) = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (Option(js.properties)
-            .flatMap(p => Option(p.getProperty("spark.job.description")))
-            .exists(_.startsWith("Listing leaf files")))
-          jobs.incrementAndGet()
-    }
-    org.apache.spark.graftbridge.ListenerBridge.waitUntilListenerBusEmpty(sc)
-    sc.addSparkListener(l)
-    val d0 = HiveCatalogMetrics.METRIC_FILES_DISCOVERED.getCount
-    val h0 = HiveCatalogMetrics.METRIC_FILE_CACHE_HITS.getCount
-    try {
-      val out = body
-      org.apache.spark.graftbridge.ListenerBridge.waitUntilListenerBusEmpty(sc)
-      (out, Listing(jobs.get,
-        HiveCatalogMetrics.METRIC_FILES_DISCOVERED.getCount - d0,
-        HiveCatalogMetrics.METRIC_FILE_CACHE_HITS.getCount - h0))
-    } finally sc.removeSparkListener(l)
+    val (out, run) = RunMetrics.measure(spark.sparkContext)(body)
+    (out, Listing(run.listingJobs, run.filesDiscovered, run.cacheHits))
   }
 
   /** The plain reader over every generation leaf of `comp` — the

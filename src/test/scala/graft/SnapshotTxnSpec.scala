@@ -16,9 +16,6 @@ import graft.sources.{IndexFS, Snapshot}
 class SnapshotTxnSpec extends SparkTestBase {
   import spark.implicits._
 
-  private def tmp(name: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-$name").toString + "/t"
-
   private def manifests(base: String): Seq[String] =
     IndexFS.listNames(s"$base/_SNAPSHOTS").filter(_.matches("m\\d+")).sorted
 

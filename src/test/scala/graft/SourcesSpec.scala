@@ -10,9 +10,6 @@ import graft.streaming.StreamingOps
 class SourcesSpec extends SparkTestBase {
   import spark.implicits._
 
-  private def tmp(name: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-$name").toString + "/t"
-
   test("CSV round-trip preserves rows and values") {
     val src = Tables.nation(spark, sf)
     val path = tmp("csv")
@@ -449,7 +446,6 @@ class SourcesSpec extends SparkTestBase {
     // must now trigger at most the ivfpq query-vector localCheckpoint
     // job — never a count over embeddings/documents.
     import graft.ops.{Dedup, Similarity, Text}
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val emb = Tables.embeddings(spark, sf)
     val docs = Tables.documents(spark, sf)
     val split = Text.trainValSplit(docs).select(col("doc_id"), col("split"))
@@ -468,29 +464,20 @@ class SourcesSpec extends SparkTestBase {
     // artifacts; the regression shape is specifically an eager count()
     // from the ops files (the v1 markers' corpus aggregate), so match
     // job callsites, not job counts.
-    val stages = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        j.stageInfos.foreach(s => stages.add(s.name))
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val (_, run) = RunMetrics.measure(spark.sparkContext) {
       Similarity.ivfpqProbeStored(emb, b1, 4, 5) // constructed, not run
       Text.bm25ProbeStored(docs, b2, 10)
       Text.lmScoreStored(docs, b3)
       Dedup.incrementalNearDupStored(batch, hist, b4)
       Text.hybridStored(docs, b2, b5)
-      org.apache.spark.graftbridge.ListenerBridge
-        .waitUntilListenerBusEmpty(spark.sparkContext)
-      import scala.jdk.CollectionConverters._
-      val counts = stages.iterator().asScala
-        .filter(n => n.startsWith("count at Similarity.scala") ||
-          n.startsWith("count at Text.scala") ||
-          n.startsWith("count at Dedup.scala")).toList
-      assert(counts.isEmpty,
-        s"fresh probes launched corpus aggregates: $counts — the " +
-          "count() leaked back into the freshness check")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    val counts = run.jobs.flatMap(_.stageNames)
+      .filter(n => n.startsWith("count at Similarity.scala") ||
+        n.startsWith("count at Text.scala") ||
+        n.startsWith("count at Dedup.scala")).toList
+    assert(counts.isEmpty,
+      s"fresh probes launched corpus aggregates: $counts — the " +
+        "count() leaked back into the freshness check")
   }
 
   test("dynamic partition pruning: dim filter prunes fact partitions at runtime") {
@@ -1038,10 +1025,10 @@ class SourcesSpec extends SparkTestBase {
   }
 
   test("progress listener observes stages/tasks/records during a job (O15)") {
-    val (result, (stages, tasks, records)) =
-      graft.streaming.Progress.withTaskProgress(spark) {
-        Tables.lineitem(spark, sf).groupBy("l_returnflag").count().collect().length
-      }
+    val (result, run) = RunMetrics.measure(spark.sparkContext) {
+      Tables.lineitem(spark, sf).groupBy("l_returnflag").count().collect().length
+    }
+    val (stages, tasks, records) = (run.stages, run.tasks, run.recordsRead)
     assert(result > 0)
     assert(stages >= 1 && tasks >= 1 && records >= 6000,
       s"stages=$stages tasks=$tasks records=$records")
@@ -1721,9 +1708,6 @@ class SourcesSpec extends SparkTestBase {
 
   test("Par.run: a failing ivfpqBuildIndex training chain cancels and " +
       "joins its sibling before the build throws") {
-    import java.util.concurrent.ConcurrentHashMap
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
-      SparkListenerJobStart}
     import graft.ops.{Similarity, Text}
     val sc = spark.sparkContext
     val emb = Tables.embeddings(spark, sf)
@@ -1738,25 +1722,17 @@ class SourcesSpec extends SparkTestBase {
     }
     val poisoned = emb.withColumn("embedding",
       poison(col("vec_id"), col("embedding")))
-    val started = ConcurrentHashMap.newKeySet[Int]()
-    val ended = new ConcurrentHashMap[Int, Long]()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = { started.add(j.jobId); () }
-      override def onJobEnd(j: SparkListenerJobEnd): Unit = { ended.put(j.jobId, j.time); () }
-    }
-    sc.addSparkListener(listener)
-    try {
+    val (returnedAt, run) = RunMetrics.measure(sc) {
       intercept[Exception] {
         Similarity.ivfpqBuildIndex(poisoned, tmp("parbuild"), 16)
       }
-      val returnedAt = System.currentTimeMillis()
-      org.apache.spark.graftbridge.ListenerBridge.waitUntilListenerBusEmpty(sc)
-      assert(!started.isEmpty)
-      started.forEach { id =>
-        assert(ended.containsKey(id), s"build job $id never ended")
-        assert(ended.get(id) <= returnedAt,
-          s"build job $id was still running when the build threw")
-      }
-    } finally sc.removeSparkListener(listener)
+      System.currentTimeMillis()
+    }
+    assert(run.jobs.nonEmpty)
+    run.jobs.foreach { j =>
+      assert(j.endMs.nonEmpty, s"build job ${j.id} never ended")
+      assert(j.endMs.get <= returnedAt,
+        s"build job ${j.id} was still running when the build threw")
+    }
   }
 }

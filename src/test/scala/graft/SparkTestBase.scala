@@ -22,6 +22,10 @@ trait SparkTestBase extends AnyFunSuite {
 
   val sf: String = "/root/testdata/sf0.001"
 
+  /** A path `t` inside a fresh temporary directory. */
+  def tmp(name: String): String =
+    java.nio.file.Files.createTempDirectory(s"graft-$name").toString + "/t"
+
   /** A second session on the shared context without `GraftExtensions`:
     * the control the extension specs compare the shared session with.
     * The shared session stays the default and active one.

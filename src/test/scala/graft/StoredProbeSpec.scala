@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Dedup, Similarity, Text}
@@ -17,23 +14,10 @@ import graft.sources.{IndexFS, Snapshot, Sources}
 class StoredProbeSpec extends SparkTestBase {
   import spark.implicits._
 
-  private def tmp(name: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-$name").toString + "/t"
-
   /** Spark jobs `body` starts. */
   private def jobs[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val n = new AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = { n.incrementAndGet(); () }
-    }
-    org.apache.spark.graftbridge.ListenerBridge.waitUntilListenerBusEmpty(sc)
-    sc.addSparkListener(l)
-    try {
-      val out = body
-      org.apache.spark.graftbridge.ListenerBridge.waitUntilListenerBusEmpty(sc)
-      (out, n.get)
-    } finally sc.removeSparkListener(l)
+    val (out, run) = RunMetrics.measure(spark.sparkContext)(body)
+    (out, run.jobs.size)
   }
 
   private def isLocal(df: org.apache.spark.sql.DataFrame): Boolean =

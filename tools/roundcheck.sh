@@ -1,8 +1,9 @@
 #!/usr/bin/env bash
-# Full pre-round-end validation: the ops materialisation-idiom grep,
-# oracle compare at every SF, cross-parallelism determinism, plan
-# audit, weak-scaling byte gates, the engine benchmark's selftest and
-# index_ingest smoke run, test suite, bench line.
+# Full pre-round-end validation: the ops materialisation-idiom and
+# run-metrics listener greps, oracle compare at every SF,
+# cross-parallelism determinism, plan audit, weak-scaling byte gates,
+# the engine benchmark's selftest and index_ingest smoke run, test
+# suite, bench line.
 # Usage: tools/roundcheck.sh   (from the repo root; ~25 min)
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -13,6 +14,17 @@ echo "== materialisation idioms =="
 if grep -rn 'localCheckpoint(' src/main/scala/graft/ops/ ||
    grep -rn 'iterCheckpoint' src/main; then
   echo "FAIL: raw localCheckpoint( in graft/ops or iterCheckpoint in src/main"
+  exit 1
+fi
+
+echo "== one run-metrics listener =="
+# jobs, tasks and bytes are counted through graft.RunMetrics.measure
+# only; the one other listener in src/main is Sources.onContextEnd's
+# stop hook, which counts nothing
+if grep -rnE '(extends|new) +([A-Za-z_]+\.)*SparkListener\b' src/main |
+   grep -vE '^src/main/scala/graft/RunMetrics\.scala:' |
+   grep -vE '^src/main/scala/graft/sources/Sources\.scala:[0-9]+: +sc\.addSparkListener\(new org\.apache\.spark\.scheduler\.SparkListener \{$'; then
+  echo "FAIL: a SparkListener in src/main outside graft/RunMetrics.scala"
   exit 1
 fi
 
